@@ -3033,10 +3033,12 @@ def q_txt_classify_stream(spark, sf_dir):
     """Ingestion-time classifier scoring (curate.classifier_score_local_df):
     the ZERO-SHUFFLE twin of txt_classify — since round 10 auto routes
     through the Arrow kernel (the snapped micro-weight table collected
-    once into a dense vector at plan build, cached md5 feature buckets,
-    exact integer logit, sigmoid ROUND(.,6) behind a cross-runtime exp
-    tie band; bit-identical to the JVM fold form, which remains the
-    'hof' fallback): append-mode streaming-legal with no state or
+    once into a dense vector at plan build, vectorized md5 feature
+    buckets over byte spans — the hashed-feature-sum kernel shared with
+    DSIR scoring — exact integer logit, sigmoid ROUND(.,6) behind a
+    cross-runtime exp tie band; bit-identical to the JVM fold form,
+    which remains the 'hof' fallback): append-mode streaming-legal with
+    no state or
     watermark and no interpreted JVM fold to go bimodal over a
     long-lived stream.  Same oracle as txt_classify; the
     groupBy/hof/arrow twins are additionally differential-tested."""
@@ -4808,7 +4810,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # correctness scorecard.  Positions 1-50 are therefore FROZEN (they must
     # keep covering the same 50 queries, ending at tpch_q2/q8/q9/q11 at
     # positions 47-50).  New queries are APPEND-ONLY: add them at the END of
-    # the dict, never mid-dict.
+    # the dict, never mid-dict (tests/test_tpch.py pins the window).
     return {
         "center_of_mass": q_center_of_mass,
         "isin": q_isin,

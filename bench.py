@@ -17,6 +17,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from imops_spark.session import _cpus  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_PASSES = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
 
@@ -110,9 +112,11 @@ def contention_stats(
     ``contended`` needs BOTH signals since round 9: wide spreads on >= 3
     queries (the r5 poisoned-driver episode's signature — 8+ such queries
     there) AND a pre-run 1-minute load of at least an eighth of the core
-    count.  Spread alone is NOT external-contention evidence: a 59-query
-    x 5-pass run on a verified-idle box (round 9; load 1.2 at launch,
-    nothing else running) still showed >1.5x steady spreads on 50 queries
+    count, and never below 1.0 (on a 4-core box an eighth is 0.5, which
+    one leftover process reaches).  Spread alone is NOT external-contention
+    evidence: a 59-query x 5-pass run on a verified-idle box (round 9;
+    load 1.2 at launch, nothing else running) still showed >1.5x steady
+    spreads on 50 queries
     — within-JVM JIT/GC mode flips scale with the number of distinct
     plans sharing the session (the bimodal-HOF class, FASTPATH.md), and
     several Arrow-stage queries converge over ~4 passes (the emb_near_dup
@@ -128,7 +132,7 @@ def contention_stats(
     n_wide = sum(1 for r in spread.values() if r > 1.5)
     busy = (
         load_before is not None
-        and load_before >= (os.cpu_count() or 8) / 8.0
+        and load_before >= max(1.0, (os.cpu_count() or 8) / 8.0)
     )
     return {
         "spread_max_over_min": spread,
@@ -186,7 +190,7 @@ def _boot_and_warm():
 
         yield from batches
 
-    n_workers = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    n_workers = _cpus()
     spark.range(n_workers * 10).repartition(n_workers).mapInPandas(
         _warm_py, "id long"
     ).count()
@@ -351,7 +355,7 @@ def _report(
                 # is honored by imops_spark.session.get_spark; printed so a
                 # cross-core-count comparison can verify both runs used the
                 # intended N.
-                "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4)),
+                "cpus": _cpus(),
                 # At sf0.1 every row is 0.1-4 s with min-of-passes: session,
                 # stage-scheduling and Python-boundary FIXED cost dominates,
                 # so 8-vs-32-core ratios on THIS data read ~1 regardless of

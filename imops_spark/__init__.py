@@ -6,28 +6,11 @@ every operator has an ndarray convenience wrapper (encode → plan → decode) a
 a DataFrame-level core (``*_df``) that scales horizontally.
 """
 
-def _tune_allocator() -> None:
-    """Keep large numpy buffers in the reusable heap arena.
+from .functions._mem import ensure_malloc_tuning as _ensure_malloc_tuning
 
-    glibc serves big allocations from fresh ``mmap`` regions, and this
-    environment's minor page faults run ~10 µs/page — every large numpy
-    temporary then costs ~2.5 ms/MB of fault overhead on EVERY call.
-    Raising the malloc mmap/trim thresholds lets long-lived processes (the
-    driver and Spark's reused python workers) fault each page once and
-    recycle it across kernel calls; repeated 134 MB alloc+fill drops from
-    ~650 ms to ~18 ms here.  Best-effort: silently skipped off glibc.
-    """
-    try:
-        import ctypes
-
-        libc = ctypes.CDLL("libc.so.6", use_errno=True)
-        libc.mallopt(-3, 1 << 30)  # M_MMAP_THRESHOLD
-        libc.mallopt(-1, 1 << 30)  # M_TRIM_THRESHOLD
-    except Exception:  # non-glibc platform: default allocator behavior
-        pass
-
-
-_tune_allocator()
+# the driver keeps large numpy buffers on the reusable heap, as the Python
+# workers do (functions/_mem.py owns the threshold and its escape hatches)
+_ensure_malloc_tuning()
 
 from .backend import (  # noqa: F401,E402
     Backend,

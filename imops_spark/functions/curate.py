@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _md5_hash_col, drop_exact_duplicates, drop_near_duplicates_df
+from .dedup import _md5_hash_col, _widen, drop_exact_duplicates, drop_near_duplicates_df
 from .text import bpe_token_count_df, quality_df
 
 __all__ = [
@@ -989,188 +989,98 @@ def _dsir_features(d: DataFrame, by_doc: bool = False) -> DataFrame:
     )
 
 
-def _dsir_score_arrow_df(docs: DataFrame, model: DataFrame, B: int, salt: int) -> DataFrame:
-    """The Arrow scoring kernel behind ``dsir_logweights_df(
-    strategy='arrow')``: ``(doc_id, n_feats, logw_micro)`` with ZERO
-    scoring-side shuffles.
+def _dense_weights(wdf: DataFrame, col: str, B: int) -> "object":
+    """Collect a ``(bucket, col)`` model table of ``<= B`` rows into a
+    dense ``B``-long int64 vector: missing buckets score 0 (``F.sum``'s
+    NULL-skip / the ``coalesce(w, 0)`` of the JVM forms), out-of-range
+    buckets are dropped (they never join a ``% B`` bucket there)."""
+    import numpy as np
 
-    Exact parity with the agg form by construction:
+    mp = wdf.select("bucket", col).toPandas()
+    b = mp["bucket"].to_numpy(dtype=np.int64)
+    ok = (b >= 0) & (b < B)
+    w = np.zeros(B, dtype=np.int64)
+    w[b[ok]] = mp[col].to_numpy(dtype=np.int64)[ok]
+    return w
 
-    - the per-bucket micro-nat log-ratios (``lrm``) come from the SAME
-      ``dsir_model_df`` table the agg form broadcast-joins — the kernel
-      collects its ``<= B`` rows into a dense int64 array (missing
-      buckets 0, matching ``F.sum``'s NULL-skip; the raw stream IS the
-      scored corpus in this operator, so every scored bucket exists in
-      the model anyway) and does pure integer gathers + segment sums;
-    - features: unigrams + adjacent-pair bigrams of the normalized
-      whitespace tokens.  After normalization both are contiguous BYTE
-      SPANS of ``nt`` (a bigram is the substring from its first token's
-      start to its second token's end — exactly one space between
-      them), so the kernel derives spans from one ``data == 0x20`` mask
-      and never builds feature strings — the word-shingle MinHash
-      kernel's recipe;
+
+def _feature_sum_arrow_df(
+    base: DataFrame, w: "object", salt: int, out_schema: str, finish
+) -> DataFrame:
+    """The hashed-feature-sum Arrow kernel shared by DSIR scoring and
+    classifier scoring: per document ``s = sum w[md5_60(salt|feat) %
+    B]`` over its unigram + bigram features, ``B = len(w)``, with zero
+    scoring-side shuffles.  ``base`` is the operator's own input plan
+    (non-NULL ``text`` rows, with ``doc_id``); ``finish(n_feats, s)``
+    maps one batch's per-doc int64 arrays to the output columns after
+    ``doc_id`` (``out_schema``).
+
+    Exact parity with the JVM forms by construction:
+
+    - tokens: the plan trims the normalized text (``normalized_text``
+      leaves one space where a leading or trailing tab/newline was) and
+      drops empty rows, so its single-space split equals ``array_remove(
+      split(nt, ' '), '')`` and zero-token documents are absent, as the
+      explode forms drop them;
+    - features: after normalization a unigram and an adjacent-pair
+      bigram are both contiguous BYTE SPANS of ``nt`` (a bigram runs
+      from its first token's start to its second token's end), so the
+      kernel never builds feature strings
+      (:func:`~imops_spark.functions.md5v.tokenize_spaces`);
     - hashes: the 60-bit md5 bucket hash (``conv(substring(md5('{salt}|'
-      + feat), 1, 15), 16, 10) % B``) computed by the vectorized
-      single-block MD5 (:mod:`.md5v`); features over one MD5 block
-      (rare: very long words, space-free CJK documents whose single
-      token is the whole text) fall back to per-row ``hashlib`` — same
-      bits;
-    - sums are ``np.add.reduceat`` over per-doc segments in int64 —
-      exact, and un-overflowable (|lrm| < 2.4e7; a document would need
-      ~4e11 features to approach int64).
+      + feat), 1, 15), 16, 10) % B``) by the vectorized single-block MD5
+      with its per-row ``hashlib`` fallback for long features
+      (:func:`~imops_spark.functions.md5v.md5_top60_spans`);
+    - sums: integer gathers from ``w`` and ``np.add.reduceat`` over
+      per-doc segments in int64 — exact (at |w| < 2.4e7 a document would
+      need ~4e11 features to approach int64) and order-free, so a
+      document over one hash chunk folds its sub-ranges by addition
+      (:func:`~imops_spark.functions.md5v.fold_chunks`).
 
-    One document owning more features than a hash chunk is processed in
-    sub-ranges folded by addition (sums split associatively — the
-    minhash sub-chunk guard, same bound on the pack's fault surface).
-
-    Plan at 100 TB: one pushed scan (+ the conditional ``_widen``) into
-    a stateless ``mapInPandas`` — the agg form's by-doc repartition
-    exchange, feature Generate, broadcast join and two-level doc
-    aggregation all disappear from the scoring side."""
+    ``w`` ships in the UDF closure: no broadcast variable outlives the
+    query."""
     import numpy as np
     import pandas as pd
 
-    from .dedup import _MINHASH_CHUNK_SHINGLES, _widen, normalized_text
+    from .dedup import normalized_text
+    from .md5v import _MINHASH_CHUNK_SHINGLES as chunk_feats
 
-    mp = model.select("bucket", "lrm").toPandas()
-    arr = np.zeros(int(B), dtype=np.int64)
-    arr[mp["bucket"].to_numpy(dtype=np.int64)] = mp["lrm"].to_numpy(dtype=np.int64)
-    bc = docs.sparkSession.sparkContext.broadcast(arr)
-    pre = f"{int(salt)}|".encode()
-    plen = len(pre)
-    cap = 55 - plen
-    BB = np.uint64(int(B))
-    chunk_feats = _MINHASH_CHUNK_SHINGLES
-
-    # zero-token docs produce no features and are absent (agg parity);
-    # normalized text is empty iff the doc has zero tokens, so the guard
-    # is a scan predicate and every kernel row yields >= 1 feature
-    d = _widen(docs.where(F.col("text").isNotNull())).select(
-        "doc_id", normalized_text().alias("nt")
-    ).filter(F.length("nt") > 0)
+    d = base.select("doc_id", F.trim(normalized_text()).alias("nt")).filter(
+        F.length("nt") > 0
+    )
     id_type = dict(d.dtypes)["doc_id"]
-    schema = f"doc_id {id_type}, n_feats long, logw_micro long"
+    prefix = [f"{int(salt)}|".encode()]
+    BB = np.uint64(len(w))
 
     def run(batches):
-        import hashlib
-
         from ._mem import ensure_malloc_tuning
-        from .md5v import be64_top60, md5_words_rows, pack_rows_single_block
+        from .md5v import fold_chunks, md5_top60_spans, tokenize_spaces
 
         ensure_malloc_tuning()
-        w = bc.value
-        md5 = hashlib.md5
         for pdf in batches:
-            n_docs = len(pdf)
-            if n_docs == 0:
-                continue
-            enc = [s.encode() for s in pdf["nt"]]
-            doc_len = np.fromiter(map(len, enc), dtype=np.int64, count=n_docs)
-            doc_off = np.zeros(n_docs + 1, dtype=np.int64)
-            np.cumsum(doc_len, out=doc_off[1:])
-            data = np.frombuffer(b"".join(enc), dtype=np.uint8)
-            spaces = np.nonzero(data == 0x20)[0]
-            n = np.diff(np.searchsorted(spaces, doc_off)) + 1
-            tok_base = np.zeros(n_docs, dtype=np.int64)
-            np.cumsum(n[:-1], out=tok_base[1:])
-            total_tok = int(tok_base[-1] + n[-1])
-            first = np.zeros(total_tok, dtype=bool)
-            first[tok_base] = True
-            ts = np.empty(total_tok, dtype=np.int64)
-            ts[tok_base] = doc_off[:-1]
-            ts[~first] = spaces + 1
-            last = np.zeros(total_tok, dtype=bool)
-            last[tok_base + n - 1] = True
-            te = np.empty(total_tok, dtype=np.int64)
-            te[last] = doc_off[1:]
-            te[~last] = spaces
-            # feature layout per doc: n unigrams then n-1 bigrams —
-            # contiguous per-doc segments so reduceat sums per document
+            if len(pdf) == 0:
+                continue  # empty Arrow batches type columns wrong — skip
+            data, ts, te, n = tokenize_spaces(pdf["nt"])
+            # per doc: u0 b01 u1 b12 .. u(n-1) — unigram i then the bigram
+            # it starts, except after the doc's last token
+            nxt_end = np.append(te[1:], 0)
+            keep = np.ones(2 * len(ts), dtype=bool)
+            keep[2 * np.cumsum(n) - 1] = False
+            f_start = np.repeat(ts, 2)[keep]
+            f_len = np.stack([te, nxt_end], axis=1).ravel()[keep] - f_start
             m = 2 * n - 1
-            f_base = np.zeros(n_docs, dtype=np.int64)
-            np.cumsum(m[:-1], out=f_base[1:])
-            total_f = int(f_base[-1] + m[-1])
-            tok_doc = np.repeat(np.arange(n_docs, dtype=np.int64), n)
-            within = np.arange(total_tok, dtype=np.int64) - tok_base[tok_doc]
-            f_start = np.empty(total_f, dtype=np.int64)
-            f_len = np.empty(total_f, dtype=np.int64)
-            uni_pos = f_base[tok_doc] + within
-            f_start[uni_pos] = ts
-            f_len[uni_pos] = te - ts
-            bi = within < (n[tok_doc] - 1)  # token starts a bigram
-            bi_ix = np.nonzero(bi)[0]
-            bi_pos = f_base[tok_doc[bi_ix]] + n[tok_doc[bi_ix]] + within[bi_ix]
-            f_start[bi_pos] = ts[bi_ix]
-            f_len[bi_pos] = te[bi_ix + 1] - ts[bi_ix]
 
-            def chunk_sums(cdata, c_start, c_len, seg):
-                """md5-bucket hash + per-segment lrm sums over one chunk
-                of feature spans relative to ``cdata``."""
-                long_pos = np.nonzero(c_len > cap)[0]
-                W = pack_rows_single_block(
-                    cdata, c_start, np.minimum(c_len, cap), plen
-                )
-                Bv = W.view(np.uint8).reshape(-1, 64)
-                Bv[:, :plen] = np.frombuffer(pre, dtype=np.uint8)
-                w0, w1, _, _ = md5_words_rows(W)
-                h = be64_top60(w0, w1)
-                for j in long_pos:  # rare: feature > cap bytes
-                    b0 = int(c_start[j])
-                    dg = md5(
-                        pre + cdata[b0 : b0 + int(c_len[j])].tobytes()
-                    ).digest()
-                    h[j] = int.from_bytes(dg[:8], "big") >> 4
+            def chunk_sums(s0, s1, seg):
+                (h,) = md5_top60_spans(data, f_start[s0:s1], f_len[s0:s1], prefix)
                 return np.add.reduceat(w[(h % BB).astype(np.int64)], seg)
 
-            sums = np.empty(n_docs, dtype=np.int64)
-            d0 = 0
-            while d0 < n_docs:
-                d1 = int(
-                    np.searchsorted(f_base, f_base[d0] + chunk_feats, side="right")
-                )
-                d1 = max(d1, d0 + 1)
-                lo_f, hi_f = int(f_base[d0]), (
-                    int(f_base[d1]) if d1 < n_docs else total_f
-                )
-                if d1 == d0 + 1 and hi_f - lo_f > chunk_feats:
-                    # one oversized document: sub-ranges fold by addition.
-                    # Spans are NOT monotone within a doc (bigrams restart
-                    # at its first token), so the relative base must be the
-                    # DOC offset — the pack's int64 fallback guards the
-                    # extreme where the doc itself spans past 2**31.
-                    acc = np.int64(0)
-                    one_seg = np.zeros(1, dtype=np.int64)
-                    off0 = int(doc_off[d0])
-                    cdata = data[off0:]
-                    for s0 in range(lo_f, hi_f, chunk_feats):
-                        s1 = min(s0 + chunk_feats, hi_f)
-                        acc += chunk_sums(
-                            cdata,
-                            f_start[s0:s1] - off0,
-                            f_len[s0:s1],
-                            one_seg,
-                        )[0]
-                    sums[d0] = acc
-                    d0 = d1
-                    continue
-                seg = f_base[d0:d1] - lo_f
-                off0 = int(doc_off[d0])
-                sums[d0:d1] = chunk_sums(
-                    data[off0:],
-                    f_start[lo_f:hi_f] - off0,
-                    f_len[lo_f:hi_f],
-                    seg,
-                )
-                d0 = d1
+            sums = np.empty(len(pdf), dtype=np.int64)
+            fold_chunks(m, chunk_feats, chunk_sums, np.add, sums)
             yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "n_feats": m,
-                    "logw_micro": sums,
-                }
+                {"doc_id": pdf["doc_id"].values, **finish(m, sums)}
             )
 
-    return d.mapInPandas(run, schema=schema)
+    return d.mapInPandas(run, schema=f"doc_id {id_type}, {out_schema}")
 
 
 def dsir_logweights_df(
@@ -1188,6 +1098,9 @@ def dsir_logweights_df(
     Resampling (Xie et al., NeurIPS 2023).  This is the published recipe
     for skewing a web-scale crawl toward a quality domain (Wikipedia,
     books, a curated eval-adjacent corpus) without training a classifier.
+    On a batch ``docs`` the default ``strategy`` (``'arrow'``) fits and
+    collects the ``<= num_buckets``-row model EAGERLY, at plan build: the
+    call itself runs the model job over both corpora before it returns.
 
     Model: features are unigrams + bigrams hashed into ``num_buckets``
     buckets (``md5(salt|feat) % B`` — the repo's cross-engine hash); each
@@ -1223,13 +1136,15 @@ def dsir_logweights_df(
     sample scan.
 
     ``strategy``: ``'agg'`` — the explode + broadcast-join + doc
-    aggregation scoring above; ``'arrow'`` — the round-12 kernel
-    (:func:`_dsir_score_arrow_df`: vectorized single-block md5 bucket
-    hashing over byte spans + integer gathers from the collected
-    ``<= B``-row model, zero scoring-side shuffles, exact parity by
-    construction); ``'auto'`` — arrow for batch frames (the model is
-    bucket-bounded, so the collect is always cheap — unlike the LM
-    kernel there is no size dispatch to make), agg for streams (no
+    aggregation scoring above; ``'arrow'`` — the hashed-feature-sum
+    kernel (:func:`_feature_sum_arrow_df`: vectorized single-block md5
+    bucket hashing over byte spans + integer gathers from the collected
+    ``<= B``-row model, zero scoring-side shuffles — one pushed scan
+    (+ the conditional ``_widen``) into a stateless ``mapInPandas`` —
+    exact parity by construction); ``'auto'`` — arrow for batch frames
+    (the model is bucket-bounded, so the collect is always cheap —
+    unlike the LM kernel there is no size dispatch to make), agg for
+    streams (no
     Python stage per micro-batch; the streaming twin is
     ``dsir_score_local_df``).
     """
@@ -1244,7 +1159,13 @@ def dsir_logweights_df(
         docs, target_docs, num_buckets=num_buckets, add_k=add_k, salt=salt
     )
     if strategy == "arrow":
-        return _dsir_score_arrow_df(docs, model, B, salt)
+        return _feature_sum_arrow_df(
+            _widen(docs.where(F.col("text").isNotNull())),
+            _dense_weights(model, "lrm", B),
+            salt,
+            "n_feats long, logw_micro long",
+            lambda n, s: {"n_feats": n, "logw_micro": s},
+        )
     return (
         _dsir_bucketed(docs, B, salt, by_doc=True)
         .join(F.broadcast(model.select("bucket", "lrm")), "bucket", "left")
@@ -1845,7 +1766,10 @@ def classifier_score_local_df(
     exchange, so the score is a pure row-local projection that runs at
     scan speed on 100 TB and composes into any Structured Streaming
     pipeline in append mode (stream-static cross join of a 1-row static
-    side + per-row arithmetic: no state, no watermark needed).
+    side + per-row arithmetic: no state, no watermark needed).  Under
+    the default ``strategy`` (``'arrow'``) calling this function
+    collects the weight table EAGERLY, at plan build (one model-size
+    Spark job; see below).
 
     This is the plan you actually want for model APPLY: the groupBy
     formulation exists because it shares the exploded feature stream with
@@ -1871,10 +1795,11 @@ def classifier_score_local_df(
     the arrow path scores with the build-time snapshot while ``hof``
     would re-read.  For apply-time scoring that frozen snapshot is what
     you want (a deployed model must not drift mid-job); re-call the
-    function to pick up retrained weights.  Feature buckets come from
-    C-speed ``hashlib`` md5 behind
-    a per-worker cache, per-doc sums are segmented ``add.reduceat``
-    gathers, the micro-logit is exact integer arithmetic, and the
+    function to pick up retrained weights.  The per-doc weight sums come
+    from the hashed-feature-sum kernel shared with DSIR scoring
+    (:func:`_feature_sum_arrow_df`: vectorized md5 bucket hashes over
+    byte spans, segmented ``add.reduceat`` gathers), the micro-logit is
+    exact integer arithmetic, and the
     sigmoid's ROUND(·, 6) runs through a cross-runtime exp tie band
     (:func:`_sigmoid_round6_vec`) — zero interpreted JVM expressions,
     so the fold below cannot go bimodal in a long-lived mixed JVM.
@@ -1899,7 +1824,22 @@ def classifier_score_local_df(
         "classifier_score_local_df",
     )
     if strategy in ("auto", "arrow"):
-        return _classifier_score_arrow_df(docs, wm, B, bias_micro, int(salt))
+        import numpy as np
+
+        def finish(n, s):
+            # signed round-half-away mean + bias, exact integer arithmetic
+            lm = bias_micro + np.where(
+                s >= 0, (2 * s + n) // (2 * n), -((2 * (-s) + n) // (2 * n))
+            )
+            return {"n_feats": n, "logit_micro": lm, "prob": _sigmoid_round6_vec(lm)}
+
+        return _feature_sum_arrow_df(
+            docs.filter(F.col("text").isNotNull()),
+            _dense_weights(wm, "w_micro", B),
+            salt,
+            "n_feats bigint, logit_micro bigint, prob double",
+            finish,
+        )
     idx = spark.range(B).select(F.col("id").alias("bucket"))
     warr = (
         idx.join(F.broadcast(wm), "bucket", "left")
@@ -1929,98 +1869,6 @@ def classifier_score_local_df(
         .selectExpr("doc_id", "st.n AS n_feats", "st.s AS s")
     )
     return _logit_prob_df(scored, bias_micro)
-
-
-def _classifier_score_arrow_df(
-    docs: DataFrame, wm: DataFrame, B: int, bias_micro: int, salt: int
-) -> DataFrame:
-    """The Arrow kernel behind ``classifier_score_local_df`` — see its
-    docstring for the recipe and the bit-identity argument."""
-    import numpy as np
-
-    from .dedup import normalized_text
-
-    w = np.zeros(B, dtype=np.int64)
-    for r in wm.collect():  # model-size: <= B rows by the unique assert
-        b = int(r["bucket"])
-        if 0 <= b < B:  # out-of-range buckets never join in the hof form
-            w[b] = int(r["w_micro"])
-    base = docs.filter(F.col("text").isNotNull()).select(
-        "doc_id", normalized_text().alias("nt")
-    )
-    id_type = dict(base.dtypes)["doc_id"]
-    schema = (
-        f"doc_id {id_type}, n_feats bigint, logit_micro bigint, prob double"
-    )
-    salt_prefix = f"{salt}|".encode()
-
-    def run(batches):
-        import hashlib
-
-        import pandas as pd
-
-        from ._mem import ensure_malloc_tuning
-
-        ensure_malloc_tuning()
-        cache: dict = {}
-        md5 = hashlib.md5
-
-        def bucket(f: str) -> int:
-            b = cache.get(f)
-            if b is None:
-                # conv(substring(md5(salt|f), 1, 15), 16, 10) % B: the top
-                # 60 bits of the digest == the first 15 hex chars
-                b = (
-                    int.from_bytes(
-                        md5(salt_prefix + f.encode()).digest()[:8], "big"
-                    )
-                    >> 4
-                ) % B
-                cache[f] = b
-            return b
-
-        for pdf in batches:
-            ids, counts, bidx_parts = [], [], []
-            for doc_id, nt in zip(pdf["doc_id"], pdf["nt"]):
-                toks = [t for t in nt.split(" ") if t]
-                if not toks:
-                    continue
-                feats = toks + [
-                    f"{toks[i - 1]} {toks[i]}" for i in range(1, len(toks))
-                ]
-                ids.append(doc_id)
-                counts.append(len(feats))
-                bidx_parts.append(
-                    np.fromiter(
-                        (bucket(f) for f in feats),
-                        dtype=np.int64,
-                        count=len(feats),
-                    )
-                )
-            if not ids:
-                continue  # empty Arrow batches type columns wrong — skip
-            if len(cache) > 2_000_000:
-                cache.clear()  # bound the per-worker feature cache
-            n = np.asarray(counts, dtype=np.int64)
-            seg = np.zeros(len(ids), dtype=np.int64)
-            np.cumsum(n[:-1], out=seg[1:])
-            s = np.add.reduceat(w[np.concatenate(bidx_parts)], seg)
-            # signed round-half-away mean + bias, exact integer arithmetic
-            lm = bias_micro + np.where(
-                s >= 0,
-                (2 * s + n) // (2 * n),
-                -((2 * (-s) + n) // (2 * n)),
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_feats": n,
-                    "logit_micro": lm,
-                    "prob": _sigmoid_round6_vec(lm),
-                }
-            )
-
-    return base.mapInPandas(run, schema=schema)
 
 
 def classifier_train_df(

@@ -156,9 +156,6 @@ def _md5_hash_col(col, salt: int, part: int = 0):
     ).cast("long")
 
 
-_MINHASH_CHUNK_SHINGLES = 262_144
-
-
 def _minhash_arrow_df(
     docs: DataFrame, num_hashes: int, k: int, carry: tuple
 ) -> DataFrame:
@@ -176,24 +173,27 @@ def _minhash_arrow_df(
     - shingles: after normalization a word k-shingle (``concat_ws(' ',
       slice(t, i+1, k))``) is a contiguous SUBSTRING of ``nt`` — the
       kernel never builds shingle strings, it derives (start, len) byte
-      spans from the space positions of the batch's concatenated UTF-8
-      buffer (one ``data == 0x20`` mask).  Docs with fewer than k tokens
-      produce exactly one shingle (the whole ``nt``), matching
-      ``sequence(0, greatest(size(t) - k, 0))``;
+      spans from the token spans of the batch's concatenated UTF-8
+      buffer (:func:`~imops_spark.functions.md5v.tokenize_spaces`).
+      Docs with fewer than k tokens produce exactly one shingle (the
+      whole ``nt``), matching ``sequence(0, greatest(size(t) - k, 0))``;
     - hashes: hash i = top 60 bits of half ``i % 2`` of
       ``md5('{i//2}|' + shingle)`` — computed for ALL shingles of a chunk
       at once by :func:`~imops_spark.functions.md5v.md5_words_rows` (64
       vectorized uint32 rounds over packed single blocks; ~5.5x a
       per-message hashlib loop, measured).  The salted message is packed
-      ONCE per chunk with a salt-prefix gap and re-hashed per salt by
-      rewriting two prefix bytes.  Messages over 55 bytes (3-word
-      shingles of very long words) exceed one MD5 block and fall back to
-      per-row ``hashlib`` — same bits;
-    - minima: ``np.minimum.reduceat`` over per-doc shingle segments.  No
-      ``array_distinct`` is needed: MIN over a multiset equals MIN over
-      its set, so in-doc duplicate shingles cost only a few spare hash
-      lanes (the JVM form dedups first because each duplicate would
-      otherwise pay a full md5 expression chain).
+      ONCE per chunk and salt width with a prefix gap and re-hashed per
+      salt by rewriting the prefix bytes
+      (:func:`~imops_spark.functions.md5v.md5_top60_spans`, which also
+      owns the per-row ``hashlib`` fallback for messages over one MD5
+      block — 3-word shingles of very long words);
+    - minima: ``np.minimum.reduceat`` over per-doc shingle segments, in
+      bounded chunks (:func:`~imops_spark.functions.md5v.fold_chunks`;
+      a document over one chunk folds its sub-ranges with
+      ``np.minimum``).  No ``array_distinct`` is needed: MIN over a
+      multiset equals MIN over its set, so in-doc duplicate shingles cost
+      only a few spare hash lanes (the JVM form dedups first because each
+      duplicate would otherwise pay a full md5 expression chain).
 
     Plan shape at 100 TB: identical to the JVM form (the conditional
     ``_widen`` repartition stays — hashing is the CPU-dense stage it
@@ -221,145 +221,50 @@ def _minhash_arrow_df(
     by_plen: dict = {}
     for s in range(n_salts):
         by_plen.setdefault(len(str(s)) + 1, []).append(s)
-    # ~256k shingles per hash chunk bounds the packed block matrix to
-    # ~16 MB and the pack's gather-index triple to ~24 MB: on hosts that
-    # reclaim guest memory aggressively (the round-11 box pathology,
-    # ~1 ms/page re-fault) the chunk working set is the kernel's fault
-    # surface, and per-worker steady state must stay small enough for the
-    # malloc-tuned brk heap to keep every page warm across chunks/batches
-    # (module-level so the oversized-single-document sub-chunk path is
-    # testable at a small size)
-    chunk_shingles = _MINHASH_CHUNK_SHINGLES
+    # read at plan build: tests shrink it to reach the oversized-doc path
+    from .md5v import _MINHASH_CHUNK_SHINGLES as chunk_shingles
 
     def run(batches):
-        import hashlib
-
         from ._mem import ensure_malloc_tuning
-        from .md5v import be64_top60, md5_words_rows, pack_rows_single_block
+        from .md5v import fold_chunks, md5_top60_spans, seg_starts, tokenize_spaces
 
         ensure_malloc_tuning()
-        md5 = hashlib.md5
         for pdf in batches:
             n_docs = len(pdf)
             if n_docs == 0:
                 continue  # empty Arrow batches type columns wrong — skip
-            enc = [s.encode() for s in pdf["nt"]]
-            doc_len = np.fromiter(map(len, enc), dtype=np.int64, count=n_docs)
-            doc_off = np.zeros(n_docs + 1, dtype=np.int64)
-            np.cumsum(doc_len, out=doc_off[1:])
-            data = np.frombuffer(b"".join(enc), dtype=np.uint8)
-            spaces = np.nonzero(data == 0x20)[0]
-            # tokens: doc d owns spaces in [doc_off[d], doc_off[d+1]) and
-            # has n[d] = (count of them) + 1 tokens
-            n = np.diff(np.searchsorted(spaces, doc_off)) + 1
-            tok_base = np.zeros(n_docs, dtype=np.int64)
-            np.cumsum(n[:-1], out=tok_base[1:])
-            total_tok = int(tok_base[-1] + n[-1])
-            first = np.zeros(total_tok, dtype=bool)
-            first[tok_base] = True
-            ts = np.empty(total_tok, dtype=np.int64)  # token start offsets
-            ts[tok_base] = doc_off[:-1]
-            ts[~first] = spaces + 1
-            last = np.zeros(total_tok, dtype=bool)
-            last[tok_base + n - 1] = True
-            te = np.empty(total_tok, dtype=np.int64)  # token end offsets
-            te[last] = doc_off[1:]
-            te[~last] = spaces
+            data, ts, te, n = tokenize_spaces(pdf["nt"])
+            tok_base = seg_starts(n)
             # shingle i of doc d spans tokens [i, min(i + k - 1, n - 1)]
             m = np.maximum(n - k, 0) + 1
-            sh_base = np.zeros(n_docs, dtype=np.int64)
-            np.cumsum(m[:-1], out=sh_base[1:])
-            total_sh = int(sh_base[-1] + m[-1])
             sh_doc = np.repeat(np.arange(n_docs, dtype=np.int64), m)
-            i_in = np.arange(total_sh, dtype=np.int64) - np.repeat(sh_base, m)
+            i_in = np.arange(len(sh_doc), dtype=np.int64) - np.repeat(seg_starts(m), m)
             sh_start = ts[tok_base[sh_doc] + i_in]
             sh_len = (
                 te[tok_base[sh_doc] + np.minimum(i_in + k - 1, n[sh_doc] - 1)]
                 - sh_start
             )
-            sigs = np.empty((num_hashes, n_docs), dtype=np.uint64)
 
-            def chunk_mins(cdata, c_start, c_len, seg):
-                """Per-salt single-block hashing + segmented minima over one
-                chunk of shingle (start, len) spans relative to ``cdata``;
-                returns the ``(num_hashes, len(seg))`` minima.  Offsets stay
-                int64 here — :func:`pack_rows_single_block` downcasts its
-                gather indices to int32 only when the chunk's byte span
-                provably fits (the ADVICE round-11 overflow guard)."""
+            def chunk_mins(s0, s1, seg):
+                """Per-salt hashing + segmented minima over shingles
+                ``[s0, s1)``: the ``(num_hashes, len(seg))`` minima."""
                 out = np.empty((num_hashes, len(seg)), dtype=np.uint64)
-                for plen, salts in by_plen.items():
-                    cap = 55 - plen
-                    long_pos = np.nonzero(c_len > cap)[0]
-                    W = pack_rows_single_block(
-                        cdata, c_start, np.minimum(c_len, cap), plen
+                for salts in by_plen.values():
+                    hashes = md5_top60_spans(
+                        data,
+                        sh_start[s0:s1],
+                        sh_len[s0:s1],
+                        [f"{s}|".encode() for s in salts],
+                        both=True,
                     )
-                    Bv = W.view(np.uint8).reshape(-1, 64)
-                    for s in salts:
-                        pre = f"{s}|".encode()
-                        Bv[:, :plen] = np.frombuffer(pre, dtype=np.uint8)
-                        w0, w1, w2, w3 = md5_words_rows(W)
-                        lo = be64_top60(w0, w1)
-                        hi = be64_top60(w2, w3) if 2 * s + 1 < num_hashes else None
-                        for j in long_pos:  # rare: shingle > 53 bytes
-                            b = int(c_start[j])
-                            dg = md5(
-                                pre + cdata[b : b + int(c_len[j])].tobytes()
-                            ).digest()
-                            lo[j] = int.from_bytes(dg[:8], "big") >> 4
-                            if hi is not None:
-                                hi[j] = int.from_bytes(dg[8:16], "big") >> 4
+                    for s, (lo, hi) in zip(salts, hashes):
                         out[2 * s] = np.minimum.reduceat(lo, seg)
-                        if hi is not None:
+                        if 2 * s + 1 < num_hashes:
                             out[2 * s + 1] = np.minimum.reduceat(hi, seg)
                 return out
 
-            d0 = 0
-            while d0 < n_docs:
-                d1 = int(
-                    np.searchsorted(
-                        sh_base, sh_base[d0] + chunk_shingles, side="right"
-                    )
-                )
-                d1 = max(d1, d0 + 1)
-                lo_s, hi_s = int(sh_base[d0]), (
-                    int(sh_base[d1]) if d1 < n_docs else total_sh
-                )
-                if d1 == d0 + 1 and hi_s - lo_s > chunk_shingles:
-                    # one document owning more shingles than a whole chunk
-                    # (tens of millions of tokens): hash its shingle range
-                    # in sub-chunks and fold with np.minimum — MIN is
-                    # associative — so the pack's gather indices and the
-                    # per-batch temporaries stay bounded instead of wrapping
-                    # int32 / spiking multi-GB (ADVICE round-11).
-                    acc = np.full(
-                        num_hashes, np.iinfo(np.uint64).max, dtype=np.uint64
-                    )
-                    one_seg = np.zeros(1, dtype=np.int64)
-                    for s0 in range(lo_s, hi_s, chunk_shingles):
-                        s1 = min(s0 + chunk_shingles, hi_s)
-                        off0 = int(sh_start[s0])
-                        part = chunk_mins(
-                            data[off0:],
-                            sh_start[s0:s1] - off0,
-                            sh_len[s0:s1],
-                            one_seg,
-                        )
-                        np.minimum(acc, part[:, 0], out=acc)
-                    sigs[:, d0] = acc
-                    d0 = d1
-                    continue
-                seg = sh_base[d0:d1] - lo_s
-                # chunk-relative offsets: the pack downcasts its per-byte
-                # gather indices to int32 when safe (its dominant allocation,
-                # md5v docstring)
-                off0 = int(doc_off[d0])
-                sigs[:, d0:d1] = chunk_mins(
-                    data[off0:],
-                    sh_start[lo_s:hi_s] - off0,
-                    sh_len[lo_s:hi_s],
-                    seg,
-                )
-                d0 = d1
+            sigs = np.empty((num_hashes, n_docs), dtype=np.uint64)
+            fold_chunks(m, chunk_shingles, chunk_mins, np.minimum, sigs)
             res = pd.DataFrame({c: pdf[c].values for c in out_cols})
             for i in range(num_hashes):
                 res[f"mh{i}"] = sigs[i].view(np.int64)

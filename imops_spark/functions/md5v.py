@@ -12,9 +12,16 @@ here it is 64 vectorized uint32 rounds over an ``(n, 16)`` word matrix
 the enabler for the round-11 word-shingle MinHash Arrow kernel.
 
 A salted-shingle message (``"{salt}|" + shingle``) is almost always
-<= 55 bytes, i.e. exactly ONE padded MD5 block — the only case this
-module implements.  Longer messages take the caller's ``hashlib``
-fallback (see ``dedup._minhash_arrow_df``).
+<= 55 bytes, i.e. exactly ONE padded MD5 block — the only case the
+vectorized rounds implement.  Longer messages take a per-row
+``hashlib`` fallback inside :func:`md5_top60_spans`.
+
+The byte-span core shared by the md5 Arrow kernels (word-shingle
+MinHash in ``dedup``, DSIR and classifier scoring in ``curate``) lives
+here too: :func:`tokenize_spaces` turns a batch of normalized strings
+into token byte spans, :func:`md5_top60_spans` hashes prefixed spans,
+and :func:`fold_chunks` reduces them per document in bounded chunks of
+at most ``_MINHASH_CHUNK_SHINGLES`` spans.
 
 The algorithm is the public RFC 1321 specification; bit-equality is
 pinned by test against ``hashlib.md5`` over random messages of every
@@ -29,12 +36,22 @@ need a byteswap; ``pack_rows_single_block`` asserts the host order.
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import math
 import sys
 
 import numpy as np
 
-__all__ = ["md5_words_rows", "pack_rows_single_block", "be64_top60"]
+__all__ = [
+    "md5_words_rows",
+    "pack_rows_single_block",
+    "be64_top60",
+    "seg_starts",
+    "tokenize_spaces",
+    "md5_top60_spans",
+    "fold_chunks",
+]
 
 # RFC 1321: per-round left-rotation amounts and sine-derived constants.
 _S = (
@@ -54,6 +71,15 @@ _G = [
 # gather indices stay int32 below this bound (module-level so the int64
 # fallback is testable without multi-GB fixtures)
 _INT32_SAFE = 2**31
+# spans per hash chunk: ~256k bounds the packed block matrix to ~16 MB and
+# the pack's gather-index triple to ~24 MB.  On hosts that reclaim guest
+# memory aggressively (~1 ms/page re-fault) the chunk working set is the
+# kernel's fault surface, and per-worker steady state must stay small
+# enough for the malloc-tuned brk heap to keep every page warm across
+# chunks and batches.  Kernels read it at plan build and ship it in the
+# UDF closure (module-level so the oversized-document path is testable
+# at a small size).
+_MINHASH_CHUNK_SHINGLES = 262_144
 
 _A0 = np.uint32(0x67452301)
 _B0 = np.uint32(0xEFCDAB89)
@@ -200,3 +226,110 @@ def be64_top60(w0: np.ndarray, w1: np.ndarray) -> np.ndarray:
         )
 
     return ((bswap(w0) << np.uint64(32)) | bswap(w1)) >> np.uint64(4)
+
+
+def seg_starts(counts: np.ndarray) -> np.ndarray:
+    """Exclusive prefix sum: the first flat index of each segment."""
+    base = np.zeros(len(counts), dtype=np.int64)
+    np.cumsum(counts[:-1], out=base[1:])
+    return base
+
+
+def tokenize_spaces(strings) -> tuple[np.ndarray, ...]:
+    """Token byte spans of a non-empty batch of normalized strings.
+
+    Returns ``(data, ts, te, n)``: ``data`` is the batch's concatenated
+    UTF-8 buffer, ``ts``/``te`` the int64 start/end offsets of every
+    token in it (documents in order), ``n`` the per-document token
+    count.  Tokens are split on single spaces exactly like Python's
+    ``str.split(' ')`` (a UTF-8 multi-byte sequence never holds 0x20),
+    empties included: a leading or trailing space yields an empty
+    token, and an empty string is one empty token.
+    """
+    enc = [s.encode() for s in strings]
+    doc_len = np.fromiter(map(len, enc), dtype=np.int64, count=len(enc))
+    doc_off = np.zeros(len(enc) + 1, dtype=np.int64)
+    np.cumsum(doc_len, out=doc_off[1:])
+    data = np.frombuffer(b"".join(enc), dtype=np.uint8)
+    spaces = np.nonzero(data == 0x20)[0]
+    # doc d owns the spaces in [cnt[d], cnt[d+1]); its tokens start at its
+    # own start and after each space, and end at each space and its end
+    cnt = np.searchsorted(spaces, doc_off)
+    ts = np.insert(spaces + 1, cnt[:-1], doc_off[:-1])
+    te = np.insert(spaces, cnt[1:], doc_off[1:])
+    return data, ts, te, np.diff(cnt) + 1
+
+
+def md5_top60_spans(
+    data: np.ndarray,
+    starts: np.ndarray,
+    lens: np.ndarray,
+    prefixes: list,
+    both: bool = False,
+):
+    """Top-60-bit md5 hashes of ``prefix + data[start : start + len]``.
+
+    A generator over ``prefixes`` (byte strings, all of ONE length):
+    the spans are packed once and re-hashed per prefix by rewriting the
+    prefix bytes.  Yields per prefix the low-half hash array (Spark's
+    ``conv(substring(md5(m), 1, 15), 16, 10)``), or the pair ``(low,
+    high)`` of both digest halves when ``both``.  Messages over 55
+    bytes exceed one MD5 block and take a per-row ``hashlib`` fallback —
+    same bits.  Offsets are rebased on the lowest start, so the pack's
+    gather indices stay int32 whenever the spans' own byte range fits.
+    """
+    off0 = int(starts.min())
+    data = data[off0:]
+    starts = starts - off0
+    plen = len(prefixes[0])
+    cap = 55 - plen
+    long_pos = np.nonzero(lens > cap)[0]
+    W = pack_rows_single_block(data, starts, np.minimum(lens, cap), plen)
+    Bv = W.view(np.uint8).reshape(-1, 64)
+    for pre in prefixes:
+        Bv[:, :plen] = np.frombuffer(pre, dtype=np.uint8)
+        w0, w1, w2, w3 = md5_words_rows(W)
+        lo = be64_top60(w0, w1)
+        hi = be64_top60(w2, w3) if both else None
+        for j in long_pos:  # rare: a span longer than 55 - plen bytes
+            b = int(starts[j])
+            dg = hashlib.md5(pre + data[b : b + int(lens[j])].tobytes()).digest()
+            lo[j] = int.from_bytes(dg[:8], "big") >> 4
+            if both:
+                hi[j] = int.from_bytes(dg[8:], "big") >> 4
+        yield (lo, hi) if both else lo
+
+
+def fold_chunks(counts, budget, reduce_chunk, ufunc, out) -> None:
+    """Per-document reductions over flat spans, in chunks of <= ``budget``.
+
+    Document ``d`` owns ``counts[d] >= 1`` consecutive spans.
+    ``reduce_chunk(s0, s1, seg)`` reduces the spans ``[s0, s1)`` of
+    whole documents whose first spans sit at the chunk-relative offsets
+    ``seg`` and returns an array whose last axis is per document; it is
+    written to ``out[..., d0:d1]``.  Chunks are cut on document END
+    offsets, so a chunk never holds more than ``budget`` spans unless
+    it is one oversized document.  Such a document is reduced in
+    sub-ranges of ``budget`` spans folded with ``ufunc`` (``np.minimum``
+    or ``np.add``: both associative), so the pack's gather indices and
+    the per-batch temporaries stay bounded.
+    """
+    end = np.cumsum(counts)
+    base = end - counts
+    one_seg = np.zeros(1, dtype=np.int64)
+    d0 = 0
+    while d0 < len(counts):
+        lo = int(base[d0])
+        d1 = max(int(np.searchsorted(end, lo + budget, side="right")), d0 + 1)
+        hi = int(end[d1 - 1])
+        if hi - lo <= budget:
+            out[..., d0:d1] = reduce_chunk(lo, hi, base[d0:d1] - lo)
+        else:
+            out[..., d0] = functools.reduce(
+                ufunc,
+                (
+                    reduce_chunk(s0, min(s0 + budget, hi), one_seg)[..., 0]
+                    for s0 in range(lo, hi, budget)
+                ),
+            )
+        d0 = d1

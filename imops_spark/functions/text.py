@@ -1633,7 +1633,10 @@ def ngram_lm_df(
     (Laplace) bigram counts on ``train_docs`` (default: the scored corpus
     itself), then score every document's average negative log-likelihood.
     Output: ``(doc_id, n_bigrams, lp_micro_sum, xent, ppl)`` where ``xent``
-    is in nats per bigram and ``ppl = exp(xent)``.
+    is in nats per bigram and ``ppl = exp(xent)``.  When ``strategy``
+    resolves to ``'arrow'`` the call collects the bigram model EAGERLY,
+    at plan build: it runs the model jobs over the train side before it
+    returns.
 
     Model: per document the token sequence is ``['<s>'] + tokens`` of the
     normalized text;  ``P(cur | prev) = (c2(prev,cur) + a) /
@@ -1739,21 +1742,8 @@ def ngram_lm_df(
     # plan (train x3 + scoring).  Checkpointed, the explode runs once per
     # side; lazy, so nothing executes at build time, and the blocks die
     # with the DataFrame.
-    train_big = _bigrams(train_docs) if train_docs is not None else None
-    if strategy == "arrow":
-        if train_big is None:
-            train_big = _bigrams(docs)
-        c2 = (
-            train_big.groupBy("prev", "cur")
-            .agg(F.count(F.lit(1)).alias("c2"))
-            .localCheckpoint(eager=False)
-        )
-        c1 = c2.groupBy("prev").agg(F.sum("c2").alias("c1"))
-        v = c2.agg(F.countDistinct("cur").alias("v"))
-        return _lm_tail(_lm_score_arrow_df(docs, c2, c1, v, a))
     big = _bigrams(docs)
-    if train_big is None:
-        train_big = big
+    train_big = _bigrams(train_docs) if train_docs is not None else big
     c2 = (
         train_big.groupBy("prev", "cur")
         .agg(F.count(F.lit(1)).alias("c2"))
@@ -1761,6 +1751,11 @@ def ngram_lm_df(
     )
     c1 = c2.groupBy("prev").agg(F.sum("c2").alias("c1"))
     v = c2.agg(F.countDistinct("cur").alias("v"))
+    if strategy == "arrow":
+        per_doc = _lm_score_arrow_df(docs, c2, c1, v, a)
+        if per_doc is not None:
+            return _lm_tail(per_doc)
+        # an empty model (no train tokens): the agg form below scores it
     scored = (
         big.join(c2, ["prev", "cur"], "left")
         .join(c1, ["prev"], "left")
@@ -1798,10 +1793,11 @@ def _lm_tail(per_doc: DataFrame) -> DataFrame:
     )
 
 
-def _lm_score_arrow_df(docs: DataFrame, c2, c1, v, a: float) -> DataFrame:
+def _lm_score_arrow_df(docs: DataFrame, c2, c1, v, a: float) -> DataFrame | None:
     """The Arrow scoring kernel behind ``ngram_lm_df(strategy='arrow')``:
     returns ``(doc_id, n_bigrams, lp_micro_sum)`` with ZERO scoring-side
-    shuffles.
+    shuffles, or None for an empty model (no train tokens, ``v = 0``),
+    which the caller scores with the agg form.
 
     Exact parity with the agg form by construction — the kernel never
     computes a float:
@@ -1845,17 +1841,20 @@ def _lm_score_arrow_df(docs: DataFrame, c2, c1, v, a: float) -> DataFrame:
         f"CAST(ROUND(LN((0 + {a!r}) / (c1 + {a!r} * v))"
         " * 1000000) AS BIGINT)"
     )
+    # nullif: an empty model (v = 0) reads as NULL instead of dividing by 0
     lp0 = (
-        f"CAST(ROUND(LN((0 + {a!r}) / (0 + {a!r} * v))"
+        f"CAST(ROUND(LN((0 + {a!r}) / (0 + {a!r} * nullif(v, 0)))"
         " * 1000000) AS BIGINT)"
     )
+    lpm0 = v.selectExpr(f"{lp0} AS lpm0").collect()[0][0]
+    if lpm0 is None:
+        return None
     m = (
         c2.join(c1, ["prev"])
         .crossJoin(F.broadcast(v))
         .selectExpr("prev", "cur", f"{lp2} AS lpm2", f"{lp1} AS lpm1")
         .toPandas()
     )
-    lpm0 = int(v.selectExpr(f"{lp0} AS lpm0").collect()[0][0])
     d2: dict = {}
     d1: dict = {}
     for p, c, l2, l1 in zip(

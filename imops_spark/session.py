@@ -19,7 +19,13 @@ __all__ = ["get_spark", "stop_spark"]
 
 
 def _cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    """The session's core count: ``$SPARK_GRAFT_CPUS``, or the host's
+    when it is unset or not a positive integer."""
+    try:
+        n = int(os.environ["SPARK_GRAFT_CPUS"])
+    except (KeyError, ValueError):
+        n = 0
+    return n if n > 0 else os.cpu_count() or 4
 
 
 def get_spark(

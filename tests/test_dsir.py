@@ -898,6 +898,39 @@ def test_select_by_roc_composes(spark):
     assert len(out) == curve[thr]["tp"] + curve[thr]["fp"]
 
 
+def test_span_kernels_match_agg_on_edge_whitespace(spark):
+    """``normalized_text`` trims spaces only, so a leading or trailing
+    tab/newline leaves one edge space in ``nt``; the JVM forms drop the
+    empty token it splits into.  DSIR's and the classifier's shared Arrow
+    kernel must too: same n_feats and sums, and a doc of only such
+    whitespace is absent."""
+    from imops_spark.functions.curate import (
+        classifier_score_df,
+        classifier_score_local_df,
+    )
+
+    rows = [
+        (1, "abc def\n"),
+        (2, "\tghi jkl"),
+        (3, "plain text here"),
+        (4, "\n"),
+        (5, "x\t\ty\r\n"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    tgt = spark.createDataFrame(rows[2:3], "doc_id long, text string")
+    agg, arw = (
+        sorted(map(tuple, dsir_logweights_df(docs, tgt, 32, strategy=s).collect()))
+        for s in ("agg", "arrow")
+    )
+    assert arw == agg and [r[:2] for r in arw] == [(1, 3), (2, 3), (3, 5), (5, 3)]
+    w = spark.range(32).selectExpr(
+        "id AS bucket", "CAST(id AS DOUBLE) / 32 - 0.5 AS weight"
+    )
+    g = sorted(map(tuple, classifier_score_df(docs, w, num_buckets=32).collect()))
+    a = sorted(map(tuple, classifier_score_local_df(docs, w, num_buckets=32).collect()))
+    assert a == g and len(a) == 4
+
+
 def test_select_by_roc_guards(spark):
     import pytest
 
@@ -926,9 +959,9 @@ def test_arrow_matches_agg_on_edge_shapes(spark, monkeypatch):
     feature is the whole text (the hashlib >1-block fallback), very long
     words, unicode spaces inside tokens, and an oversized doc forcing the
     sub-chunk addition fold (chunk size monkeypatched tiny)."""
-    from imops_spark.functions import dedup
+    from imops_spark.functions import md5v
 
-    monkeypatch.setattr(dedup, "_MINHASH_CHUNK_SHINGLES", 16)
+    monkeypatch.setattr(md5v, "_MINHASH_CHUNK_SHINGLES", 16)
     rows = [
         (1, "the quick brown fox jumps over the lazy dog"),
         (2, "single"),

@@ -95,6 +95,12 @@ def test_precomputed_triangles():
 
 
 GOLDEN = "/root/reference/tests/test_data"
+# without the reference's CT fixtures these three cases SKIP: they are not
+# coverage on such a run, and the test report counts them as skipped
+needs_golden = pytest.mark.skipif(
+    not __import__("os").path.isdir(GOLDEN),
+    reason="reference golden CT data absent: golden interp2d case not run",
+)
 
 
 def _circumcircle_ok(pts, tris, sample=250):
@@ -118,7 +124,7 @@ def _circumcircle_ok(pts, tris, sample=250):
     return True
 
 
-@pytest.mark.skipif(not __import__("os").path.isdir(GOLDEN), reason="no golden data")
+@needs_golden
 def test_golden_ct_small_case():
     """Reference CT fixture arr_2/val_2 (the reference's 'small case',
     test_interp2d.py:57-76): full 8k-knot triangulation + interpolation.
@@ -147,7 +153,7 @@ def test_golden_ct_small_case():
     assert np.isfinite(got).all() and (got >= lo).all() and (got <= hi).all()
 
 
-@pytest.mark.skipif(not __import__("os").path.isdir(GOLDEN), reason="no golden data")
+@needs_golden
 def test_golden_ct_big_case_subsampled():
     """Reference CT fixture arr_0 (NaN-marked 'big case'): 70k knots is out
     of range for the O(n^2) driver triangulation, so validate on a 3k-knot
@@ -174,7 +180,7 @@ def test_golden_ct_big_case_subsampled():
     assert np.isfinite(got).all() and (got >= lo).all() and (got <= hi).all()
 
 
-@pytest.mark.skipif(not __import__("os").path.isdir(GOLDEN), reason="no golden data")
+@needs_golden
 def test_golden_ct_batch_df_parity(spark):
     """The distributed applyInPandas path must agree with the local class on
     the real CT fixture (same kernels, Spark plumbing under test)."""

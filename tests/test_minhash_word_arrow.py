@@ -162,15 +162,72 @@ def test_pack_int64_fallback_bit_identical(monkeypatch):
         assert got == ref, (i, len(m))
 
 
+def test_span_core_matches_split_and_hashlib():
+    """tokenize_spaces == str.split(' ') (empties included) and
+    md5_top60_spans == the top 60 bits of hashlib's digest halves, across
+    the single-block limit (spans of 0..80 bytes, so the per-row fallback
+    runs) and for two prefixes re-hashed over one pack."""
+    from imops_spark.functions.md5v import md5_top60_spans, seg_starts, tokenize_spaces
+
+    strings = ["a bb  c", " lead", "trail ", "", "世界 x", "y" * 80 + " z"]
+    data, ts, te, n = tokenize_spaces(strings)
+    base = seg_starts(n)
+    for d, text in enumerate(strings):
+        span = range(base[d], base[d] + n[d])
+        toks = [data[ts[i] : te[i]].tobytes().decode() for i in span]
+        assert toks == text.split(" ")
+    rng = np.random.default_rng(3)
+    data = rng.integers(0, 256, size=4000).astype(np.uint8)
+    lens = np.arange(81, dtype=np.int64)
+    starts = rng.integers(100, 3900, size=len(lens)).astype(np.int64)
+    prefixes = [b"4|", b"7|"]
+    hashes = md5_top60_spans(data, starts, lens, prefixes, both=True)
+    for pre, (lo, hi) in zip(prefixes, hashes):
+        for i in range(len(lens)):
+            msg = pre + data[starts[i] : starts[i] + lens[i]].tobytes()
+            dg = hashlib.md5(msg).digest()
+            assert lo[i] == int.from_bytes(dg[:8], "big") >> 4
+            assert hi[i] == int.from_bytes(dg[8:], "big") >> 4
+
+
+def test_fold_chunks_cuts_on_document_end_offsets():
+    """A [small, oversized, small] batch: no chunk handed to the
+    per-chunk reduction exceeds the span budget — the small first doc
+    must not drag the oversized one into its chunk, and the oversized doc
+    is reduced in budget-sized sub-ranges folded with the ufunc.  Every
+    span is reduced exactly once and every per-doc result is exact."""
+    from imops_spark.functions.md5v import fold_chunks
+
+    budget = 8
+    counts = np.array([3, 50, 2], dtype=np.int64)
+    vals = (np.arange(int(counts.sum()), dtype=np.int64) * 7919) % 101
+    bounds = np.concatenate([[0], np.cumsum(counts)])
+    for ufunc in (np.add, np.minimum):
+        calls = []
+
+        def reduce_chunk(s0, s1, seg):
+            calls.append((s0, s1))
+            return np.stack([ufunc.reduceat(vals[s0:s1], seg)] * 2)
+
+        out = np.empty((2, len(counts)), dtype=np.int64)
+        fold_chunks(counts, budget, reduce_chunk, ufunc, out)
+        assert all(s1 - s0 <= budget for s0, s1 in calls), calls
+        assert sorted(calls) == calls and calls[0][0] == 0
+        assert all(a[1] == b[0] for a, b in zip(calls, calls[1:]))
+        assert calls[-1][1] == bounds[-1]
+        want = [ufunc.reduce(vals[bounds[d] : bounds[d + 1]]) for d in range(3)]
+        assert out[0].tolist() == want and out[1].tolist() == want
+
+
 def test_minhash_oversized_single_doc_subchunks(spark, monkeypatch):
     """A document owning more shingles than one hash chunk takes the
     sub-chunk + np.minimum fold path (the ADVICE round-11 overflow/spike
     guard); signatures must equal the JVM form's.  The chunk size is
     monkeypatched far below the fixture's shingle counts so the path runs
     on a small corpus."""
-    from imops_spark.functions import dedup
+    from imops_spark.functions import dedup, md5v
 
-    monkeypatch.setattr(dedup, "_MINHASH_CHUNK_SHINGLES", 8)
+    monkeypatch.setattr(md5v, "_MINHASH_CHUNK_SHINGLES", 8)
     rows = [
         (1, " ".join(f"tok{i % 37}" for i in range(200))),  # 198 shingles >> 8
         (2, "small doc here"),

@@ -786,7 +786,7 @@ def test_bench_contention_stats_flags_loaded_run():
 
     import bench
 
-    busy_load = (os.cpu_count() or 8) / 4.0  # comfortably past cores/8
+    busy_load = 2 * max(1.0, (os.cpu_count() or 8) / 8.0)  # twice the threshold
     # idle shape: steady passes repeat within noise; one GC-unlucky query
     # (1.6x) is normal and stays under the >=3-query threshold
     idle = {
@@ -816,13 +816,47 @@ def test_bench_contention_stats_flags_loaded_run():
 
     # the SAME spreads with an idle load stamp: JIT-mode flips, not an
     # outside process — must not frame the box
-    s = bench.contention_stats(loaded, load_before=0.5)
+    idle_load = max(1.0, (os.cpu_count() or 8) / 8.0) / 2  # half the threshold
+    s = bench.contention_stats(loaded, load_before=idle_load)
     assert not s["contended"]
     assert s["n_queries_spread_gt_1p5"] >= 3  # the diagnostic stays visible
 
     # two-pass fallback: with no steady-state pair, both passes count
     s = bench.contention_stats({"q1": [1.0, 0.2]})
     assert s["spread_max_over_min"]["q1"] == 5.0
+
+
+def test_cpus_falls_back_on_malformed_env(monkeypatch):
+    """One parser for $SPARK_GRAFT_CPUS: a malformed or non-positive value
+    falls back to the host's core count instead of crashing the session
+    builder or bench.py."""
+    import os
+
+    from imops_spark.session import _cpus
+
+    host = os.cpu_count() or 4
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
+    assert _cpus() == 6
+    for bad in ("four", "", "2.5", "0", "-3"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+        assert _cpus() == host, bad
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert _cpus() == host
+
+
+def test_core_scaling_ratio_table_tolerates_missing_op(monkeypatch):
+    """An op the low-core run lost reads a null ratio, not a KeyError
+    after both multi-minute runs."""
+    import os
+
+    monkeypatch.syspath_prepend(
+        os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+    )
+    from core_scaling_probe import ratio_table
+
+    table = ratio_table({8: {"a": 4.0}, 32: {"a": 1.0, "b": 2.0}})
+    assert table["a"] == {"c8": 4.0, "c32": 1.0, "ratio": 4.0}
+    assert table["b"] == {"c8": None, "c32": 2.0, "ratio": None}
 
 
 def test_top_items_param_validation(spark):

@@ -125,6 +125,28 @@ def test_arrow_strategy_matches_agg_and_reference(spark):
     assert got2 == _reference(score_rows, ROWS)
 
 
+def test_arrow_matches_agg_on_empty_train_side(spark):
+    """A train side with no tokens is an empty model (V = 0).  The arrow
+    form must not crash at plan build; it returns what the agg form
+    returns: no rows when no scored doc has a token, and (with ANSI
+    division off) the same NULL-scored rows when some do."""
+    train = spark.createDataFrame(
+        [(1, "   "), (2, None), (3, "")], "doc_id long, text string"
+    )
+    blank = spark.createDataFrame([(7, " "), (8, None)], "doc_id long, text string")
+    for scored in (blank, spark.createDataFrame(ROWS, "doc_id long, text string")):
+        conf = spark.conf.get("spark.sql.ansi.enabled")
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        try:
+            arw = ngram_lm_df(scored, train_docs=train, strategy="arrow")
+            agg = ngram_lm_df(scored, train_docs=train, strategy="agg")
+            got = sorted(map(tuple, arw.collect()))
+            assert got == sorted(map(tuple, agg.collect()))
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", conf)
+    assert got and all(r[2] is None for r in got)
+
+
 def test_strategy_dispatch(spark, tmp_path):
     """auto -> arrow for a small file-backed train side (footer estimate
     under the collect budget), agg for non-file frames; bad strategy

@@ -49,6 +49,24 @@ def run_at(cpus: int, size: int, ops: str) -> dict[str, float]:
     raise RuntimeError(f"probe at {cpus} cores produced no result")
 
 
+def ratio_table(results: dict[int, dict[str, float]]) -> dict[str, dict]:
+    """Per-op seconds at each core count and the low/high-core ratio; an
+    op missing from a run reads null instead of failing the probe."""
+    lo, hi = min(results), max(results)
+
+    def r2(t: float | None) -> float | None:
+        return None if t is None else round(t, 2)
+
+    table = {}
+    for op in results[hi]:
+        t_lo = results[lo].get(op)
+        table[op] = {
+            **{f"c{c}": r2(results[c].get(op)) for c in results},
+            "ratio": r2(None if t_lo is None else t_lo / max(results[hi][op], 1e-9)),
+        }
+    return table
+
+
 def main() -> None:
     args = dict(a.split("=", 1) for a in sys.argv[1:] if "=" in a)
     size = int(args.get("--size", 320_000))
@@ -56,14 +74,8 @@ def main() -> None:
     ops = args.get("--ops", _DEFAULT_OPS)
     load = round(os.getloadavg()[0], 2)
     results = {c: run_at(c, size, ops) for c in cpus}
+    table = ratio_table(results)
     lo, hi = min(cpus), max(cpus)
-    table = {
-        op: {
-            **{f"c{c}": round(results[c][op], 2) for c in cpus},
-            "ratio": round(results[lo][op] / max(results[hi][op], 1e-9), 2),
-        }
-        for op in results[hi]
-    }
     print(json.dumps({"size": size, "cpus": cpus, "load_1m_start": load, "ops": table}))
     print(f"\n| operator | {lo} cores (s) | {hi} cores (s) | ratio {lo}c/{hi}c |")
     print("|---|---|---|---|")
