@@ -2817,17 +2817,15 @@ def q_txt_embed(spark, sf_dir):
 
 def q_txt_embed_stream(spark, sf_dir):
     """Ingestion-time hashed embeddings (text.hashed_embedding_local_df):
-    the ZERO-SHUFFLE twin of txt_embed — since round 10 auto routes
-    through the Arrow kernel (hashlib md5 behind a per-worker token
-    cache, per-bit votes as segmented reduceat passes, vectorized
-    ROUND(v/norm, 6); bit-identical to the JVM HOF form, which remains
-    the 'hof' fallback), so every document embeds itself in one
-    stateless mapInPandas projection: append-mode streaming-legal, no
-    state, no watermark, no interpreted JVM expression left to go
-    bimodal over a long-lived stream.  A crawl gets an embedding column
-    AS IT LANDS, feeding the streaming near-dup and ANN maintenance
-    sinks.  Same oracle as txt_embed; the batch/hof/arrow twins are
-    additionally differential-tested."""
+    the ZERO-SHUFFLE twin of txt_embed — an Arrow kernel (hashlib md5
+    behind a per-worker token cache, per-bit votes as segmented reduceat
+    passes, vectorized ROUND(v/norm, 6)), so every document embeds
+    itself in one stateless mapInPandas projection: append-mode
+    streaming-legal, no state, no watermark, no interpreted JVM
+    expression left to go bimodal over a long-lived stream.  A crawl
+    gets an embedding column AS IT LANDS, feeding the streaming near-dup
+    and ANN maintenance sinks.  Same oracle as txt_embed; the kernel is
+    additionally differential-tested against the batch form."""
     from imops_spark.functions.text import hashed_embedding_local_df
     from imops_spark.streaming.events import run_stream_to_memory
 
@@ -3031,17 +3029,15 @@ def _cur_select4_sql(classify_sql: str) -> str:
 
 def q_txt_classify_stream(spark, sf_dir):
     """Ingestion-time classifier scoring (curate.classifier_score_local_df):
-    the ZERO-SHUFFLE twin of txt_classify — since round 10 auto routes
-    through the Arrow kernel (the snapped micro-weight table collected
-    once into a dense vector at plan build, vectorized md5 feature
-    buckets over byte spans — the hashed-feature-sum kernel shared with
-    DSIR scoring — exact integer logit, sigmoid ROUND(.,6) behind a
-    cross-runtime exp tie band; bit-identical to the JVM fold form,
-    which remains the 'hof' fallback): append-mode streaming-legal with
-    no state or
-    watermark and no interpreted JVM fold to go bimodal over a
-    long-lived stream.  Same oracle as txt_classify; the
-    groupBy/hof/arrow twins are additionally differential-tested."""
+    the ZERO-SHUFFLE twin of txt_classify — an Arrow kernel (the
+    snapped micro-weight table collected once into a dense vector at
+    plan build, vectorized md5 feature buckets over byte spans — the
+    hashed-feature-sum kernel shared with DSIR scoring — exact integer
+    logit, sigmoid ROUND(.,6) behind a cross-runtime exp tie band):
+    append-mode streaming-legal with no state or watermark and no
+    interpreted JVM fold to go bimodal over a long-lived stream.  Same
+    oracle as txt_classify; the kernel is additionally
+    differential-tested against the groupBy form."""
     from imops_spark.functions.curate import classifier_score_local_df
     from imops_spark.streaming.events import run_stream_to_memory
 

@@ -975,7 +975,7 @@ def _dsir_features(d: DataFrame, by_doc: bool = False) -> DataFrame:
     bigram builder binds ``toks`` as a lambda variable (``transform(array
     (toks), t -> ..)[0]``) — referencing an expression column inside a
     lambda body re-evaluates it per invocation otherwise (the
-    CollapseProject trap, see text.winnow_fp_array_df)."""
+    CollapseProject trap, see dedup.simhash_df's 'local' fold comment)."""
     from .dedup import normalized_text
 
     base = d.filter(F.col("text").isNotNull()).select(
@@ -1566,8 +1566,7 @@ def dsir_score_local_df(
     :func:`dsir_model_df`: the model densifies into ONE broadcast
     ``num_buckets``-long micro-nat array and each document folds its own
     feature array against it with O(1) ``element_at`` lookups — no
-    explode, no join key, no doc_id exchange (the
-    ``classifier_score_local_df`` mechanism).  Output ``(doc_id, n_feats,
+    explode, no join key, no doc_id exchange.  Output ``(doc_id, n_feats,
     logw_micro)``, value-identical to :func:`dsir_logweights_df` on the
     fitting corpus (differential-tested) and append-mode streaming-legal,
     so a crawl can be importance-scored AS IT LANDS against a model fit
@@ -1756,64 +1755,55 @@ def classifier_score_local_df(
     num_buckets: int = 1024,
     bias: float = 0.0,
     salt: int = 50,
-    strategy: str = "auto",
 ) -> DataFrame:
     """ZERO-SHUFFLE, streaming-legal twin of :func:`classifier_score_df`
     (value-identical, differential-tested): the weight table is densified
-    into ONE broadcast row holding a ``num_buckets``-long micro-weight
-    array, and each document folds its own feature array against it with
-    O(1) ``element_at`` lookups — no explode, no join key, no doc_id
-    exchange, so the score is a pure row-local projection that runs at
-    scan speed on 100 TB and composes into any Structured Streaming
-    pipeline in append mode (stream-static cross join of a 1-row static
-    side + per-row arithmetic: no state, no watermark needed).  Under
-    the default ``strategy`` (``'arrow'``) calling this function
-    collects the weight table EAGERLY, at plan build (one model-size
-    Spark job; see below).
+    into ONE ``num_buckets``-long micro-weight vector, and each document
+    sums its own features' weights with O(1) array lookups — no explode,
+    no join key, no doc_id exchange, so the score is a pure row-local
+    projection that runs at scan speed on 100 TB and composes into any
+    Structured Streaming pipeline in append mode (no state, no watermark
+    needed).  Calling this function collects the weight table EAGERLY,
+    at plan build (one model-size Spark job; see below).
 
     This is the plan you actually want for model APPLY: the groupBy
     formulation exists because it shares the exploded feature stream with
     model FITTING (:func:`dsir_logweights_df`); once weights are fixed,
     grouping by doc_id only re-assembles rows the fold never needed to
-    take apart.  Density is the trick that makes it legal: ``element_at``
-    on an ARRAY is O(1), where a ``map_from_entries`` lookup is a linear
+    take apart.  Density is the trick that makes it legal: a lookup in a
+    dense array is O(1), where a ``map_from_entries`` lookup is a linear
     scan per feature (Spark maps are entry arrays — the bloom _densify
     lesson, measured 30x there).
 
     Featureless documents (no tokens after normalization) are dropped,
     matching the explode semantics of the groupBy twin.
 
-    ``strategy``: ``'arrow'`` (auto's pick — the entropy-twin recipe)
-    scores inside a ``mapInPandas`` kernel: the snapped micro-weight
-    table is collected ONCE at plan build into a dense ``B``-long int64
-    vector (a bounded model-size driver action, the roc/quantile
-    precedent).  EAGER-SNAPSHOT SEMANTICS, unlike the lazy ``hof``
-    twin: calling this function runs a model-size Spark job immediately
-    (duplicate-bucket asserts fire at BUILD time, not first execution),
-    and the weight vector is frozen at that moment — if the weights
-    table's underlying data changes before the returned plan executes,
-    the arrow path scores with the build-time snapshot while ``hof``
-    would re-read.  For apply-time scoring that frozen snapshot is what
-    you want (a deployed model must not drift mid-job); re-call the
-    function to pick up retrained weights.  The per-doc weight sums come
-    from the hashed-feature-sum kernel shared with DSIR scoring
-    (:func:`_feature_sum_arrow_df`: vectorized md5 bucket hashes over
-    byte spans, segmented ``add.reduceat`` gathers), the micro-logit is
-    exact integer arithmetic, and the
-    sigmoid's ROUND(·, 6) runs through a cross-runtime exp tie band
-    (:func:`_sigmoid_round6_vec`) — zero interpreted JVM expressions,
-    so the fold below cannot go bimodal in a long-lived mixed JVM.
-    ``'hof'`` is the pure-JVM ``aggregate``-fold form, kept as the
-    no-Python-workers fallback and the differential pinning twin.
+    Scoring runs inside a ``mapInPandas`` kernel (the entropy-twin
+    recipe): the snapped micro-weight table is collected ONCE at plan
+    build into a dense ``B``-long int64 vector (a bounded model-size
+    driver action, the roc/quantile precedent).  EAGER-SNAPSHOT
+    SEMANTICS: calling this function runs a model-size Spark job
+    immediately (duplicate-bucket asserts fire at BUILD time, not first
+    execution), and the weight vector is frozen at that moment — if the
+    weights table's underlying data changes before the returned plan
+    executes, it still scores with the build-time snapshot, where the
+    lazy :func:`classifier_score_df` would re-read.  For apply-time
+    scoring that frozen snapshot is what you want (a deployed model must
+    not drift mid-job); re-call the function to pick up retrained
+    weights.  The per-doc weight sums come from the hashed-feature-sum
+    kernel shared with DSIR scoring (:func:`_feature_sum_arrow_df`:
+    vectorized md5 bucket hashes over byte spans, segmented
+    ``add.reduceat`` gathers), the micro-logit is exact integer
+    arithmetic, and the sigmoid's ROUND(·, 6) runs through a
+    cross-runtime exp tie band (:func:`_sigmoid_round6_vec`) — zero
+    interpreted JVM expressions, so nothing can go bimodal in a
+    long-lived mixed JVM.
     """
+    import numpy as np
+
     B = int(num_buckets)
     if B <= 0:
         raise ValueError(f"num_buckets must be positive, got {num_buckets}")
-    if strategy not in ("auto", "arrow", "hof"):
-        raise ValueError(
-            f"strategy must be 'auto', 'arrow', or 'hof', got {strategy!r}"
-        )
-    spark = docs.sparkSession
     bias_micro = round(float(bias) * 1_000_000)
     wm = _assert_unique_buckets(
         weights.select(
@@ -1823,52 +1813,21 @@ def classifier_score_local_df(
         "w_micro",
         "classifier_score_local_df",
     )
-    if strategy in ("auto", "arrow"):
-        import numpy as np
 
-        def finish(n, s):
-            # signed round-half-away mean + bias, exact integer arithmetic
-            lm = bias_micro + np.where(
-                s >= 0, (2 * s + n) // (2 * n), -((2 * (-s) + n) // (2 * n))
-            )
-            return {"n_feats": n, "logit_micro": lm, "prob": _sigmoid_round6_vec(lm)}
-
-        return _feature_sum_arrow_df(
-            docs.filter(F.col("text").isNotNull()),
-            _dense_weights(wm, "w_micro", B),
-            salt,
-            "n_feats bigint, logit_micro bigint, prob double",
-            finish,
+    def finish(n, s):
+        # signed round-half-away mean + bias, exact integer arithmetic
+        lm = bias_micro + np.where(
+            s >= 0, (2 * s + n) // (2 * n), -((2 * (-s) + n) // (2 * n))
         )
-    idx = spark.range(B).select(F.col("id").alias("bucket"))
-    warr = (
-        idx.join(F.broadcast(wm), "bucket", "left")
-        .select("bucket", F.coalesce("w_micro", F.lit(0)).alias("w_micro"))
-        .agg(
-            F.array_sort(F.collect_list(F.struct("bucket", "w_micro"))).alias("e")
-        )
-        .selectExpr("transform(e, x -> x.w_micro) AS __w")
-    )
-    from .dedup import normalized_text
+        return {"n_feats": n, "logit_micro": lm, "prob": _sigmoid_round6_vec(lm)}
 
-    # feature array bound as `fs`, weight array `__w` is a plain attribute
-    # (safe inside lambdas); the md5 bucket hash mirrors _md5_hash_col
-    fold = (
-        f"transform(array({_feature_array_sql()}), fs -> named_struct("
-        f" 'n', CAST(size(fs) AS BIGINT),"
-        f" 's', aggregate(fs, CAST(0 AS BIGINT), (acc, f) -> acc + element_at(__w,"
-        f"   {_bucket_hash_sql('f', salt, B, plus_one=True)})))"
-        f")[0]"
+    return _feature_sum_arrow_df(
+        docs.filter(F.col("text").isNotNull()),
+        _dense_weights(wm, "w_micro", B),
+        salt,
+        "n_feats bigint, logit_micro bigint, prob double",
+        finish,
     )
-    scored = (
-        docs.filter(F.col("text").isNotNull())
-        .select("doc_id", F.array_remove(F.split(normalized_text(), " "), "").alias("toks"))
-        .filter(F.size("toks") > 0)
-        .crossJoin(F.broadcast(warr))
-        .selectExpr("doc_id", f"{fold} AS st")
-        .selectExpr("doc_id", "st.n AS n_feats", "st.s AS s")
-    )
-    return _logit_prob_df(scored, bias_micro)
 
 
 def classifier_train_df(

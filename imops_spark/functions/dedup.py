@@ -388,7 +388,6 @@ def minhash_signatures_char_df(
     num_hashes: int = 16,
     k: int = 9,
     carry: tuple = (),
-    strategy: str = "auto",
 ) -> DataFrame:
     """Char-gram MinHash signatures ``(doc_id, mh0..mh{H-1})`` — the
     production fast path of the MinHash family, hashed INSIDE an Arrow
@@ -402,9 +401,10 @@ def minhash_signatures_char_df(
     strided ``xxh64_sliding`` pass (the winnowing kernel's recipe), and
     each family member ``i`` then costs only the 8-op
     :func:`~imops_spark.functions.xxh.xxh64_chain_int` mix — hash family
-    member ``i`` is bit-identical to Spark's ``xxhash64(gram, i)``
-    (test-pinned), so the kernel and the JVM expression form are the SAME
-    hash family, not merely equivalent ones.
+    member ``i`` is bit-identical to Spark's ``xxhash64(gram, i)``, so
+    ``mh{i}`` equals Spark's ``array_min(transform(sequence(1,
+    length(nt) - k + 1), p -> xxhash64(substring(nt, p, k), i)))``
+    (test-pinned against that expression).
 
     Why this exists: the word-shingle ``hash_fn='xxhash64'`` form is
     ``array_min(transform(...))`` — an interpreted JVM higher-order
@@ -433,13 +433,9 @@ def minhash_signatures_char_df(
     whose BYTE width reaches 32 (astral-plane-heavy text at large k)
     fall to scalar hashing.
 
-    ``strategy``: ``'arrow'`` (the kernel), ``'jvm'`` (the equivalent
-    interpreted-HOF projection — kept as the bit-equality pinning twin
-    and for engines without Python workers), ``'auto'`` = arrow always
-    (batch AND streams — there is no aggregation to make it
-    batch-only).  Signature VALUES differ from the md5 word path; every
-    consumer depends only on hash equality, so LSH banding and near-dup
-    verdicts are hash-family-invariant on duplicate-vs-distinct corpora
+    Signature VALUES differ from the md5 word path; every consumer
+    depends only on hash equality, so LSH banding and near-dup verdicts
+    are hash-family-invariant on duplicate-vs-distinct corpora
     (path-equivalence tested).  Not DuckDB-reproducible (xxhash64), so
     the gates stay on the md5 word path.
     """
@@ -448,12 +444,6 @@ def minhash_signatures_char_df(
         raise ValueError(
             f"num_hashes and k must be >= 1, got {num_hashes}, {k}"
         )
-    if strategy not in ("auto", "arrow", "jvm"):
-        raise ValueError(
-            f"strategy must be 'auto', 'arrow', or 'jvm', got {strategy!r}"
-        )
-    if strategy == "auto":
-        strategy = "arrow"
     carry = quote_carry(
         carry,
         _SHINGLE_RESERVED | {"nt"} | {f"mh{i}" for i in range(num_hashes)},
@@ -461,14 +451,6 @@ def minhash_signatures_char_df(
     d = _widen(docs.where(F.col("text").isNotNull())).select(
         "doc_id", *carry, normalized_text().alias("nt")
     ).filter(F.length("nt") >= k)
-
-    if strategy == "jvm":
-        cols = [
-            f"array_min(transform(sequence(1, length(nt) - {k - 1}),"
-            f" p -> xxhash64(substring(nt, p, {k}), {i}))) AS mh{i}"
-            for i in range(num_hashes)
-        ]
-        return d.selectExpr("doc_id", *carry, *cols)
 
     import numpy as np
     import pandas as pd
@@ -761,12 +743,10 @@ def ngram_jaccard_df(docs: DataFrame, pairs: DataFrame, k: int = 3) -> DataFrame
 def _simhash_arrow_df(docs: DataFrame, bits: int) -> DataFrame:
     """The zero-shuffle Arrow kernel behind ``simhash_df(strategy='arrow')``:
     a SimHash signature is a function of ONE document's own distinct-token
-    set, so the whole computation is row-local — the 'agg' form's _widen
-    repartition + explode + 33-column aggregate exist only to give the
-    per-(doc, token) vote counting a relational shape, and the repartition
-    moves the full document text through an exchange.
+    set, so the whole computation is row-local — no exchange, explode or
+    aggregate is needed to count the per-(doc, token) votes.
 
-    Exact parity with the 'agg' arithmetic (differential-tested):
+    Exact parity with the 'local' fold's arithmetic (differential-tested):
 
     - tokens: ``nt.split(' ')`` over the plan-computed normalized text —
       after ``normalized_text()`` every whitespace run is a single ASCII
@@ -777,8 +757,9 @@ def _simhash_arrow_df(docs: DataFrame, bits: int) -> DataFrame:
       ``array_distinct`` = Python set (vote sums are order-free);
     - hash: top 60 bits of ``md5('0|' + token)`` — the
       ``conv(substring(md5, 1, 15), 16, 10)`` recipe, behind a per-task
-      token cache (the corpus vocabulary repeats across documents: one
-      digest per distinct token per task, not per occurrence);
+      token cache (:func:`~.md5v.md5_top60_cached`: the corpus vocabulary
+      repeats across documents, so one digest per distinct token per
+      task, not per occurrence);
     - votes: ``bits`` vectorized shift-mask-``add.reduceat`` passes over
       the batch's flat token-hash array (temporaries bounded to the flat
       array size — no n_tokens x bits bit-matrix); bit b of the signature
@@ -802,29 +783,15 @@ def _simhash_arrow_df(docs: DataFrame, bits: int) -> DataFrame:
     pows = (np.int64(1) << np.arange(bits, dtype=np.int64)).reshape(-1, 1)
 
     def run(batches):
-        import hashlib
-
         from ._mem import ensure_malloc_tuning
+        from .md5v import md5_top60_cached
 
         ensure_malloc_tuning()
-        md5 = hashlib.md5
-        cache: dict = {}
-
-        def tok_hash(t: str) -> int:
-            h = cache.get(t)
-            if h is None:
-                # conv(substring(md5, 1, 15), 16, 10): the top 60 bits of
-                # the digest == the first 15 hex chars (winnow-kernel recipe)
-                h = int.from_bytes(md5(("0|" + t).encode()).digest()[:8], "big") >> 4
-                cache[t] = h
-            return h
-
+        tok_hash = md5_top60_cached(b"0|")
         for pdf in batches:
             n_rows = len(pdf)
             if n_rows == 0:
                 continue
-            if len(cache) > 2_000_000:
-                cache.clear()  # bound the per-worker token cache
             # set == array_distinct here: the vote sum is order-invariant
             tok_sets = [set(nt.split(" ")) for nt in pdf["nt"]]
             lens = np.fromiter(
@@ -855,7 +822,7 @@ def simhash_df(
 ) -> DataFrame:
     """SimHash signature per document: ``(doc_id, simhash)``.  Bit b of the
     signature is set when ones out-vote zeros among the distinct tokens'
-    hash bits (2*ones > n).  Three value-identical strategies:
+    hash bits (2*ones > n).  Two value-identical strategies:
 
     - ``'arrow'`` (batch default since round 11): ZERO shuffles — one
       stateless ``mapInPandas`` kernel over the plan-computed normalized
@@ -863,18 +830,7 @@ def simhash_df(
       repeats across documents, so each distinct token is digested once
       per task instead of once per (doc, token) occurrence — the same
       economics as the winnowing kernel's gram cache) and the bit votes
-      are one vectorized numpy ``reduceat`` per batch.  Replaces the
-      'agg' form's full-text _widen exchange + explode + 33-column
-      aggregate (measured A/B below in git history / FASTPATH.md).
-    - ``'agg'``: explode distinct tokens, one md5 hash
-      column, ``groupBy(doc_id)`` with ``bits`` conditional-sum vote
-      counters, signature assembled from the votes.  Every stage is
-      WHOLE-STAGE-CODEGEN (hash aggregate with long buffers) — immune to
-      the interpreted-HOF JIT pathology below — at the cost of ONE
-      exchange (the pre-explode _widen repartition moves the raw text
-      when the scan under-partitions; the post-explode aggregation then
-      combines map-side and needs no second shuffle).  Kept as the
-      no-Python-workers fallback and the differential pinning twin.
+      are one vectorized numpy ``reduceat`` per batch.
     - ``'local'`` (streaming default): ZERO shuffles — the vote fold runs
       row-locally in one ``aggregate`` pass over the hash array (zip_with
       against each hash's bit vector).  No aggregation operator anywhere,
@@ -890,56 +846,42 @@ def simhash_df(
     pure-JVM projection composes under further stateful operators without
     a Python stage per micro-batch) and 'arrow' otherwise.
 
-    The 'local' fold keeps the lambda-bound struct form: expressed as
-    stacked projections, CollapseProject inlines ``n = size(tok)`` into
-    the per-bit lambda and the tokenization re-evaluates once per bit —
-    the winnow_fp_array_df optimizer trap.
+    The 'local' fold keeps the lambda-bound struct form (the
+    CollapseProject trap — see the fold comment in the code).
     """
     if strategy is None:
         strategy = "local" if docs.isStreaming else "arrow"
-    if strategy not in ("agg", "local", "arrow"):
+    if strategy not in ("local", "arrow"):
         raise ValueError(
-            f"strategy must be 'agg', 'local', or 'arrow', got {strategy!r}"
+            f"strategy must be 'local' or 'arrow', got {strategy!r}"
         )
     if strategy == "arrow":
         return _simhash_arrow_df(docs, int(bits))
-    # scan-level guard: NULL-text docs produced no rows on the old explode
-    # path, and a size(null) comparison would silently emit sig=0 instead
+    # scan-level guard: NULL-text docs get no row (as in the arrow
+    # kernel); a size(null) comparison would silently emit sig=0 instead
     toks = _widen(docs.where(F.col("text").isNotNull())).select(
         "doc_id",
         F.array_distinct(F.split(normalized_text(), r"\s+")).alias("tok"),
     )
-    if strategy == "agg":
-        h = toks.select(
-            "doc_id", F.explode("tok").alias("x")
-        ).select(
-            "doc_id",
-            F.conv(F.substring(F.md5(F.concat(F.lit("0|"), F.col("x"))), 1, 15), 16, 10)
-            .cast("long")
-            .alias("h"),
-        )
-        # integer bit read: `/` would be DOUBLE division (60-bit hashes
-        # exceed the 53-bit mantissa); shiftright keeps it exact
-        votes = [
-            F.sum(F.shiftright("h", b) % 2).alias(f"s{b}")
-            for b in range(int(bits))
-        ]
-        agg = h.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"), *votes)
-        sig = None
-        for b in range(int(bits)):
-            term = F.when(F.col(f"s{b}") * 2 > F.col("n"), F.lit(2 ** b)).otherwise(
-                F.lit(0)
-            ).cast("long")
-            sig = term if sig is None else sig + term
-        return agg.select("doc_id", sig.alias("simhash"))
     # Single-parse SQL string for the whole HOF pipeline (vs lambda-based
     # F.transform/F.aggregate: ~25 py4j round-trips EACH at build time),
-    # with the token hashes and count LAMBDA-BOUND in one struct: expressed
-    # as stacked projections, CollapseProject inlines `n = size(tok)` into
-    # the per-bit lambda and the tokenization re-evaluates once per bit —
-    # the same optimizer trap winnow_fp_array_df documents (subexpression
-    # elimination stops at lambda boundaries).  Bound form measured ~15%
-    # faster at sf0.1 and structurally immune to the re-evaluation.
+    # with the token hashes and count LAMBDA-BOUND in one struct.
+    #
+    # The CollapseProject lambda-binding trap (the library-wide note other
+    # HOF pipelines point at): written as stacked projections, an
+    # expression column referenced inside a downstream lambda BODY is
+    # inlined there by CollapseProject, and subexpression elimination
+    # stops at lambda boundaries — so it re-evaluates once PER LAMBDA
+    # INVOCATION.  Here `n = size(tok)` and the tokenization would re-run
+    # once per bit; a winnowing fold that referenced the document's hash
+    # array inside its per-window lambda re-hashed the whole document per
+    # window (measured 30x slower on 100 docs, unbounded with doc length).
+    # Binding the value as a lambda variable (`transform(array(x), v ->
+    # ...)[0]`) materializes it once per row: lambda scoping is the
+    # optimizer-proof common-subexpression barrier for array pipelines.
+    # (A HOF's top-level ARGUMENT is evaluated once, so referencing a
+    # projected column there is safe.)  Bound form measured ~15% faster
+    # at sf0.1 here and structurally immune to the re-evaluation.
     pows = "array(" + ", ".join(f"CAST({2 ** b} AS BIGINT)" for b in range(bits)) + ")"
     sig = (
         f"transform(array(named_struct("
@@ -1620,6 +1562,28 @@ def lsh_query_index(
 _GRAM_ROWS_PER_TASK = 2_000_000  # ~64 MB of (doc_id, pos, h) unsafe rows
 
 
+def _gram_exchange_sizing(docs: DataFrame) -> tuple[int, int]:
+    """``(raw_chars, n_parts)`` for a gram-wide exchange over ``docs``
+    (one row per character of corpus), computed BEFORE it is built.
+
+    ``raw_chars`` upper-bounds the gram count (normalization only
+    shrinks text): the parquet-footer estimate
+    (:func:`_text_chars_estimate` — driver-side metadata only, zero
+    executor work), falling back to the ``sum(length(text))`` columnar
+    aggregation job for non-parquet frames.  ``n_parts`` holds each task
+    to ~``_GRAM_ROWS_PER_TASK`` rows, never fewer tasks than
+    ``spark.sql.shuffle.partitions``: that keeps every task of both
+    exchange sides inside its execution-memory share — the profiled
+    alternative is map- AND reduce-side spill, and the spill is
+    superlinear."""
+    raw_chars = _text_chars_estimate(docs)
+    if raw_chars is None:
+        raw_chars = docs.select(F.sum(F.length("text"))).first()[0] or 0
+    default_parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = max(default_parts, -(-int(raw_chars) // _GRAM_ROWS_PER_TASK))
+    return int(raw_chars), n_parts
+
+
 def _hot_gram_rows_estimate(
     d: DataFrame, k: int, raw_chars: int, sample_rows: int = 200_000
 ) -> int:
@@ -1756,21 +1720,7 @@ def duplicate_spans_df(
         raise ValueError(
             f"strategy must be 'agg', 'window', or 'auto', got {strategy!r}"
         )
-    # Size the gram exchange BEFORE building it: the footer-stats estimate
-    # (:func:`_text_chars_estimate` — driver-side metadata only, zero
-    # executor work) upper-bounds the gram count (normalization only
-    # shrinks text), falling back to the sum(length(text)) columnar
-    # aggregation job for non-parquet frames.  ~3M (doc_id, pos, h)
-    # unsafe rows ~= 100 MB per task keeps every task of both exchange
-    # sides inside its execution-memory share — the profiled alternative
-    # is map- AND reduce-side spill, and the spill is superlinear.
-    raw_chars = _text_chars_estimate(docs)
-    if raw_chars is None:
-        raw_chars = docs.select(F.sum(F.length("text"))).first()[0] or 0
-    default_parts = int(
-        docs.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    n_parts = max(default_parts, -(-int(raw_chars) // _GRAM_ROWS_PER_TASK))
+    raw_chars, n_parts = _gram_exchange_sizing(docs)
     d = docs.select("doc_id", normalized_text().alias("nt")).filter(
         F.length("nt") >= k
     )
@@ -1787,8 +1737,11 @@ def duplicate_spans_df(
         # picks 'agg' iff the hottest gram alone would blow the per-task
         # budget the sizing discipline promises.
         strategy = "window"
+        default_parts = int(
+            docs.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        )
         if min_docs == 2 and n_parts > default_parts:
-            hot = _hot_gram_rows_estimate(d, k, int(raw_chars))
+            hot = _hot_gram_rows_estimate(d, k, raw_chars)
             if hot > _GRAM_ROWS_PER_TASK:
                 strategy = "agg"
     # widen the MAP side only when it is genuinely narrow (the full-text

@@ -23,6 +23,10 @@ into token byte spans, :func:`md5_top60_spans` hashes prefixed spans,
 and :func:`fold_chunks` reduces them per document in bounded chunks of
 at most ``_MINHASH_CHUNK_SHINGLES`` spans.
 
+:func:`md5_top60_cached` is the per-string ``hashlib`` form of the
+same top-60 hash, for kernels that hash whole Python strings (SimHash
+and hashed-embedding tokens, winnowing grams).
+
 The algorithm is the public RFC 1321 specification; bit-equality is
 pinned by test against ``hashlib.md5`` over random messages of every
 length 0..55 and against Spark's ``md5`` via the MinHash parity tests.
@@ -51,6 +55,7 @@ __all__ = [
     "tokenize_spaces",
     "md5_top60_spans",
     "fold_chunks",
+    "md5_top60_cached",
 ]
 
 # RFC 1321: per-round left-rotation amounts and sine-derived constants.
@@ -80,6 +85,10 @@ _INT32_SAFE = 2**31
 # UDF closure (module-level so the oversized-document path is testable
 # at a small size).
 _MINHASH_CHUNK_SHINGLES = 262_144
+
+# entries of one md5_top60_cached cache before it is cleared: bounds a
+# Python worker's cache memory on an unbounded vocabulary
+_TOP60_CACHE_MAX = 2_000_000
 
 _A0 = np.uint32(0x67452301)
 _B0 = np.uint32(0xEFCDAB89)
@@ -333,3 +342,25 @@ def fold_chunks(counts, budget, reduce_chunk, ufunc, out) -> None:
                 ),
             )
         d0 = d1
+
+
+def md5_top60_cached(prefix: bytes = b""):
+    """A ``str -> int`` hasher: the top 60 bits of ``md5(prefix + s)``
+    (Spark's ``conv(substring(md5(m), 1, 15), 16, 10)``), via ``hashlib``
+    behind a dict cache — vocabularies repeat across documents, so each
+    distinct string is digested once per cache lifetime, not per
+    occurrence.  The cache is cleared when it holds
+    ``_TOP60_CACHE_MAX`` entries."""
+    cache: dict = {}
+    md5 = hashlib.md5
+
+    def top60(s: str) -> int:
+        h = cache.get(s)
+        if h is None:
+            if len(cache) >= _TOP60_CACHE_MAX:
+                cache.clear()
+            h = int.from_bytes(md5(prefix + s.encode()).digest()[:8], "big") >> 4
+            cache[s] = h
+        return h
+
+    return top60

@@ -33,10 +33,7 @@ __all__ = [
     "langid_df",
     "fingerprint_df",
     "winnow_fingerprints_df",
-    "winnow_fingerprints_local_df",
-    "winnow_fingerprints_arrow_df",
     "winnow_fp_set_df",
-    "winnow_fp_array_df",
     "tfidf_df",
     "bm25_constants",
     "bm25_topk_df",
@@ -187,15 +184,14 @@ def winnow_fingerprints_df(
 
     Guarantees any shared substring of length >= ``k + window - 1`` yields a
     shared fingerprint, the plagiarism/near-dup detection primitive.
-    Everything is column arithmetic on md5 (cross-engine deterministic),
-    no Python.
+    The default gram hash is md5 (cross-engine deterministic).
 
-    ``strategy='auto'`` (default) dispatches on corpus size between the
-    zero-shuffle row-local form (:func:`winnow_fingerprints_local_df` —
-    streams always take it) and the sized sliding-window batch chain
-    (:func:`_winnow_selected_window_df` — 2.8x faster at 40k docs and the
-    gap grows with scale; the round-7 explode-``x window`` groupBy form
-    this replaces measured 8.0 s where the sliding window took 2.9 s).
+    ``strategy='auto'`` (default) takes the zero-shuffle Arrow kernel
+    (:func:`_winnow_selected_arrow_df`) for batch and streaming input
+    alike (see :func:`_winnow_pick_strategy`); ``'window'`` is the
+    pure-JVM sized sliding-window batch chain
+    (:func:`_winnow_selected_window_df`), which operators that join on
+    the fingerprints pin (see :func:`_winnow_strategy`).
     Value-identical across strategies (equivalence-tested).
 
     ``hash_fn='xxhash64'`` is the production fast path (JVM-intrinsic,
@@ -206,18 +202,12 @@ def winnow_fingerprints_df(
     value-pinned.  See FASTPATH.md for the measured row.
     """
     _check_hash_fn(hash_fn)
-    strategy, raw_chars = _winnow_pick_strategy(
-        docs, strategy, "winnow_fingerprints_df", hash_fn
-    )
-    if strategy == "local":
-        return winnow_fingerprints_local_df(
-            docs, k=k, window=window, hash_fn=hash_fn
-        )
+    strategy = _winnow_pick_strategy(docs, strategy, "winnow_fingerprints_df")
     if strategy == "arrow":
         return _winnow_selected_arrow_df(
             docs, int(k), int(window), (), positional=True, hash_fn=hash_fn
         )
-    sel = _winnow_selected_window_df(docs, int(k), int(window), (), hash_fn, raw_chars)
+    sel = _winnow_selected_window_df(docs, int(k), int(window), (), hash_fn)
     # same (pos, fp) can win several adjacent windows; the doc_id
     # partitioning the window just established satisfies this dedup, so
     # no further exchange
@@ -229,94 +219,12 @@ def _check_hash_fn(hash_fn: str) -> None:
         raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
 
 
-def _winnow_hash_array_sql(k: int, hash_fn: str = "md5") -> str:
-    """SQL for the per-document k-gram hash array over the normalized-text
-    column ``nt`` — the cross-formulation compatibility contract: the batch
-    chain, the row-local positional variant, and the fp-set variant (and
-    the DuckDB oracles) must all hash identically PER hash_fn, so the
-    recipe lives in exactly one place.  'md5' is the cross-engine default;
-    'xxhash64' the production fast path (values differ, winnowing
-    guarantee identical)."""
-    k = int(k)
-    if hash_fn == "xxhash64":
-        return (
-            f"transform(sequence(1, length(nt) - {k - 1}),"
-            f" p -> xxhash64(substring(nt, p, {k})))"
-        )
-    return (
-        f"transform(sequence(1, length(nt) - {k - 1}),"
-        f" p -> CAST(conv(substring(md5(substring(nt, p, {k})), 1, 15), 16, 10)"
-        f" AS BIGINT))"
-    )
-
-
-def winnow_fingerprints_local_df(
-    docs: DataFrame,
-    k: int = 8,
-    window: int = 4,
-    carry: tuple = (),
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """Row-local winnowing: value-identical ``(doc_id, pos, fp)`` rows to
-    :func:`winnow_fingerprints_df`, computed entirely inside array
-    expressions — ZERO shuffles, and therefore streaming-legal (the
-    ingestion-time decontamination path needs fingerprints before any
-    stateful operator).
-
-    Per window start t the selected gram is ``argmin`` of the hash slice
-    with leftmost tie-break (``array_position`` returns the FIRST index of
-    the minimum — the same tie rule as the batch ``min(struct(h, pos))``).
-    Memory trade: the transient per-row hash array is O(len(text)) longs
-    (~8x the text bytes); the exploded batch formulation spreads that over
-    a shuffle instead — prefer it for very long documents, this one for
-    streams and short-document corpora.  Single-parse SQL strings (the
-    HOF py4j-latency lesson).
-    """
-    _check_hash_fn(hash_fn)
-    k, window = int(k), int(window)
-    carry = quote_carry(carry, _WINNOW_RESERVED)
-    norm = normalized_text()
-    # n_grams = len - k + 1 must be >= window for any complete window
-    d = docs.select("doc_id", *carry, norm.alias("nt")).filter(
-        F.length("nt") >= k + window - 1
-    )
-    hs = _winnow_hash_array_sql(k, hash_fn)
-    # hs and each window slice are bound as LAMBDA VARIABLES so they
-    # materialize once (per row / per window): expressed as stacked
-    # projections, CollapseProject inlines the array expression into every
-    # reference inside the per-window lambda and the document re-hashes
-    # per window — see winnow_fp_array_df's note (measured 30x).
-    sel = (
-        f"array_distinct(flatten(transform(array({hs}),"
-        f" h -> transform(sequence(1, size(h) - {window - 1}),"
-        f"   t -> transform(array(slice(h, t, {window})),"
-        f"     w -> named_struct("
-        f"       'pos', CAST(t + array_position(w, array_min(w)) - 1 AS INT),"
-        f"       'fp', array_min(w)))[0]))))"
-    )
-    return (
-        d.selectExpr("doc_id", *carry, f"explode({sel}) AS s")
-        .selectExpr("doc_id", *carry, "s.pos AS pos", "s.fp AS fp")
-    )
-
-
-# Retired size crossover (was: local below 1M corpus chars).  Kept only as
-# documentation of the retirement: the local form's interpreted-HOF chain is
-# BIMODAL in long-lived mixed-workload JVMs (the round-6 simhash lesson —
-# megamorphic call sites + C2 deopt luck), measured 1.8-17 s on a 150k-300k
-# char corpus where the window chain ran 0.7-1.6 s warm.  Batch auto now
-# always takes the window form; 'local' remains the streaming form (and an
-# explicit escape hatch for zero-shuffle composition).
-_WINNOW_LOCAL_MAX_CHARS = 0
-
-
 def _winnow_selected_window_df(
     docs: DataFrame,
     k: int,
     window: int,
     carry: tuple,
     hash_fn: str,
-    raw_chars: int | None = None,
 ) -> DataFrame:
     """The batch winnowing core: selected fingerprints ``(doc_id, *carry,
     pos, fp)`` (positions NOT yet dedup'd — one winner row per window
@@ -327,33 +235,17 @@ def _winnow_selected_window_df(
     must be held to ~``_GRAM_ROWS_PER_TASK`` rows per task or they
     spill), an in-partition sort, and a per-row O(window) running min.
     No ``x window`` row multiplication (the old explode-spread form) and
-    no interpreted HOFs (the row-local form's bottleneck).  The min is
-    over ``struct(h, pos)`` — leftmost tie-break, identical to both other
-    formulations."""
+    no interpreted HOFs.  The min is over ``struct(h, pos)`` — leftmost
+    tie-break, identical to the Arrow kernel's ``argmin``."""
     from pyspark.sql.window import Window
 
-    from .dedup import _GRAM_ROWS_PER_TASK, normalized_text
+    from .dedup import _gram_exchange_sizing, normalized_text
 
     norm = normalized_text()
     d = docs.select("doc_id", *carry, norm.alias("nt")).filter(
         F.length("nt") >= k + window - 1
     )
-    if raw_chars is None:
-        # Exchange-sizing pre-pass: the parquet-footer estimate first
-        # (driver-side metadata, no Spark job — every window-pinned
-        # composition call site used to pay a full text-column
-        # scan+aggregate job HERE, invisible in the query plan; the
-        # contamination family pays it twice, once per side), falling
-        # back to the columnar sum job for non-file frames.  Overestimate
-        # by construction — the safe direction for spill-guard sizing
-        # (see _text_chars_estimate).
-        from .dedup import _text_chars_estimate
-
-        raw_chars = _text_chars_estimate(docs)
-        if raw_chars is None:
-            raw_chars = docs.select(F.sum(F.length("text"))).first()[0] or 0
-    default_parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    n_parts = max(default_parts, -(-int(raw_chars) // _GRAM_ROWS_PER_TASK))
+    _, n_parts = _gram_exchange_sizing(docs)
     if n_parts >= 2 * d.rdd.getNumPartitions():
         d = d.repartition(n_parts)
     gram = F.substring("nt", F.col("pos"), k)
@@ -401,39 +293,27 @@ def _winnow_strategy(hash_fn: str, docs: DataFrame) -> str:
     return "auto"
 
 
-def _winnow_pick_strategy(
-    docs: DataFrame, strategy: str, fn: str, hash_fn: str = "md5"
-):
-    """Returns ``(strategy, raw_chars)`` — raw_chars is the dispatch
-    pre-pass, handed down to the window form's exchange sizing so the
-    corpus length is summed exactly once."""
-    if strategy not in ("auto", "local", "window", "arrow"):
+def _winnow_pick_strategy(docs: DataFrame, strategy: str, fn: str) -> str:
+    """The winnow form ``strategy`` runs: ``'arrow'`` or ``'window'``."""
+    if strategy not in ("auto", "window", "arrow"):
         raise ValueError(
-            f"{fn}: strategy must be 'auto', 'local', 'window', or "
-            f"'arrow', got {strategy!r}"
+            f"{fn}: strategy must be 'auto', 'window', or 'arrow', "
+            f"got {strategy!r}"
         )
-    if docs.isStreaming:
-        # aggregation/sort are illegal mid-stream: auto always takes a
-        # row-local form, and an EXPLICIT 'window' ask must fail clearly
-        # here, not as a deep AnalysisException from the sizing pre-pass.
-        # 'arrow' is stateless mapInPandas — streaming-legal, and auto's
-        # pick since round 10: the interpreted 'local' HOF is the class
-        # measured bimodal in long-lived JVMs (the entropy-twin lesson),
-        # exactly where a long-running stream lives.  'local' remains the
-        # explicit no-Python-workers fallback.
-        if strategy == "window":
-            raise ValueError(
-                f"{fn}: strategy='window' sorts and aggregates, which is "
-                "illegal on a streaming DataFrame — use 'local' (or 'auto', "
-                "which picks the Arrow kernel for streams)"
-            )
-        if strategy == "local":
-            return "local", None
-        return "arrow", None
+    if strategy == "window" and docs.isStreaming:
+        # aggregation/sort are illegal mid-stream: an EXPLICIT 'window'
+        # ask must fail clearly here, not as a deep AnalysisException
+        # from the sizing pre-pass
+        raise ValueError(
+            f"{fn}: strategy='window' sorts and aggregates, which is "
+            "illegal on a streaming DataFrame — use 'arrow' (or 'auto', "
+            "which picks it)"
+        )
     if strategy != "auto":
-        return strategy, None
-    # batch auto: the ARROW kernel for BOTH hash families — the
-    # leaf-only dispatch rule (round-11).  Standalone, arrow won or tied
+        return strategy
+    # auto: the ARROW kernel for BOTH hash families and for streams (it
+    # is stateless mapInPandas, so streaming-legal) — the leaf-only
+    # dispatch rule (round-11).  Standalone, arrow won or tied
     # every measured session and the gap grows with scale (md5 at 1.28M:
     # 40.7-69.3 s arrow vs 57.6-93.3 s window; xxhash64 5x — FASTPATH.md
     # rounds 8c/10/11).  The one place window wins is COMPOSITION: when
@@ -446,7 +326,7 @@ def _winnow_pick_strategy(
     # strategy='window' explicitly at its call site (curate.py
     # contamination family, streaming/curate.py), and user-built
     # compositions should do the same.
-    return "arrow", None
+    return "arrow"
 
 
 def _winnow_selected_arrow_df(
@@ -491,31 +371,17 @@ def _winnow_selected_arrow_df(
     )
 
     def run(batches):
-        import hashlib
-
         from ._mem import ensure_malloc_tuning
+        from .md5v import md5_top60_cached
 
         ensure_malloc_tuning()
-        gram_cache: dict = {}
-        md5 = hashlib.md5
-
-        def md5_gram(g: str) -> int:
-            h = gram_cache.get(g)
-            if h is None:
-                # conv(substring(md5, 1, 15), 16, 10): the top 60 bits
-                # of the digest == the first 15 hex chars
-                h = int.from_bytes(md5(g.encode()).digest()[:8], "big") >> 4
-                gram_cache[g] = h
-            return h
-
+        md5_gram = md5_top60_cached()
         for pdf in batches:
             out = {c: [] for c in out_cols}
             if positional:
                 out["pos"], out["fp"] = [], []
             else:
                 out["fp"] = []
-            if len(gram_cache) > 2_000_000:
-                gram_cache.clear()  # bound the per-worker gram cache
             # zip over column Series, never itertuples: pandas renames
             # non-identifier column names ('lang-id' -> '_1') in named
             # tuples, and quote_carry explicitly admits such names
@@ -569,16 +435,6 @@ def _winnow_selected_arrow_df(
     return map_in_pandas_renamed(d, run, out_fields)
 
 
-def winnow_fingerprints_arrow_df(
-    docs: DataFrame, k: int = 8, window: int = 4, carry: tuple = ()
-) -> DataFrame:
-    """Positional winnowing on the Arrow kernel — ``(doc_id, *carry,
-    pos, fp)``, value-identical to ``winnow_fingerprints_df(...,
-    hash_fn='xxhash64')`` (equivalence-tested)."""
-    carry = quote_carry(carry, _WINNOW_RESERVED)
-    return _winnow_selected_arrow_df(docs, k, window, carry, positional=True)
-
-
 def winnow_fp_set_df(
     docs: DataFrame,
     k: int = 8,
@@ -600,70 +456,27 @@ def winnow_fp_set_df(
       numpy/pandas in the executors' Python workers, unlike the pure-JVM
       window chain.
     - streaming -> ``'arrow'`` too (stateless mapInPandas is
-      streaming-legal; the interpreted 'local' HOF is the
-      bimodal-in-long-lived-JVMs class).
+      streaming-legal).
 
     COMPOSING callers — operators that JOIN on the fingerprints — should
-    pin ``strategy=_winnow_strategy(hash_fn)`` instead of auto: for md5
-    the mapInPandas boundary breaks the JVM pipeline around the join
-    (cur_select3 measured 9.5 s arrow vs 5.4 s window at sf0.1), so md5
-    compositions take ``'window'``, the sized exploded chain
+    pin ``strategy=_winnow_strategy(hash_fn, docs)`` instead of auto:
+    for md5 the mapInPandas boundary breaks the JVM pipeline around the
+    join (cur_select3 measured 9.5 s arrow vs 5.4 s window at sf0.1), so
+    md5 compositions take ``'window'``, the sized exploded chain
     (:func:`_winnow_selected_window_df`) + a per-doc dedup the doc_id
     partitioning already satisfies.  The in-library contamination family
-    does this; ``'local'`` (row-local ``array_distinct`` HOF) remains
-    the explicit no-Python-workers fallback.
+    does this.
 
-    All forms are value-identical per hash family (equivalence-tested)."""
+    Both forms are value-identical per hash family (equivalence-tested)."""
     _check_hash_fn(hash_fn)
-    strategy, raw_chars = _winnow_pick_strategy(
-        docs, strategy, "winnow_fp_set_df", hash_fn
-    )
+    strategy = _winnow_pick_strategy(docs, strategy, "winnow_fp_set_df")
+    qcarry = quote_carry(carry, _WINNOW_RESERVED)
     if strategy == "arrow":
-        qcarry = quote_carry(carry, _WINNOW_RESERVED)
         return _winnow_selected_arrow_df(
             docs, int(k), int(window), qcarry, positional=False, hash_fn=hash_fn
         )
-    if strategy == "window":
-        qcarry = quote_carry(carry, _WINNOW_RESERVED)
-        sel = _winnow_selected_window_df(
-            docs, int(k), int(window), qcarry, hash_fn, raw_chars
-        )
-        return sel.dropDuplicates(["doc_id", "fp"]).drop("pos")
-    sets = winnow_fp_array_df(docs, k=k, window=window, carry=carry, hash_fn=hash_fn)
-    carry = quote_carry(carry, _WINNOW_RESERVED)
-    return sets.selectExpr("doc_id", *carry, "explode(fps) AS fp")
-
-
-def winnow_fp_array_df(
-    docs: DataFrame,
-    k: int = 8,
-    window: int = 4,
-    carry: tuple = (),
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """Per-document distinct fingerprint ARRAY ``(doc_id, fps)`` — the
-    row-local core shared by :func:`winnow_fp_set_df`."""
-    _check_hash_fn(hash_fn)
-    k, window = int(k), int(window)
-    carry = quote_carry(carry, _WINNOW_RESERVED)
-    norm = normalized_text()
-    d = docs.select("doc_id", *carry, norm.alias("nt")).filter(
-        F.length("nt") >= k + window - 1
-    )
-    hs = _winnow_hash_array_sql(k, hash_fn)
-    # Bind the hash array as a LAMBDA VARIABLE (`array(hs)` + transform) so
-    # it materializes exactly once per row: expressed as two stacked
-    # projections instead, CollapseProject inlines the hs expression into
-    # the per-window-start lambda and the whole document re-hashes once PER
-    # WINDOW — measured 30x slower on 100 docs, and unbounded with doc
-    # length.  Lambda scoping is the optimizer-proof common-subexpression
-    # barrier for array pipelines.
-    fps = (
-        f"array_distinct(flatten(transform(array({hs}),"
-        f" h -> transform(sequence(1, size(h) - {window - 1}),"
-        f"   t -> array_min(slice(h, t, {window}))))))"
-    )
-    return d.selectExpr("doc_id", *carry, f"{fps} AS fps")
+    sel = _winnow_selected_window_df(docs, int(k), int(window), qcarry, hash_fn)
+    return sel.dropDuplicates(["doc_id", "fp"]).drop("pos")
 
 
 def tfidf_df(docs: DataFrame, round_to: int = 6) -> DataFrame:
@@ -888,94 +701,25 @@ def token_entropy_df(docs: DataFrame) -> DataFrame:
     )
 
 
-def token_entropy_local_df(docs: DataFrame, strategy: str = "auto") -> DataFrame:
+def token_entropy_local_df(docs: DataFrame) -> DataFrame:
     """Zero-shuffle row-local twin of :func:`token_entropy_df` — the
     streaming form (ingestion-time quality scoring: a crawl scores each
     document's entropy as it lands, appends, no state).  Same output, the
     same micro-nat terms, BIT-IDENTICAL values (differential-tested).
 
-    ``strategy``: ``'arrow'`` (auto's pick, batch and stream) computes
-    the counts + micro-nat terms inside a ``mapInPandas`` kernel — zero
-    interpreted JVM expressions, which removes the bimodal-JIT exposure
-    of the HOF form from the 100 TB ingestion path entirely (the
-    winnowing lesson: an interpreted hash-array ``transform`` measured
-    15→88 s pass-to-pass in a long-lived mixed JVM).  The kernel
-    reproduces Spark's arithmetic exactly: IEEE division and the
-    left-associated ``(p * LN(p)) * 1e6`` product are bit-equal by the
-    IEEE rules, and ``ROUND``'s HALF_UP-on-shortest-decimal-repr
-    semantics are emulated with a vectorized fast path plus a
-    ``decimal``-exact fixup inside the half-ulp boundary band.
-    ``'hof'`` is the pure-JVM-expression form below — kept as the
-    no-Python-workers fallback and the differential pinning twin.
-
-    HOF cost shape: per-token counts come from a RUN-LENGTH fold over the
-    SORTED token array — ``array_sort`` is a native codegen'd kernel, and
-    the fold is ONE interpreted pass of O(tokens) cheap struct ops with
-    the ``LN`` term evaluated only at the O(types) run boundaries.  The
-    previous formulation counted each distinct token with its own
-    ``filter`` scan — O(types x tokens) interpreted evals, measured as
-    ~60 s for a 5k-doc sf0.1 drain (1.25M tokens x ~150 types); the RLE
-    fold runs the same corpus in ~2 s.  Still an interpreted HOF, which
-    is WHY auto dispatches to the Arrow kernel; streams can't aggregate
-    mid-plan, so the batch exchange form is never legal here."""
-    if strategy not in ("auto", "arrow", "hof"):
-        raise ValueError(
-            f"strategy must be 'auto', 'arrow', or 'hof', got {strategy!r}"
-        )
-    if strategy == "auto":
-        strategy = "arrow"
-    if strategy == "arrow":
-        return _token_entropy_arrow_df(docs)
-    with_dl = (
-        docs.filter(F.col("text").isNotNull())
-        .select(
-            "doc_id",
-            F.filter(F.split(normalized_text(), " "), lambda x: x != "").alias(
-                "toks"
-            ),
-        )
-        .filter(F.size("toks") > 0)
-    )
-    # the SAME per-type micro-nat term expression as the batch form
-    # (int count / double n, LN, *1e6, ROUND, BIGINT) — identical doubles
-    # by construction, which is what keeps the twins bit-identical.
-    # `tk` is the LAMBDA-BOUND token array: every reference below goes
-    # through the binding, so however expensive the upstream text chain
-    # is (cur_ingest feeds this the 17-step HTML strip), it evaluates
-    # ONCE per row — expressed as plain stacked projections instead,
-    # CollapseProject inlines the chain into the fold's per-element
-    # lambda and the document re-strips PER TOKEN (the round-5 CSE-
-    # stops-at-lambda lesson; measured 33 s -> 2 s on the sf0.1 drain)
-    def term(c: str) -> str:
-        return (
-            f"CAST(ROUND(({c} / CAST(size(tk) AS DOUBLE))"
-            f" * LN({c} / CAST(size(tk) AS DOUBLE))"
-            " * 1000000.0D) AS BIGINT)"
-        )
-
-    fold = (
-        "aggregate(array_sort(tk),"
-        " named_struct('p', CAST(NULL AS STRING), 'c', 0, 's', 0L),"
-        " (a, t) -> CASE WHEN a.p IS NOT NULL AND t = a.p"
-        "   THEN named_struct('p', a.p, 'c', a.c + 1, 's', a.s)"
-        "   ELSE named_struct('p', t, 'c', 1,"
-        f"     's', a.s + CASE WHEN a.p IS NULL THEN 0L ELSE {term('a.c')} END)"
-        "   END,"
-        f" a -> a.s + {term('a.c')})"
-    )
-    bound = (
-        "transform(array(toks), tk -> named_struct("
-        " 'n_tokens', size(tk),"
-        " 'n_types', size(array_distinct(tk)),"
-        f" 'hm', -({fold})))[0]"
-    )
-    return with_dl.selectExpr("doc_id", f"{bound} AS s").selectExpr(
-        "doc_id",
-        "s.n_tokens AS n_tokens",
-        "s.n_types AS n_types",
-        "s.hm AS h_micro",
-        "ROUND(s.hm / 1000000.0D, 6) AS h",
-    )
+    The counts + micro-nat terms are computed inside a ``mapInPandas``
+    kernel (:func:`_token_entropy_arrow_df`) — zero interpreted JVM
+    expressions, so nothing on the 100 TB ingestion path can go bimodal
+    in a long-lived JVM (the winnowing lesson: an interpreted hash-array
+    ``transform`` measured 15→88 s pass-to-pass in a long-lived mixed
+    JVM).  The kernel reproduces Spark's arithmetic exactly: IEEE
+    division and the left-associated ``(p * LN(p)) * 1e6`` product are
+    bit-equal by the IEEE rules, and ``ROUND``'s
+    HALF_UP-on-shortest-decimal-repr semantics are emulated with a
+    vectorized fast path plus a ``decimal``-exact fixup inside the
+    half-ulp boundary band.  Streams can't aggregate mid-plan, so the
+    batch exchange form is never legal here."""
+    return _token_entropy_arrow_df(docs)
 
 
 def _round_half_up_micro(x: "np.ndarray") -> "np.ndarray":
@@ -1088,12 +832,12 @@ _ENTROPY_TIE_BAND = 4e-9
 
 
 def _token_entropy_arrow_df(docs: DataFrame) -> DataFrame:
-    """The Arrow kernel behind ``token_entropy_local_df(strategy='arrow')``:
+    """The Arrow kernel behind ``token_entropy_local_df``:
     tokenization of the ALREADY-NORMALIZED text (Spark computes
     ``normalized_text`` in the plan; the kernel only splits on the single
     space the normalization guarantees), per-type counts, and the exact
     micro-nat term ``ROUND((c/n) * LN(c/n) * 1e6)`` per type — bit-equal
-    to both JVM forms (differential-tested): the division and the
+    to :func:`token_entropy_df`'s JVM ``LN`` (differential-tested): the division and the
     left-associated products are IEEE-identical by construction, and the
     rounding emulates Spark's HALF_UP exactly.  Zero shuffles, zero
     interpreted JVM expressions, stateless ``mapInPandas`` —
@@ -1711,7 +1455,8 @@ def ngram_lm_df(
         # accesses inside the inner lambda touch a bound array, not the
         # inlined array_remove(split(..)) chain (the CollapseProject
         # lambda-CSE trap: an expression column referenced inside a lambda
-        # body is re-evaluated PER INVOCATION — see winnow_fp_array_df).
+        # body is re-evaluated PER INVOCATION — see dedup.simhash_df's
+        # 'local' fold comment).
         # A HOF's top-level ARGUMENT is evaluated once, which is what the
         # transform(array(toks), t -> ..)[0] binding exploits.
         norm = normalized_text()
@@ -2082,7 +1827,8 @@ def repetition_df(
     and a sentinel n=0 gram row keeps zero-gram documents (fewer tokens
     than every n) in the output.  Line metrics are pure array expressions
     with the line array bound as a lambda variable (the CollapseProject
-    re-evaluation trap — see winnow_fp_array_df).
+    re-evaluation trap — see :func:`~.dedup.simhash_df`'s 'local' fold
+    comment).
 
     ``strategy``: every metric is a function of one document's own text,
     so ``'arrow'`` (auto's pick — round-11 optimization) computes the
@@ -2295,8 +2041,9 @@ def c4_rules_df(
 
     Zero shuffles: line classification is an array expression with the
     line array bound as a lambda variable (the CollapseProject
-    re-evaluation trap — see winnow_fp_array_df), flags are plain string
-    predicates; streaming-legal at scan cost.
+    re-evaluation trap — see :func:`~.dedup.simhash_df`'s 'local' fold
+    comment), flags are plain string predicates; streaming-legal at scan
+    cost.
     """
     import re as _re
 
@@ -2845,84 +2592,33 @@ def hashed_embedding_df(docs: DataFrame, dim: int = 32) -> DataFrame:
     ).selectExpr("doc_id", f"array({comps}) AS embedding")
 
 
-def hashed_embedding_local_df(
-    docs: DataFrame, dim: int = 32, strategy: str = "auto"
-) -> DataFrame:
+def hashed_embedding_local_df(docs: DataFrame, dim: int = 32) -> DataFrame:
     """ZERO-SHUFFLE, streaming-legal twin of :func:`hashed_embedding_df`
     (value-identical, differential-tested): every document embeds itself
     in one row-local projection with no explode, no aggregation, no
     exchange.  Append-mode streaming-legal: a crawl can be embedded AS IT
     LANDS, feeding the streaming near-dup / ANN maintenance sinks.
 
-    ``strategy``: ``'arrow'`` (auto's pick — the entropy-twin recipe)
-    computes the votes inside a ``mapInPandas`` kernel: md5 token hashes
-    via C-speed ``hashlib`` behind a per-worker cache (tokens repeat
-    zipf-style, so most lookups never hash), per-bit vote sums as ``dim``
-    segmented ``add.reduceat`` passes over the batch-concatenated hash
-    array, and ``ROUND(v / norm, 6)`` through the vectorized HALF_UP
+    The votes are computed inside a ``mapInPandas`` kernel (the
+    entropy-twin recipe): md5 token hashes via C-speed ``hashlib``
+    behind a per-worker cache (:func:`~.md5v.md5_top60_cached` — tokens
+    repeat zipf-style, so most lookups never hash), per-bit vote sums as
+    ``dim`` segmented ``add.reduceat`` passes over the batch-concatenated
+    hash array, and ``ROUND(v / norm, 6)`` through the vectorized HALF_UP
     emulation (:func:`_round_half_up_6_vec`).  ``sqrt`` and division are
     IEEE-correctly-rounded in both runtimes, so no log/exp-style
     cross-runtime band is needed — the twin is bit-identical by
     construction.  Zero interpreted JVM expressions: nothing left to go
     bimodal in a long-lived mixed JVM (the measured dd_simhash 1 s/15 s
-    hazard).  ``'hof'`` is the pure-JVM row-local form — vote ``b`` is
-    ``2 * size(filter(hs, bit b set)) - size(hs)`` over the distinct-
-    token hash array — kept as the no-Python-workers fallback and the
-    differential pinning twin.
+    hazard).
 
     Batch jobs should keep :func:`hashed_embedding_df`'s whole-stage-
     codegen'd vote aggregation; this twin exists for streams, where
-    aggregation after the stateful op is illegal anyway.
-
-    In the HOF form the hash array ``hs`` is materialized as its own
-    projection column and only ever referenced as a top-level HOF
-    argument — safe from the CollapseProject per-lambda re-evaluation
-    trap (project-level CSE covers HOF arguments; lambda-BODY references
-    are the dangerous form)."""
-    from .dedup import normalized_text
-
+    aggregation after the stateful op is illegal anyway."""
     d = int(dim)
     if not 1 <= d <= 60:
         raise ValueError(f"dim must be in 1..60, got {dim}")
-    if strategy not in ("auto", "arrow", "hof"):
-        raise ValueError(
-            f"strategy must be 'auto', 'arrow', or 'hof', got {strategy!r}"
-        )
-    if strategy in ("auto", "arrow"):
-        return _hashed_embedding_arrow_df(docs, d)
-    toks = (
-        docs.where(F.col("text").isNotNull())
-        .select(
-            "doc_id",
-            F.array_distinct(
-                F.array_remove(F.split(normalized_text(), r"\s+"), "")
-            ).alias("tok"),
-        )
-        .filter(F.size("tok") > 0)
-    )
-    hs = (
-        "transform(tok, x -> CAST(conv(substring(md5(concat('0|', x)), 1, 15),"
-        " 16, 10) AS BIGINT))"
-    )
-    votes = [
-        f"size(filter(hs, h -> shiftright(h, {b}) % 2 = 1)) * 2"
-        f" - size(hs) AS v{b}"
-        for b in range(d)
-    ]
-    sq = " + ".join(f"v{b} * v{b}" for b in range(d))
-    comps = ", ".join(
-        f"ROUND(IF(__n = 0D, 0D, v{b} / __n), 6)" for b in range(d)
-    )
-    return (
-        toks.selectExpr("doc_id", f"{hs} AS hs")
-        .selectExpr("doc_id", *votes)
-        .selectExpr(
-            "doc_id",
-            f"SQRT(CAST({sq} AS DOUBLE)) AS __n",
-            *[f"v{b}" for b in range(d)],
-        )
-        .selectExpr("doc_id", f"array({comps}) AS embedding")
-    )
+    return _hashed_embedding_arrow_df(docs, d)
 
 
 def _hashed_embedding_arrow_df(docs: DataFrame, d: int) -> DataFrame:
@@ -2939,13 +2635,11 @@ def _hashed_embedding_arrow_df(docs: DataFrame, d: int) -> DataFrame:
     schema = f"doc_id {id_type}, embedding array<double>"
 
     def run(batches):
-        import hashlib
-
         from ._mem import ensure_malloc_tuning
+        from .md5v import md5_top60_cached
 
         ensure_malloc_tuning()
-        cache: dict = {}
-        md5 = hashlib.md5
+        tok_hash = md5_top60_cached(b"0|")
         for pdf in batches:
             ids, docs_toks = [], []
             for doc_id, nt in zip(pdf["doc_id"], pdf["nt"]):
@@ -2956,28 +2650,14 @@ def _hashed_embedding_arrow_df(docs: DataFrame, d: int) -> DataFrame:
                 docs_toks.append(ts)
             if not ids:
                 continue  # empty Arrow batches type columns wrong — skip
-            if len(cache) > 2_000_000:
-                cache.clear()  # bound the per-worker vocab cache
             n_toks = np.fromiter(
                 (len(t) for t in docs_toks), np.int64, count=len(ids)
             )
-            all_h = np.empty(int(n_toks.sum()), dtype=np.int64)
-            pos = 0
-            for ts in docs_toks:
-                for t in ts:
-                    h = cache.get(t)
-                    if h is None:
-                        # conv(substring(md5, 1, 15), 16, 10): the top 60
-                        # bits of the digest == first 15 hex chars
-                        h = (
-                            int.from_bytes(
-                                md5(b"0|" + t.encode()).digest()[:8], "big"
-                            )
-                            >> 4
-                        )
-                        cache[t] = h
-                    all_h[pos] = h
-                    pos += 1
+            all_h = np.fromiter(
+                (tok_hash(t) for ts in docs_toks for t in ts),
+                dtype=np.int64,
+                count=int(n_toks.sum()),
+            )
             seg = np.zeros(len(ids), dtype=np.int64)
             np.cumsum(n_toks[:-1], out=seg[1:])
             votes = np.empty((d, len(ids)), dtype=np.int64)

@@ -38,3 +38,21 @@ def test_extended_public_surface_resolves():
         "encode_volume", "decode_volume", "get_spark",
     ):
         assert hasattr(im, n), n
+
+
+def test_every_submodule_export_resolves():
+    """Every name in every ``imops_spark`` submodule's ``__all__`` exists
+    on that module — no export outlives the code it names."""
+    import importlib
+    import pkgutil
+
+    import imops_spark
+
+    checked = 0
+    for info in pkgutil.walk_packages(imops_spark.__path__, "imops_spark."):
+        mod = importlib.import_module(info.name)
+        names = getattr(mod, "__all__", ())
+        missing = [n for n in names if not hasattr(mod, n)]
+        assert not missing, f"{info.name}.__all__ names missing attributes: {missing}"
+        checked += len(names)
+    assert checked > 0

@@ -1,8 +1,8 @@
 """Round-10 Arrow twins: hashed_embedding_local_df, classifier_score_local_df,
-and md5 winnowing on the Arrow kernel — each re-expresses an interpreted
-row-local JVM HOF (the class measured bimodal in long-lived mixed JVMs) as a
-stateless mapInPandas kernel, bit-identical to the JVM form (the
-token_entropy_local_df recipe, round 9)."""
+and md5 winnowing on the Arrow kernel — stateless mapInPandas kernels in
+place of interpreted row-local JVM HOFs (the class measured bimodal in
+long-lived mixed JVMs), each compared bit-for-bit against a pure-JVM batch
+form (the token_entropy_local_df recipe, round 9)."""
 
 import numpy as np
 import pytest
@@ -42,7 +42,7 @@ def test_sigmoid_round6_vec_matches_decimal_arbiter():
 
 
 def test_hashed_embedding_arrow_twin(spark):
-    """batch == hof == arrow bit-for-bit across dims, including NULL
+    """batch == arrow bit-for-bit across dims, including NULL
     text, whitespace-only docs, multi-byte tokens, and single-token
     docs; arrow plan has no Exchange and no interpreted filter HOFs."""
     from imops_spark.functions.text import (
@@ -64,26 +64,19 @@ def test_hashed_embedding_arrow_twin(spark):
             (r[0], tuple(r[1]))
             for r in hashed_embedding_df(docs, dim=dim).collect()
         )
-        h = sorted(
-            (r[0], tuple(r[1]))
-            for r in hashed_embedding_local_df(
-                docs, dim=dim, strategy="hof"
-            ).collect()
-        )
         a = sorted(
             (r[0], tuple(r[1]))
-            for r in hashed_embedding_local_df(
-                docs, dim=dim, strategy="arrow"
-            ).collect()
+            for r in hashed_embedding_local_df(docs, dim=dim).collect()
         )
-        assert b == h == a, dim
+        assert b == a, dim
     plan = (
         hashed_embedding_local_df(docs, dim=16)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "MapInPandas" in plan and "Exchange" not in plan
-    with pytest.raises(ValueError, match="strategy"):
-        hashed_embedding_local_df(docs, strategy="window")
+    for removed in ("window", "hof"):  # the removed strategy parameter
+        with pytest.raises(TypeError):
+            hashed_embedding_local_df(docs, strategy=removed)
     with pytest.raises(ValueError, match="dim"):
         hashed_embedding_local_df(docs, dim=61)
 
@@ -108,7 +101,7 @@ def test_hashed_embedding_arrow_streaming(spark, tmp_path):
     want = sorted(
         (r[0], tuple(r[1]))
         for r in hashed_embedding_local_df(
-            static.select("doc_id", "text"), dim=8, strategy="arrow"
+            static.select("doc_id", "text"), dim=8
         ).collect()
     )
     got = sorted((r[0], tuple(r[1])) for r in drained.collect())
@@ -116,7 +109,7 @@ def test_hashed_embedding_arrow_streaming(spark, tmp_path):
 
 
 def test_classifier_score_arrow_twin(spark):
-    """groupBy == hof == arrow bit-for-bit, including negative bias,
+    """groupBy == arrow bit-for-bit, including negative bias,
     non-default salt/buckets, single-token docs (no bigrams), and
     out-of-range weight buckets (ignored by every form)."""
     from imops_spark.functions.curate import (
@@ -145,34 +138,22 @@ def test_classifier_score_arrow_twin(spark):
         g = sorted(
             map(tuple, classifier_score_df(docs, weights, **kw).collect())
         )
-        h = sorted(
-            map(
-                tuple,
-                classifier_score_local_df(
-                    docs, weights, strategy="hof", **kw
-                ).collect(),
-            )
-        )
         a = sorted(
-            map(
-                tuple,
-                classifier_score_local_df(
-                    docs, weights, strategy="arrow", **kw
-                ).collect(),
-            )
+            map(tuple, classifier_score_local_df(docs, weights, **kw).collect())
         )
-        assert g == h == a, kw
+        assert g == a, kw
     plan = (
         classifier_score_local_df(docs, weights, num_buckets=512)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "MapInPandas" in plan and "Exchange" not in plan
-    with pytest.raises(ValueError, match="strategy"):
-        classifier_score_local_df(docs, weights, strategy="fold")
+    for removed in ("fold", "hof"):  # the removed strategy parameter
+        with pytest.raises(TypeError):
+            classifier_score_local_df(docs, weights, strategy=removed)
 
 
 def test_winnow_md5_arrow_twin(spark):
-    """md5 winnowing on the Arrow kernel == window == local (fp-set and
+    """md5 winnowing on the Arrow kernel == window (fp-set and
     positional forms), on multi-byte text too; streams auto-route to the
     kernel since round 10."""
     from imops_spark.functions.text import (
@@ -188,9 +169,8 @@ def test_winnow_md5_arrow_twin(spark):
         " END AS text",
     )
     w = sorted(map(tuple, winnow_fp_set_df(docs, strategy="window").collect()))
-    l = sorted(map(tuple, winnow_fp_set_df(docs, strategy="local").collect()))
     a = sorted(map(tuple, winnow_fp_set_df(docs, strategy="arrow").collect()))
-    assert w == l == a
+    assert w == a
     pw = sorted(
         map(tuple, winnow_fingerprints_df(docs, strategy="window").collect())
     )

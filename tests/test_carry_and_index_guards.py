@@ -111,16 +111,24 @@ def test_band_entries_carry_awkward_name(spark):
 def test_minhash_char_arrow_carry_awkward_name(spark):
     # the Arrow kernel crosses mapInPandas, whose internal df[name]
     # parses dots as struct paths — pins the map_in_pandas_renamed route
-    from imops_spark.functions.dedup import minhash_signatures_char_df
+    from imops_spark.functions.dedup import minhash_signatures_char_df, normalized_text
 
     docs = _docs(spark, extra=[(AWKWARD, F.col("doc_id") * 10)])
-    out = minhash_signatures_char_df(
-        docs, num_hashes=4, k=3, carry=(AWKWARD,), strategy="arrow"
-    )
+    out = minhash_signatures_char_df(docs, num_hashes=4, k=3, carry=(AWKWARD,))
     rows = {r["doc_id"]: r[AWKWARD] for r in out.collect()}
     assert rows == {1: 10, 2: 20, 3: 30}
-    plain = minhash_signatures_char_df(
-        docs.select("doc_id", "text"), num_hashes=4, k=3, strategy="jvm"
+    # Spark's own xxhash64 expression over the normalized text
+    plain = (
+        docs.select("doc_id", normalized_text().alias("nt"))
+        .filter(F.length("nt") >= 3)
+        .selectExpr(
+            "doc_id",
+            *[
+                "array_min(transform(sequence(1, length(nt) - 2),"
+                f" p -> xxhash64(substring(nt, p, 3), {i}))) AS mh{i}"
+                for i in range(4)
+            ],
+        )
     )
     assert sorted(map(tuple, out.drop(AWKWARD).collect())) == sorted(
         map(tuple, plain.collect())
@@ -142,17 +150,12 @@ def test_winnow_arrow_vs_window_carry_awkward_name(spark):
 
 
 def test_winnow_carry_awkward_name(spark):
-    from imops_spark.functions.text import (
-        winnow_fingerprints_local_df,
-        winnow_fp_set_df,
-    )
+    from imops_spark.functions.text import winnow_fp_set_df
 
     docs = _docs(spark, extra=[(AWKWARD, F.col("doc_id") + 7)])
     out = winnow_fp_set_df(docs, carry=(AWKWARD,))
     assert set(out.columns) == {"doc_id", AWKWARD, "fp"}
     assert {r[AWKWARD] for r in out.select(f"`{AWKWARD}`").distinct().collect()} == {8, 9, 10}
-    loc = winnow_fingerprints_local_df(docs, carry=(AWKWARD,))
-    assert AWKWARD in loc.columns and loc.count() > 0
 
 
 @pytest.mark.parametrize(

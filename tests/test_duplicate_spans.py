@@ -204,10 +204,9 @@ def test_spans_xxhash64_fast_path_identical(spark):
 
 def test_simhash_strategies_identical(spark):
     """simhash_df 'arrow' (zero-shuffle mapInPandas kernel — the batch
-    default since round 11), 'agg' (codegen groupBy votes — the
-    no-Python-workers fallback) and 'local' (zero-shuffle HOF fold — the
+    default since round 11) and 'local' (zero-shuffle HOF fold — the
     streaming default) must produce bit-identical signatures; unknown
-    strategies raise.  The fixture exercises the tokenization edges the
+    and removed ('agg') strategies raise.  The fixture exercises the tokenization edges the
     kernel's Python split must reproduce: empty text (split -> ['']),
     leading tab (trim strips spaces only, so it normalizes to a leading
     space -> leading '' token), trailing whitespace (trailing '' token),
@@ -222,22 +221,15 @@ def test_simhash_strategies_identical(spark):
         (105, "one"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = {r["doc_id"]: r["simhash"] for r in simhash_df(df, strategy="agg").collect()}
     b = {r["doc_id"]: r["simhash"] for r in simhash_df(df, strategy="local").collect()}
     c = {r["doc_id"]: r["simhash"] for r in simhash_df(df, strategy="arrow").collect()}
-    assert a == b == c and len(a) == 66  # null text dropped, empty kept
-    with pytest.raises(ValueError):
-        simhash_df(df, strategy="nope")
-    # batch default is the zero-shuffle Arrow kernel; 'agg' keeps its one
-    # exchange (the _widen text repartition); the local path stays
-    # exchange-free (streaming-legal)
+    assert b == c and len(b) == 66  # null text dropped, empty kept
+    for bad in ("nope", "agg"):
+        with pytest.raises(ValueError):
+            simhash_df(df, strategy=bad)
+    # batch default is the zero-shuffle Arrow kernel; the local path
+    # stays exchange-free (streaming-legal)
     def_plan = simhash_df(df)._jdf.queryExecution().executedPlan().toString()
-    agg_plan = (
-        simhash_df(df, strategy="agg")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
     loc_plan = (
         simhash_df(df, strategy="local")
         ._jdf.queryExecution()
@@ -245,7 +237,6 @@ def test_simhash_strategies_identical(spark):
         .toString()
     )
     assert "Exchange" not in def_plan and "MapInPandas" in def_plan
-    assert "Exchange" in agg_plan
     assert "Exchange" not in loc_plan
 
 

@@ -2,12 +2,12 @@
 
 Load-bearing claims: (1) ``xxh64_chain_int`` is BIT-IDENTICAL to the
 second step of Spark's multi-argument ``xxhash64(s, i)`` — that is what
-makes the Arrow char-gram signatures the SAME hash family as the JVM
-expression form, not merely an equivalent one; (2) the arrow strategy
-equals the jvm twin value-for-value, with the documented short/NULL-doc
-exclusions; (3) the Arrow entropy kernel is bit-identical to both the
-HOF twin and the batch exchange form, including Spark's HALF_UP
-rounding semantics at the boundaries; (4) both kernels are
+makes the Arrow char-gram signatures the SAME hash family as Spark's
+``xxhash64`` expression, not merely an equivalent one; (2) the kernel
+equals Spark's ``array_min(transform(..., xxhash64(gram, i)))``
+value-for-value, with the documented short/NULL-doc exclusions; (3) the
+Arrow entropy kernel is bit-identical to the batch exchange form,
+including Spark's HALF_UP rounding semantics at the boundaries; (4) both kernels are
 streaming-legal and leave no interpreted HOF / no Exchange in the plan;
 (5) the min_docs=3 duplicate-span path survives a pathologically hot
 gram (the skew fixture the round-8 verdict asked for)."""
@@ -21,6 +21,28 @@ import pytest
 from pyspark.sql import functions as F
 
 MULTIBYTE = "naïve café über-gruß 東京 résumé naïve café über-gruß 東京"
+
+
+def _spark_char_minhash(docs, num_hashes, k):
+    """Spark's own char-gram MinHash, the reference the kernel is pinned
+    to: ``mh{i}`` is the min of ``xxhash64(gram, i)`` over the k-char
+    grams of the normalized text; NULL and shorter-than-k docs get no
+    row."""
+    from imops_spark.functions.dedup import normalized_text
+
+    nt = (
+        docs.where(F.col("text").isNotNull())
+        .select("doc_id", normalized_text().alias("nt"))
+        .filter(F.length("nt") >= k)
+    )
+    return nt.selectExpr(
+        "doc_id",
+        *[
+            f"array_min(transform(sequence(1, length(nt) - {k - 1}),"
+            f" p -> xxhash64(substring(nt, p, {k}), {i}))) AS mh{i}"
+            for i in range(num_hashes)
+        ],
+    )
 
 
 def _sql_lit(s: str) -> str:
@@ -52,9 +74,9 @@ def test_xxh64_chain_int_matches_spark(spark):
 
 
 def test_minhash_char_arrow_equals_jvm_twin(spark):
-    """arrow == jvm bit-for-bit on a mixed corpus (ASCII, multi-byte,
-    a doc shorter than k, NULL text); short/NULL docs are excluded by
-    both paths."""
+    """kernel == Spark's xxhash64 expression bit-for-bit on a mixed
+    corpus (ASCII, multi-byte, a doc shorter than k, NULL text);
+    short/NULL docs are excluded by both."""
     from imops_spark.functions.dedup import minhash_signatures_char_df
 
     rows = [
@@ -67,21 +89,9 @@ def test_minhash_char_arrow_equals_jvm_twin(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     a = sorted(
-        map(
-            tuple,
-            minhash_signatures_char_df(
-                docs, num_hashes=8, k=9, strategy="arrow"
-            ).collect(),
-        )
+        map(tuple, minhash_signatures_char_df(docs, num_hashes=8, k=9).collect())
     )
-    j = sorted(
-        map(
-            tuple,
-            minhash_signatures_char_df(
-                docs, num_hashes=8, k=9, strategy="jvm"
-            ).collect(),
-        )
-    )
+    j = sorted(map(tuple, _spark_char_minhash(docs, 8, 9).collect()))
     assert a == j
     assert {r[0] for r in a} == {1, 2, 3, 6}
     # normalization: doc 6 is doc 1 re-cased/re-spaced -> identical signature
@@ -166,8 +176,9 @@ def test_minhash_char_rejects_bad_params(spark):
     from imops_spark.functions.dedup import minhash_signatures_char_df
 
     docs = spark.createDataFrame([(1, "abc")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="strategy"):
-        minhash_signatures_char_df(docs, strategy="window")
+    for removed in ("window", "jvm"):  # the removed strategy parameter
+        with pytest.raises(TypeError):
+            minhash_signatures_char_df(docs, strategy=removed)
     with pytest.raises(ValueError, match=">= 1"):
         minhash_signatures_char_df(docs, num_hashes=0)
 
@@ -207,7 +218,7 @@ def test_round_half_up_micro_boundaries():
 
 
 def test_token_entropy_arrow_bit_identical(spark):
-    """arrow == hof == batch, bit-for-bit on every column, on a corpus
+    """arrow == batch, bit-for-bit on every column, on a corpus
     with repeated tokens, singleton docs, empty-after-split docs and
     NULL text; arrow plan: no Exchange, no interpreted fold."""
     from imops_spark.functions.text import (
@@ -224,21 +235,17 @@ def test_token_entropy_arrow_bit_identical(spark):
         " END AS text",
     )
     batch = sorted(map(tuple, token_entropy_df(docs).collect()))
-    hof = sorted(
-        map(tuple, token_entropy_local_df(docs, strategy="hof").collect())
-    )
-    arrow = sorted(
-        map(tuple, token_entropy_local_df(docs, strategy="arrow").collect())
-    )
-    assert batch == hof == arrow
+    arrow = sorted(map(tuple, token_entropy_local_df(docs).collect()))
+    assert batch == arrow
     auto_plan = (
         token_entropy_local_df(docs)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in auto_plan
     assert "aggregate(" not in auto_plan  # the interpreted RLE fold is gone
-    with pytest.raises(ValueError, match="strategy"):
-        token_entropy_local_df(docs, strategy="fast")
+    for removed in ("fast", "hof"):  # the removed strategy parameter
+        with pytest.raises(TypeError):
+            token_entropy_local_df(docs, strategy=removed)
 
 
 def test_token_entropy_arrow_streaming(spark, tmp_path):
@@ -349,9 +356,13 @@ def test_token_entropy_near_tie_boundary_hunt(spark):
     """Randomized-construction boundary hunt (round-9 advice): documents
     engineered so one type's term sits near a .5 boundary must score
     bit-identically under the Arrow kernel (numpy log + decimal tie
-    arbiter) and the JVM HOF form (Math.log) — the cross-runtime log
-    assumption, pinned by adversarial fixture instead of luck."""
-    from imops_spark.functions.text import token_entropy_local_df
+    arbiter) and the batch exchange form (JVM ``LN``, Math.log) — the
+    cross-runtime log assumption, pinned by adversarial fixture instead
+    of luck."""
+    from imops_spark.functions.text import (
+        token_entropy_df,
+        token_entropy_local_df,
+    )
 
     pairs = _near_tie_count_pairs()
     assert len(pairs) >= 10, f"hunt found only {len(pairs)} near-tie pairs"
@@ -360,13 +371,9 @@ def test_token_entropy_near_tie_boundary_hunt(spark):
         toks = ["tt"] * c + [f"w{j}" for j in range(n - c)]
         rows.append((i, " ".join(toks)))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    hof = sorted(
-        map(tuple, token_entropy_local_df(docs, strategy="hof").collect())
-    )
-    arrow = sorted(
-        map(tuple, token_entropy_local_df(docs, strategy="arrow").collect())
-    )
-    assert hof == arrow
+    batch = sorted(map(tuple, token_entropy_df(docs).collect()))
+    arrow = sorted(map(tuple, token_entropy_local_df(docs).collect()))
+    assert batch == arrow
 
 
 def test_entropy_term_decimal_agrees_off_tie():
@@ -437,7 +444,7 @@ def test_xxh64_rows_matches_scalar():
 
 def test_minhash_char_multibyte_equals_jvm_twin(spark):
     """The vectorized multibyte path (round-9 advice: CJK fixtures) is
-    bit-identical to Spark's xxhash64 HOF form on CJK, Japanese, mixed
+    bit-identical to Spark's xxhash64 expression on CJK, Japanese, mixed
     ASCII+CJK, and astral-plane (4-byte UTF-8) text — at the default k,
     a small k, and k >= 32 (the all-scalar width branch)."""
     import random
@@ -471,17 +478,8 @@ def test_minhash_char_multibyte_equals_jvm_twin(spark):
         a = sorted(
             map(
                 tuple,
-                minhash_signatures_char_df(
-                    docs, num_hashes=8, k=k, strategy="arrow"
-                ).collect(),
+                minhash_signatures_char_df(docs, num_hashes=8, k=k).collect(),
             )
         )
-        j = sorted(
-            map(
-                tuple,
-                minhash_signatures_char_df(
-                    docs, num_hashes=8, k=k, strategy="jvm"
-                ).collect(),
-            )
-        )
-        assert a == j, f"arrow != jvm at k={k}"
+        j = sorted(map(tuple, _spark_char_minhash(docs, 8, k).collect()))
+        assert a == j, f"kernel != Spark expression at k={k}"

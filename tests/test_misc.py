@@ -963,15 +963,12 @@ def test_winnow_xxhash64_fast_path_same_verdicts(spark):
     """The xxhash64 winnowing fast path must keep the winnowing guarantee
     (verbatim overlap >= k + window - 1 always produces a shared
     fingerprint) and yield the SAME decontamination survivors as md5 on a
-    planted-leak corpus; the positional local twin must stay
-    value-identical to the batch chain UNDER EACH hash_fn."""
+    planted-leak corpus; the positional Arrow kernel (auto) must stay
+    value-identical to the window batch chain UNDER EACH hash_fn."""
     import pytest
 
     from imops_spark.functions.curate import decontaminate_df
-    from imops_spark.functions.text import (
-        winnow_fingerprints_df,
-        winnow_fingerprints_local_df,
-    )
+    from imops_spark.functions.text import winnow_fingerprints_df
 
     leak = "the exact benchmark answer string nobody should train on"
     train = spark.createDataFrame(
@@ -988,14 +985,16 @@ def test_winnow_xxhash64_fast_path_same_verdicts(spark):
             r["doc_id"]
             for r in decontaminate_df(train, ev, min_shared=3, hash_fn=fn).collect()
         }
-        # local positional twin == batch chain under this hash_fn
+        # positional kernel == window batch chain under this hash_fn
         a = {
             (r["doc_id"], r["pos"], r["fp"])
             for r in winnow_fingerprints_df(train, hash_fn=fn).collect()
         }
         b = {
             (r["doc_id"], r["pos"], r["fp"])
-            for r in winnow_fingerprints_local_df(train, hash_fn=fn).collect()
+            for r in winnow_fingerprints_df(
+                train, hash_fn=fn, strategy="window"
+            ).collect()
         }
         assert a == b and a
     assert surv["md5"] == surv["xxhash64"] == set(range(30))
@@ -1113,18 +1112,16 @@ def test_sentences_df_matches_python_re(spark):
 
 
 def test_winnow_strategies_value_identical_and_dispatch(spark):
-    """All three winnowing formulations — row-local HOF, sliding-window
-    batch, and auto — must produce identical (doc_id, pos, fp) and
-    (doc_id, fp) sets (carry riding through the window path too); auto
-    routes small corpora local, large corpora (and never streams) to the
-    window; unknown strategies raise."""
+    """Both winnowing formulations — the sliding-window batch chain and
+    auto (the Arrow kernel) — must produce identical (doc_id, pos, fp)
+    and (doc_id, fp) sets (carry riding through the window path too);
+    auto picks the kernel; unknown and removed strategies raise."""
     import pytest
     from pyspark.sql import functions as F
 
     import imops_spark.functions.text as tx
     from imops_spark.functions.text import (
         winnow_fingerprints_df,
-        winnow_fingerprints_local_df,
         winnow_fp_set_df,
     )
 
@@ -1133,9 +1130,6 @@ def test_winnow_strategies_value_identical_and_dispatch(spark):
     rows += [(99, "short"), (100, None)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    pos_local = sorted(
-        map(tuple, winnow_fingerprints_local_df(docs, k=8, window=4).collect())
-    )
     pos_window = sorted(
         map(
             tuple,
@@ -1145,13 +1139,10 @@ def test_winnow_strategies_value_identical_and_dispatch(spark):
     pos_auto = sorted(
         map(tuple, winnow_fingerprints_df(docs, k=8, window=4).collect())
     )
-    assert pos_local == pos_window == pos_auto and pos_local
+    assert pos_window == pos_auto and pos_window
 
-    set_local = sorted(
-        map(
-            tuple,
-            winnow_fp_set_df(docs, k=8, window=4, strategy="local").collect(),
-        )
+    set_auto = sorted(
+        map(tuple, winnow_fp_set_df(docs, k=8, window=4).collect())
     )
     set_window = sorted(
         map(
@@ -1159,7 +1150,7 @@ def test_winnow_strategies_value_identical_and_dispatch(spark):
             winnow_fp_set_df(docs, k=8, window=4, strategy="window").collect(),
         )
     )
-    assert set_local == set_window and set_local
+    assert set_auto == set_window and set_auto
     # carry columns ride through the window path and pair uniqueness holds
     docs_c = docs.withColumn("src", F.concat(F.lit("s"), F.col("doc_id")))
     wc = winnow_fp_set_df(docs_c, k=8, window=4, carry=("src",), strategy="window")
@@ -1172,16 +1163,14 @@ def test_winnow_strategies_value_identical_and_dispatch(spark):
     # and picks the arrow kernel for BOTH hash families; composing
     # operators that join on the fingerprints pin md5 back to the
     # pure-JVM window form via _winnow_strategy at their call sites
-    s, rc = tx._winnow_pick_strategy(docs, "auto", "t")
-    assert s == "arrow" and rc is None
-    s, rc = tx._winnow_pick_strategy(docs, "auto", "t", hash_fn="xxhash64")
-    assert s == "arrow" and rc is None
+    assert tx._winnow_pick_strategy(docs, "auto", "t") == "arrow"
     assert tx._winnow_strategy("md5", docs) == "window"
     assert tx._winnow_strategy("xxhash64", docs) == "auto"
-    with pytest.raises(ValueError, match="strategy"):
-        winnow_fp_set_df(docs, strategy="nope")
-    with pytest.raises(ValueError, match="strategy"):
-        winnow_fingerprints_df(docs, strategy="nope")
+    for bad in ("nope", "local"):  # 'local' is the removed row-local form
+        with pytest.raises(ValueError, match="strategy"):
+            winnow_fp_set_df(docs, strategy=bad)
+        with pytest.raises(ValueError, match="strategy"):
+            winnow_fingerprints_df(docs, strategy=bad)
 
 
 def test_pack_sequences_invariants_and_determinism(spark):
@@ -1336,7 +1325,7 @@ def test_winnow_explicit_window_on_stream_raises(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="illegal on a streaming"):
         winnow_fp_set_df(stream, strategy="window")
-    # auto on a stream builds the row-local plan without touching an action
+    # auto on a stream builds the Arrow-kernel plan without touching an action
     df = winnow_fp_set_df(stream)
     assert df.isStreaming
 

@@ -1227,14 +1227,13 @@ def test_contamination_stream_matches_batch(spark, tmp_path):
 
 
 def test_winnow_fp_set_rowlocal_equivalence(spark):
-    """Both row-local winnowing builders ≡ the batch winnowing chain:
-    winnow_fingerprints_local_df matches the full (doc, pos, fp) rows
-    (incl. the leftmost tie-break), winnow_fp_set_df the distinct
+    """Both row-local (Arrow kernel) winnowing entry points ≡ the batch
+    window chain: winnow_fingerprints_df matches the full (doc, pos, fp)
+    rows (incl. the leftmost tie-break), winnow_fp_set_df the distinct
     (doc, fp) projection — for default and non-default (k, window) and a
     degenerate window=1."""
     from imops_spark.functions.text import (
         winnow_fingerprints_df,
-        winnow_fingerprints_local_df,
         winnow_fp_set_df,
     )
 
@@ -1242,10 +1241,13 @@ def test_winnow_fp_set_rowlocal_equivalence(spark):
         "doc_id", "text"
     )
     for k, w in [(8, 4), (5, 3), (8, 1)]:
-        full = {tuple(r) for r in winnow_fingerprints_df(docs, k=k, window=w).collect()}
-        local = {
-            tuple(r) for r in winnow_fingerprints_local_df(docs, k=k, window=w).collect()
+        full = {
+            tuple(r)
+            for r in winnow_fingerprints_df(
+                docs, k=k, window=w, strategy="window"
+            ).collect()
         }
+        local = {tuple(r) for r in winnow_fingerprints_df(docs, k=k, window=w).collect()}
         assert local == full and len(full) > 0
         a = {tuple(r) for r in winnow_fp_set_df(docs, k=k, window=w).collect()}
         b = {(r[0], r[2]) for r in full}

@@ -417,7 +417,7 @@ def test_hashed_embedding_matches_python(spark):
 
 
 def test_hashed_embedding_local_twin_identical_and_shuffle_free(spark):
-    """hashed_embedding_local_df (row-local filter-size votes — the
+    """hashed_embedding_local_df (the row-local Arrow kernel — the
     streaming formulation) must be value-identical to the batch aggregate
     path, keep identical absence semantics (NULL text, zero tokens), and
     plan ZERO exchanges (append-mode streaming legality)."""
