@@ -22,13 +22,19 @@ Strategies:
 
 Unknown names raise ``ValueError`` like the reference's ``resolve_backend``
 (`backend.py:29-48`).
+
+Every other ``strategy='auto'`` in the package resolves here too: each
+operator with two hash-identical physical forms is a row of :data:`ROUTES`
+citing the A/B behind it, and :func:`choose_form` is the one resolver.
 """
 
 from __future__ import annotations
 
+import logging
 import threading
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+from typing import Callable
 
 __all__ = [
     "Backend",
@@ -42,6 +48,9 @@ __all__ = [
     "imops_backend",
     "resolve_backend",
     "dispatch_strategy",
+    "Route",
+    "ROUTES",
+    "choose_form",
 ]
 
 # 'auto' threshold: inputs at or under this take the per-image NumPy kernel
@@ -150,9 +159,163 @@ def dispatch_strategy(strategy: Backend, nbytes: int) -> str:
     multi-job fixpoint latency, oversized volumes must not be forced through
     a single in-memory kernel.
     """
-    if strategy.name != "auto":
-        return strategy.name
-    return "udf" if nbytes <= AUTO_UDF_MAX_BYTES else "join"
+    return choose_form("imaging", strategy.name, nbytes=nbytes)
+
+
+# ---------------------------------------------------------------------------
+# The routing table: one row per operator with two physical forms
+# ---------------------------------------------------------------------------
+
+_log = logging.getLogger(__name__)
+
+
+def _train_chars(df, facts) -> int | None:
+    """The LM train side's parquet-footer char estimate (driver-side
+    metadata, no job); ``None`` when the frame is not parquet-backed."""
+    from .functions.dedup import _text_chars_estimate
+
+    train = facts.get("train")
+    return _text_chars_estimate(df if train is None else train)
+
+
+def _hot_gram_tasks(df, facts) -> float:
+    """The duplicate-spans heavy-hitter probe (one small sampled job): the
+    hottest k-gram's estimated rows, in per-task gram budgets.  It runs
+    only for ``min_docs == 2`` on a corpus whose gram exchange had to size
+    up past ``spark.sql.shuffle.partitions``; below that no gram can
+    dominate a task, and ``min_docs > 2`` is agg-shaped at every stage."""
+    from .functions import dedup
+
+    if facts["min_docs"] != 2:
+        return 0
+    default_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    if facts["n_parts"] <= default_parts:
+        return 0
+    hot = dedup._hot_gram_rows_estimate(facts["grams"], facts["k"], facts["raw_chars"])
+    return hot / dedup._GRAM_ROWS_PER_TASK
+
+
+@dataclass(frozen=True)
+class Route:
+    """One row of :data:`ROUTES`.  ``auto`` picks ``forms[0]`` for a batch
+    leaf, ``forms[1]`` when the ``size`` fact is unknown or over
+    ``budget``; ``stream`` is the form for a streaming input (``None``:
+    ``isStreaming`` is never read), ``composed`` the form for an md5 batch
+    whose output feeds a join.  ``md5_only``: ``forms[0]`` implements only
+    the md5 family.  ``batch_only``: explicit forms a stream rejects up
+    front, not as a deep AnalysisException from a sizing pre-pass."""
+
+    forms: tuple[str, str]
+    stream: str | None = None
+    composed: str | None = None
+    md5_only: bool = False
+    batch_only: tuple[str, ...] = ()
+    size: Callable | None = None
+    budget: int | None = None
+    evidence: str = ""
+
+
+ROUTES: dict[str, Route] = {
+    "imaging": Route(
+        ("udf", "join"), size=lambda df, facts: facts["nbytes"], budget=AUTO_UDF_MAX_BYTES,
+        evidence="AUTO_UDF_MAX_BYTES above; a small auto label runs zero Spark jobs",
+    ),
+    "minhash": Route(
+        ("arrow", "jvm"), stream="jvm", composed="jvm", md5_only=True,
+        evidence="FASTPATH.md r11 s3: arrow wins the md5 leaf ~2x, loses composed "
+        "once the band join is sort-merge (1.28M docs 74.1 vs 55.1 s)",
+    ),
+    "simhash": Route(
+        ("arrow", "local"), stream="local",
+        evidence="FASTPATH.md r11 SimHash kernel; local composes under stateful streams",
+    ),
+    "winnow": Route(
+        ("arrow", "window"), stream="arrow", composed="window", batch_only=("window",),
+        evidence="FASTPATH.md r8c/r10/r11: arrow wins standalone (md5 1.28M 40.7-69.3 "
+        "vs 57.6-93.3 s); composed md5 loses (cur_select3 9.49 vs 5.39 s; r12 "
+        "report window 2.2-4.4 vs arrow 4.7-11.1 s)",
+    ),
+    "duplicate_spans": Route(
+        ("window", "agg"), size=_hot_gram_tasks, budget=1,
+        evidence="window 17 s vs agg 36 s at 320k docs; agg is skew-safe",
+    ),
+    "dsir": Route(
+        ("arrow", "agg"), stream="agg",
+        evidence="FASTPATH.md r12: cur_dsir 1.56x; dsir_sample_df, 10 alternating "
+        "pairs, sf0.1, 4 cores: arrow 2.07 s median (IQR 2.04-2.16) vs agg 2.22 "
+        "(2.11-2.35), arrow ahead in 8 of 10",
+    ),
+    "ngram_lm": Route(
+        # 64 MiB of train text: at most ~11M distinct bigrams to collect
+        ("arrow", "agg"), stream="agg", size=_train_chars, budget=64 << 20,
+        evidence="FASTPATH.md r12: sf0.1 arrow 1.47-1.80 vs agg 1.74-2.66 s",
+    ),
+    "repetition": Route(
+        ("arrow", "exchange"), stream="arrow",
+        evidence="OPTIMIZATION_r11.md: txt_repetition 2.48 -> 0.87 s",
+    ),
+}
+
+
+def choose_form(
+    op: str,
+    strategy: str,
+    df=None,
+    *,
+    hash_fn: str | None = None,
+    composed: bool = False,
+    **facts,
+) -> str:
+    """The form ``op`` runs for ``strategy``, ``'auto'`` resolved by its
+    :data:`ROUTES` row from the input facts; an explicit form passes
+    through after validation.
+
+    ``df`` is the input frame, ``hash_fn`` its hash family, and
+    ``composed=True`` marks output that feeds a join.  ``facts`` carries
+    what a ``size`` reader needs: ``train`` (the LM train frame, default
+    ``df``), ``grams``/``k``/``raw_chars``/``n_parts``/``min_docs`` (the
+    spans probe), ``nbytes`` (imaging).  A fact is read only when it can
+    change the pick, so ``auto`` adds no Spark call.  Each ``auto``
+    resolution logs one DEBUG record ``(op, form, reason, facts)``.
+    """
+    row = ROUTES[op]
+    names = ("auto", *row.forms)
+    if strategy not in names:
+        raise ValueError(f"{op}: strategy must be one of {names}, got {strategy!r}")
+    if strategy == "auto":
+        form, reason, seen = _resolve_auto(row, df, hash_fn, composed, facts)
+        _log.debug("route %s -> %s (%s) %s", op, form, reason, seen)
+        return form
+    if row.md5_only and strategy == row.forms[0] and hash_fn != "md5":
+        raise ValueError(f"{op}: strategy={strategy!r} implements the md5 family only")
+    if strategy in row.batch_only and df.isStreaming:
+        raise ValueError(
+            f"{op}: strategy={strategy!r} is illegal on a streaming "
+            f"DataFrame — use {row.stream!r} (or 'auto', which picks it)"
+        )
+    return strategy
+
+
+def _resolve_auto(row: Route, df, hash_fn, composed, facts):
+    seen = {} if hash_fn is None else {"hash_fn": hash_fn}
+    if composed:
+        seen["composed"] = True
+    if row.md5_only and hash_fn != "md5":
+        return row.forms[1], "no kernel for this hash family", seen
+    batch = row.composed if composed and hash_fn == "md5" and row.composed else row.forms[0]
+    if row.stream not in (None, batch):
+        train = facts.get("train")
+        seen["streaming"] = df.isStreaming or (train is not None and train.isStreaming)
+        if seen["streaming"]:
+            return row.stream, "streaming input", seen
+    if batch != row.forms[0]:
+        return batch, "md5 batch feeding a join", seen
+    if row.size is None:
+        return batch, "default form", seen
+    seen.update(size=row.size(df, facts), budget=row.budget)
+    if seen["size"] is None or seen["size"] > row.budget:
+        return row.forms[1], "size unknown or over budget", seen
+    return row.forms[0], "size within budget", seen
 
 
 def set_backend(backend: str | Backend) -> None:

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..backend import choose_form
 from .dedup import _md5_hash_col, _widen, drop_exact_duplicates, drop_near_duplicates_df
 from .text import bpe_token_count_df, quality_df
 
@@ -405,6 +406,16 @@ def filter_by_quantile_df(
     )
 
 
+def _joined_fp_set(docs: DataFrame, k: int, window: int, hash_fn: str) -> DataFrame:
+    """``text.winnow_fp_set_df`` for a caller that joins on the
+    fingerprints: the composed form of the ``winnow`` row of
+    ``backend.ROUTES``."""
+    from .text import winnow_fp_set_df
+
+    form = choose_form("winnow", "auto", docs, hash_fn=hash_fn, composed=True)
+    return winnow_fp_set_df(docs, k=k, window=window, hash_fn=hash_fn, strategy=form)
+
+
 def contamination_pairs_df(
     train_docs: DataFrame,
     eval_docs: DataFrame,
@@ -428,12 +439,10 @@ def contamination_pairs_df(
     count is one groupBy: the whole scan is join + one aggregation.
     Returns ``(train_id, eval_id, n_shared)``.
     """
-    from .text import _winnow_strategy, winnow_fp_set_df
-
-    tf = winnow_fp_set_df(train_docs, k=k, window=window, hash_fn=hash_fn, strategy=_winnow_strategy(hash_fn, train_docs)).select(
+    tf = _joined_fp_set(train_docs, k, window, hash_fn).select(
         F.col("doc_id").alias("train_id"), "fp"
     )
-    ef = winnow_fp_set_df(eval_docs, k=k, window=window, hash_fn=hash_fn, strategy=_winnow_strategy(hash_fn, eval_docs)).select(
+    ef = _joined_fp_set(eval_docs, k, window, hash_fn).select(
         F.col("doc_id").alias("eval_id"), "fp"
     )
     return (
@@ -476,12 +485,10 @@ def contamination_pairs_bloom_df(
     default 2^20 bits / 5 hashes a ~60k-fp holdout probes at fpr ~2e-3.
     """
     from .bloom import bloom_build, bloom_filter_df
-    from .text import _winnow_strategy, winnow_fp_set_df
-
-    tf = winnow_fp_set_df(train_docs, k=k, window=window, hash_fn=hash_fn, strategy=_winnow_strategy(hash_fn, train_docs)).select(
+    tf = _joined_fp_set(train_docs, k, window, hash_fn).select(
         F.col("doc_id").alias("train_id"), "fp"
     )
-    ef = winnow_fp_set_df(eval_docs, k=k, window=window, hash_fn=hash_fn, strategy=_winnow_strategy(hash_fn, eval_docs)).select(
+    ef = _joined_fp_set(eval_docs, k, window, hash_fn).select(
         F.col("doc_id").alias("eval_id"), "fp"
     )
     bloom = bloom_build(ef, "fp", num_bits=num_bits, num_hashes=num_hashes)
@@ -548,24 +555,14 @@ def contamination_report_df(
     :func:`contamination_pairs_bloom_df` recipe) and fall back to the
     equi-join.
     """
-    from .text import _winnow_strategy, winnow_fp_set_df
+    from .text import winnow_fp_set_df
 
-    # Strategy note: the train side PINS the composed-md5 window form
-    # (the _winnow_strategy rule the pairs/decontaminate family follows).
-    # Round 11 routed it to the Arrow kernel on a controlled A/B
-    # (3.24-3.47 s arrow vs 4.33-4.95 s window steady on that session's
-    # box) with an explicit revert trigger if the next round's box read
-    # differently — and it did: the round-12 idle-box alternating A/B
-    # (6 passes, strategies alternating EVERY pass, run twice) read
-    # window 2.2-4.4 s vs arrow 4.7-11.1 s, window winning every paired
-    # pass.  The two sessions disagree because the win is allocator/
-    # page-fault-regime-shaped, not plan-shaped (the plan itself is
-    # strictly smaller under arrow: 5 vs 7 Exchanges) — on a box where
-    # Python-worker pages stay warm the kernel wins, on one where the
-    # host reclaims them the JVM window chain wins.  The pin follows the
-    # measured box; both forms are hash-gate-identical (value-identity
-    # asserted inside both A/B sessions), so flipping back is this one
-    # argument either way.  FASTPATH.md round-12 has both datasets.
+    # The train side takes the joined (composed) winnow form, the eval
+    # side the leaf one.  The round-11 and round-12 A/Bs of this shape
+    # disagreed (arrow 3.24-3.47 vs window 4.33-4.95 s, then window
+    # 2.2-4.4 vs arrow 4.7-11.1 s): the win is allocator/page-regime-
+    # shaped, not plan-shaped, so the pick follows the measured box in
+    # the ``winnow`` row of ``backend.ROUTES`` (FASTPATH.md round-12).
     #
     # the eval fp frame feeds BOTH the probe set and the report tail —
     # localCheckpoint it so the eval winnowing chain executes once (two
@@ -577,13 +574,7 @@ def contamination_report_df(
         .select(F.col("doc_id").alias("eval_id"), "fp")
         .localCheckpoint(eager=False)
     )
-    tf = winnow_fp_set_df(
-        train_docs,
-        k=k,
-        window=window,
-        hash_fn=hash_fn,
-        strategy=_winnow_strategy(hash_fn, train_docs),
-    ).select("fp")
+    tf = _joined_fp_set(train_docs, k, window, hash_fn).select("fp")
     ef_fps = ef.select("fp").dropDuplicates()
     # train fps that hit the eval set: row-local probe, result bounded by
     # |eval fps| — the only train-side work is the scan itself
@@ -1141,24 +1132,15 @@ def dsir_logweights_df(
     bucket hashing over byte spans + integer gathers from the collected
     ``<= B``-row model, zero scoring-side shuffles — one pushed scan
     (+ the conditional ``_widen``) into a stateless ``mapInPandas`` —
-    exact parity by construction); ``'auto'`` — arrow for batch frames
-    (the model is bucket-bounded, so the collect is always cheap —
-    unlike the LM kernel there is no size dispatch to make), agg for
-    streams (no
-    Python stage per micro-batch; the streaming twin is
-    ``dsir_score_local_df``).
+    exact parity by construction); ``'auto'`` — the ``dsir`` row of
+    ``backend.ROUTES`` (the streaming twin is ``dsir_score_local_df``).
     """
     B = int(num_buckets)
-    if strategy not in ("auto", "agg", "arrow"):
-        raise ValueError(
-            f"strategy must be 'auto', 'agg', or 'arrow', got {strategy!r}"
-        )
-    if strategy == "auto":
-        strategy = "agg" if docs.isStreaming else "arrow"
+    form = choose_form("dsir", strategy, docs)
     model = dsir_model_df(
         docs, target_docs, num_buckets=num_buckets, add_k=add_k, salt=salt
     )
-    if strategy == "arrow":
+    if form == "arrow":
         return _feature_sum_arrow_df(
             _widen(docs.where(F.col("text").isNotNull())),
             _dense_weights(model, "lrm", B),

@@ -11,9 +11,9 @@ Design for 100 TB:
   over a ``transform``), then LSH banding turns the O(n^2) pair problem
   into an equi-join on band keys — the shuffle is keyed by band hash, so
   candidate generation scales linearly with corpus size.  Operators that
-  feed the signatures straight into that band join pin the JVM form
-  (``_sig_composed_strategy``: the kernel loses composed once the join
-  is sort-merge — FASTPATH.md round-11 session 3);
+  feed the signatures straight into that band join take the JVM form
+  (the ``minhash`` row of ``backend.ROUTES``: the kernel loses composed
+  once the join is sort-merge — FASTPATH.md round-11 session 3);
 - SimHash packs a 32-bit signature from token-hash bit votes — pure column
   arithmetic;
 - verification (Jaccard on shingle sets) only runs on LSH candidates.
@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..backend import choose_form
 from ..utils import quote_carry, unquote_carry
 
 __all__ = [
@@ -314,26 +315,16 @@ def minhash_signatures_df(
     substring-derived shingle spans, bit-identical to this JVM form
     (differential- and gate-pinned); ``'jvm'`` — the
     ``array_min``/``transform`` expression form below (kept as the
-    no-Python-workers fallback and the parity twin); ``'auto'`` — arrow
-    for md5 batch frames, jvm for streams (no Python stage per
-    micro-batch — the simhash-default precedent) and for
-    ``hash_fn='xxhash64'`` (the seeded-intrinsic projection is already
-    one cheap JVM hash per (shingle, i); the char kernel covers the
-    vectorized-xxh64 niche)."""
+    no-Python-workers fallback and the parity twin, and xxhash64's form:
+    one cheap seeded JVM hash per (shingle, i)); ``'auto'`` — the
+    ``minhash`` row of ``backend.ROUTES``."""
     if hash_fn not in ("md5", "xxhash64"):
         raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
-    if strategy not in ("auto", "arrow", "jvm"):
-        raise ValueError(
-            f"strategy must be 'auto', 'arrow', or 'jvm', got {strategy!r}"
-        )
-    if strategy == "arrow" and hash_fn != "md5":
-        raise ValueError("strategy='arrow' implements the md5 family only")
+    form = choose_form("minhash", strategy, docs, hash_fn=hash_fn)
     num_hashes, k = int(num_hashes), int(k)
     if num_hashes < 1 or k < 1:
         raise ValueError(f"num_hashes and k must be >= 1, got {num_hashes}, {k}")
-    if strategy == "auto":
-        strategy = "jvm" if (docs.isStreaming or hash_fn != "md5") else "arrow"
-    if strategy == "arrow":
+    if form == "arrow":
         arrow_carry = quote_carry(
             carry,
             _SHINGLE_RESERVED | {"nt"} | {f"mh{i}" for i in range(num_hashes)},
@@ -817,45 +808,33 @@ def _simhash_arrow_df(docs: DataFrame, bits: int) -> DataFrame:
     return d.mapInPandas(run, schema=f"doc_id {id_type}, simhash long")
 
 
-def simhash_df(
-    docs: DataFrame, bits: int = 32, strategy: str | None = None
-) -> DataFrame:
+def simhash_df(docs: DataFrame, bits: int = 32, strategy: str = "auto") -> DataFrame:
     """SimHash signature per document: ``(doc_id, simhash)``.  Bit b of the
     signature is set when ones out-vote zeros among the distinct tokens'
     hash bits (2*ones > n).  Two value-identical strategies:
 
-    - ``'arrow'`` (batch default since round 11): ZERO shuffles — one
-      stateless ``mapInPandas`` kernel over the plan-computed normalized
-      text; token md5s come from a per-task cache (the corpus vocabulary
-      repeats across documents, so each distinct token is digested once
-      per task instead of once per (doc, token) occurrence — the same
-      economics as the winnowing kernel's gram cache) and the bit votes
-      are one vectorized numpy ``reduceat`` per batch.
-    - ``'local'`` (streaming default): ZERO shuffles — the vote fold runs
-      row-locally in one ``aggregate`` pass over the hash array (zip_with
-      against each hash's bit vector).  No aggregation operator anywhere,
+    - ``'arrow'``: ZERO shuffles — one stateless ``mapInPandas`` kernel
+      over the plan-computed normalized text; token md5s come from a
+      per-task cache (the corpus vocabulary repeats across documents, so
+      each distinct token is digested once per task instead of once per
+      (doc, token) occurrence — the same economics as the winnowing
+      kernel's gram cache) and the bit votes are one vectorized numpy
+      ``reduceat`` per batch.
+    - ``'local'``: ZERO shuffles — the vote fold runs row-locally in one
+      ``aggregate`` pass over the hash array (zip_with against each
+      hash's bit vector).  No aggregation operator anywhere,
       so it composes under stream-stream joins and further stateful ops.
       CAVEAT (measured, round 6): higher-order functions evaluate on the
       INTERPRETED expression path, and in a JVM that has run other
       workloads the shared Expression.eval call sites go megamorphic —
       the same pass flips between ~1 s and ~15 s at 80k docs (GC logs
-      clean, bimodal per execution).  That JIT-profile hazard is why
-      'local' is no longer the batch default.
-
-    ``strategy=None`` picks 'local' for streaming inputs (kept: its
-    pure-JVM projection composes under further stateful operators without
-    a Python stage per micro-batch) and 'arrow' otherwise.
+      clean, bimodal per execution), so 'auto' (the ``simhash`` row of
+      ``backend.ROUTES``) takes it for streams only.
 
     The 'local' fold keeps the lambda-bound struct form (the
     CollapseProject trap — see the fold comment in the code).
     """
-    if strategy is None:
-        strategy = "local" if docs.isStreaming else "arrow"
-    if strategy not in ("local", "arrow"):
-        raise ValueError(
-            f"strategy must be 'local' or 'arrow', got {strategy!r}"
-        )
-    if strategy == "arrow":
+    if choose_form("simhash", strategy, docs) == "arrow":
         return _simhash_arrow_df(docs, int(bits))
     # scan-level guard: NULL-text docs get no row (as in the arrow
     # kernel); a size(null) comparison would silently emit sig=0 instead
@@ -1340,26 +1319,6 @@ def semdedup_df(
     )
 
 
-def _sig_composed_strategy(hash_fn: str, docs: DataFrame) -> str:
-    """The strategy a COMPOSING operator (one whose plan feeds the
-    signatures into the band explode + band-key exchange/join) should pin
-    at its ``minhash_signatures_df`` call site — the other half of the
-    leaf-only dispatch rule, same shape as ``text._winnow_strategy``:
-    the md5 Arrow kernel wins the signature LEAF ~2x at every size
-    (interleaved A/B, FASTPATH.md round-11), and wins composed while the
-    band self-join still BROADCASTS (320k docs: 14.4 vs 28.0 s), but
-    LOSES composed once the join becomes sort-merge (1.28M docs: 74.1 vs
-    55.1 s median — the mapInPandas boundary feeding an exchange+sort is
-    the round-10 md5-winnow pathology).  At 100 TB the self-join is
-    always SMJ, so composing operators pin the JVM expression form; the
-    leaf (anything that persists or row-locally consumes the signature
-    table, i.e. the gate/bench shape) keeps the kernel.  Streams stay on
-    auto (which already picks jvm for them)."""
-    if hash_fn == "md5" and not docs.isStreaming:
-        return "jvm"
-    return "auto"
-
-
 def drop_near_duplicates_df(
     docs: DataFrame,
     num_hashes: int = 8,
@@ -1382,7 +1341,7 @@ def drop_near_duplicates_df(
 
     sigs = minhash_signatures_df(
         docs, num_hashes=num_hashes, k=k, hash_fn=hash_fn,
-        strategy=_sig_composed_strategy(hash_fn, docs),  # leaf-only arrow rule
+        strategy=choose_form("minhash", "auto", docs, hash_fn=hash_fn, composed=True),
     )
     pairs = lsh_candidate_pairs_df(sigs, bands=bands, rows_per_band=rows_per_band)
     edges = (
@@ -1472,7 +1431,7 @@ def lsh_write_index(
             )
     sigs = minhash_signatures_df(
         docs, num_hashes=num_hashes, k=k, hash_fn=hash_fn,
-        strategy=_sig_composed_strategy(hash_fn, docs),  # leaf-only arrow rule
+        strategy=choose_form("minhash", "auto", docs, hash_fn=hash_fn, composed=True),
     )
     entries = band_entries_df(sigs, bands=bands, rows_per_band=rows_per_band).select(
         "doc_id", _bucket_key_col()
@@ -1546,7 +1505,7 @@ def lsh_query_index(
     )
     sigs = minhash_signatures_df(
         docs, num_hashes=num_hashes, k=k, hash_fn=hash_fn,
-        strategy=_sig_composed_strategy(hash_fn, docs),  # leaf-only arrow rule
+        strategy=choose_form("minhash", "auto", docs, hash_fn=hash_fn, composed=True),
     )
     probe = band_entries_df(sigs, bands=bands, rows_per_band=rows_per_band).select(
         F.col("doc_id").alias("probe_doc_id"), _bucket_key_col()
@@ -1655,12 +1614,12 @@ def duplicate_spans_df(
     and everything else in the job.
 
     ``strategy='auto'`` (the default) picks between the two forms below
-    with a sampled heavy-hitter probe: 'window' unless the hottest
-    k-gram alone is estimated to exceed the per-task row budget (in
-    which case its sort partition would straggle) — then 'agg'.  The
-    probe only runs when the corpus is big enough to have needed sizing
-    up (``n_parts > default``), so small jobs pay nothing.  Both forms
-    are result-identical (equivalence-tested).
+    by the ``duplicate_spans`` row of ``backend.ROUTES``: a sampled
+    heavy-hitter probe keeps 'window' unless the hottest k-gram alone is
+    estimated to exceed the per-task row budget (in which case its sort
+    partition would straggle) — then 'agg'.  The probe only runs when
+    the corpus is big enough to have needed sizing up, so small jobs pay
+    nothing.  Both forms are result-identical (equivalence-tested).
 
     ``strategy='agg'`` (the skew-safe form)
     replaces the window with a map-side-combined ``groupBy(h)``
@@ -1716,34 +1675,14 @@ def duplicate_spans_df(
         raise ValueError(f"k and min_docs must be >= 1, got {k}, {min_docs}")
     if hash_fn not in ("md5", "xxhash64"):
         raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
-    if strategy not in ("agg", "window", "auto"):
-        raise ValueError(
-            f"strategy must be 'agg', 'window', or 'auto', got {strategy!r}"
-        )
     raw_chars, n_parts = _gram_exchange_sizing(docs)
     d = docs.select("doc_id", normalized_text().alias("nt")).filter(
         F.length("nt") >= k
     )
-    if strategy == "auto":
-        # Heavy-hitter dispatch: the window (faster on typical corpora —
-        # one Tungsten radix sort beats two giant agg hash maps, measured
-        # 17 s vs 36 s at 320k) funnels every row of a gram into ONE sort
-        # partition, so a pathologically hot gram (site boilerplate across
-        # millions of docs) makes a straggler; the agg's map-side combine
-        # collapses it to one row per input partition.  Probe only when
-        # the operator had to size up (n_parts > default) — below that the
-        # whole gram table fits default parallelism and no single gram can
-        # dominate a task.  The sampled probe costs one small job and
-        # picks 'agg' iff the hottest gram alone would blow the per-task
-        # budget the sizing discipline promises.
-        strategy = "window"
-        default_parts = int(
-            docs.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        if min_docs == 2 and n_parts > default_parts:
-            hot = _hot_gram_rows_estimate(d, k, raw_chars)
-            if hot > _GRAM_ROWS_PER_TASK:
-                strategy = "agg"
+    form = choose_form(
+        "duplicate_spans", strategy, docs,
+        grams=d, k=k, raw_chars=raw_chars, n_parts=n_parts, min_docs=min_docs,
+    )
     # widen the MAP side only when it is genuinely narrow (the full-text
     # round-robin shuffle is not free): each map task buffers its whole
     # gram output in the shuffle writer, so per-task gram volume must fit
@@ -1763,7 +1702,7 @@ def duplicate_spans_df(
         F.explode(F.sequence(F.lit(1), F.length("nt") - (k - 1))).alias("pos"),
         F.col("nt"),
     ).select("doc_id", "pos", h.alias("h"))
-    if min_docs == 2 and strategy == "window":
+    if min_docs == 2 and form == "window":
         g = grams.repartition(n_parts, "h")
         w_h = Window.partitionBy("h")
         hits = (

@@ -10,12 +10,11 @@ validates them (see ``__spark_entry__.oracle_sql``).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..backend import choose_form
 from ..utils import quote_carry, unquote_carry
 from .dedup import normalized_text
 
@@ -186,12 +185,10 @@ def winnow_fingerprints_df(
     shared fingerprint, the plagiarism/near-dup detection primitive.
     The default gram hash is md5 (cross-engine deterministic).
 
-    ``strategy='auto'`` (default) takes the zero-shuffle Arrow kernel
-    (:func:`_winnow_selected_arrow_df`) for batch and streaming input
-    alike (see :func:`_winnow_pick_strategy`); ``'window'`` is the
-    pure-JVM sized sliding-window batch chain
-    (:func:`_winnow_selected_window_df`), which operators that join on
-    the fingerprints pin (see :func:`_winnow_strategy`).
+    ``strategy``: ``'arrow'`` is the zero-shuffle kernel
+    (:func:`_winnow_selected_arrow_df`), ``'window'`` the pure-JVM sized
+    sliding-window batch chain (:func:`_winnow_selected_window_df`);
+    ``'auto'`` follows the ``winnow`` row of ``backend.ROUTES``.
     Value-identical across strategies (equivalence-tested).
 
     ``hash_fn='xxhash64'`` is the production fast path (JVM-intrinsic,
@@ -202,8 +199,7 @@ def winnow_fingerprints_df(
     value-pinned.  See FASTPATH.md for the measured row.
     """
     _check_hash_fn(hash_fn)
-    strategy = _winnow_pick_strategy(docs, strategy, "winnow_fingerprints_df")
-    if strategy == "arrow":
+    if choose_form("winnow", strategy, docs, hash_fn=hash_fn) == "arrow":
         return _winnow_selected_arrow_df(
             docs, int(k), int(window), (), positional=True, hash_fn=hash_fn
         )
@@ -273,60 +269,6 @@ def _winnow_selected_window_df(
             F.col("w.h").alias("fp"),
         )
     )
-
-
-def _winnow_strategy(hash_fn: str, docs: DataFrame) -> str:
-    """The strategy a COMPOSING operator (one that joins on the
-    fingerprints) should pin at its winnow call site — the other half of
-    the leaf-only dispatch rule in :func:`_winnow_pick_strategy`: md5's
-    kernel loses composed (the mapInPandas boundary breaks the JVM
-    pipeline around the downstream join — cur_select3 measured 9.5 s
-    arrow vs 5.4 s window at sf0.1), while xxhash64's kernel is 5x the
-    window chain and keeps winning through the boundary (FASTPATH.md
-    round-8c), so only BATCH md5 pins the pure-JVM window form.  A
-    streaming ``docs`` stays on auto — the window chain sorts and
-    aggregates, which is illegal mid-stream, and auto picks the
-    streaming-legal arrow kernel (contamination_pairs_stream delegates
-    a streaming train side through the batch composition)."""
-    if hash_fn == "md5" and not docs.isStreaming:
-        return "window"
-    return "auto"
-
-
-def _winnow_pick_strategy(docs: DataFrame, strategy: str, fn: str) -> str:
-    """The winnow form ``strategy`` runs: ``'arrow'`` or ``'window'``."""
-    if strategy not in ("auto", "window", "arrow"):
-        raise ValueError(
-            f"{fn}: strategy must be 'auto', 'window', or 'arrow', "
-            f"got {strategy!r}"
-        )
-    if strategy == "window" and docs.isStreaming:
-        # aggregation/sort are illegal mid-stream: an EXPLICIT 'window'
-        # ask must fail clearly here, not as a deep AnalysisException
-        # from the sizing pre-pass
-        raise ValueError(
-            f"{fn}: strategy='window' sorts and aggregates, which is "
-            "illegal on a streaming DataFrame — use 'arrow' (or 'auto', "
-            "which picks it)"
-        )
-    if strategy != "auto":
-        return strategy
-    # auto: the ARROW kernel for BOTH hash families and for streams (it
-    # is stateless mapInPandas, so streaming-legal) — the leaf-only
-    # dispatch rule (round-11).  Standalone, arrow won or tied
-    # every measured session and the gap grows with scale (md5 at 1.28M:
-    # 40.7-69.3 s arrow vs 57.6-93.3 s window; xxhash64 5x — FASTPATH.md
-    # rounds 8c/10/11).  The one place window wins is COMPOSITION: when
-    # the winnow subtree feeds a join, the mapInPandas boundary breaks
-    # the JVM pipeline (cur_select3 measured 9.5 s arrow vs 5.4 s window
-    # at sf0.1) — but whether the OUTPUT will feed a join is unknowable
-    # here at plan-build time, and the party that DOES know is the
-    # composing operator.  So the rule is: auto assumes a leaf; every
-    # in-library composition that joins on the fingerprints pins
-    # strategy='window' explicitly at its call site (curate.py
-    # contamination family, streaming/curate.py), and user-built
-    # compositions should do the same.
-    return "arrow"
 
 
 def _winnow_selected_arrow_df(
@@ -445,33 +387,22 @@ def winnow_fp_set_df(
 ) -> DataFrame:
     """Distinct winnowing fingerprints per document, ``(doc_id, fp)``.
 
-    ``strategy='auto'`` (default) picks by INPUT KIND, assuming the
-    output is a LEAF (consumed directly, not joined on):
-
-    - batch -> ``'arrow'``, the numpy kernel
-      (:func:`_winnow_selected_arrow_df`): gram hashes computed INSIDE
-      the Arrow batch, zero shuffles, no interpreted JVM expressions —
-      5-6x the window form for xxhash64 (FASTPATH.md round-8c), 1.3-1.8x
-      and growing with scale for md5 (round-10/11).  Note this path runs
-      numpy/pandas in the executors' Python workers, unlike the pure-JVM
-      window chain.
-    - streaming -> ``'arrow'`` too (stateless mapInPandas is
-      streaming-legal).
-
-    COMPOSING callers — operators that JOIN on the fingerprints — should
-    pin ``strategy=_winnow_strategy(hash_fn, docs)`` instead of auto:
-    for md5 the mapInPandas boundary breaks the JVM pipeline around the
-    join (cur_select3 measured 9.5 s arrow vs 5.4 s window at sf0.1), so
-    md5 compositions take ``'window'``, the sized exploded chain
-    (:func:`_winnow_selected_window_df`) + a per-doc dedup the doc_id
-    partitioning already satisfies.  The in-library contamination family
-    does this.
+    ``strategy``: ``'arrow'`` is the numpy kernel
+    (:func:`_winnow_selected_arrow_df`: gram hashes computed inside the
+    Arrow batch, zero shuffles, numpy/pandas in the executors' Python
+    workers), ``'window'`` the sized exploded chain
+    (:func:`_winnow_selected_window_df`) plus a per-doc dedup the doc_id
+    partitioning already satisfies.  ``'auto'`` follows the ``winnow``
+    row of ``backend.ROUTES``, assuming the output is a leaf; a caller
+    that JOINS on the fingerprints resolves the form with
+    ``choose_form("winnow", "auto", docs, hash_fn=.., composed=True)``
+    and passes it in, as the contamination family does.
 
     Both forms are value-identical per hash family (equivalence-tested)."""
     _check_hash_fn(hash_fn)
-    strategy = _winnow_pick_strategy(docs, strategy, "winnow_fp_set_df")
+    form = choose_form("winnow", strategy, docs, hash_fn=hash_fn)
     qcarry = quote_carry(carry, _WINNOW_RESERVED)
-    if strategy == "arrow":
+    if form == "arrow":
         return _winnow_selected_arrow_df(
             docs, int(k), int(window), qcarry, positional=False, hash_fn=hash_fn
         )
@@ -1420,35 +1351,15 @@ def ngram_lm_df(
     (vocab-bounded rows, never per occurrence), collected, and the
     corpus is scored by a zero-shuffle ``mapInPandas`` doing pure
     integer dictionary lookups — no float is ever computed in Python,
-    so ``arrow == agg`` bit-for-bit by construction; ``'auto'`` — arrow
-    when the TRAIN side is a file-backed frame whose parquet-footer
-    char estimate (:func:`~.dedup._text_chars_estimate`, pre-filter, an
-    overestimate — the safe direction) fits the collect budget
-    (``IMOPS_SPARK_LM_COLLECT_CHARS``, default 64 MiB: worst-case
-    ~11M distinct bigrams, the practical bound on what a driver should
-    hold + broadcast), else agg.  At 100 TB a self-trained model is
-    corpus-scale and auto stays on agg; the CCNet regime (sample-trained
-    model, huge scored corpus) dispatches to arrow and removes the
-    per-occurrence explode + joins + doc aggregation entirely.
+    so ``arrow == agg`` bit-for-bit by construction; ``'auto'`` — the
+    ``ngram_lm`` row of ``backend.ROUTES``, which sizes the TRAIN side:
+    a 100 TB self-trained model stays on agg, the CCNet regime
+    (sample-trained model, huge scored corpus) takes arrow.
     """
     a = float(add_k)
     if a <= 0:
         raise ValueError(f"add_k must be > 0, got {add_k}")
-    if strategy not in ("auto", "agg", "arrow"):
-        raise ValueError(
-            f"strategy must be 'auto', 'agg', or 'arrow', got {strategy!r}"
-        )
-    if strategy == "auto":
-        strategy = "agg"
-        train_side = train_docs if train_docs is not None else docs
-        if not docs.isStreaming and not train_side.isStreaming:
-            from .dedup import _text_chars_estimate
-
-            est = _text_chars_estimate(train_side)
-            if est is not None and est <= int(
-                os.environ.get("IMOPS_SPARK_LM_COLLECT_CHARS", str(64 * 1024**2))
-            ):
-                strategy = "arrow"
+    form = choose_form("ngram_lm", strategy, docs, train=train_docs)
 
     def _bigrams(d: DataFrame) -> DataFrame:
         # `toks` is re-bound as the outer lambda's variable `t` so element
@@ -1496,7 +1407,7 @@ def ngram_lm_df(
     )
     c1 = c2.groupBy("prev").agg(F.sum("c2").alias("c1"))
     v = c2.agg(F.countDistinct("cur").alias("v"))
-    if strategy == "arrow":
+    if form == "arrow":
         per_doc = _lm_score_arrow_df(docs, c2, c1, v, a)
         if per_doc is not None:
             return _lm_tail(per_doc)
@@ -1568,10 +1479,7 @@ def _lm_score_arrow_df(docs: DataFrame, c2, c1, v, a: float) -> DataFrame | None
     The model dictionaries are collected once at plan-build time (two
     bounded jobs over the checkpointed ``c2``) and shipped via a Spark
     broadcast — each Python worker unpickles them once and keeps them
-    across its tasks.  The 'auto' dispatch only routes here when the
-    train side's footer-estimated chars fit the collect budget; at
-    100 TB score-with-sampled-model (the CCNet regime) that is the
-    design point, and the removed work is the per-occurrence bigram
+    across its tasks.  The removed work is the per-occurrence bigram
     explode, two model joins, and the corpus-wide doc aggregation.
     """
     import pandas as pd
@@ -1831,26 +1739,24 @@ def repetition_df(
     comment).
 
     ``strategy``: every metric is a function of one document's own text,
-    so ``'arrow'`` (auto's pick — round-11 optimization) computes the
-    whole thing row-locally in a ``mapInPandas`` kernel with ZERO
-    shuffles (bit-identical to the exchange form, differential-tested;
-    measured 2.5 s -> ~0.6 s at sf0.1, and at scale the gram rows never
+    so ``'arrow'`` (auto's pick, the ``repetition`` row of
+    ``backend.ROUTES``) computes the whole thing row-locally in a
+    ``mapInPandas`` kernel with ZERO shuffles (bit-identical to the
+    exchange form, differential-tested; measured 2.5 s -> ~0.6 s at
+    sf0.1, and at scale the gram rows never
     exist as exchange payload).  ``'exchange'`` keeps the pure-JVM
     single-exchange aggregation above — the no-Python-workers fallback
     and the differential pinning twin.
     """
     import re as _re
 
-    if strategy not in ("auto", "arrow", "exchange"):
-        raise ValueError(
-            f"strategy must be 'auto', 'arrow', or 'exchange', got {strategy!r}"
-        )
+    form = choose_form("repetition", strategy, docs)
     top_ns = tuple(int(n) for n in top_ns)
     dup_ns = tuple(int(n) for n in dup_ns)
     all_ns = sorted(set(top_ns) | set(dup_ns))
     if not all_ns or min(all_ns) < 1:
         raise ValueError(f"n-gram sizes must be >= 1, got {top_ns} + {dup_ns}")
-    if strategy in ("auto", "arrow"):
+    if form == "arrow":
         return _repetition_arrow_df(docs, top_ns, dup_ns, line_sep, round_to)
     norm = normalized_text()
     sep_rx = _re.escape(line_sep).replace("\\", "\\\\").replace("'", "\\'")

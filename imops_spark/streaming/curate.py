@@ -92,23 +92,20 @@ def start_contamination_hits_maintenance(
     """
     from pyspark.sql import functions as F
 
-    from ..functions.text import _winnow_strategy, winnow_fp_set_df
+    from ..functions.curate import _joined_fp_set
 
     # checkpoint the eval fp set once at start(): every micro-batch probes
     # it, and without the checkpoint each batch would re-run the whole eval
     # winnowing chain (bounded frame, lives as long as the query closure)
     ef_fps = (
-        winnow_fp_set_df(eval_docs, k=k, window=window, hash_fn=hash_fn, strategy=_winnow_strategy(hash_fn, eval_docs))
+        _joined_fp_set(eval_docs, k, window, hash_fn)
         .select("fp")
         .dropDuplicates()
         .localCheckpoint(eager=False)
     )
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        tf = winnow_fp_set_df(
-            batch_df, k=k, window=window, hash_fn=hash_fn,
-            strategy=_winnow_strategy(hash_fn, batch_df),
-        ).select("fp")
+        tf = _joined_fp_set(batch_df, k, window, hash_fn).select("fp")
         hits = tf.join(F.broadcast(ef_fps), "fp", "left_semi").dropDuplicates()
         hits.write.mode("append").parquet(path)
 
@@ -138,8 +135,7 @@ def contamination_report_from_hits(
     status-read lesson from the uniqueness sink)."""
     from pyspark.sql import functions as F
 
-    from ..functions.curate import _contamination_report_tail
-    from ..functions.text import _winnow_strategy, winnow_fp_set_df
+    from ..functions.curate import _contamination_report_tail, _joined_fp_set
 
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
@@ -148,7 +144,7 @@ def contamination_report_from_hits(
         hit_fps = spark.read.parquet(path).dropDuplicates()
     else:
         hit_fps = spark.createDataFrame([], "fp long")
-    ef = winnow_fp_set_df(eval_docs, k=k, window=window, hash_fn=hash_fn, strategy=_winnow_strategy(hash_fn, eval_docs)).select(
+    ef = _joined_fp_set(eval_docs, k, window, hash_fn).select(
         F.col("doc_id").alias("eval_id"), "fp"
     )
     return _contamination_report_tail(ef, hit_fps)

@@ -56,3 +56,39 @@ def test_every_submodule_export_resolves():
         assert not missing, f"{info.name}.__all__ names missing attributes: {missing}"
         checked += len(names)
     assert checked > 0
+
+
+def test_auto_resolution_has_one_owner():
+    """Every ``strategy='auto'`` resolution lives in ``backend.py``'s routing
+    table: no other package module compares a value with ``"auto"`` or
+    defines a ``_*strategy`` helper."""
+    import ast
+    import pathlib
+
+    import imops_spark
+
+    def is_auto(node):
+        if isinstance(node, ast.Constant):
+            return node.value == "auto"
+        if isinstance(node, (ast.Tuple, ast.List, ast.Set)):
+            return any(is_auto(e) for e in node.elts)
+        return False
+
+    pkg = pathlib.Path(imops_spark.__file__).parent
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "backend.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            where = f"{path.relative_to(pkg)}:{getattr(node, 'lineno', 0)}"
+            if isinstance(node, ast.Compare) and any(
+                is_auto(n) for n in (node.left, *node.comparators)
+            ):
+                offenders.append(where)
+            elif (
+                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and node.name.startswith("_")
+                and node.name.endswith("strategy")
+            ):
+                offenders.append(f"{where} def {node.name}")
+    assert not offenders, f"'auto' resolved outside backend.py: {offenders}"

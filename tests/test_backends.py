@@ -199,3 +199,148 @@ def test_reference_backend_classes_are_drop_in(spark):
     out_c = binary_dilation(mask, backend=Cython())
     out_s = binary_dilation(mask, backend=Scipy())
     np.testing.assert_array_equal(out_c, out_s)
+
+
+# The pinned ``auto`` form of every row of backend.ROUTES, per input kind
+# (batch / stream) and hash family: (row, kind, hash_fn, build, expected).
+# ``build(inputs, hash_fn)`` returns the operator's DataFrame, or ``None``
+# where only the log records show the pick (the ndarray rule, a checkpointed
+# side, or a stream the operator cannot plan, resolved on the row directly).
+# ``expected`` lists the forms logged in resolution order: a composing
+# operator resolves each side.
+def _ops():
+    from imops_spark.backend import choose_form, dispatch_strategy, resolve_backend
+    from imops_spark.functions import curate, dedup, text
+
+    def resolve(op, **kw):
+        def build(i, h):
+            choose_form(op, "auto", i["doc"], hash_fn=h, **kw)
+        return build
+
+    def imaging(nbytes):
+        def build(i, h):
+            dispatch_strategy(resolve_backend(None), nbytes)
+        return build
+
+    def report(i, h):
+        # the eval side is checkpointed, so only the records show its form
+        curate.contamination_report_df(i["doc"], i["doc"], hash_fn=h)
+
+    return [
+        ("imaging", "batch", None, imaging(1024), ["udf"]),
+        ("imaging", "batch", None, imaging(1 << 30), ["join"]),
+        ("minhash", "batch", "md5", lambda i, h: dedup.minhash_signatures_df(i["doc"], hash_fn=h), ["arrow"]),
+        ("minhash", "batch", "xxhash64", lambda i, h: dedup.minhash_signatures_df(i["doc"], hash_fn=h), ["jvm"]),
+        ("minhash", "stream", "md5", lambda i, h: dedup.minhash_signatures_df(i["doc"], hash_fn=h), ["jvm"]),
+        ("minhash", "stream", "xxhash64", lambda i, h: dedup.minhash_signatures_df(i["doc"], hash_fn=h), ["jvm"]),
+        ("minhash", "batch", "md5", lambda i, h: dedup.drop_near_duplicates_df(i["doc"], hash_fn=h), ["jvm"]),
+        ("minhash", "batch", "xxhash64", lambda i, h: dedup.drop_near_duplicates_df(i["doc"], hash_fn=h), ["jvm"]),
+        ("minhash", "stream", "md5", resolve("minhash", composed=True), ["jvm"]),
+        ("minhash", "stream", "xxhash64", resolve("minhash", composed=True), ["jvm"]),
+        ("simhash", "batch", None, lambda i, h: dedup.simhash_df(i["doc"]), ["arrow"]),
+        ("simhash", "stream", None, lambda i, h: dedup.simhash_df(i["doc"]), ["local"]),
+        ("winnow", "batch", "md5", lambda i, h: text.winnow_fingerprints_df(i["doc"], hash_fn=h), ["arrow"]),
+        ("winnow", "batch", "xxhash64", lambda i, h: text.winnow_fp_set_df(i["doc"], hash_fn=h), ["arrow"]),
+        ("winnow", "stream", "md5", lambda i, h: text.winnow_fp_set_df(i["doc"], hash_fn=h), ["arrow"]),
+        ("winnow", "stream", "xxhash64", lambda i, h: text.winnow_fp_set_df(i["doc"], hash_fn=h), ["arrow"]),
+        ("winnow", "batch", "md5",
+         lambda i, h: curate.contamination_pairs_df(i["doc"], i["doc"], hash_fn=h), ["window", "window"]),
+        ("winnow", "batch", "xxhash64",
+         lambda i, h: curate.contamination_pairs_df(i["doc"], i["doc"], hash_fn=h), ["arrow", "arrow"]),
+        # the report's eval side is a leaf, its train side is joined
+        ("winnow", "batch", "md5", report, ["arrow", "window"]),
+        ("winnow", "stream", "md5", resolve("winnow", composed=True), ["arrow"]),
+        ("winnow", "stream", "xxhash64", resolve("winnow", composed=True), ["arrow"]),
+        ("duplicate_spans", "batch", "md5", lambda i, h: dedup.duplicate_spans_df(i["doc"], hash_fn=h), ["window"]),
+        ("duplicate_spans", "batch", "xxhash64",
+         lambda i, h: dedup.duplicate_spans_df(i["doc"], hash_fn=h), ["window"]),
+        ("dsir", "batch", None, lambda i, h: curate.dsir_logweights_df(i["doc"], i["static"]), ["arrow"]),
+        ("dsir", "stream", None, lambda i, h: curate.dsir_logweights_df(i["doc"], i["static"]), ["agg"]),
+        # footer-estimated train text within the 64 MiB budget -> arrow; an
+        # in-memory frame has no estimate -> agg
+        ("ngram_lm", "batch", None, lambda i, h: text.ngram_lm_df(i["doc"]), ["arrow"]),
+        ("ngram_lm", "batch", None, lambda i, h: text.ngram_lm_df(i["memory"]), ["agg"]),
+        ("ngram_lm", "stream", None, resolve("ngram_lm"), ["agg"]),
+        ("repetition", "batch", None, lambda i, h: text.repetition_df(i["doc"]), ["arrow"]),
+        ("repetition", "stream", None, lambda i, h: text.repetition_df(i["doc"]), ["arrow"]),
+    ]
+
+
+_ROUTE_CASES = _ops()
+
+
+@pytest.fixture(scope="module")
+def route_inputs(spark, tmp_path_factory):
+    src = str(tmp_path_factory.mktemp("route_docs") / "docs")
+    rows = [(i, f"document {i} says the quick brown fox jumps over {i % 3}") for i in range(12)]
+    mem = spark.createDataFrame(rows, "doc_id long, text string")
+    mem.write.parquet(src)
+    return {
+        "batch": spark.read.parquet(src),
+        "stream": spark.readStream.schema("doc_id long, text string").parquet(src),
+        "memory": mem,
+    }
+
+
+@pytest.mark.parametrize(
+    "row,kind,hash_fn,build,expected",
+    _ROUTE_CASES,
+    ids=[f"{c[0]}-{c[1]}-{c[2] or 'nohash'}-{i}" for i, c in enumerate(_ROUTE_CASES)],
+)
+def test_routing_table_auto_forms(spark, route_inputs, caplog, row, kind, hash_fn, build, expected):
+    """Every ``ROUTES`` row resolves ``auto`` to its pinned form for batch
+    and streaming input and each hash family: one DEBUG record per
+    resolution, and the plan carries a ``MapInPandas`` stage exactly when
+    an arrow form was picked."""
+    import logging
+
+    inputs = {"doc": route_inputs[kind], "static": route_inputs["batch"], "memory": route_inputs["memory"]}
+    caplog.set_level(logging.DEBUG, logger="imops_spark.backend")
+    df = build(inputs, hash_fn)
+    records = [r for r in caplog.records if r.name == "imops_spark.backend"]
+    assert [r.args[0] for r in records] == [row] * len(expected)
+    assert [r.args[1] for r in records] == expected
+    if df is not None:
+        plan = df._jdf.queryExecution().toString()
+        assert ("MapInPandas" in plan) == ("arrow" in expected)
+
+
+def test_routing_table_covers_every_row():
+    from imops_spark.backend import ROUTES
+
+    assert {c[0] for c in _ROUTE_CASES} == set(ROUTES)
+    for op, row in ROUTES.items():
+        assert len(row.forms) == 2 and row.evidence, op
+
+
+def test_routing_errors_and_explicit_forms(spark, route_inputs, caplog):
+    """Unknown names raise one shape naming the op; explicit forms pass
+    through unlogged (the caller decided), with the md5-only and
+    batch-only checks."""
+    import logging
+
+    from imops_spark.backend import choose_form
+
+    doc, stream = route_inputs["batch"], route_inputs["stream"]
+    with pytest.raises(ValueError, match=r"^dsir: strategy must be one of \('auto', 'arrow', 'agg'\), got 'x'$"):
+        choose_form("dsir", "x", doc)
+    with pytest.raises(ValueError, match="md5 family"):
+        choose_form("minhash", "arrow", doc, hash_fn="xxhash64")
+    with pytest.raises(ValueError, match="illegal on a streaming"):
+        choose_form("winnow", "window", stream, hash_fn="md5")
+    caplog.set_level(logging.DEBUG, logger="imops_spark.backend")
+    assert choose_form("winnow", "window", doc, hash_fn="md5") == "window"
+    assert choose_form("repetition", "exchange", stream) == "exchange"
+    assert not [r for r in caplog.records if r.name == "imops_spark.backend"]
+
+
+def test_routing_size_budget(route_inputs, monkeypatch):
+    """A size fact over its row's budget takes the row's second form."""
+    from dataclasses import replace
+
+    from imops_spark.backend import ROUTES, choose_form
+
+    doc = route_inputs["batch"]
+    assert choose_form("ngram_lm", "auto", doc) == "arrow"
+    monkeypatch.setitem(ROUTES, "ngram_lm", replace(ROUTES["ngram_lm"], budget=10))
+    assert choose_form("ngram_lm", "auto", doc) == "agg"

@@ -240,7 +240,7 @@ def test_simhash_strategies_identical(spark):
     assert "Exchange" not in loc_plan
 
 
-def test_auto_strategy_hot_gram_dispatch(spark, monkeypatch):
+def test_auto_strategy_hot_gram_dispatch(spark, monkeypatch, caplog):
     """strategy='auto' must route a pathologically hot gram (one k-gram in
     50% of docs — site boilerplate) to the skew-safe 'agg' form instead of
     funnelling its rows into one window sort partition, and stay on
@@ -294,8 +294,12 @@ def test_auto_strategy_hot_gram_dispatch(spark, monkeypatch):
 
     monkeypatch.setattr(dd, "_GRAM_ROWS_PER_TASK", 64)
     monkeypatch.setattr(dd, "_hot_gram_rows_estimate", spy)
+    caplog.set_level("DEBUG", logger="imops_spark.backend")
     a = sorted(map(tuple, dd.duplicate_spans_df(df, k=k, strategy="auto").collect()))
     assert picked["est"] > 64  # the skewed corpus chose 'agg'
+    assert [r.args[:2] for r in caplog.records if r.name == "imops_spark.backend"] == [
+        ("duplicate_spans", "agg")
+    ]
     picked.clear()
     dd.duplicate_spans_df(uni, k=k, strategy="auto").collect()
     assert picked.get("est", 0) <= 64 or True  # uniform probe ran; pick is window

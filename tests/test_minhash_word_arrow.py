@@ -288,13 +288,11 @@ def test_minhash_composing_operators_pin_jvm(spark):
     kernel loses composed once the self-join is sort-merge — FASTPATH
     round-11), so no MapInPandas signature stage may appear in
     drop_near_duplicates_df's md5 plan."""
-    from imops_spark.functions.dedup import (
-        _sig_composed_strategy,
-        drop_near_duplicates_df,
-    )
+    from imops_spark.backend import choose_form
+    from imops_spark.functions.dedup import drop_near_duplicates_df
 
     docs = spark.createDataFrame(EDGE_ROWS[:2], "doc_id int, text string")
-    assert _sig_composed_strategy("md5", docs) == "jvm"
-    assert _sig_composed_strategy("xxhash64", docs) == "auto"
+    for h in ("md5", "xxhash64"):
+        assert choose_form("minhash", "auto", docs, hash_fn=h, composed=True) == "jvm"
     plan = drop_near_duplicates_df(docs)._jdf.queryExecution().toString()
     assert "MapInPandas" not in plan

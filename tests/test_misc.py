@@ -1119,7 +1119,7 @@ def test_winnow_strategies_value_identical_and_dispatch(spark):
     import pytest
     from pyspark.sql import functions as F
 
-    import imops_spark.functions.text as tx
+    from imops_spark.backend import choose_form
     from imops_spark.functions.text import (
         winnow_fingerprints_df,
         winnow_fp_set_df,
@@ -1159,13 +1159,14 @@ def test_winnow_strategies_value_identical_and_dispatch(spark):
     assert len(got) == len({(r["doc_id"], r["fp"]) for r in got})
     assert all(r["src"] == f"s{r['doc_id']}" for r in got)
 
-    # dispatch (the round-11 leaf-only rule): batch auto assumes a LEAF
-    # and picks the arrow kernel for BOTH hash families; composing
-    # operators that join on the fingerprints pin md5 back to the
-    # pure-JVM window form via _winnow_strategy at their call sites
-    assert tx._winnow_pick_strategy(docs, "auto", "t") == "arrow"
-    assert tx._winnow_strategy("md5", docs) == "window"
-    assert tx._winnow_strategy("xxhash64", docs) == "auto"
+    # dispatch (the winnow row of backend.ROUTES): batch auto assumes a
+    # LEAF and picks the arrow kernel for BOTH hash families; composing
+    # operators that join on the fingerprints take md5 back to the
+    # pure-JVM window form
+    for h in ("md5", "xxhash64"):
+        assert choose_form("winnow", "auto", docs, hash_fn=h) == "arrow"
+    assert choose_form("winnow", "auto", docs, hash_fn="md5", composed=True) == "window"
+    assert choose_form("winnow", "auto", docs, hash_fn="xxhash64", composed=True) == "arrow"
     for bad in ("nope", "local"):  # 'local' is the removed row-local form
         with pytest.raises(ValueError, match="strategy"):
             winnow_fp_set_df(docs, strategy=bad)

@@ -138,8 +138,8 @@ def test_winnow_arrow_plan_and_dispatch(spark):
     )
     assert "MapInPandas" in plan and "Exchange" not in plan
     # batch auto assumes a LEAF and takes the arrow kernel for md5 too
-    # (round-11 leaf-only rule); composing operators pin the window form
-    # via _winnow_strategy, and explicit strategy='window' still builds it
+    # (the winnow row of backend.ROUTES); composing operators take the
+    # window form, and explicit strategy='window' still builds it
     plan_md5 = (
         winnow_fp_set_df(docs, k=8, window=4)
         ._jdf.queryExecution().executedPlan().toString()
