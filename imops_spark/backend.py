@@ -250,10 +250,6 @@ ROUTES: dict[str, Route] = {
         ("arrow", "agg"), stream="agg", size=_train_chars, budget=64 << 20,
         evidence="FASTPATH.md r12: sf0.1 arrow 1.47-1.80 vs agg 1.74-2.66 s",
     ),
-    "repetition": Route(
-        ("arrow", "exchange"), stream="arrow",
-        evidence="OPTIMIZATION_r11.md: txt_repetition 2.48 -> 0.87 s",
-    ),
 }
 
 

@@ -743,21 +743,34 @@ def _feature_array_sql(toks: str = "toks") -> str:
     )
 
 
-def _bucket_hash_sql(expr: str, salt: int, B: int, plus_one: bool = False) -> str:
-    """md5 feature-bucket hash as SQL text (mirrors dedup._md5_hash_col);
-    ``plus_one=True`` yields the 1-based form element_at wants."""
-    tail = " + 1" if plus_one else ""
+def _raw_hash_sql(expr: str, salt: int) -> str:
+    """The 60-bit md5 feature hash as SQL text BEFORE the bucket modulus
+    (mirrors dedup._md5_hash_col) — what the shared feature frame stores
+    so ONE frame serves consumers with different bucket counts."""
     return (
-        f"CAST(CAST(conv(substring(md5(concat('{int(salt)}|', {expr})), 1, 15),"
-        f" 16, 10) AS BIGINT) % {int(B)}{tail} AS INT)"
+        f"CAST(conv(substring(md5(concat('{int(salt)}|', {expr})), 1, 15),"
+        f" 16, 10) AS BIGINT)"
     )
 
 
-def _logit_prob_df(agg: DataFrame, bias_micro: int) -> DataFrame:
-    """Shared tail of both classifier scorers: signed round-half-away mean
-    of the micro-weight sum plus bias, then the sigmoid of the tie-free
-    micro logit, rounded at 6 (see classifier_score_df for the rationale).
-    ``agg`` is ``(doc_id, n_feats, s)``."""
+def _bucket_hash_sql(expr: str, salt: int, B: int, plus_one: bool = False) -> str:
+    """md5 feature-bucket hash as SQL text; ``plus_one=True`` yields the
+    1-based form element_at wants."""
+    tail = " + 1" if plus_one else ""
+    return f"CAST({_raw_hash_sql(expr, salt)} % {int(B)}{tail} AS INT)"
+
+
+def _logit_prob_df(
+    buckets: DataFrame, weights: DataFrame, bias: float, what: str
+) -> DataFrame:
+    """Shared body of both join-form classifier scorers over a ``(doc_id,
+    bucket)`` feature stream: the weight snap, the per-doc micro-weight
+    sum (missing buckets weigh 0), its signed round-half-away mean plus
+    bias, then the sigmoid of the tie-free micro logit, rounded at 6 (see
+    classifier_score_df for the rationale).  ``what`` names the caller in
+    the duplicate-bucket assert."""
+    wm, bias_micro = _snap_weights(weights, bias, what)
+    agg = _doc_sums(buckets, wm, F.coalesce("w_micro", F.lit(0)), "s")
     return agg.selectExpr(
         "doc_id",
         "n_feats",
@@ -954,6 +967,49 @@ def _assert_unique_buckets(weights: DataFrame, val_col: str, what: str) -> DataF
     )
 
 
+def _check_args(num_buckets=None, add_k=None, k=None) -> None:
+    """The selection family's one argument validator: each entry point
+    passes exactly the arguments it checks (``None``: not checked)."""
+    if num_buckets is not None and int(num_buckets) <= 0:
+        raise ValueError(f"num_buckets must be positive, got {num_buckets}")
+    if add_k is not None and float(add_k) <= 0:
+        raise ValueError(f"add_k must be > 0, got {add_k}")
+    if k is not None and k <= 0:
+        raise ValueError(f"k must be positive, got {k}")
+
+
+def _snap_weights(weights: DataFrame, bias: float, what: str):
+    """The classifier scorers' one weight snap: a ``(bucket, weight)``
+    table to unique-bucket ``(bucket, w_micro)`` rows on the integer
+    micro grid (``what`` names the caller in the duplicate-bucket
+    assert), and ``bias`` to micro-units.  Returns ``(wm, bias_micro)``."""
+    wm = _assert_unique_buckets(
+        weights.select(
+            F.col("bucket").cast("long").alias("bucket"),
+            F.expr("CAST(ROUND(weight * 1000000) AS BIGINT)").alias("w_micro"),
+        ),
+        "w_micro",
+        what,
+    )
+    return wm, round(float(bias) * 1_000_000)
+
+
+def _doc_sums(buckets: DataFrame, table: DataFrame, value, out: str) -> DataFrame:
+    """The selection family's one join-form scoring tail: broadcast the
+    ``<= B``-row ``(bucket, ..)`` table onto a ``(doc_id, bucket)``
+    feature stream and aggregate per document into ``(doc_id, n_feats,
+    <out>)``, ``<out> = sum(value)``.  A stream already partitioned by
+    doc_id satisfies the ``groupBy`` with no further exchange."""
+    return (
+        buckets.join(F.broadcast(table), "bucket", "left")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_feats"),
+            F.sum(value).alias(out),
+        )
+    )
+
+
 def _dsir_features(d: DataFrame, by_doc: bool = False) -> DataFrame:
     """Exploded hashed-n-gram feature stream ``(doc_id, feat)``: unigrams
     plus space-joined bigrams of the normalized whitespace tokens — the
@@ -961,8 +1017,8 @@ def _dsir_features(d: DataFrame, by_doc: bool = False) -> DataFrame:
     into a bounded bucket table.  Row-local explode, no shuffle.
 
     ``by_doc=True`` repartitions by doc_id while rows are still COMPACT
-    documents (the repetition_df recipe) so the caller's final
-    ``groupBy(doc_id)`` is satisfied without exploded-row shuffling.  The
+    documents so the caller's final ``groupBy(doc_id)`` is satisfied
+    without exploded-row shuffling.  The
     bigram builder binds ``toks`` as a lambda variable (``transform(array
     (toks), t -> ..)[0]``) — referencing an expression column inside a
     lambda body re-evaluates it per invocation otherwise (the
@@ -1148,36 +1204,20 @@ def dsir_logweights_df(
             "n_feats long, logw_micro long",
             lambda n, s: {"n_feats": n, "logw_micro": s},
         )
-    return (
-        _dsir_bucketed(docs, B, salt, by_doc=True)
-        .join(F.broadcast(model.select("bucket", "lrm")), "bucket", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_feats"),
-            # every scored bucket is in the model by construction (the raw
-            # stream IS the scored corpus), so lrm is never NULL here
-            F.sum("lrm").alias("logw_micro"),
-        )
+    # every scored bucket is in the model by construction (the raw stream
+    # IS the scored corpus), so lrm is never NULL here
+    return _doc_sums(
+        _dsir_bucketed(docs, B, salt, by_doc=True),
+        model.select("bucket", "lrm"),
+        "lrm",
+        "logw_micro",
     )
 
 
 def _dsir_bucketed(d: DataFrame, B: int, salt: int, by_doc: bool = False) -> DataFrame:
-    from .dedup import _md5_hash_col
-
     f = _dsir_features(d, by_doc=by_doc)
     return f.select(
         "doc_id", (_md5_hash_col(F.col("feat"), salt) % F.lit(B)).alias("bucket")
-    )
-
-
-def _raw_hash_sql(expr: str, salt: int) -> str:
-    """The 60-bit md5 feature hash as SQL text BEFORE the bucket modulus
-    (the `% B`-free prefix of :func:`_bucket_hash_sql`) — what the shared
-    feature frame stores so ONE frame serves consumers with different
-    bucket counts."""
-    return (
-        f"CAST(conv(substring(md5(concat('{int(salt)}|', {expr})), 1, 15),"
-        f" 16, 10) AS BIGINT)"
     )
 
 
@@ -1256,32 +1296,10 @@ def dsir_model_from_features_df(
     :func:`dsir_feature_frame_df` frames instead of raw documents — same
     output, same tagged-union single-aggregation plan, no re-featurizing.
     Both frames must share the salt they were built with."""
+    _check_args(num_buckets=num_buckets, add_k=add_k)
     B = int(num_buckets)
-    a = float(add_k)
-    if B <= 0:
-        raise ValueError(f"num_buckets must be positive, got {num_buckets}")
-    if a <= 0:
-        raise ValueError(f"add_k must be > 0, got {add_k}")
-    from pyspark.sql import Window
-
-    tagged = _explode_bucketed(target_frame, B).select(
-        "bucket", F.lit(1).alias("is_tgt")
-    ).unionAll(
-        _explode_bucketed(raw_frame, B).select("bucket", F.lit(0).alias("is_tgt"))
-    )
-    everything = Window.partitionBy()  # <= B rows: single-partition sums
-    return (
-        tagged.groupBy("bucket")
-        .agg(
-            F.sum("is_tgt").cast("long").alias("tc"),
-            F.sum(F.lit(1) - F.col("is_tgt")).cast("long").alias("rc"),
-        )
-        .withColumn("tt", F.sum("tc").over(everything))
-        .withColumn("rt", F.sum("rc").over(everything))
-        .selectExpr(
-            "bucket", "tc", "rc", "tt", "rt",
-            f"{_dsir_lrm_sql(a, a * B)} AS lrm",
-        )
+    return _dsir_fit_union(
+        _explode_bucketed(target_frame, B), _explode_bucketed(raw_frame, B), B, add_k
     )
 
 
@@ -1294,23 +1312,22 @@ def dsir_logweights_from_features_df(
     Buckets absent from the model score NULL — fit the model on (a
     superset of) the scored corpus, or use :func:`dsir_score_local_df`
     whose dense array fills unseen buckets with the smoothing prior."""
-    B = int(num_buckets)
-    return (
-        _explode_bucketed(frame, B)
-        .join(F.broadcast(model.select("bucket", "lrm")), "bucket", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_feats"),
-            F.sum("lrm").alias("logw_micro"),
-        )
+    return _doc_sums(
+        _explode_bucketed(frame, int(num_buckets)),
+        model.select("bucket", "lrm"),
+        "lrm",
+        "logw_micro",
     )
 
 
-def _gumbel_topk(w: DataFrame, k: int, salt: int, gumbel: bool) -> DataFrame:
-    """Shared tail of both DSIR samplers: deterministic md5-derived Gumbel
-    key in integer micro-nats, global top-k as TakeOrderedAndProject."""
-    from .dedup import _md5_hash_col
-
+def _gumbel_topk(k: int, salt: int, gumbel: bool, weights) -> DataFrame:
+    """Shared tail of the DSIR samplers: deterministic md5-derived Gumbel
+    key in integer micro-nats, global top-k as TakeOrderedAndProject.
+    ``weights`` is a zero-argument builder of the ``(doc_id, ..,
+    logw_micro)`` frame, called only after ``k`` passes its check — so a
+    bad ``k`` fails before any eager model job."""
+    _check_args(k=k)
+    w = weights()
     if gumbel:
         h = _md5_hash_col(F.col("doc_id").cast("string"), salt + 1)
         u = (h % F.lit(1_000_000) + F.lit(0.5)) / F.lit(1_000_000.0)
@@ -1338,13 +1355,14 @@ def dsir_sample_from_features_df(
     """:func:`dsir_sample_df` over persisted feature frames: fit the model
     and score from the SAME materialization (``salt`` must match the
     frames' build salt — it also seeds the Gumbel keys)."""
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-    model = dsir_model_from_features_df(
-        frame, target_frame, num_buckets=num_buckets, add_k=add_k
-    )
-    w = dsir_logweights_from_features_df(frame, model, num_buckets=num_buckets)
-    return _gumbel_topk(w, k, salt, gumbel)
+
+    def weights():
+        model = dsir_model_from_features_df(
+            frame, target_frame, num_buckets=num_buckets, add_k=add_k
+        )
+        return dsir_logweights_from_features_df(frame, model, num_buckets=num_buckets)
+
+    return _gumbel_topk(k, salt, gumbel, weights)
 
 
 def dsir_exploded_features_df(
@@ -1365,9 +1383,8 @@ def dsir_exploded_features_df(
     3x reduction of the widest stream's evaluations at scale.  The
     explode preserves the frame's doc_id partitioning, so the scoring
     groupBy still needs no exchange."""
+    _check_args(num_buckets=num_buckets)
     B = int(num_buckets)
-    if B <= 0:
-        raise ValueError(f"num_buckets must be positive, got {num_buckets}")
     flag = (
         F.lit(0) if target_flag is None else target_flag.cast("int")
     )
@@ -1384,40 +1401,15 @@ def dsir_model_from_exploded_df(
     occurrences, ``rc`` counts ALL occurrences — identical semantics to
     the tagged-union fit where the raw side is the whole frame and the
     target side its flagged slice (differential-tested bit-identical)."""
-    B = int(num_buckets)
-    a = float(add_k)
-    if a <= 0:
-        raise ValueError(f"add_k must be > 0, got {add_k}")
-    from pyspark.sql import Window
-
-    everything = Window.partitionBy()  # <= B rows: single-partition sums
-    return (
-        ex.groupBy("bucket")
-        .agg(
-            F.sum("is_tgt").cast("long").alias("tc"),
-            F.count(F.lit(1)).cast("long").alias("rc"),
-        )
-        .withColumn("tt", F.sum("tc").over(everything))
-        .withColumn("rt", F.sum("rc").over(everything))
-        .selectExpr(
-            "bucket", "tc", "rc", "tt", "rt",
-            f"{_dsir_lrm_sql(a, a * B)} AS lrm",
-        )
-    )
+    _check_args(add_k=add_k)
+    return _dsir_fit(ex, F.count(F.lit(1)), int(num_buckets), add_k)
 
 
 def dsir_logweights_from_exploded_df(ex: DataFrame, model: DataFrame) -> DataFrame:
     """:func:`dsir_logweights_from_features_df` over the SAME exploded
     stream the model was fit from — broadcast model join + one
     ``groupBy(doc_id)`` the inherited partitioning already satisfies."""
-    return (
-        ex.join(F.broadcast(model.select("bucket", "lrm")), "bucket", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_feats"),
-            F.sum("lrm").alias("logw_micro"),
-        )
-    )
+    return _doc_sums(ex, model.select("bucket", "lrm"), "lrm", "logw_micro")
 
 
 def dsir_sample_from_exploded_df(
@@ -1432,11 +1424,12 @@ def dsir_sample_from_exploded_df(
     SLICE of the scored corpus: fit + score from one checkpointed explode
     (``salt`` must match the frame's build salt — it also seeds the
     Gumbel keys)."""
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-    model = dsir_model_from_exploded_df(ex, num_buckets=num_buckets, add_k=add_k)
-    w = dsir_logweights_from_exploded_df(ex, model)
-    return _gumbel_topk(w, k, salt, gumbel)
+
+    def weights():
+        model = dsir_model_from_exploded_df(ex, num_buckets=num_buckets, add_k=add_k)
+        return dsir_logweights_from_exploded_df(ex, model)
+
+    return _gumbel_topk(k, salt, gumbel, weights)
 
 
 def classifier_score_from_features_df(
@@ -1449,28 +1442,13 @@ def classifier_score_from_features_df(
     :func:`dsir_feature_frame_df` (same salt as training): broadcast
     weight join + one doc_id aggregation the frame's partitioning already
     satisfies."""
-    B = int(num_buckets)
-    if B <= 0:
-        raise ValueError(f"num_buckets must be positive, got {num_buckets}")
-    bias_micro = round(float(bias) * 1_000_000)
-    wm = _assert_unique_buckets(
-        weights.select(
-            F.col("bucket").cast("long").alias("bucket"),
-            F.expr("CAST(ROUND(weight * 1000000) AS BIGINT)").alias("w_micro"),
-        ),
-        "w_micro",
+    _check_args(num_buckets=num_buckets)
+    return _logit_prob_df(
+        _explode_bucketed(frame, int(num_buckets)),
+        weights,
+        bias,
         "classifier_score_from_features_df",
     )
-    agg = (
-        _explode_bucketed(frame, B)
-        .join(F.broadcast(wm), "bucket", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_feats"),
-            F.sum(F.coalesce("w_micro", F.lit(0))).alias("s"),
-        )
-    )
-    return _logit_prob_df(agg, bias_micro)
 
 
 def _dsir_lrm_sql(a: float, aB: float, tc: str = "tc", rc: str = "rc") -> str:
@@ -1485,6 +1463,39 @@ def _dsir_lrm_sql(a: float, aB: float, tc: str = "tc", rc: str = "rc") -> str:
         f"CAST(ROUND(LN((({tc} + {a!r}D) / (tt + {aB!r}D))"
         f" / (({rc} + {a!r}D) / (rt + {aB!r}D))) * 1000000) AS BIGINT)"
     )
+
+
+def _dsir_fit(tagged: DataFrame, rc, B: int, add_k: float) -> DataFrame:
+    """The DSIR model-fit tail: ONE map-side-combined ``groupBy(bucket)``
+    over a ``(bucket, is_tgt)`` stream gives ``tc`` (target occurrences)
+    and ``rc`` (the caller's raw-count aggregate), the totals ride along
+    as unpartitioned window sums over the ``<= B``-row aggregate, and
+    ``lrm`` is each bucket's micro-nat log-ratio."""
+    from pyspark.sql import Window
+
+    a = float(add_k)
+    everything = Window.partitionBy()  # <= B rows: single-partition sums
+    return (
+        tagged.groupBy("bucket")
+        .agg(F.sum("is_tgt").cast("long").alias("tc"), rc.cast("long").alias("rc"))
+        .withColumn("tt", F.sum("tc").over(everything))
+        .withColumn("rt", F.sum("rc").over(everything))
+        .selectExpr(
+            "bucket", "tc", "rc", "tt", "rt",
+            f"{_dsir_lrm_sql(a, a * B)} AS lrm",
+        )
+    )
+
+
+def _dsir_fit_union(
+    target: DataFrame, raw: DataFrame, B: int, add_k: float
+) -> DataFrame:
+    """:func:`_dsir_fit` over the tagged union of a target and a raw
+    ``(.., bucket)`` stream, the raw side counted as ``1 - is_tgt``."""
+    tagged = target.select("bucket", F.lit(1).alias("is_tgt")).unionAll(
+        raw.select("bucket", F.lit(0).alias("is_tgt"))
+    )
+    return _dsir_fit(tagged, F.sum(F.lit(1) - F.col("is_tgt")), B, add_k)
 
 
 def dsir_model_df(
@@ -1508,32 +1519,10 @@ def dsir_model_df(
     ``<= B``-row aggregate (separate ``agg(sum)`` branches would re-plan
     and re-scan the whole feature subtree: column pruning differentiates
     the branches and defeats ReusedExchange — the dd_spans lesson)."""
+    _check_args(num_buckets=num_buckets, add_k=add_k)
     B = int(num_buckets)
-    a = float(add_k)
-    if B <= 0:
-        raise ValueError(f"num_buckets must be positive, got {num_buckets}")
-    if a <= 0:
-        raise ValueError(f"add_k must be > 0, got {add_k}")
-    from pyspark.sql import Window
-
-    tagged = _dsir_bucketed(target_docs, B, salt).select(
-        "bucket", F.lit(1).alias("is_tgt")
-    ).unionAll(
-        _dsir_bucketed(docs, B, salt).select("bucket", F.lit(0).alias("is_tgt"))
-    )
-    everything = Window.partitionBy()  # <= B rows: single-partition sums
-    return (
-        tagged.groupBy("bucket")
-        .agg(
-            F.sum("is_tgt").cast("long").alias("tc"),
-            F.sum(F.lit(1) - F.col("is_tgt")).cast("long").alias("rc"),
-        )
-        .withColumn("tt", F.sum("tc").over(everything))
-        .withColumn("rt", F.sum("rc").over(everything))
-        .selectExpr(
-            "bucket", "tc", "rc", "tt", "rt",
-            f"{_dsir_lrm_sql(a, a * B)} AS lrm",
-        )
+    return _dsir_fit_union(
+        _dsir_bucketed(target_docs, B, salt), _dsir_bucketed(docs, B, salt), B, add_k
     )
 
 
@@ -1558,12 +1547,9 @@ def dsir_score_local_df(
     streamed arrivals with novel vocabulary) score the smoothing-prior
     log-ratio ``ln((a/(tt+aB)) / (a/(rt+aB)))`` — exactly what the join
     formulation would produce had the bucket carried zero counts."""
+    _check_args(num_buckets=num_buckets, add_k=add_k)
     B = int(num_buckets)
     a = float(add_k)
-    if B <= 0:
-        raise ValueError(f"num_buckets must be positive, got {num_buckets}")
-    if a <= 0:
-        raise ValueError(f"add_k must be > 0, got {add_k}")
     spark = model.sparkSession
     from .dedup import normalized_text
 
@@ -1629,12 +1615,14 @@ def dsir_sample_df(
 
     Plan: the global top-k compiles to TakeOrderedAndProject — per-partition
     heaps + a driver merge of k rows, never a full sort shuffle."""
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-    w = dsir_logweights_df(
-        docs, target_docs, num_buckets=num_buckets, add_k=add_k, salt=salt
+    return _gumbel_topk(
+        k,
+        salt,
+        gumbel,
+        lambda: dsir_logweights_df(
+            docs, target_docs, num_buckets=num_buckets, add_k=add_k, salt=salt
+        ),
     )
-    return _gumbel_topk(w, k, salt, gumbel)
 
 
 def classifier_score_df(
@@ -1671,32 +1659,13 @@ def classifier_score_df(
     Plan: broadcast weight join + ONE compact doc_id exchange (the
     :func:`dsir_logweights_df` shape minus the model-fit branch).
     """
-    B = int(num_buckets)
-    if B <= 0:
-        raise ValueError(f"num_buckets must be positive, got {num_buckets}")
-    from .dedup import _md5_hash_col
-
-    bias_micro = round(float(bias) * 1_000_000)
-    wm = _assert_unique_buckets(
-        weights.select(
-            F.col("bucket").cast("long").alias("bucket"),
-            F.expr("CAST(ROUND(weight * 1000000) AS BIGINT)").alias("w_micro"),
-        ),
-        "w_micro",
+    _check_args(num_buckets=num_buckets)
+    return _logit_prob_df(
+        _dsir_bucketed(docs, int(num_buckets), salt, by_doc=True),
+        weights,
+        bias,
         "classifier_score_df",
     )
-    feats = _dsir_features(docs, by_doc=True).select(
-        "doc_id", (_md5_hash_col(F.col("feat"), salt) % F.lit(B)).alias("bucket")
-    )
-    agg = (
-        feats.join(F.broadcast(wm), "bucket", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_feats"),
-            F.sum(F.coalesce("w_micro", F.lit(0))).alias("s"),
-        )
-    )
-    return _logit_prob_df(agg, bias_micro)
 
 
 def _sigmoid_round6_decimal(x: float) -> float:
@@ -1783,18 +1752,8 @@ def classifier_score_local_df(
     """
     import numpy as np
 
-    B = int(num_buckets)
-    if B <= 0:
-        raise ValueError(f"num_buckets must be positive, got {num_buckets}")
-    bias_micro = round(float(bias) * 1_000_000)
-    wm = _assert_unique_buckets(
-        weights.select(
-            F.col("bucket").cast("long").alias("bucket"),
-            F.expr("CAST(ROUND(weight * 1000000) AS BIGINT)").alias("w_micro"),
-        ),
-        "w_micro",
-        "classifier_score_local_df",
-    )
+    _check_args(num_buckets=num_buckets)
+    wm, bias_micro = _snap_weights(weights, bias, "classifier_score_local_df")
 
     def finish(n, s):
         # signed round-half-away mean + bias, exact integer arithmetic
@@ -1805,7 +1764,7 @@ def classifier_score_local_df(
 
     return _feature_sum_arrow_df(
         docs.filter(F.col("text").isNotNull()),
-        _dense_weights(wm, "w_micro", B),
+        _dense_weights(wm, "w_micro", int(num_buckets)),
         salt,
         "n_feats bigint, logit_micro bigint, prob double",
         finish,
@@ -1852,9 +1811,8 @@ def classifier_train_df(
     deterministic given fixed weights.  NULL-label, NULL-text, and
     zero-token rows are excluded.
     """
+    _check_args(num_buckets=num_buckets)
     B = int(num_buckets)
-    if B <= 0:
-        raise ValueError(f"num_buckets must be positive, got {num_buckets}")
     if steps < 1:
         raise ValueError(f"steps must be >= 1, got {steps}")
     weights_df, bias, _ = _classifier_train_impl(
@@ -1886,9 +1844,8 @@ def classifier_train_early_stop_df(
     snapshot, not the last — the standard guard against overfitting past
     the dev minimum.  Same determinism caveat as the base trainer (float
     gradient order); the dev trace is what tests pin instead."""
+    _check_args(num_buckets=num_buckets)
     B = int(num_buckets)
-    if B <= 0:
-        raise ValueError(f"num_buckets must be positive, got {num_buckets}")
     if max_steps < 1:
         raise ValueError(f"max_steps must be >= 1, got {max_steps}")
     if patience < 1:

@@ -596,7 +596,7 @@ def token_entropy_df(docs: DataFrame) -> DataFrame:
     report); NULL text likewise.
 
     Plan shape at 100 TB: document length row-locally (``size``, no
-    counting aggregation), then the ``repetition_df`` recipe — compact
+    counting aggregation), then the compact-document recipe — compact
     docs repartition by ``doc_id`` ONCE, and both groupBys
     (``(doc_id, token)`` then ``doc_id``) are satisfied by that
     partitioning under the subset-of-keys rule: one exchange total,
@@ -681,31 +681,16 @@ def _round_half_up_micro(x: "np.ndarray") -> "np.ndarray":
     return fast.astype(np.int64)
 
 
-def _round_half_up_6_vec(x: "np.ndarray") -> "np.ndarray":
-    """Vectorized Spark ``ROUND(double, 6)``: scale by 1e6, HALF_UP the
-    integer part, divide back — exact except where the SCALED double
-    sits near a ``.5`` boundary (double scaling error or the shortest-
-    decimal-repr semantics could disagree there); those rare elements
-    take :func:`_round_half_up_6` (decimal over ``repr``, the exact
-    form).  The final ``m / 1e6`` division is correctly rounded to the
-    same double the decimal quantize converts to, so fast and exact
-    paths agree bit-for-bit wherever both are valid.  Band is
-    magnitude-aware like :func:`_round_half_up_micro`'s."""
-    scaled = x * 1e6
-    fast = np.where(scaled >= 0, np.floor(scaled + 0.5), np.ceil(scaled - 0.5))
-    out = fast / 1e6
-    a = np.abs(scaled)
-    near = np.abs((a % 1.0) - 0.5) < np.maximum(1e-6, 8.0 * np.spacing(a))
-    if near.any():
-        for j in np.nonzero(near)[0]:
-            out[j] = _round_half_up_6(float(x[j]))
-    return out
-
-
 def _round_half_up_r_vec(x: "np.ndarray", r: int) -> "np.ndarray":
     """Vectorized Spark ``ROUND(double, r)`` for any non-negative scale
-    ``r`` — :func:`_round_half_up_6_vec` generalized (same fast path, same
-    magnitude-aware tie band, same decimal-over-repr exact fallback)."""
+    ``r``: scale by ``10**r``, HALF_UP the integer part, divide back —
+    exact except where the SCALED double sits near a ``.5`` boundary
+    (double scaling error or the shortest-decimal-repr semantics could
+    disagree there); those rare elements take :func:`_round_half_up_r`
+    (decimal over ``repr``, the exact form).  The final division is
+    correctly rounded to the same double the decimal quantize converts
+    to, so fast and exact paths agree bit-for-bit wherever both are
+    valid.  Band is magnitude-aware like :func:`_round_half_up_micro`'s."""
     scale = 10.0 ** r
     scaled = x * scale
     fast = np.where(scaled >= 0, np.floor(scaled + 0.5), np.ceil(scaled - 0.5))
@@ -719,25 +704,13 @@ def _round_half_up_r_vec(x: "np.ndarray", r: int) -> "np.ndarray":
 
 
 def _round_half_up_r(v: float, r: int) -> float:
-    """Spark's ``ROUND(double, r)`` for one value — exact, via the same
-    shortest-repr HALF_UP semantics as :func:`_round_half_up_6`."""
+    """Spark's ``ROUND(double, r)`` for one value — exact, via HALF_UP
+    over the shortest decimal repr (O(docs) calls, never O(tokens))."""
     from decimal import ROUND_HALF_UP, Decimal
 
     return float(
         Decimal(repr(float(v))).quantize(
             Decimal(1).scaleb(-int(r)), rounding=ROUND_HALF_UP
-        )
-    )
-
-
-def _round_half_up_6(v: float) -> float:
-    """Spark's ``ROUND(double, 6)`` for one value — exact, via the same
-    shortest-repr HALF_UP semantics (O(docs) calls, never O(tokens))."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(
-        Decimal(repr(float(v))).quantize(
-            Decimal("0.000001"), rounding=ROUND_HALF_UP
         )
     )
 
@@ -827,7 +800,7 @@ def _token_entropy_arrow_df(docs: DataFrame) -> DataFrame:
                 n_tok.append(n)
                 n_typ.append(len(cnt))
                 hms.append(hm)
-                hs.append(_round_half_up_6(hm / 1e6))
+                hs.append(_round_half_up_r(hm / 1e6, 6))
             if not ids:
                 continue  # empty Arrow batches type columns wrong — skip
             yield pd.DataFrame(
@@ -1576,13 +1549,11 @@ def _repetition_arrow_df(
     line_sep: str,
     round_to: int,
 ) -> DataFrame:
-    """The zero-shuffle Arrow kernel behind ``repetition_df(
-    strategy='arrow')``: every metric is a function of ONE document's own
-    text, so the whole computation is row-local — the exchange form's
-    repartition + explode + three aggregations exist only to give the
-    per-(doc, n, gram) counting a relational shape.  The kernel counts
-    grams per document in a dict and reproduces the JVM arithmetic
-    exactly (differential-tested bit-identical):
+    """The zero-shuffle Arrow kernel behind :func:`repetition_df`: every
+    metric is a function of ONE document's own text, so the whole
+    computation is row-local.  The kernel counts grams per document in a
+    dict and reproduces Spark's string and ``ROUND`` semantics exactly
+    (tested bit-identical against a plain-Python reference):
 
     - tokens: ``nt.split(' ')`` over the plan-computed normalized text —
       Spark ``split(nt, ' ')`` with its keep-trailing-empties limit=-1
@@ -1590,16 +1561,16 @@ def _repetition_arrow_df(
     - lines: literal ``line_sep`` split of the RAW text, ``trim`` =
       space-only strip (Spark/SQL trim semantics, NOT Python ``.strip()``),
       empties dropped;
-    - the top gram per n is ``max(struct(cnt, glen, gram))`` — cnt first,
-      then gram length; the gram string tie-break cannot affect the
-      output (equal (cnt, glen) ties produce the same ``cnt * glen``);
+    - the top gram per n is the max of ``(cnt, glen)`` — cnt first, then
+      gram length; a gram string tie-break could not affect the output
+      (equal (cnt, glen) ties produce the same ``cnt * glen``);
     - fractions: IEEE ``num / max(den, 1)`` on exact integer-valued
       doubles, then Spark's ``ROUND(double, r)`` (HALF_UP over the
       shortest decimal repr) via the shared vectorized emulation.
 
     Plan shape at 100 TB: ZERO shuffles — one corpus scan feeding a
-    stateless ``mapInPandas`` (the gram rows never exist as exchange
-    payload; the exchange form shuffles the full document text once).
+    stateless ``mapInPandas``; the gram rows never exist as exchange
+    payload.
     """
     import pandas as pd
 
@@ -1696,7 +1667,6 @@ def repetition_df(
     dup_ns: tuple = (5,),
     line_sep: str = "\n",
     round_to: int = 6,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Gopher-style repetition metrics (Rae et al. 2021, table A1's
     repetition filters, as adopted by C4/Dolma-family pipelines): per
@@ -1722,151 +1692,17 @@ def repetition_df(
     behave).  All fractions round to ``round_to``; docs shorter than n
     tokens score 0 for that n.
 
-    Plan shape at 100 TB: ONE scan, ONE shuffle.  The corpus is
-    repartitioned by doc_id while rows are still compact documents (the
-    explode-first alternative would shuffle O(tokens x |ns|) gram rows
-    instead of the documents themselves); the gram explode and all three
-    downstream aggregations (keyed (doc_id, n, gram), then (doc_id, n),
-    then doc_id — every key set contains doc_id, so hash-partitioning by
-    doc_id satisfies each) run inside that single exchange.  The row-local
-    line metrics ride THROUGH the aggregation chain as first() carries —
-    joining them back instead would either re-scan the corpus (broadcast
-    join: two scan branches) or add a second full exchange (sort-merge) —
-    and a sentinel n=0 gram row keeps zero-gram documents (fewer tokens
-    than every n) in the output.  Line metrics are pure array expressions
-    with the line array bound as a lambda variable (the CollapseProject
-    re-evaluation trap — see :func:`~.dedup.simhash_df`'s 'local' fold
-    comment).
-
-    ``strategy``: every metric is a function of one document's own text,
-    so ``'arrow'`` (auto's pick, the ``repetition`` row of
-    ``backend.ROUTES``) computes the whole thing row-locally in a
-    ``mapInPandas`` kernel with ZERO shuffles (bit-identical to the
-    exchange form, differential-tested; measured 2.5 s -> ~0.6 s at
-    sf0.1, and at scale the gram rows never
-    exist as exchange payload).  ``'exchange'`` keeps the pure-JVM
-    single-exchange aggregation above — the no-Python-workers fallback
-    and the differential pinning twin.
+    Every metric is a function of one document's own text, so the whole
+    computation runs row-locally in the :func:`_repetition_arrow_df`
+    ``mapInPandas`` kernel: one corpus scan, ZERO shuffles, batch and
+    streaming alike.
     """
-    import re as _re
-
-    form = choose_form("repetition", strategy, docs)
     top_ns = tuple(int(n) for n in top_ns)
     dup_ns = tuple(int(n) for n in dup_ns)
     all_ns = sorted(set(top_ns) | set(dup_ns))
     if not all_ns or min(all_ns) < 1:
         raise ValueError(f"n-gram sizes must be >= 1, got {top_ns} + {dup_ns}")
-    if form == "arrow":
-        return _repetition_arrow_df(docs, top_ns, dup_ns, line_sep, round_to)
-    norm = normalized_text()
-    sep_rx = _re.escape(line_sep).replace("\\", "\\\\").replace("'", "\\'")
-
-    # line metrics, row-local; `ls` is a lambda variable so the split/trim/
-    # filter chain materializes once per row, not once per distinct line
-    lm = (
-        f"transform(array(filter(transform(split(text, '{sep_rx}'),"
-        f" x -> trim(x)), x -> x != '')),"
-        f" ls -> named_struct("
-        f"   'n', size(ls),"
-        f"   'nd', size(array_distinct(ls)),"
-        f"   'tot', aggregate(ls, CAST(0 AS BIGINT), (a, x) -> a + length(x)),"
-        f"   'dup', aggregate(array_distinct(ls), CAST(0 AS BIGINT),"
-        f"     (a, x) -> a + (size(filter(ls, l -> l = x)) - 1) * length(x))"
-        f" ))[0]"
-    )
-    base = (
-        docs.filter(F.col("text").isNotNull())
-        .select(
-            "doc_id",
-            "text",
-            norm.alias("nt"),
-            F.split(norm, " ").alias("toks"),
-        )
-        .repartition("doc_id")
-        .selectExpr(
-            "doc_id",
-            "toks",
-            "CAST(length(nt) AS BIGINT) AS n_chars",
-            f"{lm} AS lm",
-        )
-    )
-
-    # one tagged explode for every n, plus a sentinel (n=0) row so docs
-    # with no complete gram for ANY n still reach the final aggregation
-    per_n = ", ".join(
-        ["array(named_struct('n', 0, 'gram', ''))"]
-        + [
-            f"if(size(toks) >= {n},"
-            f" transform(sequence(1, size(toks) - {n - 1}),"
-            f"   i -> named_struct('n', {n}, 'gram', concat_ws(' ', slice(toks, i, {n})))),"
-            f" array())"
-            for n in all_ns
-        ]
-    )
-    grams = base.selectExpr(
-        "doc_id", "n_chars", "lm", f"explode(flatten(array({per_n}))) AS g"
-    ).selectExpr("doc_id", "n_chars", "lm", "g.n AS n", "g.gram AS gram")
-
-    counts = grams.groupBy("doc_id", "n", "gram").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.first("n_chars").alias("n_chars"),
-        F.first("lm").alias("lm"),
-    )
-    per_doc_n = counts.groupBy("doc_id", "n").agg(
-        F.max(
-            F.struct(
-                F.col("cnt"),
-                F.length("gram").cast("long").alias("glen"),
-                F.col("gram"),
-            )
-        ).alias("top"),
-        F.sum((F.col("cnt") - 1) * F.length("gram")).alias("dup_chars"),
-        F.first("n_chars").alias("n_chars"),
-        F.first("lm").alias("lm"),
-    )
-    wide = per_doc_n.groupBy("doc_id").agg(
-        *[
-            F.max(
-                F.when(F.col("n") == n, F.col("top.cnt") * F.col("top.glen"))
-            ).alias(f"top{n}_num")
-            for n in top_ns
-        ],
-        *[
-            F.max(F.when(F.col("n") == n, F.col("dup_chars"))).alias(
-                f"dup{n}_chars"
-            )
-            for n in dup_ns
-        ],
-        F.first("n_chars").alias("n_chars"),
-        F.first("lm").alias("lm"),
-    )
-
-    def frac(num, den):
-        return F.round(
-            F.coalesce(num, F.lit(0)).cast("double")
-            / F.greatest(den, F.lit(1)).cast("double"),
-            round_to,
-        )
-
-    return wide.select(
-        "doc_id",
-        "n_chars",
-        F.col("lm.n").cast("long").alias("n_lines"),
-        frac(F.col("lm.n") - F.col("lm.nd"), F.col("lm.n")).alias("dup_line_frac"),
-        frac(F.col("lm.dup"), F.col("lm.tot")).alias("dup_line_char_frac"),
-        *[
-            frac(F.col(f"top{n}_num"), F.col("n_chars")).alias(
-                f"top{n}gram_char_frac"
-            )
-            for n in top_ns
-        ],
-        *[
-            frac(F.col(f"dup{n}_chars"), F.col("n_chars")).alias(
-                f"dup{n}gram_char_frac"
-            )
-            for n in dup_ns
-        ],
-    )
+    return _repetition_arrow_df(docs, top_ns, dup_ns, line_sep, round_to)
 
 
 # PII surface patterns — deliberately restricted to syntax BOTH regex
@@ -2179,7 +2015,7 @@ def remove_boilerplate_lines_df(
       fully-stripped documents — which lets line totals ride through as
       ``first()`` carries instead of a third scan branch + join (the
       naive totals-join form plans the corpus subtree three times; the
-      repetition_df sentinel lesson).  NULL-keyed sentinel rows pass the
+      sentinel-row lesson).  NULL-keyed sentinel rows pass the
       anti-join by definition (NULL matches nothing) and vanish in
       ``array_compact`` before the join of lines.
     """
@@ -2511,7 +2347,7 @@ def hashed_embedding_local_df(docs: DataFrame, dim: int = 32) -> DataFrame:
     repeat zipf-style, so most lookups never hash), per-bit vote sums as
     ``dim`` segmented ``add.reduceat`` passes over the batch-concatenated
     hash array, and ``ROUND(v / norm, 6)`` through the vectorized HALF_UP
-    emulation (:func:`_round_half_up_6_vec`).  ``sqrt`` and division are
+    emulation (:func:`_round_half_up_r_vec`).  ``sqrt`` and division are
     IEEE-correctly-rounded in both runtimes, so no log/exp-style
     cross-runtime band is needed — the twin is bit-identical by
     construction.  Zero interpreted JVM expressions: nothing left to go
@@ -2577,7 +2413,7 @@ def _hashed_embedding_arrow_df(docs: DataFrame, d: int) -> DataFrame:
             with np.errstate(invalid="ignore", divide="ignore"):
                 comps = votes.astype(np.float64) / nrm
             comps[:, sq == 0] = 0.0
-            emb = _round_half_up_6_vec(np.ascontiguousarray(comps.T).reshape(-1))
+            emb = _round_half_up_r_vec(np.ascontiguousarray(comps.T).reshape(-1), 6)
             emb = emb.reshape(len(ids), d)
             yield pd.DataFrame({"doc_id": ids, "embedding": list(emb)})
 

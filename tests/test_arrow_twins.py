@@ -9,7 +9,7 @@ import pytest
 
 
 def test_round_half_up_6_vec_matches_decimal():
-    from imops_spark.functions.text import _round_half_up_6, _round_half_up_6_vec
+    from imops_spark.functions.text import _round_half_up_r, _round_half_up_r_vec
 
     rng = np.random.default_rng(19)
     x = np.concatenate([
@@ -17,8 +17,8 @@ def test_round_half_up_6_vec_matches_decimal():
         np.array([0.0, 1.0, -1.0, 0.1234565, -0.1234565, 0.9999995,
                   -0.9999995, 0.49999999999999994, 2.5e-7, -2.5e-7]),
     ])
-    got = _round_half_up_6_vec(x)
-    want = np.array([_round_half_up_6(float(v)) for v in x])
+    got = _round_half_up_r_vec(x, 6)
+    want = np.array([_round_half_up_r(float(v), 6) for v in x])
     assert got.tolist() == want.tolist()
 
 

@@ -261,8 +261,6 @@ def _ops():
         ("ngram_lm", "batch", None, lambda i, h: text.ngram_lm_df(i["doc"]), ["arrow"]),
         ("ngram_lm", "batch", None, lambda i, h: text.ngram_lm_df(i["memory"]), ["agg"]),
         ("ngram_lm", "stream", None, resolve("ngram_lm"), ["agg"]),
-        ("repetition", "batch", None, lambda i, h: text.repetition_df(i["doc"]), ["arrow"]),
-        ("repetition", "stream", None, lambda i, h: text.repetition_df(i["doc"]), ["arrow"]),
     ]
 
 
@@ -330,7 +328,7 @@ def test_routing_errors_and_explicit_forms(spark, route_inputs, caplog):
         choose_form("winnow", "window", stream, hash_fn="md5")
     caplog.set_level(logging.DEBUG, logger="imops_spark.backend")
     assert choose_form("winnow", "window", doc, hash_fn="md5") == "window"
-    assert choose_form("repetition", "exchange", stream) == "exchange"
+    assert choose_form("simhash", "local", stream) == "local"
     assert not [r for r in caplog.records if r.name == "imops_spark.backend"]
 
 

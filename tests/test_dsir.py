@@ -139,14 +139,41 @@ def test_sample_topk_and_gumbel(spark):
 
 
 def test_validation_and_plan(spark):
+    from imops_spark.functions import curate as c
+
     docs = _corpus(spark, with_empty=False)
     tgt = _target(spark)
-    with pytest.raises(ValueError, match="num_buckets"):
-        dsir_logweights_df(docs, tgt, num_buckets=0)
-    with pytest.raises(ValueError, match="add_k"):
-        dsir_logweights_df(docs, tgt, add_k=0.0)
-    with pytest.raises(ValueError, match="k must be positive"):
-        dsir_sample_df(docs, tgt, k=0)
+    frame = c.dsir_feature_frame_df(docs)
+    ex = c.dsir_exploded_features_df(frame, num_buckets=64)
+    model = c.dsir_model_df(docs, tgt, num_buckets=64)
+    w = spark.createDataFrame([(1, 0.5)], "bucket long, weight double")
+    nb = r"^num_buckets must be positive, got 0$"
+    ak = r"^add_k must be > 0, got 0\.0$"
+    kp = r"^k must be positive, got 0$"
+    # every validating entry point, with each check it makes
+    cases = [
+        (nb, lambda: dsir_logweights_df(docs, tgt, num_buckets=0)),
+        (ak, lambda: dsir_logweights_df(docs, tgt, add_k=0.0)),
+        (kp, lambda: dsir_sample_df(docs, tgt, k=0)),
+        (nb, lambda: c.dsir_model_df(docs, tgt, num_buckets=0)),
+        (ak, lambda: c.dsir_model_df(docs, tgt, add_k=0.0)),
+        (nb, lambda: c.dsir_score_local_df(docs, model, num_buckets=0)),
+        (ak, lambda: c.dsir_score_local_df(docs, model, add_k=0.0)),
+        (nb, lambda: c.dsir_model_from_features_df(frame, frame, num_buckets=0)),
+        (ak, lambda: c.dsir_model_from_features_df(frame, frame, add_k=0.0)),
+        (kp, lambda: c.dsir_sample_from_features_df(frame, frame, k=0)),
+        (nb, lambda: c.dsir_exploded_features_df(frame, num_buckets=0)),
+        (ak, lambda: c.dsir_model_from_exploded_df(ex, add_k=0.0)),
+        (kp, lambda: c.dsir_sample_from_exploded_df(ex, k=0)),
+        (nb, lambda: c.classifier_score_df(docs, w, num_buckets=0)),
+        (nb, lambda: c.classifier_score_from_features_df(frame, w, num_buckets=0)),
+        (nb, lambda: c.classifier_score_local_df(docs, w, num_buckets=0)),
+        (nb, lambda: c.classifier_train_df(docs, num_buckets=0)),
+        (nb, lambda: c.classifier_train_early_stop_df(docs, docs, num_buckets=0)),
+    ]
+    for msg, call in cases:
+        with pytest.raises(ValueError, match=msg):
+            call()
 
     with pytest.raises(ValueError, match="strategy"):
         dsir_logweights_df(docs, tgt, strategy="bogus")
@@ -521,21 +548,28 @@ def test_dsir_local_is_streaming_legal(spark, tmp_path):
 
 
 def test_classifier_duplicate_bucket_rows_raise(spark):
-    """A weight table with duplicate bucket rows must fail LOUDLY in both
-    scorers — silently, the dense twin would shift every later weight by a
-    slot while the join twin double-counts (wrong AND different)."""
+    """A weight table with duplicate bucket rows must fail LOUDLY in every
+    scorer — silently, the dense twin would shift every later weight by a
+    slot while the join twins double-count (wrong AND different)."""
     from imops_spark.functions.curate import (
         classifier_score_df,
+        classifier_score_from_features_df,
         classifier_score_local_df,
+        dsir_feature_frame_df,
     )
 
     docs = _corpus(spark, with_empty=False)
     dup = spark.createDataFrame(
         [(5, 0.1), (5, 0.2), (6, 0.3)], "bucket long, weight double"
     )
-    for fn in (classifier_score_df, classifier_score_local_df):
-        with pytest.raises(Exception, match="duplicate bucket rows"):
-            fn(docs, dup, num_buckets=64).collect()
+    frame = dsir_feature_frame_df(docs)
+    for fn, src in (
+        (classifier_score_df, docs),
+        (classifier_score_local_df, docs),
+        (classifier_score_from_features_df, frame),
+    ):
+        with pytest.raises(Exception, match=f"{fn.__name__}: duplicate bucket rows"):
+            fn(src, dup, num_buckets=64).collect()
 
 
 def test_snapshot_diff_stream_matches_batch_minus_removed(spark, tmp_path):

@@ -4,6 +4,7 @@ the same rows, plus plan-shape and edge-case guards."""
 
 import re
 from collections import Counter
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -28,14 +29,25 @@ ROWS = [
 
 
 def _norm(t):
-    return re.sub(r"\s+", " ", t.strip().lower())
+    # Spark's regexp_replace(lower(trim(t)), '\s+', ' '): trim strips spaces
+    # only, and Java's \s is the ASCII whitespace class
+    return re.sub(r"[ \t\n\x0b\f\r]+", " ", t.strip(" ").lower())
 
 
-def _expected(text, top_ns, dup_ns):
+def _spark_round(x, r):
+    """Spark ``ROUND(double, r)``: HALF_UP over the shortest decimal repr."""
+    return float(
+        Decimal(repr(float(x))).quantize(Decimal(1).scaleb(-r), rounding=ROUND_HALF_UP)
+    )
+
+
+def _expected(text, top_ns, dup_ns, round_to=6):
+    """The metrics in Spark semantics: space-only trim, codepoint lengths
+    (Python ``len`` of ``str``), ``ROUND`` HALF_UP at ``round_to``."""
     nt = _norm(text)
     toks = nt.split(" ")
     n_chars = len(nt)
-    lines = [ln.strip() for ln in text.split("\n")]
+    lines = [ln.strip(" ") for ln in text.split("\n")]
     lines = [ln for ln in lines if ln != ""]
     nl, nd = len(lines), len(set(lines))
     cnt = Counter(lines)
@@ -44,8 +56,8 @@ def _expected(text, top_ns, dup_ns):
     out = {
         "n_chars": n_chars,
         "n_lines": nl,
-        "dup_line_frac": round((nl - nd) / max(nl, 1), 6),
-        "dup_line_char_frac": round(dup / max(tot, 1), 6),
+        "dup_line_frac": _spark_round((nl - nd) / max(nl, 1), round_to),
+        "dup_line_char_frac": _spark_round(dup / max(tot, 1), round_to),
     }
     for n in top_ns:
         grams = Counter(
@@ -54,7 +66,9 @@ def _expected(text, top_ns, dup_ns):
         if grams:
             # max over (count, char length, gram) — the operator's tie-break
             c, glen, _ = max((c, len(g), g) for g, c in grams.items())
-            out[f"top{n}gram_char_frac"] = round(c * glen / max(n_chars, 1), 6)
+            out[f"top{n}gram_char_frac"] = _spark_round(
+                c * glen / max(n_chars, 1), round_to
+            )
         else:
             out[f"top{n}gram_char_frac"] = 0.0
     for n in dup_ns:
@@ -62,7 +76,7 @@ def _expected(text, top_ns, dup_ns):
             " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
         )
         d = sum((c - 1) * len(g) for g, c in grams.items() if c > 1)
-        out[f"dup{n}gram_char_frac"] = round(d / max(n_chars, 1), 6)
+        out[f"dup{n}gram_char_frac"] = _spark_round(d / max(n_chars, 1), round_to)
     return out
 
 
@@ -84,10 +98,10 @@ def test_repetition_matches_python_rederivation(spark):
 
 
 def test_repetition_arrow_matches_exchange_bitwise(spark):
-    """The round-11 zero-shuffle Arrow kernel must be BIT-identical to the
-    pure-JVM exchange form — including multibyte text (codepoint lengths),
-    whitespace-edge lines (space-only trim), empty docs, and a non-default
-    round_to."""
+    """The zero-shuffle Arrow kernel must be BIT-identical to the
+    Spark-semantics reference :func:`_expected` — including multibyte text
+    (codepoint lengths), whitespace-edge lines (space-only trim), empty
+    docs, and a non-default round_to."""
     rows = ROWS + [
         (10, "東京 東京 東京 tail"),  # CJK tokens
         (11, "café café\nCAFÉ  \n café"),
@@ -99,50 +113,21 @@ def test_repetition_arrow_matches_exchange_bitwise(spark):
         dict(top_ns=(2, 3), dup_ns=(2, 5)),
         dict(top_ns=(2,), dup_ns=(3,), round_to=4),
     ):
-        a = repetition_df(df, strategy="arrow", **kwargs).collect()
-        e = repetition_df(df, strategy="exchange", **kwargs).collect()
-        key = lambda r: r["doc_id"]
-        assert sorted(
-            [tuple(r) for r in a], key=lambda t: t[0]
-        ) == sorted([tuple(r) for r in e], key=lambda t: t[0])
+        got = {r["doc_id"]: r.asDict() for r in repetition_df(df, **kwargs).collect()}
+        want = {
+            i: {"doc_id": i, **_expected(t, **kwargs)}
+            for i, t in rows
+            if t is not None
+        }
+        assert got == want
 
 
 def test_repetition_arrow_zero_shuffle_plan(spark):
-    """auto routes to the Arrow kernel: zero exchanges, one MapInPandas."""
+    """The Arrow kernel's plan: zero exchanges, one MapInPandas."""
     df = spark.createDataFrame(ROWS[:3], "doc_id long, text string")
     plan = repetition_df(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "MapInPandas" in plan
-
-
-def test_repetition_rejects_bad_strategy(spark):
-    df = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
-    with pytest.raises(ValueError):
-        repetition_df(df, strategy="nope")
-
-
-def test_repetition_single_exchange_single_scan(spark, tmp_path):
-    """The documented plan contract of the pure-JVM form: compact-doc
-    repartition is the ONE exchange; explode and all three aggregations
-    reuse it; no join, one scan of the corpus."""
-    p = str(tmp_path / "docs")
-    spark.createDataFrame(
-        [(i, "w%d x y z w%d" % (i % 3, i % 3)) for i in range(50)],
-        "doc_id long, text string",
-    ).write.parquet(p)
-    out = repetition_df(spark.read.parquet(p), strategy="exchange")
-    out.collect()
-    # the AQE plan string repeats every node in its "== Initial Plan =="
-    # section — count only the executed final plan
-    plan = (
-        out._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-        .split("== Initial Plan ==")[0]
-    )
-    assert plan.count("Exchange") == 1
-    assert "Join" not in plan
-    assert plan.count("Scan parquet") == 1
 
 
 def test_repetition_rejects_bad_n(spark):

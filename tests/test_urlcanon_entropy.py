@@ -230,7 +230,7 @@ def test_token_entropy_local_twin_bit_identical(spark):
 
 
 def test_token_entropy_single_exchange(spark):
-    """The repetition_df recipe: ONE doc_id exchange feeds the explode and
+    """The compact-document recipe: ONE doc_id exchange feeds the explode and
     both aggregations (subset-of-keys rule) — a second hash exchange means
     the (doc_id, token) groupBy re-shuffled the exploded tokens."""
     from imops_spark.functions.text import token_entropy_df

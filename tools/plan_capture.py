@@ -7,10 +7,12 @@ Usage:
     python tools/plan_capture.py --tag r11 --suffix before [--queries=a,b,c]
     python tools/plan_capture.py --tag r11 --suffix before --time [--passes=3]
 
-The plan text is the optimization round's evidence artifact: the judge
-cannot run Spark, so every claimed plan change (Exchange count, join
-strategy, PushedFilters, BatchEvalPython removal) must be visible in the
-committed before/after files.
+The plan text is the optimization round's evidence artifact: a reader
+who cannot run Spark sees every claimed plan change (Exchange count, join
+strategy, PushedFilters, BatchEvalPython removal) in the committed
+before/after files.  Captured text is normalized (:func:`normalize`), so
+``diff`` of a before/after pair is empty exactly when the plan is
+unchanged.
 """
 
 from __future__ import annotations
@@ -19,7 +21,9 @@ import gc
 import io
 import json
 import os
+import re
 import sys
+import tempfile
 import time
 from contextlib import redirect_stdout
 
@@ -33,6 +37,40 @@ def explain_str(df) -> str:
     with redirect_stdout(buf):
         df.explain(mode="formatted")
     return buf.getvalue()
+
+
+# what differs between two sessions planning the same query
+_SESSION_IDS = [
+    (re.compile(r"#\d+L?"), "#N"),  # expression ids
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"@[0-9a-f]{6,}\b"), "@H"),  # object identity hashes
+    (re.compile(r"[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}"), "UUID"),
+]
+
+
+def normalize(text: str, spark) -> str:
+    """Strip the session-specific parts of a plan: expression, plan and RDD
+    ids, object hashes, run UUIDs, and every path under the session's
+    checkpoint, local and temp directories (whole path -> one placeholder).
+    The data directory prefix becomes ``$SF_DIR``."""
+    sc = spark.sparkContext
+    roots = {"$TMP": tempfile.gettempdir()}
+    local = sc.getConf().get("spark.local.dir") or os.environ.get("SPARK_LOCAL_DIRS")
+    for i, d in enumerate((local or "").split(",")):
+        if d:
+            roots[f"$LOCAL{i}"] = d
+    ckpt = sc.getCheckpointDir()
+    if ckpt:
+        roots["$CHECKPOINT"] = ckpt.removeprefix("file:")
+    # longest root first, so a directory nested in another keeps its name
+    for name, root in sorted(roots.items(), key=lambda kv: -len(kv[1])):
+        root = os.path.normpath(root)
+        text = re.sub(re.escape(root) + r"(?![^/\s,\]\)])[^\s,\]\)]*", name, text)
+    text = text.replace(os.path.normpath(SF_DIR), "$SF_DIR")
+    for pat, sub in _SESSION_IDS:
+        text = pat.sub(sub, text)
+    return text
 
 
 def main() -> None:
@@ -67,7 +105,7 @@ def main() -> None:
         fn = qs[name]
         spark.sparkContext.setJobDescription(f"plan_capture:{name}")
         df = fn(spark, SF_DIR)
-        text = explain_str(df)
+        text = normalize(explain_str(df), spark)
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
             f.write(text)
         if do_time:
