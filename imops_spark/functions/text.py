@@ -1283,8 +1283,8 @@ def ngram_lm_df(
     Output: ``(doc_id, n_bigrams, lp_micro_sum, xent, ppl)`` where ``xent``
     is in nats per bigram and ``ppl = exp(xent)``.  When ``strategy``
     resolves to ``'arrow'`` the call collects the bigram model EAGERLY,
-    at plan build: it runs the model jobs over the train side before it
-    returns.
+    at plan build: it runs one model query over the train side, collected
+    with one ``toPandas``, before it returns.
 
     Model: per document the token sequence is ``['<s>'] + tokens`` of the
     normalized text;  ``P(cur | prev) = (c2(prev,cur) + a) /
@@ -1321,7 +1321,7 @@ def ngram_lm_df(
     above; ``'arrow'`` — the round-12 scoring kernel
     (:func:`_lm_score_arrow_df`): the per-bigram micro-nat scores are
     precomputed ON THE MODEL TABLE by the SAME JVM ``LN`` expression
-    (vocab-bounded rows, never per occurrence), collected, and the
+    (vocab-bounded rows, never per occurrence), collected once, and the
     corpus is scored by a zero-shuffle ``mapInPandas`` doing pure
     integer dictionary lookups — no float is ever computed in Python,
     so ``arrow == agg`` bit-for-bit by construction; ``'auto'`` — the
@@ -1363,38 +1363,32 @@ def ngram_lm_df(
             .select("doc_id", "g.prev", "g.cur")
         )
 
-    # c2 is the MODEL table (one row per distinct train bigram — bounded
-    # by vocabulary^2, not corpus size) and feeds THREE consumers: c1, V,
-    # and the scoring join.  Without the (lazy) localCheckpoint each
-    # consumer re-plans the full train explode + count — the round-11
-    # plan audit showed the corpus gram Generate FOUR times in txt_lm's
-    # plan (train x3 + scoring).  Checkpointed, the explode runs once per
-    # side; lazy, so nothing executes at build time, and the blocks die
-    # with the DataFrame.
+    # c2 is the MODEL table: one row per distinct train bigram, bounded
+    # by vocabulary^2, not corpus size.
     big = _bigrams(docs)
     train_big = _bigrams(train_docs) if train_docs is not None else big
-    c2 = (
-        train_big.groupBy("prev", "cur")
-        .agg(F.count(F.lit(1)).alias("c2"))
-        .localCheckpoint(eager=False)
-    )
-    c1 = c2.groupBy("prev").agg(F.sum("c2").alias("c1"))
-    v = c2.agg(F.countDistinct("cur").alias("v"))
+    c2 = train_big.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("c2"))
     if form == "arrow":
-        per_doc = _lm_score_arrow_df(docs, c2, c1, v, a)
+        per_doc = _lm_score_arrow_df(docs, c2, a)
         if per_doc is not None:
             return _lm_tail(per_doc)
         # an empty model (no train tokens): the agg form below scores it
+    # The agg plan reads c2 THREE times: c1, V and the scoring join.
+    # Without the (lazy) localCheckpoint each consumer re-plans the full
+    # train explode + count (the round-11 plan audit showed the corpus
+    # gram Generate FOUR times in txt_lm's plan: train x3 + scoring).
+    # Checkpointed, the explode runs once per side; lazy, so nothing
+    # executes at build time, and the blocks die with the DataFrame.
+    c2 = c2.localCheckpoint(eager=False)
+    c1 = c2.groupBy("prev").agg(F.sum("c2").alias("c1"))
+    v = c2.agg(F.countDistinct("cur").alias("v"))
     scored = (
         big.join(c2, ["prev", "cur"], "left")
         .join(c1, ["prev"], "left")
         .crossJoin(F.broadcast(v))
         .select(
             "doc_id",
-            F.expr(
-                f"CAST(ROUND(LN((coalesce(c2, 0) + {a!r})"
-                f" / (coalesce(c1, 0) + {a!r} * v)) * 1000000) AS BIGINT)"
-            ).alias("lpm"),
+            F.expr(_lm_lpm_sql("coalesce(c2, 0)", "coalesce(c1, 0)", a)).alias("lpm"),
         )
     )
     per_doc = scored.groupBy("doc_id").agg(
@@ -1402,6 +1396,13 @@ def ngram_lm_df(
         F.sum("lpm").alias("lp_micro_sum"),
     )
     return _lm_tail(per_doc)
+
+
+def _lm_lpm_sql(c2: str, c1: str, a: float) -> str:
+    """SQL for :func:`ngram_lm_df`'s one log-prob, ``ln((c2 + a) / (c1 +
+    a*v))`` as BIGINT micro-nats, over operands ``c2``/``c1`` and a ``v``
+    column."""
+    return f"CAST(ROUND(LN(({c2} + {a!r}) / ({c1} + {a!r} * v)) * 1000000) AS BIGINT)"
 
 
 def _lm_tail(per_doc: DataFrame) -> DataFrame:
@@ -1422,20 +1423,20 @@ def _lm_tail(per_doc: DataFrame) -> DataFrame:
     )
 
 
-def _lm_score_arrow_df(docs: DataFrame, c2, c1, v, a: float) -> DataFrame | None:
+def _lm_score_arrow_df(docs: DataFrame, c2: DataFrame, a: float) -> DataFrame | None:
     """The Arrow scoring kernel behind ``ngram_lm_df(strategy='arrow')``:
     returns ``(doc_id, n_bigrams, lp_micro_sum)`` with ZERO scoring-side
-    shuffles, or None for an empty model (no train tokens, ``v = 0``),
-    which the caller scores with the agg form.
+    shuffles, or None for an empty model (no train tokens: zero model
+    rows), which the caller scores with the agg form.
 
     Exact parity with the agg form by construction — the kernel never
     computes a float:
 
     - the per-bigram micro-nat scores are precomputed on the MODEL
       table by the SAME JVM expression the agg form applies per
-      occurrence (``CAST(ROUND(LN((c2 + a) / (c1 + a*v)) * 1e6) AS
-      BIGINT)``), for all three backoff cases: seen bigram (``lpm2``),
-      seen context/unseen bigram (``lpm1`` — ``c2`` coalesces to 0, and
+      occurrence (:func:`_lm_lpm_sql`), for all three backoff cases as
+      columns of every model row: seen bigram (``lpm2``), seen
+      context/unseen bigram (``lpm1`` — ``c2`` coalesces to 0, and
       ``0 + a == a`` exactly in IEEE), unseen context (``lpm0``).  The
       model rows are vocab-bounded, so this costs one digest per
       DISTINCT bigram, never per occurrence;
@@ -1449,46 +1450,40 @@ def _lm_score_arrow_df(docs: DataFrame, c2, c1, v, a: float) -> DataFrame | None
       model (scores are ~1e7-scale negatives; an int64 sum cannot wrap
       below ~1e11 bigrams per document).
 
-    The model dictionaries are collected once at plan-build time (two
-    bounded jobs over the checkpointed ``c2``) and shipped via a Spark
-    broadcast — each Python worker unpickles them once and keeps them
-    across its tasks.  The removed work is the per-occurrence bigram
-    explode, two model joins, and the corpus-wide doc aggregation.
+    The model is one query over ``c2`` (``c1`` a window sum over ``prev``,
+    ``V`` a global sum of first-occurrence-of-``cur`` flags), collected
+    with one ``toPandas`` at plan build and shipped via a Spark broadcast:
+    each Python worker unpickles it once and keeps it across its tasks.
+    The removed work is the per-occurrence bigram explode, two model
+    joins, and the corpus-wide doc aggregation.
     """
     import pandas as pd
+    from pyspark.sql.window import Window
 
     from .dedup import _widen, normalized_text
 
-    lp2 = (
-        f"CAST(ROUND(LN((c2 + {a!r}) / (c1 + {a!r} * v))"
-        " * 1000000) AS BIGINT)"
-    )
-    lp1 = (
-        f"CAST(ROUND(LN((0 + {a!r}) / (c1 + {a!r} * v))"
-        " * 1000000) AS BIGINT)"
-    )
-    # nullif: an empty model (v = 0) reads as NULL instead of dividing by 0
-    lp0 = (
-        f"CAST(ROUND(LN((0 + {a!r}) / (0 + {a!r} * nullif(v, 0)))"
-        " * 1000000) AS BIGINT)"
-    )
-    lpm0 = v.selectExpr(f"{lp0} AS lpm0").collect()[0][0]
-    if lpm0 is None:
-        return None
+    first = F.row_number().over(Window.partitionBy("cur").orderBy("prev")) == 1
     m = (
-        c2.join(c1, ["prev"])
-        .crossJoin(F.broadcast(v))
-        .selectExpr("prev", "cur", f"{lp2} AS lpm2", f"{lp1} AS lpm1")
+        c2.select(
+            "*",
+            F.sum("c2").over(Window.partitionBy("prev")).alias("c1"),
+            first.cast("int").alias("first"),
+        )
+        .withColumn("v", F.sum("first").over(Window.partitionBy()))
+        .selectExpr(
+            "prev",
+            "cur",
+            f"{_lm_lpm_sql('c2', 'c1', a)} AS lpm2",
+            f"{_lm_lpm_sql('0', 'c1', a)} AS lpm1",
+            f"{_lm_lpm_sql('0', '0', a)} AS lpm0",
+        )
         .toPandas()
     )
-    d2: dict = {}
-    d1: dict = {}
-    for p, c, l2, l1 in zip(
-        m["prev"].tolist(), m["cur"].tolist(), m["lpm2"].tolist(), m["lpm1"].tolist()
-    ):
-        d2[(p, c)] = l2
-        d1[p] = l1
-    bc = docs.sparkSession.sparkContext.broadcast((d2, d1, lpm0))
+    if m.empty:
+        return None
+    d2 = dict(zip(zip(m["prev"].tolist(), m["cur"].tolist()), m["lpm2"].tolist()))
+    d1 = dict(zip(m["prev"].tolist(), m["lpm1"].tolist()))
+    bc = docs.sparkSession.sparkContext.broadcast((d2, d1, int(m["lpm0"].iat[0])))
 
     d = _widen(docs.filter(F.col("text").isNotNull())).select(
         "doc_id", normalized_text().alias("nt")

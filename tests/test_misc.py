@@ -859,6 +859,32 @@ def test_core_scaling_ratio_table_tolerates_missing_op(monkeypatch):
     assert table["b"] == {"c8": None, "c32": 2.0, "ratio": None}
 
 
+def test_plan_capture_parses_documented_flags(monkeypatch):
+    """The Usage form ``--tag X --suffix Y`` must name the output files
+    exactly as ``--tag=X --suffix=Y`` does; a flag that silently fell back
+    to a default would overwrite committed plan files.  Unknown flags and
+    a missing tag/suffix are errors."""
+    import os
+
+    import pytest
+
+    monkeypatch.syspath_prepend(
+        os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+    )
+    from plan_capture import parse_args
+
+    spaced = parse_args(["--tag", "demo", "--suffix", "after", "--queries", "a,b"])
+    joined = parse_args(["--tag=demo", "--suffix=after", "--queries=a,b"])
+    assert spaced == joined
+    assert (spaced.tag, spaced.suffix, spaced.queries) == ("demo", "after", "a,b")
+    assert not spaced.time and spaced.passes == 3
+    timed = parse_args(["--tag", "t", "--suffix", "s", "--time", "--passes", "5"])
+    assert timed.time and timed.passes == 5
+    for bad in (["--tag", "t", "--suffix", "s", "--bogus"], ["--suffix", "s"], []):
+        with pytest.raises(SystemExit):
+            parse_args(bad)
+
+
 def test_top_items_param_validation(spark):
     """max_tracked=0 must RAISE, not silently fall back to the 10000
     default (the `if max_tracked` falsy trap), and garbage values must not

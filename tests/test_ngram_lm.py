@@ -110,19 +110,52 @@ def test_no_python_in_plan(spark):
     assert "MapInPandas" not in plan
 
 
+def _bench_rows():
+    """The seeded 1,000-doc corpus of the ``curation`` benchmark: a 30-word
+    vocabulary and ~5% near-duplicate rows, so every context and
+    predicted token repeats many times."""
+    import numpy as np
+
+    from perfbench.gen import documents_table
+
+    t = documents_table(np.random.default_rng([1, 2]), 1000)
+    return list(zip(t["doc_id"].to_pylist(), t["text"].to_pylist()))
+
+
 def test_arrow_strategy_matches_agg_and_reference(spark):
     """strategy='arrow' (integer-lookup scoring kernel) must equal both the
     agg form and the Python reference tuple-for-tuple — self-trained and
-    off-corpus (the lpm1/lpm0 backoff rows)."""
-    docs = spark.createDataFrame(ROWS, "doc_id long, text string")
-    got = _collect(ngram_lm_df(docs, strategy="arrow"))
-    assert got == _reference(ROWS, ROWS)
-    assert got == _collect(ngram_lm_df(docs, strategy="agg"))
+    off-corpus (the lpm1/lpm0 backoff rows) — on the toy rows and on the
+    benchmark corpus, whose repeats exercise the model's c1 and V."""
+    for rows in (ROWS, _bench_rows()):
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        got = _collect(ngram_lm_df(docs, strategy="arrow"))
+        assert got == _reference(rows, rows)
+        assert got == _collect(ngram_lm_df(docs, strategy="agg"))
 
-    score_rows = [(100, "the cat sat"), (101, "entirely unseen tokens here")]
-    score = spark.createDataFrame(score_rows, "doc_id long, text string")
-    got2 = _collect(ngram_lm_df(score, train_docs=docs, strategy="arrow"))
-    assert got2 == _reference(score_rows, ROWS)
+        score_rows = [(100, "the cat sat"), (101, "entirely unseen tokens here")]
+        score = spark.createDataFrame(score_rows, "doc_id long, text string")
+        got2 = _collect(ngram_lm_df(score, train_docs=docs, strategy="arrow"))
+        assert got2 == _reference(score_rows, rows)
+
+
+def test_arrow_model_is_one_build_action(spark, tmp_path):
+    """The arrow form collects its model with ONE query at plan build:
+    one toPandas whose shuffle stages (the c2 count, the c1 and
+    first-``cur`` windows, the global V window) plus the result stage
+    make five Spark jobs.  Two model actions would re-run the c2 stages."""
+    src = str(tmp_path / "docs")
+    spark.createDataFrame(ROWS, "doc_id long, text string").write.parquet(src)
+    docs = spark.read.parquet(src)
+    sc = spark.sparkContext
+    sc.setJobGroup("ngram_lm_build", "ngram_lm_df arrow build")
+    try:
+        df = ngram_lm_df(docs, strategy="arrow")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("ngram_lm_build")) == 5
+    assert _collect(df) == _reference(ROWS, ROWS)
 
 
 def test_arrow_matches_agg_on_empty_train_side(spark):

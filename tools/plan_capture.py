@@ -17,6 +17,7 @@ unchanged.
 
 from __future__ import annotations
 
+import argparse
 import gc
 import io
 import json
@@ -73,30 +74,30 @@ def normalize(text: str, spark) -> str:
     return text
 
 
+def parse_args(argv: list[str] | None = None):
+    """``--tag X`` and ``--tag=X`` both parse.  An unknown flag exits, and
+    so does a missing ``--tag`` / ``--suffix``: no default names a
+    committed plan file to overwrite."""
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("--tag", required=True, help="plans/<tag>/ directory")
+    p.add_argument("--suffix", required=True, help="<query>_<suffix>.txt")
+    p.add_argument("--queries", help="comma-separated; default bench.BENCH_QUERIES")
+    p.add_argument("--time", action="store_true", help="also time noop writes")
+    p.add_argument("--passes", type=int, default=3, help="timed passes per query")
+    return p.parse_args(argv)
+
+
 def main() -> None:
-    args = sys.argv[1:]
-
-    def opt(name: str, default: str | None = None) -> str | None:
-        for a in args:
-            if a.startswith(f"--{name}="):
-                return a.split("=", 1)[1]
-        return default
-
-    tag = opt("tag", "r11")
-    suffix = opt("suffix", "before")
-    passes = int(opt("passes", "3"))
-    do_time = "--time" in args
+    args = parse_args()
 
     import bench
 
     spark, entry = bench._boot_and_warm()
     qs = entry.queries()
-    names = (
-        opt("queries").split(",") if opt("queries") else list(bench.BENCH_QUERIES)
-    )
+    names = args.queries.split(",") if args.queries else list(bench.BENCH_QUERIES)
 
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", args.tag
     )
     os.makedirs(out_dir, exist_ok=True)
 
@@ -106,11 +107,11 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"plan_capture:{name}")
         df = fn(spark, SF_DIR)
         text = normalize(explain_str(df), spark)
-        with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
+        with open(os.path.join(out_dir, f"{name}_{args.suffix}.txt"), "w") as f:
             f.write(text)
-        if do_time:
+        if args.time:
             ts = []
-            for _ in range(passes):
+            for _ in range(args.passes):
                 entry.clear_signature_cache()
                 gc.collect()
                 spark.sparkContext._jvm.System.gc()
@@ -123,7 +124,7 @@ def main() -> None:
             print(f"{name}: plan captured", flush=True)
         spark.sparkContext.setJobDescription(None)
 
-    if do_time:
+    if args.time:
         print(
             "PLAN_CAPTURE_TIMES:"
             + json.dumps({k: min(v) for k, v in timings.items()})
