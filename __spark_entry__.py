@@ -2777,11 +2777,12 @@ def q_cur_select2(spark, sf_dir):
 
 def q_cur_dsir_stream(spark, sf_dir):
     """Ingestion-time DSIR scoring (curate.dsir_score_local_df): the model
-    fits ONCE on the static snapshot (dsir_model_df, <= 1024 rows), then
-    densifies into one broadcast micro-nat array and every streamed
-    document folds its own features against it row-locally — zero
-    shuffles, append mode, no state: a crawl importance-scored as it
-    lands.  Value-identical to the batch join formulation
+    fits ONCE on the static snapshot (dsir_model_df, <= 1024 rows), is
+    collected at plan build into one dense micro-nat vector, and every
+    streamed document sums its own features' log-ratios row-locally in
+    the shared hashed-feature-sum Arrow kernel — zero shuffles, append
+    mode, no state: a crawl importance-scored as it lands.
+    Value-identical to the batch join formulation
     (differential-tested); unseen buckets score the smoothing prior.
     Oracle: the weights half of cur_dsir's SQL."""
     from imops_spark.functions.curate import dsir_model_df, dsir_score_local_df

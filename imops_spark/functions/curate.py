@@ -753,11 +753,9 @@ def _raw_hash_sql(expr: str, salt: int) -> str:
     )
 
 
-def _bucket_hash_sql(expr: str, salt: int, B: int, plus_one: bool = False) -> str:
-    """md5 feature-bucket hash as SQL text; ``plus_one=True`` yields the
-    1-based form element_at wants."""
-    tail = " + 1" if plus_one else ""
-    return f"CAST({_raw_hash_sql(expr, salt)} % {int(B)}{tail} AS INT)"
+def _bucket_hash_sql(expr: str, salt: int, B: int) -> str:
+    """md5 feature-bucket hash as SQL text."""
+    return f"CAST({_raw_hash_sql(expr, salt)} % {int(B)} AS INT)"
 
 
 def _logit_prob_df(
@@ -953,17 +951,21 @@ def select_by_roc_df(
 def _assert_unique_buckets(weights: DataFrame, val_col: str, what: str) -> DataFrame:
     """Collapse a ``(bucket, <val>)`` table to unique buckets with a LOUD
     runtime guard: duplicate bucket rows raise instead of silently
-    corrupting scores (the dense-array twin would shift every later
-    weight by a slot; the join twin would double-count features — the
-    worst kind of divergence, both wrong and different)."""
+    corrupting scores (the dense-vector form would keep one arbitrary
+    row; the join form would double-count features — the
+    worst kind of divergence, both wrong and different).  Any further
+    column rides along as its per-bucket max."""
+    rest = [c for c in weights.columns if c not in ("bucket", val_col)]
     g = weights.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("_c"), F.max(val_col).alias(val_col)
+        F.count(F.lit(1)).alias("_c"),
+        *[F.max(c).alias(c) for c in (val_col, *rest)],
     )
     return g.selectExpr(
         "bucket",
         f"{val_col} + coalesce(CAST(assert_true(_c = 1,"
         f" '{what}: duplicate bucket rows in the weight/model table')"
         f" AS BIGINT), CAST(0 AS BIGINT)) AS {val_col}",
+        *rest,
     )
 
 
@@ -1036,18 +1038,24 @@ def _dsir_features(d: DataFrame, by_doc: bool = False) -> DataFrame:
     )
 
 
-def _dense_weights(wdf: DataFrame, col: str, B: int) -> "object":
-    """Collect a ``(bucket, col)`` model table of ``<= B`` rows into a
-    dense ``B``-long int64 vector: missing buckets score 0 (``F.sum``'s
-    NULL-skip / the ``coalesce(w, 0)`` of the JVM forms), out-of-range
-    buckets are dropped (they never join a ``% B`` bucket there)."""
+def _dense_weights(wdf: DataFrame, col: str, B: int, fill: str = "0") -> "object":
+    """The row-local scorers' one model-to-vector step: collect a ``(bucket,
+    col)`` table of ``<= B`` rows (one Spark job, at plan build) into a
+    dense ``B``-long int64 vector.  Missing buckets and NULL ``col``
+    values take the fill, SQL text evaluated per row in the same query
+    (every row of a model carries the same; an empty model fills 0):
+    ``0`` for classifier weights, which is ``F.sum``'s NULL-skip in the
+    join form, and the smoothing prior for a DSIR model.  Out-of-range
+    buckets are dropped: they never join a ``% B`` bucket in the join
+    forms."""
     import numpy as np
 
-    mp = wdf.select("bucket", col).toPandas()
+    mp = wdf.selectExpr("bucket", col, f"{fill} AS fill").toPandas()
+    f = int(mp["fill"].max()) if mp["fill"].notna().any() else 0
     b = mp["bucket"].to_numpy(dtype=np.int64)
     ok = (b >= 0) & (b < B)
-    w = np.zeros(B, dtype=np.int64)
-    w[b[ok]] = mp[col].to_numpy(dtype=np.int64)[ok]
+    w = np.full(B, f, dtype=np.int64)
+    w[b[ok]] = mp[col].fillna(f).to_numpy(dtype=np.int64)[ok]
     return w
 
 
@@ -1183,13 +1191,13 @@ def dsir_logweights_df(
     sample scan.
 
     ``strategy``: ``'agg'`` — the explode + broadcast-join + doc
-    aggregation scoring above; ``'arrow'`` — the hashed-feature-sum
-    kernel (:func:`_feature_sum_arrow_df`: vectorized single-block md5
-    bucket hashing over byte spans + integer gathers from the collected
-    ``<= B``-row model, zero scoring-side shuffles — one pushed scan
-    (+ the conditional ``_widen``) into a stateless ``mapInPandas`` —
-    exact parity by construction); ``'auto'`` — the ``dsir`` row of
-    ``backend.ROUTES`` (the streaming twin is ``dsir_score_local_df``).
+    aggregation scoring above; ``'arrow'`` — :func:`dsir_score_local_df`
+    over the fitted model (the hashed-feature-sum kernel: vectorized
+    single-block md5 bucket hashing over byte spans + integer gathers
+    from the collected ``<= B``-row model, zero scoring-side shuffles —
+    one pushed scan (+ the conditional ``_widen``) into a stateless
+    ``mapInPandas`` — exact parity by construction); ``'auto'`` — the
+    ``dsir`` row of ``backend.ROUTES``.
     """
     B = int(num_buckets)
     form = choose_form("dsir", strategy, docs)
@@ -1197,12 +1205,8 @@ def dsir_logweights_df(
         docs, target_docs, num_buckets=num_buckets, add_k=add_k, salt=salt
     )
     if form == "arrow":
-        return _feature_sum_arrow_df(
-            _widen(docs.where(F.col("text").isNotNull())),
-            _dense_weights(model, "lrm", B),
-            salt,
-            "n_feats long, logw_micro long",
-            lambda n, s: {"n_feats": n, "logw_micro": s},
+        return dsir_score_local_df(
+            docs, model, num_buckets=num_buckets, add_k=add_k, salt=salt
         )
     # every scored bucket is in the model by construction (the raw stream
     # IS the scored corpus), so lrm is never NULL here
@@ -1511,7 +1515,8 @@ def dsir_model_df(
     the micro-nat log-ratio each feature occurrence of that bucket
     contributes.  Fit once on a batch (persist it like any small table),
     apply anywhere: :func:`dsir_logweights_df` joins it, and
-    :func:`dsir_score_local_df` folds it row-locally over a STREAM.
+    :func:`dsir_score_local_df` scores it row-locally, also over a
+    STREAM.
 
     Plan: BOTH distributions come out of ONE tagged union aggregation —
     one map-side-combined ``groupBy(bucket)`` produces ``(bucket, tc,
@@ -1534,58 +1539,36 @@ def dsir_score_local_df(
     salt: int = 50,
 ) -> DataFrame:
     """ZERO-SHUFFLE, streaming-legal DSIR scoring against a pre-fit
-    :func:`dsir_model_df`: the model densifies into ONE broadcast
-    ``num_buckets``-long micro-nat array and each document folds its own
-    feature array against it with O(1) ``element_at`` lookups — no
+    :func:`dsir_model_df`: calling this function collects the model
+    EAGERLY, at plan build (one model-size Spark job; its duplicate-bucket
+    assert fires then), into ONE dense ``num_buckets``-long micro-nat
+    vector, and each document sums its own features' log-ratios in the
+    hashed-feature-sum kernel (:func:`_feature_sum_arrow_df`) — no
     explode, no join key, no doc_id exchange.  Output ``(doc_id, n_feats,
     logw_micro)``, value-identical to :func:`dsir_logweights_df` on the
-    fitting corpus (differential-tested) and append-mode streaming-legal,
-    so a crawl can be importance-scored AS IT LANDS against a model fit
-    on yesterday's snapshot.
+    fitting corpus (differential-tested; its ``'arrow'`` form IS this
+    call) and append-mode streaming-legal, so a crawl can be
+    importance-scored AS IT LANDS against a model fit on yesterday's
+    snapshot.  The vector is a build-time snapshot: re-call to pick up a
+    refit model.
 
     Buckets the model never saw (possible only for NEW documents, e.g.
-    streamed arrivals with novel vocabulary) score the smoothing-prior
-    log-ratio ``ln((a/(tt+aB)) / (a/(rt+aB)))`` — exactly what the join
-    formulation would produce had the bucket carried zero counts."""
+    streamed arrivals with novel vocabulary) and model rows with a NULL
+    ``lrm`` score the smoothing-prior log-ratio ``ln((a/(tt+aB)) /
+    (a/(rt+aB)))`` — exactly what the join formulation would produce had
+    the bucket carried zero counts."""
     _check_args(num_buckets=num_buckets, add_k=add_k)
     B = int(num_buckets)
     a = float(add_k)
-    spark = model.sparkSession
-    from .dedup import normalized_text
-
-    fill = model.agg(F.max("tt").alias("tt"), F.max("rt").alias("rt")).selectExpr(
-        f"{_dsir_lrm_sql(a, a * B, tc='0', rc='0')} AS fill"
-    )
-    idx = spark.range(B).select(F.col("id").alias("bucket"))
     unique = _assert_unique_buckets(
-        model.select("bucket", "lrm"), "lrm", "dsir_score_local_df"
+        model.select("bucket", "lrm", "tt", "rt"), "lrm", "dsir_score_local_df"
     )
-    arr = (
-        idx.join(F.broadcast(unique), "bucket", "left")
-        .crossJoin(F.broadcast(fill))
-        .select("bucket", F.coalesce("lrm", F.col("fill")).alias("lrm"))
-        .agg(F.array_sort(F.collect_list(F.struct("bucket", "lrm"))).alias("e"))
-        .selectExpr("transform(e, x -> x.lrm) AS __lrm")
-    )
-    fold = (
-        f"transform(array({_feature_array_sql()}), fs -> named_struct("
-        f" 'n', CAST(size(fs) AS BIGINT),"
-        f" 's', aggregate(fs, CAST(0 AS BIGINT), (acc, f) -> acc + element_at(__lrm,"
-        f"   {_bucket_hash_sql('f', salt, B, plus_one=True)})))"
-        f")[0]"
-    )
-    return (
-        data.filter(F.col("text").isNotNull())
-        .select(
-            "doc_id",
-            F.array_remove(F.split(normalized_text(), " "), "").alias("toks"),
-        )
-        .filter(F.size("toks") > 0)
-        .crossJoin(F.broadcast(arr))
-        .selectExpr("doc_id", f"{fold} AS st")
-        .selectExpr(
-            "doc_id", "st.n AS n_feats", "st.s AS logw_micro"
-        )
+    return _feature_sum_arrow_df(
+        _widen(data.where(F.col("text").isNotNull())),
+        _dense_weights(unique, "lrm", B, _dsir_lrm_sql(a, a * B, tc="0", rc="0")),
+        salt,
+        "n_feats long, logw_micro long",
+        lambda n, s: {"n_feats": n, "logw_micro": s},
     )
 
 
@@ -1794,8 +1777,8 @@ def classifier_train_df(
     persisted feature frame — the bias gradient rides the weight-gradient
     aggregation on a sentinel bucket, never a second corpus pass): the
     current weights ship as one broadcast
-    dense-array row (the score_local mechanism — O(1) ``element_at``
-    lookups, no join key); each document computes its probability
+    dense-array row (O(1) ``element_at`` lookups, no join key); each
+    document computes its probability
     ROW-LOCALLY, then explodes its feature buckets carrying the residual
     share ``(p - y)/n_feats`` and a map-side-combined ``groupBy(bucket)``
     reduces the gradient to ``<= B`` rows collected on the driver.  The
@@ -1877,7 +1860,7 @@ def _labeled_features(docs, label_col, salt, B):
     )
     feat = (
         f"transform({_feature_array_sql()}, f ->"
-        f" {_bucket_hash_sql('f', salt, B, plus_one=False)})"
+        f" {_bucket_hash_sql('f', salt, B)})"
     )
     return lab.selectExpr("y", f"{feat} AS fb")
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 import hashlib
 import math
 import re
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -300,23 +301,26 @@ def test_classifier_local_twin_is_value_identical(spark):
 
     docs = _corpus(spark)
     B = 64
-    weights = spark.createDataFrame(
-        [(b, (b % 9 - 4) / 7.0) for b in range(0, B, 2)],  # holes: missing->0
-        "bucket long, weight double",
-    )
-    a = {
-        r["doc_id"]: (r["n_feats"], r["logit_micro"], r["prob"])
-        for r in classifier_score_df(docs, weights, num_buckets=B, bias=-0.2).collect()
-    }
-    local = classifier_score_local_df(docs, weights, num_buckets=B, bias=-0.2)
-    b = {
-        r["doc_id"]: (r["n_feats"], r["logit_micro"], r["prob"])
-        for r in local.collect()
-    }
-    assert a == b
-    # the corpus side must be exchange-free: the only allowed shuffles are
-    # on the <= B-row weight table (the uniqueness-guard groupBy(bucket)
-    # and the single-partition densify) — never on doc_id
+    holes = [(b, (b % 9 - 4) / 7.0) for b in range(0, B, 2)]  # missing -> 0
+    # a NULL weight weighs 0 in both forms: the join form's sum skips it
+    for rows in (holes, holes + [(1, None)]):
+        weights = spark.createDataFrame(rows, "bucket long, weight double")
+        a = {
+            r["doc_id"]: (r["n_feats"], r["logit_micro"], r["prob"])
+            for r in classifier_score_df(
+                docs, weights, num_buckets=B, bias=-0.2
+            ).collect()
+        }
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", RuntimeWarning)  # no NaN cast
+            local = classifier_score_local_df(docs, weights, num_buckets=B, bias=-0.2)
+        b = {
+            r["doc_id"]: (r["n_feats"], r["logit_micro"], r["prob"])
+            for r in local.collect()
+        }
+        assert a == b
+    # the corpus side must be exchange-free: the weight table is collected
+    # at build, so nothing shuffles on doc_id
     plan = local._jdf.queryExecution().executedPlan().toString()
     ex = [
         ln for ln in plan.splitlines()
@@ -483,7 +487,9 @@ def test_dsir_local_twin_matches_join_path(spark):
     tgt = _target(spark)
     a = {
         r["doc_id"]: (r["n_feats"], r["logw_micro"])
-        for r in dsir_logweights_df(docs, tgt, num_buckets=128).collect()
+        for r in dsir_logweights_df(
+            docs, tgt, num_buckets=128, strategy="agg"
+        ).collect()
     }
     model = dsir_model_df(docs, tgt, num_buckets=128)
     local = dsir_score_local_df(docs, model, num_buckets=128)
@@ -491,15 +497,13 @@ def test_dsir_local_twin_matches_join_path(spark):
         r["doc_id"]: (r["n_feats"], r["logw_micro"]) for r in local.collect()
     }
     assert a == b
-    # the scored side is exchange-free (model densify owns the only
-    # bounded shuffles)
+    # the scored side is exchange-free: the model is collected at build,
+    # so nothing shuffles on doc_id
     plan = local._jdf.queryExecution().executedPlan().toString()
     ex = [
         ln for ln in plan.splitlines()
         if "Exchange" in ln and "Broadcast" not in ln and "SinglePartition" not in ln
     ]
-    # model-fit branch shuffles on bucket (bounded <= B rows after
-    # map-side combine); nothing shuffles on doc_id
     assert not any("doc_id" in ln for ln in ex)
 
 
@@ -526,6 +530,13 @@ def test_dsir_local_unseen_bucket_scores_prior(spark):
     model_buckets = {x["bucket"] for x in model.select("bucket").collect()}
     assert not (hit & model_buckets)
     assert (r["n_feats"], r["logw_micro"]) == (3, 3 * prior)
+    # a model row with a NULL lrm scores the prior too
+    nulled = model.withColumn("lrm", F.lit(None).cast("long"))
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)  # no NaN cast
+        got = dsir_score_local_df(docs, nulled, num_buckets=B).collect()
+    assert len(got) == len(TARGETY + RAWY)
+    assert all(r["logw_micro"] == r["n_feats"] * prior for r in got)
 
 
 def test_dsir_local_is_streaming_legal(spark, tmp_path):
@@ -548,28 +559,35 @@ def test_dsir_local_is_streaming_legal(spark, tmp_path):
 
 
 def test_classifier_duplicate_bucket_rows_raise(spark):
-    """A weight table with duplicate bucket rows must fail LOUDLY in every
-    scorer — silently, the dense twin would shift every later weight by a
-    slot while the join twins double-count (wrong AND different)."""
+    """A weight or DSIR model table with duplicate bucket rows must fail
+    LOUDLY in every scorer — silently, the dense form would keep one
+    arbitrary row while the join forms double-count (wrong AND
+    different)."""
     from imops_spark.functions.curate import (
         classifier_score_df,
         classifier_score_from_features_df,
         classifier_score_local_df,
         dsir_feature_frame_df,
+        dsir_score_local_df,
     )
 
     docs = _corpus(spark, with_empty=False)
     dup = spark.createDataFrame(
         [(5, 0.1), (5, 0.2), (6, 0.3)], "bucket long, weight double"
     )
+    dup_model = spark.createDataFrame(
+        [(5, 1, 2, 9, 9, 10), (5, 2, 1, 9, 9, -10), (6, 1, 1, 9, 9, 0)],
+        "bucket long, tc long, rc long, tt long, rt long, lrm long",
+    )
     frame = dsir_feature_frame_df(docs)
-    for fn, src in (
-        (classifier_score_df, docs),
-        (classifier_score_local_df, docs),
-        (classifier_score_from_features_df, frame),
+    for fn, src, table in (
+        (classifier_score_df, docs, dup),
+        (classifier_score_local_df, docs, dup),
+        (classifier_score_from_features_df, frame, dup),
+        (dsir_score_local_df, docs, dup_model),
     ):
         with pytest.raises(Exception, match=f"{fn.__name__}: duplicate bucket rows"):
-            fn(src, dup, num_buckets=64).collect()
+            fn(src, table, num_buckets=64).collect()
 
 
 def test_snapshot_diff_stream_matches_batch_minus_removed(spark, tmp_path):
