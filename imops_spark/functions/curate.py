@@ -655,28 +655,16 @@ def corpus_profile_df(docs: DataFrame, min_tokens: int = 5, n_langs: int = 5) ->
     BEFORE averaging (the repo's cross-engine determinism recipe) and the
     averages to 6.
     """
-    from .text import STOPWORDS, with_tokens
+    from .text import _lang_pred, _quality_ratios, with_tokens
 
-    all_langs = ["en", "zh", "fr", "es", "de"]
-    if not 1 <= n_langs <= len(all_langs):
-        raise ValueError(f"n_langs must be in 1..{len(all_langs)}, got {n_langs}")
-    lang_arr = F.array(*[F.lit(x) for x in all_langs[:n_langs]])
-    bucket = (
-        F.conv(F.substring(F.md5(F.substring(F.col("text"), 1, 24)), 1, 8), 16, 10)
-        .cast("long") % n_langs
-    )
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
+    cpt, stop_r, ttr = _quality_ratios()
     t = with_tokens(docs).select(
-        F.element_at(lang_arr, (bucket + 1).cast("int")).alias("lang_pred"),
+        _lang_pred(n_langs).alias("lang_pred"),
         F.size("tokens").alias("n_tok"),
         F.length("text").alias("n_chars"),
-        F.round(F.length("text") / F.size("tokens"), 4).alias("cpt"),
-        F.round(
-            F.size(F.filter("tokens", lambda x: F.array_contains(stop_arr, x)))
-            / F.size("tokens"),
-            4,
-        ).alias("stop_r"),
-        F.round(F.size(F.array_distinct("tokens")) / F.size("tokens"), 4).alias("ttr"),
+        cpt.alias("cpt"),
+        stop_r.alias("stop_r"),
+        ttr.alias("ttr"),
     )
     return t.groupBy("lang_pred").agg(
         F.count(F.lit(1)).alias("n_docs"),

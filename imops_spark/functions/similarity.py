@@ -1,17 +1,32 @@
-"""Similarity search over embedding columns (``array<float>``).
+"""Vector search over embedding columns (``array<float>`` / ``array<double>``).
 
-- ``cosine_topk_df`` — brute-force top-k: the correctness baseline.  The
-  query side is broadcast (small), the corpus streams — one pass, no shuffle
-  of the corpus, window top-k per query.  At 100 TB this is the right plan
-  whenever queries fit in a broadcast (<~100k vectors).
-- ``lsh_buckets_df`` / ``lsh_topk_df`` — sign-random-hyperplane LSH: corpus
-  vectors land in 2^P buckets keyed by the sign pattern of P deterministic
-  pseudo-random hyperplanes; candidate generation is an equi-join on bucket
-  id, so the cross product never materializes.  This is the scale path (an
-  IVF-style variant would swap the hash for k-means centroids).
+Every top-k path returns ``(query_id, neighbor_id, rank, cosine)``: no
+self-matches, cosines rounded to 6 (HALF_UP, like the SQL oracle), ties
+to the lower neighbor id.  The families:
 
-Hyperplanes are generated from md5 bits (deterministic, no RNG state), so
-results are reproducible across engines and runs.
+- exact ``cosine_topk_df``: the query side ships in the kernel closure
+  (broadcast contract), the corpus streams through one GEMM per batch;
+- int8 ``quantize_int8_df`` / ``int8_topk_df``: the exact path over
+  per-vector int8-quantized values;
+- LSH ``lsh_buckets_df`` / ``lsh_topk_df``: sign-hyperplane buckets from
+  md5 bits (``plane_component``), candidates by bucket equi-join;
+- IVF ``ivf_centroids`` / ``ivf_assign_df`` / ``ivf_topk_df``: spherical
+  k-means lists, candidates by probed-centroid equi-join; persisted by
+  ``ivf_write_index`` / ``ivf_load_centroids`` / ``ivf_query_index``;
+- PQ ``pq_train`` / ``pq_encode_df`` / ``pq_topk_df`` and IVFPQ
+  ``ivfpq_residual_train`` / ``ivfpq_encode_df`` / ``ivfpq_topk_df``:
+  product-quantized codes (of the residual to the coarse centroid, for
+  IVFPQ) scored by asymmetric-distance lookups;
+- the persisted embedding index: ``embedding_write_index``,
+  ``embedding_read_index``, ``embedding_register_index``,
+  ``embedding_index_topk`` and ``corpus_fingerprint``.
+
+Shared mechanisms, one owner each: ``_rank_topk`` (per-query rank window
+and final select), ``_batch_topk`` (a kernel's per-batch pre-selection,
+a superset of the global top-k) merged by ``_kernel_topk``,
+``_pair_topk`` (join-form pair scoring), ``_nearest_centroids``,
+``_train_sample`` (the driver-side sample of every quantizer; all train
+deterministically, no RNG), ``_pq_codebooks`` and ``_pq_codes``.
 """
 
 from __future__ import annotations
@@ -85,6 +100,145 @@ def _norm(c):
     return F.sqrt(F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
 
 
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The per-query rank window and final select of every top-k path: each
+    query keeps its ``k`` best ``scored`` rows by ``cosine`` descending,
+    ties to the lower ``neighbor_id``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cosine")
+    )
+
+
+def _batch_topk(sim, nid, qid, k: int):
+    """One Arrow batch's candidate pre-selection in a kernel top-k path.
+
+    ``sim`` is the ``[batch, nq]`` raw cosine of neighbors ``nid`` against
+    queries ``qid``; self-matches are masked out in place.  Selection uses
+    the final ranking's rounded grain, and keeps every row within 2e-6 of a
+    query's k-th value: that makes the batch winners a superset of the
+    global winners under any tie-break AND any rounding-mode disagreement
+    (np.round here is binary half-even, the final F.round is decimal
+    HALF_UP — one grain each way), so ``_rank_topk`` over the union of all
+    batches is exact.  Yields one ``(query_id, neighbor_id, cosine_raw)``
+    frame, or nothing when no candidate survives.
+    """
+    sim[nid[:, None] == qid[None, :]] = np.nan  # self-matches out
+    r = np.round(sim, 6)
+    kk = int(k)
+    out_q, out_n, out_c = [], [], []
+    for j in range(len(qid)):
+        idx = np.flatnonzero(~np.isnan(r[:, j]))
+        if idx.size == 0:
+            continue
+        col = r[idx, j]
+        if idx.size > kk:
+            thr = np.partition(col, idx.size - kk)[idx.size - kk] - 2e-6
+            idx = idx[col >= thr]
+        out_q.append(np.full(idx.size, qid[j]))
+        out_n.append(nid[idx])
+        out_c.append(sim[idx, j])
+    if out_q:
+        yield pd.DataFrame(
+            {
+                "query_id": np.concatenate(out_q),
+                "neighbor_id": np.concatenate(out_n),
+                "cosine_raw": np.concatenate(out_c),
+            }
+        )
+
+
+def _kernel_topk(frame: DataFrame, scan, q_type: str, k: int) -> DataFrame:
+    """Run a kernel top-k ``scan`` (a ``mapInPandas`` function yielding
+    ``_batch_topk`` candidates) over ``frame``'s ``neighbor_id`` rows, then
+    round in Spark and merge per query through ``_rank_topk``.  Rounding
+    in Spark keeps the value semantics of column-expression scoring
+    (HALF_UP, like the SQL oracle)."""
+    c_type = dict(frame.dtypes)["neighbor_id"]
+    cand = frame.mapInPandas(scan, f"query_id {q_type}, neighbor_id {c_type}, cosine_raw double")
+    return _rank_topk(cand.withColumn("cosine", F.round("cosine_raw", 6)), k)
+
+
+def _empty_topk(corpus: DataFrame, id_col: str, q_type: str) -> DataFrame:
+    """The empty result of a kernel top-k path with no queries, correctly typed."""
+    c_type = dict(corpus.dtypes)[id_col]
+    return corpus.sparkSession.createDataFrame(
+        [], f"query_id {q_type}, neighbor_id {c_type}, rank int, cosine double"
+    )
+
+
+def _pair_topk(corpus_side: DataFrame, query_side: DataFrame, on: str, k: int) -> DataFrame:
+    """Join-form top-k: candidate pairs are the equi-join of ``(neighbor_id,
+    cv, cn)`` corpus rows with ``(query_id, qv, qn)`` query rows on ``on``.
+    Norms are per-vector constants computed once per side before the join,
+    so per-pair work is one dot product; the self pair is dropped."""
+    scored = (
+        corpus_side.join(query_side, on=on)
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("cosine", F.round(_dot("qv", "cv") / (F.col("qn") * F.col("cn")), 6))
+    )
+    return _rank_topk(scored, k)
+
+
+def _nearest_centroids(x, c, p: int):
+    """Ids of each row of ``x``'s ``p`` nearest centroids ``c`` by cosine,
+    best first, ties to the lower id."""
+    xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+    return np.argsort(-(xn @ c.T), axis=1, kind="stable")[:, :p]
+
+
+def _train_sample(corpus: DataFrame, sample_size: int, id_col: str, vec_col: str, fn_name: str):
+    """The deterministic driver-side training sample of every quantizer: the
+    ``sample_size`` vectors with the lowest ids, stacked as float64."""
+    sample = (
+        corpus.select(id_col, vec_col).orderBy(id_col).limit(int(sample_size)).toPandas()[vec_col]
+    )
+    if not len(sample):
+        raise ValueError(f"{fn_name}: empty training sample — the corpus has no rows")
+    return np.stack([np.asarray(x, dtype=np.float64) for x in sample])
+
+
+def _pq_codebooks(v, m: int, ksub: int, n_iter: int):
+    """Per-subspace L2 k-means over the sample ``v``: ``m`` contiguous
+    subspaces, ``ksub`` centroids each, first-k init, empty clusters keep
+    their centroid; a subspace with fewer than ``ksub`` rows pads with its
+    first centroid.  Returns the [m, ksub, dsub] codebook."""
+    dim = v.shape[1]
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    dsub = dim // m
+    books = np.empty((m, ksub, dsub))
+    for s in range(m):
+        vs = v[:, s * dsub : (s + 1) * dsub]
+        k = min(ksub, len(vs))
+        c = vs[:k].copy()
+        for _ in range(n_iter):
+            d2 = ((vs[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
+            assign = d2.argmin(axis=1)
+            for j in range(k):
+                members = vs[assign == j]
+                if len(members):
+                    c[j] = members.mean(axis=0)
+        books[s, :k] = c
+        if k < ksub:
+            books[s, k:] = c[0]
+    return books
+
+
+def _pq_codes(x, books):
+    """PQ-encode the rows of ``x``: the nearest (L2) entry of each subspace's
+    codebook, as an [n, m] int32 array."""
+    m, _, dsub = books.shape
+    codes = np.empty((len(x), m), dtype=np.int32)
+    for s in range(m):
+        xs = x[:, s * dsub : (s + 1) * dsub]
+        d2 = ((xs[:, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
+        codes[:, s] = d2.argmin(axis=1)
+    return codes
+
+
 def cosine_topk_df(
     corpus: DataFrame,
     queries: DataFrame,
@@ -107,15 +261,10 @@ def cosine_topk_df(
     evaluation anywhere, no shuffle of the corpus, and per-vector norms are
     computed exactly once.
     """
-    q_type = dict(queries.dtypes)[id_col]
-    c_type = dict(corpus.dtypes)[id_col]
-    qid, qm, _ = _collect_query_side(queries, id_col, vec_col, "cosine_topk_df")
-    if qid is None:  # empty query side: empty result, correct schema
-        return corpus.sparkSession.createDataFrame(
-            [], f"query_id {q_type}, neighbor_id {c_type}, rank int, cosine double"
-        )
+    qid, qm, q_type = _collect_query_side(queries, id_col, vec_col, "cosine_topk_df")
+    if qid is None:
+        return _empty_topk(corpus, id_col, q_type)
     qn = np.linalg.norm(qm, axis=1)
-    kk = int(k)
 
     def scan(batches):
         for pdf in batches:
@@ -125,46 +274,10 @@ def cosine_topk_df(
             cm = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["cv"]])
             cn = np.linalg.norm(cm, axis=1)
             sim = (cm @ qm.T) / (cn[:, None] * qn[None, :])
-            sim[nid[:, None] == qid[None, :]] = np.nan  # self-matches out
-            # Local selection uses the final ranking's rounded grain; keeping
-            # every row within 2e-6 of the k-th value makes the batch winners
-            # a superset of the global winners under any tie-break AND any
-            # rounding-mode disagreement (np.round here is binary half-even,
-            # the final F.round is decimal HALF_UP — one grain each way).
-            r = np.round(sim, 6)
-            out_q, out_n, out_c = [], [], []
-            for j in range(len(qid)):
-                idx = np.flatnonzero(~np.isnan(r[:, j]))
-                if idx.size == 0:
-                    continue
-                col = r[idx, j]
-                if idx.size > kk:
-                    thr = np.partition(col, idx.size - kk)[idx.size - kk] - 2e-6
-                    idx = idx[col >= thr]
-                out_q.append(np.full(idx.size, qid[j]))
-                out_n.append(nid[idx])
-                out_c.append(sim[idx, j])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "cosine_raw": np.concatenate(out_c),
-                    }
-                )
+            yield from _batch_topk(sim, nid, qid, k)
 
-    cand = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    ).mapInPandas(scan, f"query_id {q_type}, neighbor_id {c_type}, cosine_raw double")
-    # round in Spark so the value semantics are identical to the former
-    # column-expression scoring (HALF_UP, like the SQL oracle)
-    scored = cand.withColumn("cosine", F.round("cosine_raw", 6))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    frame = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
+    return _kernel_topk(frame, scan, q_type, k)
 
 
 def plane_component(dim_index: int, plane: int) -> float:
@@ -218,17 +331,10 @@ def ivf_centroids(
     The quantizer trains on a deterministic driver-side sample (lowest ids) —
     the standard IVF recipe: sample-train the codebook, assign the full
     corpus distributively.  Init = first k sample vectors; empty clusters
-    keep their previous centroid; fully deterministic, no RNG.
+    keep their previous centroid; fully deterministic, no RNG.  An empty
+    corpus raises ``ValueError``.
     """
-    import numpy as np
-
-    sample = (
-        corpus.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(int(sample_size))
-        .toPandas()[vec_col]
-    )
-    v = np.stack([np.asarray(x, dtype=np.float64) for x in sample])
+    v = _train_sample(corpus, sample_size, id_col, vec_col, "ivf_centroids")
     v = v / np.maximum(np.linalg.norm(v, axis=1, keepdims=True), 1e-12)
     k = min(n_centroids, len(v))
     c = v[:k].copy()
@@ -254,11 +360,9 @@ def ivf_assign_df(
     ``(out_id, vec, centroid_id)`` — one exploded row per probe.
 
     The centroid matrix ships in the UDF closure (k x dim, tiny); assignment
-    is one Arrow-batched GEMM + argpartition per batch, so the corpus streams
+    is one Arrow-batched GEMM + sort per batch, so the corpus streams
     through executors with no shuffle until the probe join.
     """
-    import numpy as np
-    import pandas as pd
     from pyspark.sql.pandas.functions import pandas_udf
 
     c = np.asarray(centroids, dtype=np.float64)
@@ -267,16 +371,34 @@ def ivf_assign_df(
     @pandas_udf("array<int>")
     def probes(vecs: pd.Series) -> pd.Series:
         m = np.stack([np.asarray(x, dtype=np.float64) for x in vecs])
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        sim = m @ c.T
-        # top-p centroid ids, best-first, deterministic tie-break on id
-        order = np.argsort(-sim, axis=1, kind="stable")[:, :p]
+        order = _nearest_centroids(m, c, p)
         return pd.Series([row.astype("int32").tolist() for row in order])
 
     return df.select(
         F.col(id_col).alias(out_id),
         F.col(vec_col).alias("vec"),
         F.explode(probes(F.col(vec_col))).alias("centroid_id"),
+    )
+
+
+def _ivf_lists(corpus: DataFrame, n_centroids: int, id_col: str, vec_col: str):
+    """Train the coarse quantizer and build the inverted lists: returns the
+    centroids and the ``(neighbor_id, cv, centroid_id, cn)`` rows."""
+    cents = ivf_centroids(corpus, n_centroids, id_col=id_col, vec_col=vec_col)
+    inv = (
+        ivf_assign_df(corpus, cents, 1, id_col, vec_col, out_id="neighbor_id")
+        .withColumnRenamed("vec", "cv")
+        .withColumn("cn", _norm("cv"))
+    )
+    return cents, inv
+
+
+def _ivf_probes(queries: DataFrame, centroids, n_probe: int, id_col: str, vec_col: str):
+    """One ``(query_id, qv, centroid_id, qn)`` row per query and probed list."""
+    return (
+        ivf_assign_df(queries, centroids, n_probe, id_col, vec_col, out_id="query_id")
+        .withColumnRenamed("vec", "qv")
+        .withColumn("qn", _norm("qv"))
     )
 
 
@@ -297,27 +419,9 @@ def ivf_topk_df(
     plan scales with corpus size.  ``n_probe == n_centroids`` degenerates to
     exact brute force (tested); recall tunes with n_probe.
     """
-    cents = ivf_centroids(corpus, n_centroids, id_col=id_col, vec_col=vec_col)
-    inv = ivf_assign_df(corpus, cents, 1, id_col, vec_col, out_id="neighbor_id")
-    qp = ivf_assign_df(queries, cents, n_probe, id_col, vec_col, out_id="query_id")
-    # norms are per-vector constants: compute them once per side before the
-    # join, so per-pair work inside the join is exactly one dot product
-    scored = (
-        inv.withColumnRenamed("vec", "cv")
-        .withColumn("cn", _norm("cv"))
-        .join(
-            qp.withColumnRenamed("vec", "qv").withColumn("qn", _norm("qv")),
-            on="centroid_id",
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", F.round(_dot("qv", "cv") / (F.col("qn") * F.col("cn")), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    cents, inv = _ivf_lists(corpus, n_centroids, id_col, vec_col)
+    qp = _ivf_probes(queries, cents, n_probe, id_col, vec_col)
+    return _pair_topk(inv, qp, "centroid_id", k)
 
 
 def lsh_topk_df(
@@ -350,19 +454,7 @@ def lsh_topk_df(
         .join(qb, on="query_id")
         .withColumn("qn", _norm("qv"))
     )
-    # norms precomputed per side: the per-candidate-pair expression is one
-    # dot product, not three O(dim) reductions
-    scored = (
-        c.join(q, on="bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", F.round(_dot("qv", "cv") / (F.col("qn") * F.col("cn")), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _pair_topk(c, q, "bucket", k)
 
 
 def ivf_write_index(
@@ -385,12 +477,7 @@ def ivf_write_index(
     """
     from ..sources.parquet import write_bucketed
 
-    cents = ivf_centroids(corpus, n_centroids, id_col=id_col, vec_col=vec_col)
-    inv = (
-        ivf_assign_df(corpus, cents, 1, id_col, vec_col, out_id="neighbor_id")
-        .withColumnRenamed("vec", "cv")
-        .withColumn("cn", _norm("cv"))
-    )
+    cents, inv = _ivf_lists(corpus, n_centroids, id_col, vec_col)
     write_bucketed(
         inv, table, ["centroid_id"], num_buckets=int(n_centroids), path=path
     )
@@ -411,8 +498,6 @@ def ivf_load_centroids(spark, table: str):
     """Load the codebook persisted by ``ivf_write_index`` as the [k, dim]
     numpy array ``ivf_query_index`` expects — the missing half of
     build-once/probe-many across sessions."""
-    import numpy as np
-
     rows = spark.table(f"{table}__centroids").orderBy("centroid_id").collect()
     if not rows:
         raise ValueError(f"no centroids stored for IVF index {table!r}")
@@ -432,23 +517,8 @@ def ivf_query_index(
     """Probe a persisted IVF index built by ``ivf_write_index``: only the
     (small) query side shuffles to the lists' bucketing; scoring reuses the
     stored norms so a candidate pair costs one dot product."""
-    inv = spark.table(table)
-    qp = (
-        ivf_assign_df(queries, centroids, n_probe, id_col, vec_col, out_id="query_id")
-        .withColumnRenamed("vec", "qv")
-        .withColumn("qn", _norm("qv"))
-    )
-    scored = (
-        inv.join(qp, on="centroid_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", F.round(_dot("qv", "cv") / (F.col("qn") * F.col("cn")), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    qp = _ivf_probes(queries, centroids, n_probe, id_col, vec_col)
+    return _pair_topk(spark.table(table), qp, "centroid_id", k)
 
 
 def pq_train(
@@ -469,32 +539,8 @@ def pq_train(
     lowest ids, first-k init, empty clusters keep their centroid.  Returns
     a [m, ksub, dsub] numpy array.
     """
-    sample = (
-        corpus.select(id_col, vec_col).orderBy(id_col).limit(int(sample_size)).toPandas()[vec_col]
-    )
-    if not len(sample):
-        raise ValueError("pq_train: empty training sample — the corpus has no rows")
-    v = np.stack([np.asarray(x, dtype=np.float64) for x in sample])
-    dim = v.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    books = np.empty((m, ksub, dsub))
-    for s in range(m):
-        vs = v[:, s * dsub : (s + 1) * dsub]
-        k = min(ksub, len(vs))
-        c = vs[:k].copy()
-        for _ in range(n_iter):
-            d2 = ((vs[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for j in range(k):
-                members = vs[assign == j]
-                if len(members):
-                    c[j] = members.mean(axis=0)
-        books[s, :k] = c
-        if k < ksub:
-            books[s, k:] = c[0]
-    return books
+    v = _train_sample(corpus, sample_size, id_col, vec_col, "pq_train")
+    return _pq_codebooks(v, m, ksub, n_iter)
 
 
 def pq_encode_df(
@@ -511,17 +557,11 @@ def pq_encode_df(
     from pyspark.sql.pandas.functions import pandas_udf
 
     books = np.asarray(codebooks, dtype=np.float64)
-    m, ksub, dsub = books.shape
 
     @pandas_udf("array<int>")
     def enc(vecs: pd.Series) -> pd.Series:
         x = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        codes = np.empty((len(x), m), dtype=np.int32)
-        for s in range(m):
-            xs = x[:, s * dsub : (s + 1) * dsub]
-            d2 = ((xs[:, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
-            codes[:, s] = d2.argmin(axis=1)
-        return pd.Series([row.tolist() for row in codes])
+        return pd.Series([row.tolist() for row in _pq_codes(x, books)])
 
     return df.select(F.col(id_col), enc(F.col(vec_col)).alias("codes"))
 
@@ -545,17 +585,13 @@ def pq_topk_df(
     m, ksub, dsub = books.shape
     sq_lut = (books**2).sum(axis=2)  # [m, ksub]
 
-    q_type = dict(queries.dtypes)[id_col]
-    c_type = dict(corpus_codes.dtypes)[id_col]
-    qid, qm, _ = _collect_query_side(queries, id_col, vec_col, "pq_topk_df")
+    qid, qm, q_type = _collect_query_side(queries, id_col, vec_col, "pq_topk_df")
     if qid is None:
-        return corpus_codes.sparkSession.createDataFrame(
-            [], f"query_id {q_type}, neighbor_id {c_type}, rank int, cosine double"
-        )
+        return _empty_topk(corpus_codes, id_col, q_type)
     qn = np.linalg.norm(qm, axis=1)
     # dot LUT per query: [nq, m, ksub]
     dot_lut = np.einsum("qsd,skd->qsk", qm.reshape(len(qm), m, dsub), books)
-    kk = int(k)
+    subs = np.arange(m)
 
     def scan(batches):
         for pdf in batches:
@@ -563,7 +599,6 @@ def pq_topk_df(
                 continue
             nid = pdf["neighbor_id"].to_numpy()
             codes = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
-            subs = np.arange(m)
             cn = np.sqrt(sq_lut[subs, codes].sum(axis=1))  # [b] exact recon norms
             dots = dot_lut[:, subs, codes].sum(axis=2)  # [q, b]
             # zero-norm reconstructions (or queries) score 0, like the cosine
@@ -571,41 +606,10 @@ def pq_topk_df(
             # from rankings.
             denom = cn[None, :] * qn[:, None]
             sim = np.divide(dots, denom, out=np.zeros_like(dots), where=denom > 0).T  # [b, q]
-            sim[nid[:, None] == qid[None, :]] = np.nan
-            r = np.round(sim, 6)
-            out_q, out_n, out_c = [], [], []
-            for j in range(len(qid)):
-                idx = np.flatnonzero(~np.isnan(r[:, j]))
-                if idx.size == 0:
-                    continue
-                col = r[idx, j]
-                if idx.size > kk:
-                    # 2e-6 margin: one rounding grain per engine (np.round
-                    # half-even vs F.round HALF_UP), see cosine_topk_df.
-                    thr = np.partition(col, idx.size - kk)[idx.size - kk] - 2e-6
-                    idx = idx[col >= thr]
-                out_q.append(np.full(idx.size, qid[j]))
-                out_n.append(nid[idx])
-                out_c.append(sim[idx, j])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "cosine_raw": np.concatenate(out_c),
-                    }
-                )
+            yield from _batch_topk(sim, nid, qid, k)
 
-    cand = corpus_codes.select(
-        F.col(id_col).alias("neighbor_id"), "codes"
-    ).mapInPandas(scan, f"query_id {q_type}, neighbor_id {c_type}, cosine_raw double")
-    scored = cand.withColumn("cosine", F.round("cosine_raw", 6))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    frame = corpus_codes.select(F.col(id_col).alias("neighbor_id"), "codes")
+    return _kernel_topk(frame, scan, q_type, k)
 
 
 def ivfpq_encode_df(
@@ -626,7 +630,6 @@ def ivfpq_encode_df(
     """
     c = np.asarray(centroids, dtype=np.float64)
     books = np.asarray(codebooks, dtype=np.float64)
-    m, ksub, dsub = books.shape
     id_type = dict(corpus.dtypes)[id_col]
 
     def enc(batches):
@@ -634,14 +637,8 @@ def ivfpq_encode_df(
             if not len(pdf):
                 continue
             x = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-            assign = np.argsort(-(xn @ c.T), axis=1, kind="stable")[:, 0]
-            r = x - c[assign]
-            codes = np.empty((len(x), m), dtype=np.int32)
-            for s in range(m):
-                rs = r[:, s * dsub : (s + 1) * dsub]
-                d2 = ((rs[:, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
-                codes[:, s] = d2.argmin(axis=1)
+            assign = _nearest_centroids(x, c, 1)[:, 0]
+            codes = _pq_codes(x - c[assign], books)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],
@@ -670,35 +667,9 @@ def ivfpq_residual_train(
     nearest centroid, k-means each residual subspace.  Deterministic like
     ``pq_train`` (first-k init, empty clusters keep their centroid)."""
     c = np.asarray(centroids, dtype=np.float64)
-    sample = (
-        corpus.select(id_col, vec_col).orderBy(id_col).limit(int(sample_size)).toPandas()[vec_col]
-    )
-    if not len(sample):
-        raise ValueError("ivfpq_residual_train: empty training sample")
-    x = np.stack([np.asarray(v, dtype=np.float64) for v in sample])
-    xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-    assign = np.argsort(-(xn @ c.T), axis=1, kind="stable")[:, 0]
-    v = x - c[assign]
-    dim = v.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    books = np.empty((m, ksub, dsub))
-    for s in range(m):
-        vs = v[:, s * dsub : (s + 1) * dsub]
-        k = min(ksub, len(vs))
-        cc = vs[:k].copy()
-        for _ in range(n_iter):
-            d2 = ((vs[:, None, :] - cc[None, :, :]) ** 2).sum(axis=2)
-            a = d2.argmin(axis=1)
-            for j in range(k):
-                members = vs[a == j]
-                if len(members):
-                    cc[j] = members.mean(axis=0)
-        books[s, :k] = cc
-        if k < ksub:
-            books[s, k:] = cc[0]
-    return books
+    x = _train_sample(corpus, sample_size, id_col, vec_col, "ivfpq_residual_train")
+    assign = _nearest_centroids(x, c, 1)[:, 0]
+    return _pq_codebooks(x - c[assign], m, ksub, n_iter)
 
 
 def ivfpq_topk_df(
@@ -729,18 +700,11 @@ def ivfpq_topk_df(
     cents = np.asarray(centroids, dtype=np.float64)
     books = np.asarray(codebooks, dtype=np.float64)
     m, ksub, dsub = books.shape
-    q_type = dict(queries.dtypes)[id_col]
-    c_type = dict(index.dtypes)[id_col]
-    qid, qm, _ = _collect_query_side(queries, id_col, vec_col, "ivfpq_topk_df")
+    qid, qm, q_type = _collect_query_side(queries, id_col, vec_col, "ivfpq_topk_df")
     if qid is None:
-        return index.sparkSession.createDataFrame(
-            [], f"query_id {q_type}, neighbor_id {c_type}, rank int, cosine double"
-        )
+        return _empty_topk(index, id_col, q_type)
     qn = np.linalg.norm(qm, axis=1)
-    qnorm = qm / np.maximum(qn[:, None], 1e-12)
-    order = np.argsort(-(qnorm @ cents.T), axis=1, kind="stable")[
-        :, : int(min(n_probe, len(cents)))
-    ]
+    order = _nearest_centroids(qm, cents, int(min(n_probe, len(cents))))
     probe_union = sorted({int(cc) for row in order for cc in row})
     probing = {}
     for qi, row in enumerate(order):
@@ -754,7 +718,6 @@ def ivfpq_topk_df(
     sq_lut = (books**2).sum(axis=2)                        # [m, ksub]
     cent_n2 = (cents**2).sum(axis=1)                       # [nc]
     subs = np.arange(m)
-    kk = int(k)
 
     def scan(batches):
         for pdf in batches:
@@ -779,42 +742,13 @@ def ivfpq_topk_df(
                 sim = np.divide(
                     dots, denom, out=np.zeros_like(dots), where=denom > 0
                 ).T                                                      # [b, nq']
-                sim[nid[:, None] == qid[qs][None, :]] = np.nan
-                r = np.round(sim, 6)
-                out_q, out_n, out_c = [], [], []
-                for j in range(len(qs)):
-                    idx = np.flatnonzero(~np.isnan(r[:, j]))
-                    if idx.size == 0:
-                        continue
-                    col = r[idx, j]
-                    if idx.size > kk:
-                        # 2e-6: one rounding grain per engine, see cosine_topk_df
-                        thr = np.partition(col, idx.size - kk)[idx.size - kk] - 2e-6
-                        idx = idx[col >= thr]
-                    out_q.append(np.full(idx.size, qid[qs[j]]))
-                    out_n.append(nid[idx])
-                    out_c.append(sim[idx, j])
-                if out_q:
-                    yield pd.DataFrame(
-                        {
-                            "query_id": np.concatenate(out_q),
-                            "neighbor_id": np.concatenate(out_n),
-                            "cosine_raw": np.concatenate(out_c),
-                        }
-                    )
+                yield from _batch_topk(sim, nid, qid[qs], k)
 
-    cand = (
+    frame = (
         index.filter(F.col("centroid_id").isin(probe_union))
         .select(F.col(id_col).alias("neighbor_id"), "centroid_id", "codes")
-        .mapInPandas(scan, f"query_id {q_type}, neighbor_id {c_type}, cosine_raw double")
     )
-    scored = cand.withColumn("cosine", F.round("cosine_raw", 6))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _kernel_topk(frame, scan, q_type, k)
 
 
 def quantize_int8_df(

@@ -132,15 +132,26 @@ def quality_df(docs: DataFrame) -> DataFrame:
     """Heuristic quality metrics: length, mean token length, stopword ratio,
     type-token ratio.  Mirrors the usual pretraining-corpus filters
     (C4/Gopher-style rules) as pure column arithmetic."""
-    t = with_tokens(docs)
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    n_stop = F.size(F.filter("tokens", lambda x: F.array_contains(stop_arr, x)))
-    return t.select(
+    cpt, stop_r, ttr = _quality_ratios()
+    return with_tokens(docs).select(
         "doc_id",
         F.size("tokens").alias("n_tokens"),
-        F.round(F.length("text") / F.size("tokens"), 4).alias("chars_per_token"),
-        F.round(n_stop / F.size("tokens"), 4).alias("stopword_ratio"),
-        F.round(F.size(F.array_distinct("tokens")) / F.size("tokens"), 4).alias("type_token_ratio"),
+        cpt.alias("chars_per_token"),
+        stop_r.alias("stopword_ratio"),
+        ttr.alias("type_token_ratio"),
+    )
+
+
+def _quality_ratios():
+    """The three per-document quality ratios over ``with_tokens`` columns,
+    each rounded to 4: chars per token, stopword ratio, type-token ratio.
+    One owner for ``quality_df`` and ``curate.corpus_profile_df``."""
+    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
+    n_stop = F.size(F.filter("tokens", lambda x: F.array_contains(stop_arr, x)))
+    return (
+        F.round(F.length("text") / F.size("tokens"), 4),
+        F.round(n_stop / F.size("tokens"), 4),
+        F.round(F.size(F.array_distinct("tokens")) / F.size("tokens"), 4),
     )
 
 
@@ -152,21 +163,27 @@ def langid_df(docs: DataFrame, n_langs: int = 5) -> DataFrame:
     We use a reproducible surrogate (md5 of the first trigrams) so the DuckDB
     oracle can verify the distributed computation end-to-end.
     """
-    all_langs = ["en", "zh", "fr", "es", "de"]
-    if not 1 <= n_langs <= len(all_langs):
+    return docs.select("doc_id", _lang_pred(n_langs).alias("lang_pred"))
+
+
+_LANGS = ("en", "zh", "fr", "es", "de")
+
+
+def _lang_pred(n_langs: int):
+    """The predicted-language column: the md5 bucket of the first 24
+    characters, modulo ``n_langs``, names one of the first ``n_langs`` of
+    ``_LANGS``.  One owner for ``langid_df`` and
+    ``curate.corpus_profile_df``."""
+    if not 1 <= n_langs <= len(_LANGS):
         # bucket is taken modulo n_langs, so a value past the list would
         # silently yield NULL predictions (or raise under ANSI mode)
-        raise ValueError(f"n_langs must be in 1..{len(all_langs)}, got {n_langs}")
-    langs = all_langs[:n_langs]
+        raise ValueError(f"n_langs must be in 1..{len(_LANGS)}, got {n_langs}")
     bucket = (
         F.conv(F.substring(F.md5(F.substring(F.col("text"), 1, 24)), 1, 8), 16, 10)
         .cast("long") % n_langs
     )
-    lang_arr = F.array(*[F.lit(x) for x in langs])
-    return docs.select(
-        "doc_id",
-        F.element_at(lang_arr, (bucket + 1).cast("int")).alias("lang_pred"),
-    )
+    lang_arr = F.array(*[F.lit(x) for x in _LANGS[:n_langs]])
+    return F.element_at(lang_arr, (bucket + 1).cast("int"))
 
 
 def winnow_fingerprints_df(

@@ -92,3 +92,21 @@ def test_auto_resolution_has_one_owner():
             ):
                 offenders.append(f"{where} def {node.name}")
     assert not offenders, f"'auto' resolved outside backend.py: {offenders}"
+
+
+def test_vector_search_mechanisms_have_one_owner():
+    """The vector-search family's per-query rank window, per-batch top-k
+    pre-selection and nearest-centroid sort each appear exactly once in
+    ``functions/similarity.py``: every path calls the one helper."""
+    import pathlib
+
+    import imops_spark
+
+    src = (
+        pathlib.Path(imops_spark.__file__).parent / "functions" / "similarity.py"
+    ).read_text()
+    counts = {
+        needle: src.count(needle)
+        for needle in ('Window.partitionBy("query_id")', "np.partition(", 'kind="stable"')
+    }
+    assert counts == dict.fromkeys(counts, 1), counts

@@ -262,11 +262,25 @@ def test_cosine_topk_query_side_guard(spark, monkeypatch):
 
 
 def test_pq_train_empty_corpus_raises(spark):
-    from imops_spark.functions.similarity import pq_train
+    """Every quantizer trainer refuses an empty corpus with the same named
+    error (``ivf_centroids`` used to fail inside numpy's stack)."""
+    from imops_spark.functions.similarity import (
+        ivf_centroids,
+        ivfpq_residual_train,
+        pq_train,
+    )
 
     df = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    with pytest.raises(ValueError, match="empty training sample"):
-        pq_train(df, m=4, ksub=4)
+    trainers = {
+        "pq_train": lambda: pq_train(df, m=4, ksub=4),
+        "ivf_centroids": lambda: ivf_centroids(df, n_centroids=2),
+        "ivfpq_residual_train": lambda: ivfpq_residual_train(
+            df, np.zeros((2, 4)), m=4, ksub=4
+        ),
+    }
+    for name, train in trainers.items():
+        with pytest.raises(ValueError, match=f"{name}: empty training sample"):
+            train()
 
 
 def test_pq_zero_norm_reconstruction_scores_zero(spark):
