@@ -152,27 +152,45 @@ def interp1d_numpy(
     return a
 
 
-def label_numpy(arr: np.ndarray, background: int = 0, connectivity: int | None = None):
-    """Connected components by vectorized min-label propagation.
+def connectivity_offsets(ndim: int, connectivity: int) -> list[tuple[int, ...]]:
+    """Positive-direction neighbor offsets for a given connectivity.
 
-    Per-image kernel for the 'udf' strategy: O(diameter) full-array sweeps,
-    each a handful of numpy shift/minimum ops — the in-memory counterpart of
-    the distributed pointer-jumping loop (operators/graph.py).  skimage
-    numbering (1..N in raster order of first occurrence).  Returns
-    (labels int64 array, n_components).
+    connectivity c: neighbors differing in at most c axes by +-1
+    (reference translation table `measure.py:22-29`).  Only lexicographically
+    positive offsets are returned (each undirected edge generated once).
     """
-    arr = np.asarray(arr)
-    ndim = arr.ndim
-    connectivity = ndim if connectivity is None else connectivity
-    fg = arr != background
-    lab = np.where(fg, np.arange(arr.size, dtype=np.int64).reshape(arr.shape), -1)
-
+    if not 1 <= connectivity <= ndim:
+        raise ValueError(
+            f"Connectivity for {ndim}D image should be in [1, ..., {ndim}], got {connectivity}"
+        )
     offsets = []
     for raw in np.ndindex(*([3] * ndim)):
-        off = tuple(v - 1 for v in raw)
+        off = tuple(int(v) - 1 for v in raw)
         nz = [v for v in off if v != 0]
-        if nz and len(nz) <= connectivity and off > tuple([0] * ndim):
+        if not nz or len(nz) > connectivity:
+            continue
+        if off > tuple([0] * ndim):  # lexicographic positivity
             offsets.append(off)
+    return offsets
+
+
+def label_numpy(arr: np.ndarray, background: int = 0, connectivity: int | None = None):
+    """Connected components by vectorized min-label propagation with pointer
+    jumping.
+
+    Per-image kernel for the 'udf' strategy.  Each round is one sweep of
+    numpy shift/minimum ops over the neighbor offsets, then one pointer jump
+    (every label is a voxel id in its own component, so ``lab[lab[v]]`` is
+    too): labels travel doubling distances instead of one voxel per sweep,
+    the in-memory counterpart of the distributed pointer-jumping loop
+    (operators/graph.py).  skimage numbering (1..N in raster order of first
+    occurrence).  Returns (labels int64 array, n_components).
+    """
+    arr = np.asarray(arr)
+    connectivity = arr.ndim if connectivity is None else connectivity
+    offsets = connectivity_offsets(arr.ndim, connectivity)
+    fg = arr != background
+    lab = np.where(fg, np.arange(arr.size, dtype=np.int64).reshape(arr.shape), -1)
 
     def sweep(cur):
         new = cur.copy()
@@ -183,6 +201,7 @@ def label_numpy(arr: np.ndarray, background: int = 0, connectivity: int | None =
             ok = fg[src] & fg[dst] & (arr[src] == arr[dst])
             new[dst] = np.where(ok, np.minimum(new[dst], new[src]), new[dst])
             new[src] = np.where(ok, np.minimum(new[src], new[dst]), new[src])
+        new[fg] = new.ravel()[new[fg]]
         return new
 
     while True:
@@ -191,15 +210,23 @@ def label_numpy(arr: np.ndarray, background: int = 0, connectivity: int | None =
             break
         lab = new
 
-    roots = np.unique(lab[fg])
-    remap = {int(r): i + 1 for i, r in enumerate(roots)}  # raster order == root order
+    # root == the component's min raster id, so sorted roots are raster order
+    roots, inverse = np.unique(lab[fg], return_inverse=True)
     out = np.zeros(arr.shape, dtype=np.int64)
-    if len(roots):
-        lut = np.zeros(int(roots.max()) + 1, dtype=np.int64)
-        for r, v in remap.items():
-            lut[r] = v
-        out[fg] = lut[lab[fg]]
+    out[fg] = inverse + 1
     return out, len(roots)
+
+
+def _zoom_shape(shape, scale) -> tuple[int, ...]:
+    """Zoom output shape: ``round(old * scale)`` per axis (Python's banker's
+    rounding, `src/_zoom.pyx:372-399`); ``scale`` broadcasts to every axis."""
+    scale = np.broadcast_to(np.asarray(scale, dtype=float), (len(shape),))
+    return tuple(int(round(s * z)) for s, z in zip(shape, scale))
+
+
+def _zoom_coef(old_n: int, new_n: int) -> float:
+    """Grid-corner source step per output index (`src/_zoom.pyx:146-149`)."""
+    return float(old_n) if new_n == 1 else (old_n - 1) / (new_n - 1)
 
 
 def _zoom1_separable(work: np.ndarray, fs, fracs, axes) -> np.ndarray:
@@ -241,12 +268,8 @@ def zoom_numpy(
     """
     x = np.asarray(x)
     ndim = x.ndim
-    scale = np.broadcast_to(np.asarray(scale, dtype=float), (ndim,))
-    new_shape = tuple(int(round(s * z)) for s, z in zip(x.shape, scale))
-    coefs = [
-        (x.shape[k] if new_shape[k] == 1 else (x.shape[k] - 1) / (new_shape[k] - 1))
-        for k in range(ndim)
-    ]
+    new_shape = _zoom_shape(x.shape, scale)
+    coefs = [_zoom_coef(x.shape[k], new_shape[k]) for k in range(ndim)]
     # Per-axis source coordinates and floors.
     cs = [np.arange(new_shape[k]) * coefs[k] for k in range(ndim)]
     fs = [np.floor(c).astype(np.int64) for c in cs]
@@ -417,8 +440,7 @@ def spline_zoom_numpy(
         raise ValueError(f"spline order must be in 0..5, got {order}")
     x = np.asarray(x)
     ndim = x.ndim
-    scale = np.broadcast_to(np.asarray(scale, dtype=float), (ndim,))
-    new_shape = tuple(int(round(s * z)) for s, z in zip(x.shape, scale))
+    new_shape = _zoom_shape(x.shape, scale)
     work = x.astype(np.float64, copy=True)
     if prefilter and order >= 2:
         for ax in range(ndim):

@@ -21,10 +21,9 @@ from __future__ import annotations
 import warnings
 
 import numpy as np
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..tensor_io import IMAGE_ID, VAL, TensorFrame, decode_volume, encode_volume
+from ..tensor_io import IMAGE_ID, VAL, TensorFrame, _active_spark, decode_volume, encode_volume
 
 __all__ = ["convex_hull_image", "monotone_chain"]
 
@@ -75,7 +74,7 @@ def convex_hull_image(image, offset_coordinates: bool = True):
             )
         if np.count_nonzero(img) == 0:
             return np.zeros(img.shape, dtype=bool)
-        spark = SparkSession.getActiveSession()
+        spark = _active_spark()
         tf = encode_volume(spark, img.astype(bool))
     else:
         tf = image

@@ -10,11 +10,10 @@ voxel table is written sorted by coordinates (SURVEY.md §4).
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..box import make_box
-from ..tensor_io import IMAGE_ID, VAL, TensorFrame, decode_volume, encode_volume
+from ..tensor_io import IMAGE_ID, VAL, TensorFrame, _active_spark, decode_volume, encode_volume
 from ..utils import broadcast_axis
 
 __all__ = ["crop_to_shape", "crop_to_box", "crop_to_box_df"]
@@ -57,8 +56,7 @@ def crop_to_shape(x, shape, axis=None, ratio: float = 0.5):
         return crop_to_box_df(x, box)
     x = np.asarray(x)
     box = _resolve_crop_box(x.shape, shape, axis, ratio)
-    spark = SparkSession.getActiveSession()
-    tf = encode_volume(spark, x)
+    tf = encode_volume(_active_spark(), x)
     return decode_volume(crop_to_box_df(tf, box))
 
 
@@ -91,8 +89,7 @@ def crop_to_box(x, box, axis=None, padding_values=None, num_threads: int = -1, b
 
     inner = make_box([np.maximum(start, 0), np.minimum(stop, shape)])
     if arr_mode:
-        spark = SparkSession.getActiveSession()
-        tf = encode_volume(spark, np.asarray(x))
+        tf = encode_volume(_active_spark(), np.asarray(x))
     else:
         tf = x
     out = crop_to_box_df(tf, inner)

@@ -19,11 +19,10 @@ from __future__ import annotations
 import warnings
 
 import numpy as np
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..backend import dispatch_strategy, resolve_backend
-from ..tensor_io import IMAGE_ID, VAL, TensorFrame, decode_volume, encode_volume
+from ..tensor_io import IMAGE_ID, VAL, TensorFrame, _active_spark, decode_volume, encode_volume
 from ..utils import normalize_num_threads
 
 __all__ = ["interp1d"]
@@ -139,10 +138,7 @@ class interp1d:
             self._ytf = None
             self._spark = None
             return
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            raise RuntimeError("No active SparkSession; call get_spark() first")
-        self._spark = spark
+        spark = self._spark = _active_spark()
         # Encode once at construction: repeated __call__ reuses the cached
         # distributed y (the class-based API exists precisely for reuse).
         self._ytf = encode_volume(spark, y.astype(np.float64, copy=False))

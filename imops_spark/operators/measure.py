@@ -20,13 +20,23 @@ from __future__ import annotations
 from typing import Sequence
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..backend import dispatch_strategy, resolve_backend
-from ..tensor_io import IMAGE_ID, VAL, TensorFrame, decode_volume, encode_volume
+from ..kernels import center_of_mass_numpy, connectivity_offsets, label_numpy
+from ..tensor_io import (
+    IMAGE_ID,
+    VAL,
+    TensorFrame,
+    _active_spark,
+    decode_volume,
+    encode_volume,
+    map_blobs,
+)
 from ..utils import normalize_num_threads
+from .morphology import _offsets_df
 
 __all__ = [
     "center_of_mass",
@@ -78,38 +88,30 @@ def center_of_mass(
     array = np.asarray(array)
     if array.dtype == bool:
         array = array.astype(np.float64)
-
-    # Single-volume ndarray input: 'auto' size-dispatches — the per-image
-    # kernel below the task-size threshold, the distributed voxel-table plan
-    # above it (or when the caller forces 'join').
-    if dispatch_strategy(strategy, array.nbytes) == "udf":
-        from ..kernels import center_of_mass_numpy
-
-        if labels is None:
-            return center_of_mass_numpy(array)
+    if labels is not None:
         labels = np.asarray(labels)
         if labels.shape != array.shape:
             raise ValueError("labels must have the same shape as the input array")
         if index is None:
             index = [int(v) for v in np.unique(labels) if v != 0]
+
+    # Single-volume ndarray input: 'auto' size-dispatches — the per-image
+    # kernel below the task-size threshold, the distributed voxel-table plan
+    # above it (or when the caller forces 'join').
+    if dispatch_strategy(strategy, array.nbytes) == "udf":
+        if labels is None:
+            return center_of_mass_numpy(array)
         if np.isscalar(index):
             return center_of_mass_numpy(array, labels, [int(index)])[0]
         return center_of_mass_numpy(array, labels, index)
 
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("No active SparkSession; call get_spark() first")
+    spark = _active_spark()
     tf = encode_volume(spark, array.astype(np.float64, copy=False))
 
     if labels is None:
         row = center_of_mass_df(tf).collect()[0]
         return tuple(float(row[f"c{k}"]) for k in range(tf.ndim))
 
-    labels = np.asarray(labels)
-    if labels.shape != array.shape:
-        raise ValueError("labels must have the same shape as the input array")
-    if index is None:
-        index = [int(v) for v in np.unique(labels) if v != 0]
     scalar = np.isscalar(index)
     index_list = [int(index)] if scalar else [int(v) for v in index]
 
@@ -128,28 +130,6 @@ def center_of_mass(
 # label
 # ---------------------------------------------------------------------------
 
-def connectivity_offsets(ndim: int, connectivity: int) -> list[tuple[int, ...]]:
-    """Positive-direction neighbor offsets for a given connectivity.
-
-    connectivity c: neighbors differing in at most c axes by +-1
-    (reference translation table `measure.py:22-29`).  Only lexicographically
-    positive offsets are returned (each undirected edge generated once).
-    """
-    if not 1 <= connectivity <= ndim:
-        raise ValueError(
-            f"Connectivity for {ndim}D image should be in [1, ..., {ndim}], got {connectivity}"
-        )
-    offsets = []
-    for raw in np.ndindex(*([3] * ndim)):
-        off = tuple(int(v) - 1 for v in raw)
-        nz = [v for v in off if v != 0]
-        if not nz or len(nz) > connectivity:
-            continue
-        if off > tuple([0] * ndim):  # lexicographic positivity
-            offsets.append(off)
-    return offsets
-
-
 def label_df(
     tf: TensorFrame,
     background: int = 0,
@@ -165,7 +145,6 @@ def label_df(
     ndim = tf.ndim
     connectivity = ndim if connectivity is None else connectivity
     offsets = connectivity_offsets(ndim, connectivity)
-    spark = tf.df.sparkSession
 
     # Linear raster id doubles as the initial component id.
     lin = None
@@ -181,10 +160,7 @@ def label_df(
     fg = fg.localCheckpoint()
 
     # Edge list: one shuffle join per build; offsets are a tiny broadcast.
-    off_df = spark.createDataFrame(
-        [tuple(int(v) for v in o) for o in offsets],
-        schema=", ".join(f"o{k} int" for k in range(ndim)),
-    )
+    off_df = _offsets_df(tf.df.sparkSession, offsets, ndim)
     shifted = fg.crossJoin(F.broadcast(off_df)).select(
         IMAGE_ID,
         *[(F.col(c) + F.col(f"o{k}")).alias(c) for k, c in enumerate(tf.coords)],
@@ -218,8 +194,6 @@ def label_df(
 def label_blobs(blobs: DataFrame, background: int = 0, connectivity: int | None = None) -> DataFrame:
     """Connected-component labeling per image over a blob table (udf
     strategy): one vectorized pass per image inside Arrow tasks."""
-    from ..kernels import label_numpy
-    from ..tensor_io import map_blobs
 
     def run(arr):
         labels, _ = label_numpy(arr, background=background, connectivity=connectivity)
@@ -271,46 +245,24 @@ def label(
     # 'auto' size-dispatch: a volume that fits one task must not pay the
     # multi-round distributed CC fixpoint; oversized volumes still take it.
     if dispatch_strategy(strategy, arr.nbytes) == "udf":
-        from ..kernels import label_numpy
-
-        labeled64, n = label_numpy(
+        labeled, n = label_numpy(
             arr.astype(np.int64), background=background, connectivity=connectivity
         )
-        sizes_arr = np.bincount(labeled64[labeled64 > 0]) if n else np.zeros(1, np.int64)
-        out_dtype = np.dtype(dtype) if dtype is not None else _min_label_dtype(max(n, 1))
-        labeled = labeled64.astype(out_dtype)
-        if squeeze_1d:
-            labeled = labeled[0]
-        res = [labeled]
-        if return_num:
-            res.append(int(n))
-        if return_labels:
-            res.append(np.arange(1, int(n) + 1, dtype=out_dtype))
-        if return_sizes:
-            res.append(sizes_arr[1:].astype(np.int64))
-        return res[0] if len(res) == 1 else tuple(res)
+    else:
+        tf = encode_volume(_active_spark(), arr.astype(np.int64))
+        out_df = label_df(tf, background=background, connectivity=connectivity)
+        labeled = decode_volume(
+            tf.with_df(out_df.withColumnRenamed("label", VAL)), default=0
+        )
+        n = int(labeled.max(initial=0))  # labels are dense 1..N
 
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("No active SparkSession; call get_spark() first")
-    tf = encode_volume(spark, arr.astype(np.int64))
-    out_df = label_df(tf, background=background, connectivity=connectivity)
-
-    n = out_df.agg(F.max("label")).collect()[0][0] or 0
     out_dtype = np.dtype(dtype) if dtype is not None else _min_label_dtype(max(n, 1))
-    labeled_tf = TensorFrame(
-        df=out_df.withColumnRenamed("label", VAL), shape=tf.shape, dtype=out_dtype
-    )
-    labeled = decode_volume(labeled_tf, default=0)
-    if squeeze_1d:
-        labeled = labeled[0]
-
-    res = [labeled]
+    out = labeled.astype(out_dtype)
+    res = [out[0] if squeeze_1d else out]
     if return_num:
         res.append(int(n))
     if return_labels:
         res.append(np.arange(1, int(n) + 1, dtype=out_dtype))
     if return_sizes:
-        sizes_rows = out_df.groupBy("label").count().orderBy("label").collect()
-        res.append(np.array([r["count"] for r in sizes_rows], dtype=np.int64))
+        res.append(np.bincount(labeled.ravel(), minlength=n + 1)[1:].astype(np.int64))
     return res[0] if len(res) == 1 else tuple(res)

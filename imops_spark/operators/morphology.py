@@ -28,7 +28,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..backend import dispatch_strategy, resolve_backend
-from ..tensor_io import IMAGE_ID, VAL, TensorFrame, decode_volume, encode_volume
+from ..tensor_io import (
+    IMAGE_ID,
+    VAL,
+    TensorFrame,
+    _active_spark,
+    _blob_arrays,
+    decode_volume,
+    encode_volume,
+)
 from ..utils import normalize_num_threads
 
 __all__ = [
@@ -67,15 +75,34 @@ def _offsets_df(spark: SparkSession, offsets, ndim: int) -> DataFrame:
     return spark.createDataFrame([tuple(int(v) for v in o) for o in offsets], schema=schema)
 
 
-def _shift(tf: TensorFrame, src: DataFrame, sign: int) -> DataFrame:
-    """Shift coords by sign*offset and keep in-bounds rows."""
-    out = src.select(
+def _shift_join(
+    tf: TensorFrame, src: DataFrame, offsets, sign: int, flag: str, val, margin=None
+) -> TensorFrame:
+    """Shift ``src`` coords by ``sign`` * each offset, keep in-bounds rows and
+    flag each hit coordinate once; then left-join the flags onto the dense
+    grid, where ``val`` (an expression of the ``flag`` column) gives each
+    row's value.  With a box ``margin`` only the grid inside each image's
+    grown box joins; rows outside it are literal False."""
+    offs = F.broadcast(_offsets_df(tf.df.sparkSession, offsets, tf.ndim))
+    shifted = src.crossJoin(offs).select(
         IMAGE_ID,
         *[(F.col(c) + sign * F.col(f"o{k}")).alias(c) for k, c in enumerate(tf.coords)],
     )
     for k, c in enumerate(tf.coords):
-        out = out.filter((F.col(c) >= 0) & (F.col(c) < tf.shape[k]))
-    return out
+        shifted = shifted.filter((F.col(c) >= 0) & (F.col(c) < tf.shape[k]))
+    flags = shifted.groupBy(IMAGE_ID, *tf.coords).agg(F.lit(True).alias(flag))
+    if margin is None:
+        grid, grid_out = tf.df.select(IMAGE_ID, *tf.coords), None
+    else:
+        grid, grid_out = _split_grid_by_box(tf, margin)
+    out = grid.join(flags, on=[IMAGE_ID, *tf.coords], how="left").select(
+        IMAGE_ID, *tf.coords, val.alias(VAL)
+    )
+    if grid_out is not None:
+        out = out.unionByName(
+            grid_out.select(IMAGE_ID, *tf.coords, F.lit(False).alias(VAL))
+        )
+    return tf.with_df(out)
 
 
 def _image_boxes_df(tf: TensorFrame) -> DataFrame:
@@ -103,15 +130,21 @@ def _split_grid_by_box(tf: TensorFrame, margin) -> tuple[DataFrame, DataFrame]:
     grid = tf.df.select(IMAGE_ID, *tf.coords).join(
         F.broadcast(boxes), on=IMAGE_ID, how="left"
     )
-    inside = F.col("lo0").isNotNull()
+    inside = _in_box(tf, margin, F.col("lo0").isNotNull())
+    keep = [IMAGE_ID, *tf.coords]
+    return grid.filter(inside).select(*keep), grid.filter(~inside | F.col("lo0").isNull()).select(*keep)
+
+
+def _in_box(tf: TensorFrame, margin, pred):
+    """``pred`` AND coords inside the joined ``lo{k}``/``hi{k}`` box grown by
+    ``margin``."""
     for k, c in enumerate(tf.coords):
-        inside = (
-            inside
+        pred = (
+            pred
             & (F.col(c) >= F.col(f"lo{k}") - int(margin[k]))
             & (F.col(c) <= F.col(f"hi{k}") + int(margin[k]))
         )
-    keep = [IMAGE_ID, *tf.coords]
-    return grid.filter(inside).select(*keep), grid.filter(~inside | F.col("lo0").isNull()).select(*keep)
+    return pred
 
 
 def _require_center_for_boxed(footprint: np.ndarray) -> bool:
@@ -139,28 +172,10 @@ def binary_dilation_df(
     true set, never a cropped array, so no border fallback is needed).
     """
     footprint = generate_binary_structure(tf.ndim, 1) if footprint is None else footprint
-    offsets = footprint_offsets(footprint)
-    spark = tf.df.sparkSession
     trues = tf.df.filter(F.col(VAL)).select(IMAGE_ID, *tf.coords)
-    shifted = trues.crossJoin(F.broadcast(_offsets_df(spark, offsets, tf.ndim)))
-    hits = (
-        _shift(tf, shifted, +1)
-        .groupBy(IMAGE_ID, *tf.coords)
-        .agg(F.lit(True).alias("__hit"))
-    )
-    if boxed:
-        delta = np.array(np.asarray(footprint).shape) // 2
-        grid, grid_out = _split_grid_by_box(tf, delta)
-    else:
-        grid, grid_out = tf.df.select(IMAGE_ID, *tf.coords), None
-    out = grid.join(hits, on=[IMAGE_ID, *tf.coords], how="left").select(
-        IMAGE_ID, *tf.coords, F.coalesce(F.col("__hit"), F.lit(False)).alias(VAL)
-    )
-    if grid_out is not None:
-        out = out.unionByName(
-            grid_out.select(IMAGE_ID, *tf.coords, F.lit(False).alias(VAL))
-        )
-    return tf.with_df(out)
+    margin = np.array(np.asarray(footprint).shape) // 2 if boxed else None
+    hit = F.coalesce(F.col("__hit"), F.lit(False))
+    return _shift_join(tf, trues, footprint_offsets(footprint), +1, "__hit", hit, margin)
 
 
 def binary_erosion_df(
@@ -187,39 +202,17 @@ def binary_erosion_df(
     """
     footprint = generate_binary_structure(tf.ndim, 1) if footprint is None else footprint
     boxed = boxed and _require_center_for_boxed(footprint)
-    offsets = footprint_offsets(footprint)
-    spark = tf.df.sparkSession
     falses = tf.df.filter(~F.col(VAL)).select(IMAGE_ID, *tf.coords)
+    margin = None
     if boxed:
         delta = np.array(np.asarray(footprint).shape) // 2
         # grid pruned to the TIGHT box (margin 0): eroded-true => true voxel.
-        grid, grid_out = _split_grid_by_box(tf, np.zeros(tf.ndim, dtype=int))
+        margin = np.zeros(tf.ndim, dtype=int)
         # kills hitting the tight box come from falses within radius of it.
-        boxes = _image_boxes_df(tf)
-        fb = falses.join(F.broadcast(boxes), on=IMAGE_ID, how="inner")
-        near = F.lit(True)
-        for k, c in enumerate(tf.coords):
-            near = (
-                near
-                & (F.col(c) >= F.col(f"lo{k}") - int(delta[k]))
-                & (F.col(c) <= F.col(f"hi{k}") + int(delta[k]))
-            )
-        falses = fb.filter(near).select(IMAGE_ID, *tf.coords)
-    else:
-        grid, grid_out = tf.df.select(IMAGE_ID, *tf.coords), None
-    kills = (
-        _shift(tf, falses.crossJoin(F.broadcast(_offsets_df(spark, offsets, tf.ndim))), -1)
-        .groupBy(IMAGE_ID, *tf.coords)
-        .agg(F.lit(True).alias("__kill"))
-    )
-    out = grid.join(kills, on=[IMAGE_ID, *tf.coords], how="left").select(
-        IMAGE_ID, *tf.coords, F.col("__kill").isNull().alias(VAL)
-    )
-    if grid_out is not None:
-        out = out.unionByName(
-            grid_out.select(IMAGE_ID, *tf.coords, F.lit(False).alias(VAL))
-        )
-    return tf.with_df(out)
+        fb = falses.join(F.broadcast(_image_boxes_df(tf)), on=IMAGE_ID, how="inner")
+        falses = fb.filter(_in_box(tf, delta, F.lit(True))).select(IMAGE_ID, *tf.coords)
+    kill = F.col("__kill").isNull()
+    return _shift_join(tf, falses, footprint_offsets(footprint), -1, "__kill", kill, margin)
 
 
 def _np_op(op_name):
@@ -282,8 +275,7 @@ def _morph_wrapper(op_name, df_op):
                 # Per-image vectorized kernel — the reference's Scipy-backend
                 # analog; on blob tables this runs inside Arrow tasks.
                 return _np_op(op_name)(sub, np.asarray(footprint))
-            spark = SparkSession.getActiveSession()
-            tf = encode_volume(spark, sub)
+            tf = encode_volume(_active_spark(), sub)
             return decode_volume(df_op(tf, np.asarray(footprint)), default=False)
 
         if boxed:
@@ -722,37 +714,32 @@ def edt_blobs(
     def run(batches):
         import pyarrow as pa
 
-        for batch in batches:
-            cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-            for k in range(batch.num_rows):
-                shape = cols["shape"][k].as_py()
-                dt = np.dtype(cols["dtype"][k].as_py())
-                arr = np.frombuffer(cols["data"][k].as_buffer(), dtype=dt).reshape(shape)
-                res = edt_numpy(
-                    arr, sampling,
-                    return_distances=return_distances, return_indices=return_indices,
-                )
-                if return_distances and return_indices:
-                    dist, idx = res
-                elif return_indices:
-                    dist, idx = None, res
-                else:
-                    dist, idx = res, None
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([cols["image_id"][k].as_py()], type=pa.int64()),
-                        pa.array([[int(s) for s in shape]], type=pa.list_(pa.int32())),
-                        pa.array(
-                            [dist.astype(np.float32).tobytes() if dist is not None else None],
-                            type=pa.binary(),
-                        ),
-                        pa.array(
-                            [idx.astype(np.int32).tobytes() if idx is not None else None],
-                            type=pa.binary(),
-                        ),
-                    ],
-                    names=["image_id", "shape", "distances", "indices"],
-                )
+        for image_id, arr in _blob_arrays(batches):
+            res = edt_numpy(
+                arr, sampling,
+                return_distances=return_distances, return_indices=return_indices,
+            )
+            if return_distances and return_indices:
+                dist, idx = res
+            elif return_indices:
+                dist, idx = None, res
+            else:
+                dist, idx = res, None
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([image_id], type=pa.int64()),
+                    pa.array([[int(s) for s in arr.shape]], type=pa.list_(pa.int32())),
+                    pa.array(
+                        [dist.astype(np.float32).tobytes() if dist is not None else None],
+                        type=pa.binary(),
+                    ),
+                    pa.array(
+                        [idx.astype(np.int32).tobytes() if idx is not None else None],
+                        type=pa.binary(),
+                    ),
+                ],
+                names=["image_id", "shape", "distances", "indices"],
+            )
 
     return image_df.mapInArrow(
         run, "image_id long, shape array<int>, distances binary, indices binary"

@@ -22,6 +22,9 @@ from ..tensor_io import (
     IMAGE_ID,
     VAL,
     TensorFrame,
+    _active_spark,
+    _explode_axis,
+    _val_lit,
     coord_cols,
     decode_volume,
     encode_volume,
@@ -69,7 +72,7 @@ def pointwise_add(nums, summand, output=None, num_threads: int = -1, backend=Non
     _check_dtype(nums.dtype)
     if nums.ndim > 4:
         raise ValueError(f"pointwise_add supports ndim<=4, got {nums.ndim}")
-    spark = SparkSession.getActiveSession()
+    spark = _active_spark()
     work_dtype = np.float64 if nums.dtype == np.float16 else nums.dtype
     tf = encode_volume(spark, nums.astype(work_dtype, copy=False))
     if isinstance(summand, np.ndarray) and summand.ndim > 0:
@@ -105,17 +108,8 @@ def full_df(
         F.lit(image_id).cast("long").alias(IMAGE_ID), F.col("id").cast("int").alias("i0")
     )
     for k, s in enumerate(shape[1:], start=1):
-        # sequence(0, s-1) descends for s == 0 — a zero axis must yield an
-        # empty grid, not coordinates 0 and -1.
-        seq = F.sequence(F.lit(0), F.lit(s - 1)) if s > 0 else F.array().cast("array<int>")
-        df = df.withColumn(f"i{k}", F.explode(seq))
-    if dtype == np.bool_:
-        lit = F.lit(bool(fill_value))
-    elif dtype.kind in "iu":
-        lit = F.lit(int(fill_value)).cast("long")
-    else:
-        lit = F.lit(float(fill_value)).cast("double")
-    df = df.select(IMAGE_ID, *coord_cols(len(shape)), lit.alias(VAL))
+        df = _explode_axis(df, f"i{k}", s)
+    df = df.select(IMAGE_ID, *coord_cols(len(shape)), _val_lit(fill_value, dtype).alias(VAL))
     return TensorFrame(df=df, shape=shape, dtype=dtype)
 
 
@@ -127,8 +121,7 @@ def full(shape, fill_value, dtype=None, order: str = "C", num_threads: int = -1,
     fill = np.asarray(fill_value)
     if dtype is None:
         dtype = fill.dtype
-    spark = SparkSession.getActiveSession()
-    tf = full_df(spark, shape, fill.item(), dtype=dtype)
+    tf = full_df(_active_spark(), shape, fill.item(), dtype=dtype)
     return decode_volume(tf)
 
 
@@ -137,13 +130,7 @@ def fill_(nums, value, num_threads: int = -1, backend=None):
     divergence from the reference's in-place ``numeric.py:195-253``)."""
     resolve_backend(backend)
     if isinstance(nums, TensorFrame):
-        dtype = nums.dtype
-        if dtype == np.bool_:
-            lit = F.lit(bool(value))
-        elif np.dtype(dtype).kind in "iu":
-            lit = F.lit(int(value)).cast("long")
-        else:
-            lit = F.lit(float(value)).cast("double")
+        lit = _val_lit(value, nums.dtype)
         return nums.with_df(nums.df.select(IMAGE_ID, *nums.coords, lit.alias(VAL)))
     nums = np.asarray(nums)
     out = np.empty_like(nums)

@@ -16,13 +16,18 @@ scalar to stay inside codegen).
 
 from __future__ import annotations
 
-from typing import Callable
-
 import numpy as np
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..tensor_io import IMAGE_ID, VAL, TensorFrame, decode_volume, encode_volume
+from ..tensor_io import (
+    IMAGE_ID,
+    VAL,
+    TensorFrame,
+    _active_spark,
+    _val_lit,
+    decode_volume,
+    encode_volume,
+)
 from ..utils import axis_from_dim, broadcast_axis, fill_by_indices
 
 __all__ = ["pad", "pad_to_shape", "pad_to_divisible", "restore_crop", "pad_df"]
@@ -75,7 +80,6 @@ def pad_df(tf: TensorFrame, padding: np.ndarray, fill_value) -> TensorFrame:
     """Distributed pad of a voxel table by ``[ndim, 2]`` widths, scalar fill."""
     padding = np.asarray(padding)
     new_shape = tuple(int(s + padding[k].sum()) for k, s in enumerate(tf.shape))
-    spark = tf.df.sparkSession
 
     shifted = tf.df.select(
         IMAGE_ID,
@@ -84,6 +88,7 @@ def pad_df(tf: TensorFrame, padding: np.ndarray, fill_value) -> TensorFrame:
     )
 
     images = tf.df.select(IMAGE_ID).distinct()
+    fill = _val_lit(fill_value, tf.dtype)
     fill_parts = []
     for slab in _fill_slabs(new_shape, padding):
         part = images
@@ -92,12 +97,7 @@ def pad_df(tf: TensorFrame, padding: np.ndarray, fill_value) -> TensorFrame:
                 f"i{k}",
                 F.explode(F.sequence(F.lit(int(start)), F.lit(int(stop) - 1))),
             )
-        lit = F.lit(bool(fill_value) if tf.dtype == np.bool_ else fill_value)
-        if tf.dtype != np.bool_ and np.dtype(tf.dtype).kind in "iu":
-            lit = lit.cast("long")
-        elif tf.dtype != np.bool_:
-            lit = lit.cast("double")
-        fill_parts.append(part.select(IMAGE_ID, *tf.coords, lit.alias(VAL)))
+        fill_parts.append(part.select(IMAGE_ID, *tf.coords, fill.alias(VAL)))
 
     out = shifted
     for part in fill_parts:
@@ -136,8 +136,7 @@ def pad(x, padding, axis=None, padding_values=0, num_threads: int = -1, backend=
 
     scalar = pv.item() if pv.ndim == 0 else pv.ravel()[0].item()
     if arr_mode:
-        spark = SparkSession.getActiveSession()
-        tf = encode_volume(spark, arr)
+        tf = encode_volume(_active_spark(), arr)
         return decode_volume(pad_df(tf, padding, scalar))
     return pad_df(x, padding, scalar)
 

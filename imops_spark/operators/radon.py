@@ -21,11 +21,11 @@ Spark design (SURVEY.md §2.1 #13-14):
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..backend import dispatch_strategy, resolve_backend
-from ..tensor_io import IMAGE_ID, VAL, TensorFrame, decode_volume, encode_volume
+from ..tensor_io import IMAGE_ID, VAL, TensorFrame, _active_spark, decode_volume, encode_volume
 from ..utils import normalize_num_threads
 
 __all__ = ["radon", "inverse_radon"]
@@ -140,7 +140,7 @@ def radon(
 
     limits = (((squared[:, None] + squared[None, :]) > (radius + 2) ** 2).sum(0) // 2).astype(int)
 
-    spark = SparkSession.getActiveSession()
+    spark = _active_spark()
     tf = encode_volume(spark, image)  # coords: i0=slice, i1=row, i2=col
 
     rad = np.deg2rad(theta)
@@ -343,7 +343,7 @@ def inverse_radon(
     min_val = float(img_shape // 2)
     right_lim = img_shape - 1
 
-    spark = SparkSession.getActiveSession()
+    spark = _active_spark()
     # Filtered sinogram as (slice, angle, pos) voxel table.
     ftf = encode_volume(spark, np.ascontiguousarray(np.moveaxis(filtered, -1, -2)))
     ang_rows = [(int(k), float(sins[k]), float(coss[k])) for k in range(n_angles)]

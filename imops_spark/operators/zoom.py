@@ -22,19 +22,30 @@ both partition on coordinates so 100 TB of images stream through.
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..backend import dispatch_strategy, resolve_backend
-from ..tensor_io import IMAGE_ID, VAL, TensorFrame, decode_volume, encode_volume
+from ..kernels import _zoom_coef, _zoom_shape, spline_zoom_numpy, zoom_numpy
+from ..tensor_io import (
+    IMAGE_ID,
+    VAL,
+    TensorFrame,
+    _active_spark,
+    _explode_axis,
+    _val_lit,
+    blobs_to_voxels,
+    decode_volume,
+    encode_volume,
+    map_blobs,
+    voxels_to_blobs,
+)
 from ..utils import broadcast_axis, normalize_num_threads
 
 __all__ = ["zoom", "zoom_to_shape", "zoom_df"]
-
-
-def _adjusted_coef(old_n: int, new_n: int) -> float:
-    return float(old_n) if new_n == 1 else (old_n - 1) / (new_n - 1)
 
 
 def _target_grid(spark: SparkSession, image_ids_df, new_shape):
@@ -46,14 +57,7 @@ def _target_grid(spark: SparkSession, image_ids_df, new_shape):
     )
     df = df.crossJoin(base)
     for k, s in enumerate(new_shape[1:], start=1):
-        # sequence(0, s-1) descends for s == 0 — degenerate axes must yield
-        # an empty grid, not bogus coordinates 0 and -1.
-        seq = (
-            F.sequence(F.lit(0), F.lit(int(s) - 1))
-            if int(s) > 0
-            else F.array().cast("array<int>")
-        )
-        df = df.withColumn(f"j{k}", F.explode(seq))
+        df = _explode_axis(df, f"j{k}", s)
     return df
 
 
@@ -65,9 +69,8 @@ def zoom_df(
 ) -> TensorFrame:
     """Rescale every image in a voxel table by per-axis factors."""
     ndim = tf.ndim
-    scale = np.broadcast_to(np.asarray(scale_factor, dtype=float), (ndim,))
-    new_shape = tuple(int(round(s * z)) for s, z in zip(tf.shape, scale))
-    coefs = [_adjusted_coef(tf.shape[k], new_shape[k]) for k in range(ndim)]
+    new_shape = _zoom_shape(tf.shape, scale_factor)
+    coefs = [_zoom_coef(tf.shape[k], new_shape[k]) for k in range(ndim)]
     spark = tf.df.sparkSession
 
     images = tf.df.select(IMAGE_ID).distinct()
@@ -87,19 +90,12 @@ def zoom_df(
             sel = sel.withColumn(
                 f"i{k}", F.when(use_max, F.col(f"f{k}") + 1).otherwise(F.col(f"f{k}"))
             )
-        src = tf.df
-        if tf.dtype == np.bool_:
-            fill_lit = F.lit(bool(fill_value))
-        elif np.dtype(tf.dtype).kind in "iu":
-            fill_lit = F.lit(int(fill_value)).cast("long")
-        else:
-            fill_lit = F.lit(float(fill_value)).cast("double")
         out = (
-            sel.join(src, on=[IMAGE_ID, *tf.coords], how="left")
+            sel.join(tf.df, on=[IMAGE_ID, *tf.coords], how="left")
             .select(
                 IMAGE_ID,
                 *[F.col(f"j{k}").alias(f"i{k}") for k in range(ndim)],
-                F.coalesce(F.col(VAL), fill_lit).alias(VAL),
+                F.coalesce(F.col(VAL), _val_lit(fill_value, tf.dtype)).alias(VAL),
             )
         )
         return TensorFrame(df=out, shape=new_shape, dtype=tf.dtype)
@@ -120,8 +116,7 @@ def zoom_df(
         weight = weight * w_k
         g = g.withColumn(f"i{k}", (F.col(f"f{k}") + F.col(f"b{k}")))
     g = g.withColumn("w", weight)
-    src = tf.df
-    joined = g.join(src, on=[IMAGE_ID, *tf.coords], how="left")
+    joined = g.join(tf.df, on=[IMAGE_ID, *tf.coords], how="left")
     # Out-of-bounds corners read fill_value (get_pixel* cval semantics).
     contrib = F.col("w") * F.coalesce(F.col(VAL), F.lit(float(fill_value)))
     out = (
@@ -135,6 +130,17 @@ def zoom_df(
     )
     out_dtype = tf.dtype if np.dtype(tf.dtype).kind == "f" else np.dtype(np.float64)
     return TensorFrame(df=out, shape=new_shape, dtype=out_dtype)
+
+
+def _warn_scipy_fallback() -> None:
+    """The reference's warning when it delegates to scipy.ndimage.zoom
+    (zoom.py:229-251); raised from inside :func:`zoom`."""
+    warnings.warn(
+        "Fast zoom is only supported for ndim<=4, dtype=fp32-fp64 and "
+        "bool-int16-32-64-uint8-16-32 if order == 0, output=None, order=0 or 1 , "
+        "mode='constant', grid_mode=False. Falling back to scipy's implementation.",
+        stacklevel=3,
+    )
 
 
 def zoom(
@@ -171,20 +177,7 @@ def zoom(
             # prefilter+B-spline kernel per blob (one Arrow task per image,
             # embarrassingly parallel at any corpus size), re-explode to a
             # voxel table.
-            import warnings
-
-            from ..kernels import spline_zoom_numpy
-            from ..tensor_io import blobs_to_voxels, map_blobs, voxels_to_blobs
-
-            warnings.warn(
-                "Fast zoom is only supported for ndim<=4, dtype=fp32-fp64 and "
-                "bool-int16-32-64-uint8-16-32 if order == 0, output=None, order=0 or 1 , "
-                "mode='constant', grid_mode=False. Falling back to scipy's implementation.",
-                stacklevel=2,
-            )
-            new_shape = tuple(
-                int(round(s * z)) for s, z in zip(x.shape, full_scale)
-            )
+            _warn_scipy_fallback()
             fv = float(fill_value)
 
             def _spline(a: np.ndarray) -> np.ndarray:
@@ -194,7 +187,7 @@ def zoom(
                 ).astype(a.dtype, copy=False)
 
             out_blobs = map_blobs(voxels_to_blobs(x), _spline)
-            return blobs_to_voxels(out_blobs, new_shape, x.dtype)
+            return blobs_to_voxels(out_blobs, _zoom_shape(x.shape, full_scale), x.dtype)
         return zoom_df(x, full_scale, order=order, fill_value=float(fill_value))
     arr = np.asarray(x)
     if order > 1 or arr.ndim > 4:
@@ -203,16 +196,7 @@ def zoom(
         # of raising.  The reference delegates to scipy.ndimage.zoom; this
         # container has no scipy, so the same published algorithm (Unser
         # prefilter + B-spline evaluation) runs in vectorized numpy.
-        import warnings
-
-        from ..kernels import spline_zoom_numpy
-
-        warnings.warn(
-            "Fast zoom is only supported for ndim<=4, dtype=fp32-fp64 and "
-            "bool-int16-32-64-uint8-16-32 if order == 0, output=None, order=0 or 1 , "
-            "mode='constant', grid_mode=False. Falling back to scipy's implementation.",
-            stacklevel=2,
-        )
+        _warn_scipy_fallback()
         res = spline_zoom_numpy(arr, full_scale, order=order, fill_value=float(fill_value))
         return res.astype(arr.dtype, copy=False)  # scipy writes into input-dtype output
     cast_back = None
@@ -222,28 +206,18 @@ def zoom(
         # output array of the INPUT dtype (C-cast truncation).  scipy's
         # grid_mode=False mapping is the same (old-1)/(new-1) convention we
         # use, so only the final cast differs — replicate warning + cast.
-        import warnings
-
-        warnings.warn(
-            "Fast zoom is only supported for ndim<=4, dtype=fp32-fp64 and "
-            "bool-int16-32-64-uint8-16-32 if order == 0, output=None, order=0 or 1 , "
-            "mode='constant', grid_mode=False. Falling back to scipy's implementation.",
-            stacklevel=2,
-        )
+        _warn_scipy_fallback()
         cast_back = arr.dtype
         arr = arr.astype(np.float64)
     if dispatch_strategy(resolve_backend(backend), arr.nbytes) == "udf":
-        from ..kernels import zoom_numpy
-
         res = zoom_numpy(
             arr, full_scale, order=order, fill_value=float(fill_value), num_threads=n_threads
         )
         if order == 0:
             return res.astype(arr.dtype, copy=False)
         return res.astype(cast_back or arr.dtype, copy=False)
-    spark = SparkSession.getActiveSession()
     work = arr.astype(np.float64) if order == 1 else arr
-    tf = encode_volume(spark, work)
+    tf = encode_volume(_active_spark(), work)
     out = zoom_df(tf, full_scale, order=order, fill_value=float(fill_value))
     res = decode_volume(out, default=fill_value)
     if order == 0:

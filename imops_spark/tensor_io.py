@@ -17,6 +17,14 @@ Two physical encodings (SURVEY.md §1.4), both used by operators:
 fp16 note: Spark has no half type; logical fp16 is stored as float32 (voxel) or
 as raw bytes with ``dtype='float16'`` (blob) — the same "carry the logical type
 out-of-band" trick the reference uses for fp16 (`numeric.py:182-185`).
+
+Every operator shares one private codec for both encodings:
+``_voxel_schema`` (schema plus the ``logical_dtype``/``shape`` metadata),
+``_voxel_rows`` (one image's voxel rows and typed ``val``), ``_dense_array``
+(voxel rows back to a C-order array), ``_blob_arrays`` (zero-copy
+``(image_id, array)`` per blob row of an Arrow batch), ``_val_lit`` (a typed
+``val`` literal), ``_explode_axis`` (a generated grid axis) and
+``_active_spark`` (the session every ndarray wrapper encodes into).
 """
 
 from __future__ import annotations
@@ -109,35 +117,82 @@ def encode_volumes(spark: SparkSession, arrays: dict[int, np.ndarray]) -> Tensor
     if len(shapes) != 1 or len(dtypes) != 1:
         raise ValueError("encode_volumes requires uniform shape and dtype")
     (shape,), (dtype,) = shapes, dtypes
-    ndim = len(shape)
-    frames = []
-    for image_id, arr in arrays.items():
-        arr = np.ascontiguousarray(arr)
-        idx = np.indices(shape).reshape(ndim, -1)
-        data = {IMAGE_ID: np.full(idx.shape[1], image_id, dtype=np.int64)}
-        for k in range(ndim):
-            data[f"i{k}"] = idx[k].astype(np.int32)
-        flat = arr.ravel()
-        if dtype == np.bool_:
-            data[VAL] = flat
-        elif dtype.kind in "iu":
-            data[VAL] = flat.astype(np.int64)
-        elif dtype == np.float16:
-            data[VAL] = flat.astype(np.float32)
-        else:
-            data[VAL] = flat.astype(np.float64)
-        frames.append(pd.DataFrame(data))
-    pdf = pd.concat(frames, ignore_index=True)
-    # Logical tensor metadata rides in the val column's schema metadata, so a
-    # bare DataFrame handoff (including a parquet write/read round-trip, which
-    # preserves Spark schema metadata in the footer) keeps enough to rebuild
-    # the TensorFrame — see tensor_frame_from_df.
+    pdf = pd.concat(
+        [_voxel_rows(i, np.ascontiguousarray(a), dtype) for i, a in arrays.items()],
+        ignore_index=True,
+    )
+    df = spark.createDataFrame(pdf, schema=_voxel_schema(shape, dtype))
+    return TensorFrame(df=df, shape=tuple(shape), dtype=dtype)
+
+
+def _voxel_schema(shape, dtype: np.dtype) -> T.StructType:
+    """Voxel-table schema.  Logical tensor metadata rides in the val column's
+    schema metadata, so a bare DataFrame handoff (including a parquet
+    write/read round-trip, which preserves Spark schema metadata in the
+    footer) keeps enough to rebuild the TensorFrame — see
+    tensor_frame_from_df."""
     meta = {"logical_dtype": str(dtype), "shape": [int(s) for s in shape]}
     fields = [T.StructField(IMAGE_ID, T.LongType(), False)]
-    fields += [T.StructField(c, T.IntegerType(), False) for c in coord_cols(ndim)]
+    fields += [T.StructField(c, T.IntegerType(), False) for c in coord_cols(len(shape))]
     fields += [T.StructField(VAL, _spark_val_type(dtype), False, metadata=meta)]
-    df = spark.createDataFrame(pdf, schema=T.StructType(fields))
-    return TensorFrame(df=df, shape=tuple(shape), dtype=dtype)
+    return T.StructType(fields)
+
+
+def _voxel_rows(image_id: int, arr: np.ndarray, dtype: np.dtype) -> pd.DataFrame:
+    """One image's voxel rows, ``val`` typed for the logical ``dtype``
+    (bool, int64, fp16 as float32, else float64)."""
+    idx = np.indices(arr.shape).reshape(arr.ndim, -1)
+    data = {IMAGE_ID: np.full(idx.shape[1], image_id, dtype=np.int64)}
+    for k in range(arr.ndim):
+        data[f"i{k}"] = idx[k].astype(np.int32)
+    flat = arr.ravel()
+    if dtype == np.bool_:
+        data[VAL] = flat.astype(np.bool_)
+    elif dtype.kind in "iu":
+        data[VAL] = flat.astype(np.int64)
+    elif dtype == np.float16:
+        data[VAL] = flat.astype(np.float32)
+    else:
+        data[VAL] = flat.astype(np.float64)
+    return pd.DataFrame(data)
+
+
+def _dense_array(pdf: pd.DataFrame, coords, shape, dtype, default) -> np.ndarray:
+    """Voxel rows -> C-order array; missing coordinates read ``default``."""
+    out = np.full(shape, default, dtype=dtype)
+    if len(pdf):
+        idx = tuple(pdf[c].to_numpy(dtype=np.int64) for c in coords)
+        out[idx] = pdf[VAL].to_numpy().astype(dtype, copy=False)
+    return out
+
+
+def _active_spark() -> SparkSession:
+    """The active session, which every ndarray wrapper encodes into."""
+    spark = SparkSession.getActiveSession()
+    if spark is None:
+        raise RuntimeError("No active SparkSession; call get_spark() first")
+    return spark
+
+
+def _val_lit(value, dtype):
+    """``value`` as a ``val`` literal typed for ``dtype``."""
+    if dtype == np.bool_:
+        return F.lit(bool(value))
+    if np.dtype(dtype).kind in "iu":
+        return F.lit(int(value)).cast("long")
+    return F.lit(float(value)).cast("double")
+
+
+def _explode_axis(df: DataFrame, name: str, size: int) -> DataFrame:
+    """Add coordinate column ``name`` = 0..size-1, one row per value."""
+    # sequence(0, s-1) descends for s == 0 — a zero axis must yield an empty
+    # grid, not coordinates 0 and -1.
+    seq = (
+        F.sequence(F.lit(0), F.lit(int(size) - 1))
+        if int(size) > 0
+        else F.array().cast("array<int>")
+    )
+    return df.withColumn(name, F.explode(seq))
 
 
 def tensor_frame_from_df(df: DataFrame) -> TensorFrame:
@@ -165,11 +220,7 @@ def decode_volume(
     voxels) are filled with ``default``.
     """
     pdf = tf.df.filter(F.col(IMAGE_ID) == image_id).select(*tf.coords, VAL).toPandas()
-    out = np.full(tf.shape, default, dtype=tf.dtype)
-    if len(pdf):
-        idx = tuple(pdf[c].to_numpy(dtype=np.int64) for c in tf.coords)
-        out[idx] = pdf[VAL].to_numpy().astype(tf.dtype, copy=False)
-    return out
+    return _dense_array(pdf, tf.coords, tf.shape, tf.dtype, default)
 
 
 # ---------------------------------------------------------------------------
@@ -206,6 +257,18 @@ def decode_blobs(df: DataFrame) -> dict[int, np.ndarray]:
     return out
 
 
+def _blob_arrays(batches) -> Iterator[tuple[int, np.ndarray]]:
+    """``(image_id, array)`` per blob row of each Arrow batch; the array is a
+    zero-copy view of the blob payload."""
+    for batch in batches:
+        cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
+        for k in range(batch.num_rows):
+            shape = cols["shape"][k].as_py()
+            dt = np.dtype(cols["dtype"][k].as_py())
+            buf = cols["data"][k].as_buffer()
+            yield cols[IMAGE_ID][k].as_py(), np.frombuffer(buf, dtype=dt).reshape(shape)
+
+
 def map_blobs(
     df: DataFrame,
     fn: Callable[[np.ndarray], np.ndarray],
@@ -226,27 +289,21 @@ def map_blobs(
     def run(batches):
         import pyarrow as pa
 
-        for batch in batches:
-            cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-            for k in range(batch.num_rows):
-                shape = cols["shape"][k].as_py()
-                dt = np.dtype(cols["dtype"][k].as_py())
-                buf = cols["data"][k].as_buffer()  # zero-copy view of the blob
-                arr = np.frombuffer(buf, dtype=dt).reshape(shape)
-                res = np.ascontiguousarray(fn(arr))
-                offsets = np.array([0, res.nbytes], dtype=np.int32)
-                data_arr = pa.Array.from_buffers(
-                    pa.binary(), 1, [None, pa.py_buffer(offsets), pa.py_buffer(res)]
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([cols[IMAGE_ID][k].as_py()], type=pa.int64()),
-                        pa.array([[int(s) for s in res.shape]], type=pa.list_(pa.int32())),
-                        pa.array([str(res.dtype)], type=pa.string()),
-                        data_arr,
-                    ],
-                    names=[IMAGE_ID, "shape", "dtype", "data"],
-                )
+        for image_id, arr in _blob_arrays(batches):
+            res = np.ascontiguousarray(fn(arr))
+            offsets = np.array([0, res.nbytes], dtype=np.int32)
+            data_arr = pa.Array.from_buffers(
+                pa.binary(), 1, [None, pa.py_buffer(offsets), pa.py_buffer(res)]
+            )
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([image_id], type=pa.int64()),
+                    pa.array([[int(s) for s in res.shape]], type=pa.list_(pa.int32())),
+                    pa.array([str(res.dtype)], type=pa.string()),
+                    data_arr,
+                ],
+                names=[IMAGE_ID, "shape", "dtype", "data"],
+            )
 
     return df.mapInArrow(run, schema=schema)
 
@@ -265,14 +322,10 @@ def voxels_to_blobs(tf: TensorFrame, default: float | int | bool = 0) -> DataFra
     """
     shape = tf.shape
     dtype = np.dtype(tf.dtype)
-    ndim = tf.ndim
-    cols = coord_cols(ndim)
+    cols = tf.coords
 
     def densify(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = np.full(shape, default, dtype=dtype)
-        if len(pdf):
-            idx = tuple(pdf[c].to_numpy(dtype=np.int64) for c in cols)
-            out[idx] = pdf[VAL].to_numpy().astype(dtype, copy=False)
+        out = _dense_array(pdf, cols, shape, dtype, default)
         return pd.DataFrame(
             {
                 IMAGE_ID: [int(pdf[IMAGE_ID].iloc[0])],
@@ -294,12 +347,6 @@ def blobs_to_voxels(df: DataFrame, shape, dtype) -> TensorFrame:
     """
     shape = tuple(int(s) for s in shape)
     dtype = np.dtype(dtype)
-    ndim = len(shape)
-    meta = {"logical_dtype": str(dtype), "shape": [int(s) for s in shape]}
-    fields = [T.StructField(IMAGE_ID, T.LongType(), False)]
-    fields += [T.StructField(c, T.IntegerType(), False) for c in coord_cols(ndim)]
-    fields += [T.StructField(VAL, _spark_val_type(dtype), False, metadata=meta)]
-    out_schema = T.StructType(fields)
 
     def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -308,26 +355,10 @@ def blobs_to_voxels(df: DataFrame, shape, dtype) -> TensorFrame:
                 arr = np.frombuffer(
                     pdf["data"].iloc[r], dtype=np.dtype(pdf["dtype"].iloc[r])
                 ).reshape(row_shape)
-                idx = np.indices(arr.shape).reshape(arr.ndim, -1)
-                data = {
-                    IMAGE_ID: np.full(
-                        idx.shape[1], int(pdf[IMAGE_ID].iloc[r]), dtype=np.int64
-                    )
-                }
-                for k in range(arr.ndim):
-                    data[f"i{k}"] = idx[k].astype(np.int32)
-                flat = arr.ravel()
-                if dtype == np.bool_:
-                    data[VAL] = flat.astype(np.bool_)
-                elif dtype.kind in "iu":
-                    data[VAL] = flat.astype(np.int64)
-                elif dtype == np.float16:
-                    data[VAL] = flat.astype(np.float32)
-                else:
-                    data[VAL] = flat.astype(np.float64)
-                yield pd.DataFrame(data)
+                yield _voxel_rows(int(pdf[IMAGE_ID].iloc[r]), arr, dtype)
 
-    return TensorFrame(df=df.mapInPandas(explode, schema=out_schema), shape=shape, dtype=dtype)
+    out = df.mapInPandas(explode, schema=_voxel_schema(shape, dtype))
+    return TensorFrame(df=out, shape=shape, dtype=dtype)
 
 
 def load_npy_gz(path: str) -> np.ndarray:

@@ -9,10 +9,10 @@ import os
 from typing import Sequence
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .tensor_io import IMAGE_ID, VAL, TensorFrame, decode_volume, encode_volume
+from .tensor_io import IMAGE_ID, VAL, TensorFrame, _active_spark, decode_volume, encode_volume
 
 __all__ = [
     "isin",
@@ -241,10 +241,7 @@ def isin(
         raise ValueError(
             f"Input array dtype must be one of int16, int32, int64, got {element.dtype}"
         )
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("No active SparkSession; call get_spark() first")
-    tf = encode_volume(spark, element.astype(np.int64))
+    tf = encode_volume(_active_spark(), element.astype(np.int64))
     test_list = [int(v) for v in np.asarray(test_elements).ravel()]
     marked = isin_df(tf.df, VAL, test_list)
     out_tf = TensorFrame(

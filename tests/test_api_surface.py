@@ -110,3 +110,64 @@ def test_vector_search_mechanisms_have_one_owner():
         for needle in ('Window.partitionBy("query_id")', "np.partition(", 'kind="stable"')
     }
     assert counts == dict.fromkeys(counts, 1), counts
+
+
+def test_tensor_layer_mechanisms_have_one_owner():
+    """The tensor layer's session lookup, scipy-fallback warning, zoom
+    output shape, connectivity offsets, voxel-table metadata, generated grid
+    axis and zero-copy blob read each appear exactly once across
+    ``tensor_io.py``, ``kernels.py``, ``utils.py`` and ``operators/*.py``:
+    every caller uses the one owner."""
+    import pathlib
+
+    import imops_spark
+
+    root = pathlib.Path(imops_spark.__file__).parent
+    files = [root / "tensor_io.py", root / "kernels.py", root / "utils.py"]
+    src = "".join(p.read_text() for p in files + sorted((root / "operators").glob("*.py")))
+    needles = (
+        "getActiveSession(", "Falling back to scipy", "round(s * z)",
+        "np.ndindex(*([3]", '"logical_dtype": str(', "F.sequence(F.lit(0), F.lit(",
+        "as_buffer()",
+    )
+    counts = {needle: src.count(needle) for needle in needles}
+    assert counts == dict.fromkeys(counts, 1), counts
+
+
+def test_wrappers_without_a_session_raise_runtime_error(monkeypatch):
+    """Every ndarray wrapper that needs Spark raises the same RuntimeError
+    when no session is active, instead of failing on a ``None`` session."""
+    import numpy as np
+    from pyspark.sql import SparkSession
+
+    import imops_spark as im
+
+    monkeypatch.setattr(SparkSession, "getActiveSession", staticmethod(lambda: None))
+    a = np.arange(36, dtype=np.float64).reshape(6, 6)
+    mask = a > 20
+    disk = np.zeros((8, 8))
+    disk[3:5, 3:5] = 1.0
+    calls = {
+        "zoom": lambda: im.zoom(a, 2, backend="join"),
+        "pad": lambda: im.pad(a, 1, backend="join"),
+        "binary_dilation": lambda: im.binary_dilation(mask, backend="join"),
+        "crop_to_shape": lambda: im.crop_to_shape(a, (3, 3)),
+        "crop_to_box": lambda: im.crop_to_box(a, np.array([[1, 1], [4, 4]])),
+        "full": lambda: im.full((3, 3), 1.5, backend="join"),
+        "radon": lambda: im.radon(disk, backend="join"),
+        "label": lambda: im.label(mask, backend="join"),
+        "center_of_mass": lambda: im.center_of_mass(a, backend="join"),
+        "pointwise_add": lambda: im.pointwise_add(a, 1.0, backend="join"),
+        "isin": lambda: im.isin(a.astype(np.int64), [3, 4]),
+    }
+    wrong = {}
+    for name, call in calls.items():
+        try:
+            call()
+        except Exception as e:  # noqa: BLE001 - any other failure is reported
+            if isinstance(e, RuntimeError) and "No active SparkSession" in str(e):
+                continue
+            wrong[name] = repr(e)
+        else:
+            wrong[name] = "returned"
+    assert not wrong, wrong

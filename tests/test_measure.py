@@ -98,6 +98,19 @@ def test_label_sizes_and_labels(spark):
     assert_array_equal(sizes, exp_sizes)
 
 
+def test_label_join_num_labels_sizes(spark):
+    """The distributed path's num, labels and sizes match the oracle."""
+    a = np.random.randint(0, 3, size=(7, 8))
+    got, num, labels_arr, sizes = label(
+        a, return_num=True, return_labels=True, return_sizes=True, backend="join"
+    )
+    exp, n = np_label(a)
+    assert num == n
+    assert_array_equal(got.astype(np.int64), exp)
+    assert_array_equal(labels_arr, np.arange(1, n + 1))
+    assert_array_equal(sizes, np.bincount(exp.ravel())[1:])
+
+
 def test_label_background(spark):
     a = np.random.randint(0, 3, size=(8, 8))
     got = label(a, background=2)
@@ -213,3 +226,48 @@ def test_connected_components_long_path_graph(spark):
             for r in connected_components_df(edf, driver_solve_threshold=thr).collect()
         }
         assert got == {i: 0 for i in range(400)}, thr
+
+
+def _serpentine(n):
+    """One component winding through an n x n grid: full corridors on even
+    rows, each joined to the next by one gap at alternating ends, so its
+    geodesic diameter is about n^2 / 2."""
+    a = np.zeros((n, n), dtype=bool)
+    a[::2] = True
+    for r in range(1, n, 2):
+        a[r, -1 if (r // 2) % 2 == 0 else 0] = True
+    return a
+
+
+def test_label_numpy_serpentine_is_not_diameter_bound():
+    """Min-label propagation alone needs sweeps in proportion to the
+    component's diameter (~32k voxels here); the pointer jump after each
+    sweep keeps this 256^2 serpentine well inside 5 s."""
+    import time
+
+    from imops_spark.kernels import label_numpy
+
+    a = _serpentine(256)
+    t0 = time.perf_counter()
+    got, n = label_numpy(a)
+    elapsed = time.perf_counter() - t0
+    want, n_want = np_label(a)
+    assert n == n_want == 1
+    assert_array_equal(got, want)
+    assert elapsed < 5.0, elapsed
+
+
+def test_label_numpy_matches_oracle_on_bench_masks():
+    """``label_blobs``' benchmark inputs (the seed-1 ellipsoid masks of the
+    ``imaging`` workload): the benchmark checks ``label_blobs`` against
+    ``label_numpy`` itself, so this flood fill is the independent check."""
+    from imops_spark.kernels import label_numpy
+    from perfbench.workloads import BLOB_SHAPES, Imaging
+
+    masks = Imaging("").volumes(1)[1]
+    assert [m.shape for m in masks.values()] == list(BLOB_SHAPES)
+    for mask in masks.values():
+        got, n = label_numpy(mask)
+        want, n_want = np_label(mask)
+        assert n == n_want
+        assert_array_equal(got, want)
