@@ -1762,25 +1762,25 @@ def classifier_train_df(
     scalar intercept.
 
     Distribution shape per step (``steps`` jobs, each ONE pass over the
-    persisted feature frame — the bias gradient rides the weight-gradient
-    aggregation on a sentinel bucket, never a second corpus pass): the
-    current weights ship as one broadcast
-    dense-array row (O(1) ``element_at`` lookups, no join key); each
-    document computes its probability
-    ROW-LOCALLY, then explodes its feature buckets carrying the residual
-    share ``(p - y)/n_feats`` and a map-side-combined ``groupBy(bucket)``
-    reduces the gradient to ``<= B`` rows collected on the driver.  The
-    corpus is feature-hashed ONCE up front and persisted as compact
+    persisted feature frame, with no shuffle stage): the current weights
+    ship in the pass's UDF closure; every partition scores its documents
+    ROW-LOCALLY in NumPy (``add.reduceat`` of the weight gathers per
+    document), spreads the residual share ``(p - y)/n_feats`` over its
+    feature buckets with one ``bincount``, and yields ONE dense
+    ``B``-gradient plus the bias gradient; the driver adds the partials.
+    The corpus is feature-hashed ONCE up front and persisted as compact
     ``(y, fb array<int>)`` rows; driver state is the B-float weight
     vector — the model, never the data (MLlib's LogisticRegression loop
     has the same shape).  Nothing quadratic, no per-row Python.
 
-    Determinism note: gradient sums are float reductions in shuffle
-    order, so trained weights are run-to-run identical only up to float
-    association — this is a TRAINING op (tested by loss descent +
-    held-out accuracy), not a hash-gated one; APPLY stays exactly
-    deterministic given fixed weights.  NULL-label, NULL-text, and
-    zero-token rows are excluded.
+    Determinism note: the driver adds the per-partition partials in
+    partition order, so trained weights are run-to-run identical for a
+    fixed input partitioning; a different partitioning regroups the
+    float sums and moves the weights in the last bits.  They are float
+    values either way, so this is a TRAINING op (tested by loss descent,
+    held-out accuracy and a Python re-derivation of the update rule), not
+    a hash-gated one; APPLY stays exactly deterministic given fixed
+    weights.  NULL-label, NULL-text, and zero-token rows are excluded.
     """
     _check_args(num_buckets=num_buckets)
     B = int(num_buckets)
@@ -1813,8 +1813,8 @@ def classifier_train_early_stop_df(
     where ``history`` is the per-step dev-loss trace (its length tells
     you when training stopped) and the returned weights are the BEST
     snapshot, not the last — the standard guard against overfitting past
-    the dev minimum.  Same determinism caveat as the base trainer (float
-    gradient order); the dev trace is what tests pin instead."""
+    the dev minimum.  Same determinism note as the base trainer (identical
+    per fixed partitioning, float-valued); the dev trace is what tests pin."""
     _check_args(num_buckets=num_buckets)
     B = int(num_buckets)
     if max_steps < 1:
@@ -1853,14 +1853,45 @@ def _labeled_features(docs, label_col, salt, B):
     return lab.selectExpr("y", f"{feat} AS fb")
 
 
-# sigmoid of the row-local mean-weight fold — shared by the gradient and
-# the dev-loss evaluation so both score EXACTLY the same model
-def _fold_prob_sql(bias: float) -> str:
-    return (
-        f"CAST(1 AS DOUBLE) / (CAST(1 AS DOUBLE) + EXP(CAST(0 AS DOUBLE)"
-        f" - ({bias!r}D + aggregate(fb, CAST(0 AS DOUBLE),"
-        f" (a, b) -> a + element_at(__w, b + 1)) / size(fb))))"
-    )
+def _train_pass(frame: DataFrame, w: "object", bias: float):
+    """One full-batch pass of the classifier over a persisted ``(y, fb)``
+    frame at weights ``w`` (a ``B``-long float vector, shipped in the UDF
+    closure) and ``bias``: ``p = sigmoid(bias + mean w[fb])`` per document,
+    residual ``r = p - y``.  Returns ``(weight_grad, bias_grad, loss_sum)``:
+    the summed residual shares ``r / n_feats`` per bucket, the summed
+    ``r``, and the summed clipped log-loss.  Each partition accumulates its
+    batches into ONE ``B + 2``-double row (one Spark job, no shuffle); the
+    driver adds the partials in partition order, so a fixed input
+    partitioning gives run-to-run identical sums.  The gradient step and
+    the dev-loss evaluation both call this, so both score the same model."""
+    import numpy as np
+    import pandas as pd
+
+    B = len(w)
+
+    def run(batches):
+        acc = np.zeros(B + 2)
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            nf = pdf["fb"].map(len).to_numpy()
+            fb = np.concatenate(pdf["fb"].to_numpy())
+            y = pdf["y"].to_numpy(dtype=np.float64)
+            s = np.add.reduceat(w[fb], np.cumsum(nf) - nf)
+            p = 1.0 / (1.0 + np.exp(-(bias + s / nf)))
+            r = p - y
+            acc[:B] += np.bincount(fb, weights=np.repeat(r / nf, nf), minlength=B)
+            acc[B] += r.sum()
+            acc[B + 1] -= np.sum(
+                y * np.log(np.maximum(p, 1e-12))
+                + (1.0 - y) * np.log(np.maximum(1.0 - p, 1e-12))
+            )
+        yield pd.DataFrame({"g": [acc]})
+
+    tot = np.zeros(B + 2)
+    for row in frame.mapInPandas(run, schema="g array<double>").collect():
+        tot += row["g"]
+    return tot[:B], tot[B], tot[B + 1]
 
 
 def _classifier_train_impl(
@@ -1879,7 +1910,8 @@ def _classifier_train_impl(
         n_docs = base.count()  # also materializes the persisted features
         if n_docs == 0:
             raise ValueError("classifier_train_df: no labeled, tokenized rows")
-        if dev is not None and dev.count() == 0:
+        n_dev = dev.count() if dev is not None else 0
+        if dev is not None and n_dev == 0:
             raise ValueError("classifier_train_early_stop_df: empty dev set")
         w = np.zeros(B)
         bias = 0.0
@@ -1888,50 +1920,11 @@ def _classifier_train_impl(
         bad = 0
         history: list[float] = []
         for _ in range(int(steps)):
-            wdf = spark.createDataFrame(
-                [([float(x) for x in w],)], "__w array<double>"
-            )
-            resid = base.crossJoin(F.broadcast(wdf)).selectExpr(
-                "fb", f"{_fold_prob_sql(bias)} - y AS r"
-            )
-            # ONE action per step: a sentinel bucket -1 rides the explode
-            # carrying the undivided residual, so the bias gradient comes
-            # out of the same aggregation as the weight gradients (a
-            # separate agg(sum(r)) would re-run the sigmoid fold over the
-            # whole corpus — 2x passes per step, measured by review)
-            grad = (
-                resid.selectExpr(
-                    "explode(concat(fb, array(-1))) AS bucket",
-                    "r",
-                    "CAST(size(fb) AS DOUBLE) AS nf",
-                )
-                .selectExpr("bucket", "IF(bucket = -1, r, r / nf) AS g")
-                .groupBy("bucket")
-                .agg(F.sum("g").alias("g"))
-            )
-            gvec = np.zeros(B)
-            bias_g = 0.0
-            for row in grad.collect():
-                if row["bucket"] == -1:
-                    bias_g = row["g"]
-                else:
-                    gvec[row["bucket"]] = row["g"]
+            gvec, bias_g, _ = _train_pass(base, w, bias)
             w -= float(lr) * (gvec / n_docs + float(l2) * w)
             bias -= float(lr) * float(bias_g) / n_docs
             if dev is not None:
-                wdf2 = spark.createDataFrame(
-                    [([float(x) for x in w],)], "__w array<double>"
-                )
-                loss = float(
-                    dev.crossJoin(F.broadcast(wdf2))
-                    .selectExpr(f"{_fold_prob_sql(bias)} AS p", "y")
-                    .selectExpr(
-                        "-(y * LN(GREATEST(p, 1e-12D))"
-                        " + (1D - y) * LN(GREATEST(1D - p, 1e-12D))) AS l"
-                    )
-                    .agg(F.avg("l"))
-                    .collect()[0][0]
-                )
+                loss = float(_train_pass(dev, w, bias)[2] / n_dev)
                 history.append(loss)
                 # best snapshot tracks ANY improvement; patience counts
                 # only SIGNIFICANT ones (> min_delta vs the last

@@ -134,6 +134,22 @@ def test_tensor_layer_mechanisms_have_one_owner():
     assert counts == dict.fromkeys(counts, 1), counts
 
 
+def test_classifier_trainer_has_one_pass():
+    """The classifier trainer runs every gradient step and dev-loss
+    evaluation through one per-partition NumPy pass: ``functions/curate.py``
+    has no JVM ``element_at`` fold, and its one ``createDataFrame`` is the
+    returned weights frame (no per-step weight broadcast)."""
+    import pathlib
+
+    import imops_spark
+
+    src = (
+        pathlib.Path(imops_spark.__file__).parent / "functions" / "curate.py"
+    ).read_text()
+    assert src.count("element_at(") == 0
+    assert src.count("createDataFrame(") == 1
+
+
 def test_wrappers_without_a_session_raise_runtime_error(monkeypatch):
     """Every ndarray wrapper that needs Spark raises the same RuntimeError
     when no session is active, instead of failing on a ``None`` session."""
