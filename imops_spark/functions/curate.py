@@ -31,7 +31,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..backend import choose_form
-from .dedup import _md5_hash_col, _widen, drop_exact_duplicates, drop_near_duplicates_df
+from .dedup import (
+    _doc_kernel,
+    _md5_hash_col,
+    _widen,
+    drop_exact_duplicates,
+    drop_near_duplicates_df,
+    normalized_text,
+)
 from .text import bpe_token_count_df, quality_df
 
 __all__ = [
@@ -1013,8 +1020,6 @@ def _dsir_features(d: DataFrame, by_doc: bool = False) -> DataFrame:
     (toks), t -> ..)[0]``) — referencing an expression column inside a
     lambda body re-evaluates it per invocation otherwise (the
     CollapseProject trap, see dedup.simhash_df's 'local' fold comment)."""
-    from .dedup import normalized_text
-
     base = d.filter(F.col("text").isNotNull()).select(
         "doc_id", F.array_remove(F.split(normalized_text(), " "), "").alias("toks")
     )
@@ -1048,15 +1053,14 @@ def _dense_weights(wdf: DataFrame, col: str, B: int, fill: str = "0") -> "object
 
 
 def _feature_sum_arrow_df(
-    base: DataFrame, w: "object", salt: int, out_schema: str, finish
+    docs: DataFrame, w: "object", salt: int, fields: list, finish
 ) -> DataFrame:
     """The hashed-feature-sum Arrow kernel shared by DSIR scoring and
     classifier scoring: per document ``s = sum w[md5_60(salt|feat) %
     B]`` over its unigram + bigram features, ``B = len(w)``, with zero
-    scoring-side shuffles.  ``base`` is the operator's own input plan
-    (non-NULL ``text`` rows, with ``doc_id``); ``finish(n_feats, s)``
-    maps one batch's per-doc int64 arrays to the output columns after
-    ``doc_id`` (``out_schema``).
+    scoring-side shuffles.  ``finish(n_feats, s)`` maps one batch's
+    per-doc int64 arrays to the output columns after ``doc_id``
+    (``fields``, as ``(name, ddl_type)`` pairs).
 
     Exact parity with the JVM forms by construction:
 
@@ -1083,47 +1087,39 @@ def _feature_sum_arrow_df(
     ``w`` ships in the UDF closure: no broadcast variable outlives the
     query."""
     import numpy as np
-    import pandas as pd
 
-    from .dedup import normalized_text
     from .md5v import _MINHASH_CHUNK_SHINGLES as chunk_feats
+    from .md5v import fold_chunks, md5_top60_spans, tokenize_spaces
 
-    d = base.select("doc_id", F.trim(normalized_text()).alias("nt")).filter(
-        F.length("nt") > 0
-    )
-    id_type = dict(d.dtypes)["doc_id"]
     prefix = [f"{int(salt)}|".encode()]
     BB = np.uint64(len(w))
 
-    def run(batches):
-        from ._mem import ensure_malloc_tuning
-        from .md5v import fold_chunks, md5_top60_spans, tokenize_spaces
+    def batch(pdf):
+        data, ts, te, n = tokenize_spaces(pdf["nt"])
+        # per doc: u0 b01 u1 b12 .. u(n-1) — unigram i then the bigram
+        # it starts, except after the doc's last token
+        nxt_end = np.append(te[1:], 0)
+        keep = np.ones(2 * len(ts), dtype=bool)
+        keep[2 * np.cumsum(n) - 1] = False
+        f_start = np.repeat(ts, 2)[keep]
+        f_len = np.stack([te, nxt_end], axis=1).ravel()[keep] - f_start
+        m = 2 * n - 1
 
-        ensure_malloc_tuning()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue  # empty Arrow batches type columns wrong — skip
-            data, ts, te, n = tokenize_spaces(pdf["nt"])
-            # per doc: u0 b01 u1 b12 .. u(n-1) — unigram i then the bigram
-            # it starts, except after the doc's last token
-            nxt_end = np.append(te[1:], 0)
-            keep = np.ones(2 * len(ts), dtype=bool)
-            keep[2 * np.cumsum(n) - 1] = False
-            f_start = np.repeat(ts, 2)[keep]
-            f_len = np.stack([te, nxt_end], axis=1).ravel()[keep] - f_start
-            m = 2 * n - 1
+        def chunk_sums(s0, s1, seg):
+            (h,) = md5_top60_spans(data, f_start[s0:s1], f_len[s0:s1], prefix)
+            return np.add.reduceat(w[(h % BB).astype(np.int64)], seg)
 
-            def chunk_sums(s0, s1, seg):
-                (h,) = md5_top60_spans(data, f_start[s0:s1], f_len[s0:s1], prefix)
-                return np.add.reduceat(w[(h % BB).astype(np.int64)], seg)
+        sums = np.empty(len(pdf), dtype=np.int64)
+        fold_chunks(m, chunk_feats, chunk_sums, np.add, sums)
+        return slice(None), finish(m, sums)
 
-            sums = np.empty(len(pdf), dtype=np.int64)
-            fold_chunks(m, chunk_feats, chunk_sums, np.add, sums)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].values, **finish(m, sums)}
-            )
-
-    return d.mapInPandas(run, schema=f"doc_id {id_type}, {out_schema}")
+    return _doc_kernel(
+        docs,
+        fields,
+        lambda: batch,
+        nt=F.trim(normalized_text()),
+        where=F.length("nt") > 0,
+    )
 
 
 def dsir_logweights_df(
@@ -1244,7 +1240,6 @@ def dsir_feature_frame_df(
     derive EVERYTHING from this one frame instead of re-scanning the
     corpus for metadata.  Consumers prune them automatically."""
     from ..utils import quote_carry
-    from .dedup import normalized_text
 
     carry = quote_carry(carry, frozenset({"doc_id", "toks", "fh"}))
     base = docs.filter(F.col("text").isNotNull()).select(
@@ -1552,10 +1547,10 @@ def dsir_score_local_df(
         model.select("bucket", "lrm", "tt", "rt"), "lrm", "dsir_score_local_df"
     )
     return _feature_sum_arrow_df(
-        _widen(data.where(F.col("text").isNotNull())),
+        _widen(data),
         _dense_weights(unique, "lrm", B, _dsir_lrm_sql(a, a * B, tc="0", rc="0")),
         salt,
-        "n_feats long, logw_micro long",
+        [("n_feats", "long"), ("logw_micro", "long")],
         lambda n, s: {"n_feats": n, "logw_micro": s},
     )
 
@@ -1734,10 +1729,10 @@ def classifier_score_local_df(
         return {"n_feats": n, "logit_micro": lm, "prob": _sigmoid_round6_vec(lm)}
 
     return _feature_sum_arrow_df(
-        docs.filter(F.col("text").isNotNull()),
+        docs,
         _dense_weights(wm, "w_micro", int(num_buckets)),
         salt,
-        "n_feats bigint, logit_micro bigint, prob double",
+        [("n_feats", "bigint"), ("logit_micro", "bigint"), ("prob", "double")],
         finish,
     )
 
@@ -1836,8 +1831,6 @@ def classifier_train_early_stop_df(
 
 
 def _labeled_features(docs, label_col, salt, B):
-    from .dedup import normalized_text
-
     lab = (
         docs.filter(F.col("text").isNotNull() & F.col(label_col).isNotNull())
         .select(
@@ -2053,8 +2046,6 @@ def pack_sequences_df(
     if S <= 0:
         raise ValueError(f"n_shards must be positive, got {n_shards}")
     if n_tokens_col is None:
-        from .dedup import normalized_text
-
         n = F.size(F.array_remove(F.split(normalized_text(), " "), ""))
         base = docs.filter(F.col("text").isNotNull()).select(
             F.col(id_col), n.cast("long").alias("__n")
@@ -2130,8 +2121,6 @@ def pack_sequence_tokens_df(
     ``seq_id`` assembles pieces in ``seq_offset`` order (``array_sort``
     over structs — sequences are bounded by ``seq_len``, so the per-group
     state is a training sample, never a corpus)."""
-    from .dedup import normalized_text
-
     L = int(seq_len)
     if tokens_col is None:
         toks = docs.filter(F.col("text").isNotNull()).select(

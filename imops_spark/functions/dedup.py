@@ -90,6 +90,56 @@ def _widen(docs: DataFrame, key: str = "doc_id") -> DataFrame:
     return docs
 
 
+def _doc_kernel(docs, fields, make, carry=(), nt=None, where=None) -> DataFrame:
+    """The one ``mapInPandas`` boundary of the row-local text kernels.
+
+    - Rows with NULL ``text`` never reach the kernel.  The rest are
+      selected as ``(doc_id, *carry, nt)``, where ``nt`` is
+      :func:`normalized_text` unless the caller passes its own expression,
+      and ``where`` (a predicate over ``nt``) drops rows in the plan.
+    - The output is ``doc_id``, then the bare names in ``fields`` (input
+      columns passed through, typed from the input schema), then its
+      ``(name, ddl_type)`` pairs (the columns the kernel computes).
+    - Each task tunes the allocator once (``_mem.ensure_malloc_tuning``)
+      and calls ``make()`` once.  It returns the per-batch function, so
+      per-task state (token caches, broadcast values) lives for the task.
+    - The per-batch function maps a non-empty pandas batch to ``(rows,
+      cols)``: ``rows`` indexes the batch rows whose passthrough columns
+      lead the output rows (``slice(None)`` for one row per input row),
+      and ``cols`` holds the computed columns in ``fields`` order.
+    - Empty input batches are skipped and empty outputs are not yielded.
+    """
+    import pandas as pd
+
+    from ..utils import map_in_pandas_renamed
+
+    d = docs.where(F.col("text").isNotNull()).select(
+        "doc_id", *carry, (normalized_text() if nt is None else nt).alias("nt")
+    )
+    if where is not None:
+        d = d.filter(where)
+    types = {f.name: f.dataType.simpleString() for f in d.schema.fields}
+    keys = ["doc_id", *(f for f in fields if isinstance(f, str))]
+    out_fields = [(c, types[c]) for c in keys] + [
+        f for f in fields if not isinstance(f, str)
+    ]
+
+    def run(batches):
+        from ._mem import ensure_malloc_tuning
+
+        ensure_malloc_tuning()
+        per_batch = make()
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue  # empty Arrow batches type columns wrong — skip
+            rows, cols = per_batch(pdf)
+            res = pd.DataFrame({**{c: pdf[c].values[rows] for c in keys}, **cols})
+            if len(res):
+                yield res
+
+    return map_in_pandas_renamed(d, run, out_fields)
+
+
 def exact_dup_groups_df(docs: DataFrame) -> DataFrame:
     """Group documents by content hash: ``(content_hash, n_docs, min_doc_id)``."""
     return (
@@ -205,18 +255,8 @@ def _minhash_arrow_df(
     the simhash precedent).
     """
     import numpy as np
-    import pandas as pd
 
     n_salts = (num_hashes + 1) // 2
-    sh = _widen(docs.where(F.col("text").isNotNull())).select(
-        "doc_id", *carry, normalized_text().alias("nt")
-    )
-    carry_names = unquote_carry(carry)
-    out_cols = ["doc_id", *carry_names]
-    fields = {f.name: f.dataType.simpleString() for f in sh.schema.fields}
-    out_fields = [(c, fields[c]) for c in out_cols] + [
-        (f"mh{i}", "long") for i in range(num_hashes)
-    ]
     # salts grouped by decimal width: one pack per width, prefix rewritten
     # per salt ("{s}|" -> 2 bytes for s < 10, 3 for s < 100, ...)
     by_plen: dict = {}
@@ -224,56 +264,51 @@ def _minhash_arrow_df(
         by_plen.setdefault(len(str(s)) + 1, []).append(s)
     # read at plan build: tests shrink it to reach the oversized-doc path
     from .md5v import _MINHASH_CHUNK_SHINGLES as chunk_shingles
+    from .md5v import fold_chunks, md5_top60_spans, seg_starts, tokenize_spaces
 
-    def run(batches):
-        from ._mem import ensure_malloc_tuning
-        from .md5v import fold_chunks, md5_top60_spans, seg_starts, tokenize_spaces
+    def batch(pdf):
+        n_docs = len(pdf)
+        data, ts, te, n = tokenize_spaces(pdf["nt"])
+        tok_base = seg_starts(n)
+        # shingle i of doc d spans tokens [i, min(i + k - 1, n - 1)]
+        m = np.maximum(n - k, 0) + 1
+        sh_doc = np.repeat(np.arange(n_docs, dtype=np.int64), m)
+        i_in = np.arange(len(sh_doc), dtype=np.int64) - np.repeat(seg_starts(m), m)
+        sh_start = ts[tok_base[sh_doc] + i_in]
+        sh_len = (
+            te[tok_base[sh_doc] + np.minimum(i_in + k - 1, n[sh_doc] - 1)]
+            - sh_start
+        )
 
-        ensure_malloc_tuning()
-        for pdf in batches:
-            n_docs = len(pdf)
-            if n_docs == 0:
-                continue  # empty Arrow batches type columns wrong — skip
-            data, ts, te, n = tokenize_spaces(pdf["nt"])
-            tok_base = seg_starts(n)
-            # shingle i of doc d spans tokens [i, min(i + k - 1, n - 1)]
-            m = np.maximum(n - k, 0) + 1
-            sh_doc = np.repeat(np.arange(n_docs, dtype=np.int64), m)
-            i_in = np.arange(len(sh_doc), dtype=np.int64) - np.repeat(seg_starts(m), m)
-            sh_start = ts[tok_base[sh_doc] + i_in]
-            sh_len = (
-                te[tok_base[sh_doc] + np.minimum(i_in + k - 1, n[sh_doc] - 1)]
-                - sh_start
-            )
+        def chunk_mins(s0, s1, seg):
+            """Per-salt hashing + segmented minima over shingles
+            ``[s0, s1)``: the ``(num_hashes, len(seg))`` minima."""
+            out = np.empty((num_hashes, len(seg)), dtype=np.uint64)
+            for salts in by_plen.values():
+                hashes = md5_top60_spans(
+                    data,
+                    sh_start[s0:s1],
+                    sh_len[s0:s1],
+                    [f"{s}|".encode() for s in salts],
+                    both=True,
+                )
+                for s, (lo, hi) in zip(salts, hashes):
+                    out[2 * s] = np.minimum.reduceat(lo, seg)
+                    if 2 * s + 1 < num_hashes:
+                        out[2 * s + 1] = np.minimum.reduceat(hi, seg)
+            return out
 
-            def chunk_mins(s0, s1, seg):
-                """Per-salt hashing + segmented minima over shingles
-                ``[s0, s1)``: the ``(num_hashes, len(seg))`` minima."""
-                out = np.empty((num_hashes, len(seg)), dtype=np.uint64)
-                for salts in by_plen.values():
-                    hashes = md5_top60_spans(
-                        data,
-                        sh_start[s0:s1],
-                        sh_len[s0:s1],
-                        [f"{s}|".encode() for s in salts],
-                        both=True,
-                    )
-                    for s, (lo, hi) in zip(salts, hashes):
-                        out[2 * s] = np.minimum.reduceat(lo, seg)
-                        if 2 * s + 1 < num_hashes:
-                            out[2 * s + 1] = np.minimum.reduceat(hi, seg)
-                return out
+        sigs = np.empty((num_hashes, n_docs), dtype=np.uint64)
+        fold_chunks(m, chunk_shingles, chunk_mins, np.minimum, sigs)
+        sigs = sigs.view(np.int64)
+        return slice(None), {f"mh{i}": sigs[i] for i in range(num_hashes)}
 
-            sigs = np.empty((num_hashes, n_docs), dtype=np.uint64)
-            fold_chunks(m, chunk_shingles, chunk_mins, np.minimum, sigs)
-            res = pd.DataFrame({c: pdf[c].values for c in out_cols})
-            for i in range(num_hashes):
-                res[f"mh{i}"] = sigs[i].view(np.int64)
-            yield res
-
-    from ..utils import map_in_pandas_renamed
-
-    return map_in_pandas_renamed(sh, run, out_fields)
+    return _doc_kernel(
+        _widen(docs),
+        unquote_carry(carry) + [(f"mh{i}", "long") for i in range(num_hashes)],
+        lambda: batch,
+        carry,
+    )
 
 
 def minhash_signatures_df(
@@ -439,21 +474,10 @@ def minhash_signatures_char_df(
         carry,
         _SHINGLE_RESERVED | {"nt"} | {f"mh{i}" for i in range(num_hashes)},
     )
-    d = _widen(docs.where(F.col("text").isNotNull())).select(
-        "doc_id", *carry, normalized_text().alias("nt")
-    ).filter(F.length("nt") >= k)
 
     import numpy as np
-    import pandas as pd
 
     from .xxh import xxh64_bytes, xxh64_chain_int, xxh64_rows, xxh64_sliding
-
-    carry_names = unquote_carry(carry)
-    out_cols = ["doc_id", *carry_names]
-    fields = {f.name: f.dataType.simpleString() for f in d.schema.fields}
-    out_fields = [(c, fields[c]) for c in out_cols] + [
-        (f"mh{i}", "long") for i in range(num_hashes)
-    ]
 
     # ~4M windows per numpy pass: bounds every temporary to ~32 MB while
     # amortizing numpy call overhead across thousands of documents — the
@@ -551,69 +575,63 @@ def minhash_signatures_char_df(
             sigs[i] = np.minimum.reduceat(xxh64_chain_int(base, i), seg_off)
         out_rows.append(sigs)
 
-    def run(batches):
-        from ._mem import ensure_malloc_tuning
-
-        ensure_malloc_tuning()  # >32MB chunk temporaries must recycle (_mem)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue  # empty Arrow batches type columns wrong — skip
-            nts = pdf["nt"]
-            ascii_ok = (
-                np.fromiter(
-                    (s.isascii() for s in nts), dtype=bool, count=len(nts)
-                )
-                if k < 32
-                else np.zeros(len(nts), dtype=bool)
+    def batch(pdf):
+        nts = pdf["nt"]
+        ascii_ok = (
+            np.fromiter(
+                (s.isascii() for s in nts), dtype=bool, count=len(nts)
             )
-            sig_parts: list = []
-            if ascii_ok.any():
-                bs_all = [nts.iloc[int(j)].encode() for j in np.nonzero(ascii_ok)[0]]
-                lo = 0
-                while lo < len(bs_all):
-                    hi, tot = lo, 0
-                    while hi < len(bs_all) and tot < chunk_windows:
-                        tot += len(bs_all[hi])
-                        hi += 1
-                    _sigs_chunk(bs_all[lo:hi], sig_parts)
-                    lo = hi
-            sigs_ascii = (
-                np.concatenate(sig_parts, axis=1)
-                if sig_parts
-                else np.empty((num_hashes, 0), dtype=np.int64)
-            )
-            # multi-byte docs (and ALL docs at k >= 32, where the
-            # sliding small-input path is unavailable) go through the
-            # width-grouped vectorized pass — same bits, same chunking
-            mb_parts: list = []
-            mb_pos = np.nonzero(~ascii_ok)[0]
-            if mb_pos.size:
-                ss_all = [nts.iloc[int(j)] for j in mb_pos]
-                lo = 0
-                while lo < len(ss_all):
-                    hi, tot = lo, 0
-                    while hi < len(ss_all) and tot < chunk_windows:
-                        tot += len(ss_all[hi])
-                        hi += 1
-                    _sigs_chunk_multibyte(ss_all[lo:hi], mb_parts)
-                    lo = hi
-            sigs_mb = (
-                np.concatenate(mb_parts, axis=1)
-                if mb_parts
-                else np.empty((num_hashes, 0), dtype=np.int64)
-            )
-            res = pd.DataFrame({c: pdf[c].values for c in out_cols})
-            fast_pos = np.nonzero(ascii_ok)[0]
-            for i in range(num_hashes):
-                col = np.empty(len(pdf), dtype=np.int64)
-                col[fast_pos] = sigs_ascii[i]
-                col[mb_pos] = sigs_mb[i]
-                res[f"mh{i}"] = col
-            yield res
+            if k < 32
+            else np.zeros(len(nts), dtype=bool)
+        )
+        sig_parts: list = []
+        if ascii_ok.any():
+            bs_all = [nts.iloc[int(j)].encode() for j in np.nonzero(ascii_ok)[0]]
+            lo = 0
+            while lo < len(bs_all):
+                hi, tot = lo, 0
+                while hi < len(bs_all) and tot < chunk_windows:
+                    tot += len(bs_all[hi])
+                    hi += 1
+                _sigs_chunk(bs_all[lo:hi], sig_parts)
+                lo = hi
+        sigs_ascii = (
+            np.concatenate(sig_parts, axis=1)
+            if sig_parts
+            else np.empty((num_hashes, 0), dtype=np.int64)
+        )
+        # multi-byte docs (and ALL docs at k >= 32, where the
+        # sliding small-input path is unavailable) go through the
+        # width-grouped vectorized pass — same bits, same chunking
+        mb_parts: list = []
+        mb_pos = np.nonzero(~ascii_ok)[0]
+        if mb_pos.size:
+            ss_all = [nts.iloc[int(j)] for j in mb_pos]
+            lo = 0
+            while lo < len(ss_all):
+                hi, tot = lo, 0
+                while hi < len(ss_all) and tot < chunk_windows:
+                    tot += len(ss_all[hi])
+                    hi += 1
+                _sigs_chunk_multibyte(ss_all[lo:hi], mb_parts)
+                lo = hi
+        sigs_mb = (
+            np.concatenate(mb_parts, axis=1)
+            if mb_parts
+            else np.empty((num_hashes, 0), dtype=np.int64)
+        )
+        sigs = np.empty((num_hashes, len(pdf)), dtype=np.int64)
+        sigs[:, ascii_ok] = sigs_ascii
+        sigs[:, ~ascii_ok] = sigs_mb
+        return slice(None), {f"mh{i}": sigs[i] for i in range(num_hashes)}
 
-    from ..utils import map_in_pandas_renamed
-
-    return map_in_pandas_renamed(d, run, out_fields)
+    return _doc_kernel(
+        _widen(docs),
+        unquote_carry(carry) + [(f"mh{i}", "long") for i in range(num_hashes)],
+        lambda: batch,
+        carry,
+        where=F.length("nt") >= k,
+    )
 
 
 def band_entries_df(
@@ -763,26 +781,18 @@ def _simhash_arrow_df(docs: DataFrame, bits: int) -> DataFrame:
     projection — no Python stage per micro-batch).
     """
     import numpy as np
-    import pandas as pd
 
     if not 1 <= int(bits) <= 62:
         raise ValueError(f"bits must be in [1, 62], got {bits}")
-    d = docs.where(F.col("text").isNotNull()).select(
-        "doc_id", normalized_text().alias("nt")
-    )
-    id_type = dict(d.dtypes)["doc_id"]
     pows = (np.int64(1) << np.arange(bits, dtype=np.int64)).reshape(-1, 1)
 
-    def run(batches):
-        from ._mem import ensure_malloc_tuning
+    def make():
         from .md5v import md5_top60_cached
 
-        ensure_malloc_tuning()
         tok_hash = md5_top60_cached(b"0|")
-        for pdf in batches:
+
+        def batch(pdf):
             n_rows = len(pdf)
-            if n_rows == 0:
-                continue
             # set == array_distinct here: the vote sum is order-invariant
             tok_sets = [set(nt.split(" ")) for nt in pdf["nt"]]
             lens = np.fromiter(
@@ -803,9 +813,11 @@ def _simhash_arrow_df(docs: DataFrame, bits: int) -> DataFrame:
                 np.bitwise_and(tmp, np.uint64(1), out=tmp)
                 votes[b] = np.add.reduceat(tmp, starts)
             sigs = ((votes * 2 > lens[None, :]) * pows).sum(axis=0)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "simhash": sigs})
+            return slice(None), {"simhash": sigs}
 
-    return d.mapInPandas(run, schema=f"doc_id {id_type}, simhash long")
+        return batch
+
+    return _doc_kernel(docs, [("simhash", "long")], make)
 
 
 def simhash_df(docs: DataFrame, bits: int = 32, strategy: str = "auto") -> DataFrame:

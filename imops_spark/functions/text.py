@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..backend import choose_form
 from ..utils import quote_carry, unquote_carry
-from .dedup import normalized_text
+from .dedup import _doc_kernel, _widen, normalized_text
 
 # internal aliases of the winnowing pipelines — carry columns may not shadow
 # these (quote_carry raises); see utils.quote_carry.
@@ -252,7 +252,7 @@ def _winnow_selected_window_df(
     tie-break, identical to the Arrow kernel's ``argmin``."""
     from pyspark.sql.window import Window
 
-    from .dedup import _gram_exchange_sizing, normalized_text
+    from .dedup import _gram_exchange_sizing
 
     norm = normalized_text()
     d = docs.select("doc_id", *carry, norm.alias("nt")).filter(
@@ -312,40 +312,22 @@ def _winnow_selected_arrow_df(
     the leftmost tie-break (``argmin`` returns the FIRST minimum — the
     same rule as ``min(struct(h, pos))``); otherwise the per-doc
     distinct fp set, exploded."""
-    import pandas as pd
-
-    from .dedup import normalized_text
     from .xxh import xxh64_bytes, xxh64_sliding
 
     _check_hash_fn(hash_fn)
     k, window = int(k), int(window)
-    d = docs.select("doc_id", *carry, normalized_text().alias("nt")).filter(
-        F.length("nt") >= k + window - 1
-    )
-    fields = {f.name: f.dataType.simpleString() for f in d.schema.fields}
-    carry_names = unquote_carry(carry)
-    out_cols = ["doc_id", *carry_names]
-    out_fields = [(c, fields[c]) for c in out_cols] + (
+    fields = unquote_carry(carry) + (
         [("pos", "int"), ("fp", "long")] if positional else [("fp", "long")]
     )
 
-    def run(batches):
-        from ._mem import ensure_malloc_tuning
+    def make():
         from .md5v import md5_top60_cached
 
-        ensure_malloc_tuning()
         md5_gram = md5_top60_cached()
-        for pdf in batches:
-            out = {c: [] for c in out_cols}
-            if positional:
-                out["pos"], out["fp"] = [], []
-            else:
-                out["fp"] = []
-            # zip over column Series, never itertuples: pandas renames
-            # non-identifier column names ('lang-id' -> '_1') in named
-            # tuples, and quote_carry explicitly admits such names
-            for vals in zip(pdf["nt"], *[pdf[c] for c in out_cols]):
-                nt, keys = vals[0], vals[1:]
+
+        def batch(pdf):
+            rows, pos_parts, fp_parts = [], [], []
+            for i, nt in enumerate(pdf["nt"]):
                 n_grams = len(nt) - k + 1
                 if hash_fn == "md5":
                     hs = np.fromiter(
@@ -376,22 +358,20 @@ def _winnow_selected_arrow_df(
                         sw.argmin(axis=1) + np.arange(len(mins)) + 1
                     ).astype(np.int32)
                     pairs = np.unique(np.stack([pos, mins.view(np.int64)], axis=1), axis=0)
-                    n_out = len(pairs)
+                    pos_parts.append(pairs[:, 0].astype(np.int32))
+                    fp_parts.append(pairs[:, 1])
                 else:
-                    fps = np.unique(mins)
-                    n_out = len(fps)
-                for c, v in zip(out_cols, keys):
-                    out[c].extend([v] * n_out)
-                if positional:
-                    out["pos"].extend(pairs[:, 0].astype(np.int32))
-                    out["fp"].extend(pairs[:, 1])
-                else:
-                    out["fp"].extend(fps)
-            yield pd.DataFrame(out)
+                    fp_parts.append(np.unique(mins))
+                rows.append(np.full(len(fp_parts[-1]), i))
+            cols = {"pos": np.concatenate(pos_parts)} if positional else {}
+            cols["fp"] = np.concatenate(fp_parts)
+            return np.concatenate(rows), cols
 
-    from ..utils import map_in_pandas_renamed
+        return batch
 
-    return map_in_pandas_renamed(d, run, out_fields)
+    return _doc_kernel(
+        docs, fields, make, carry, where=F.length("nt") >= k + window - 1
+    )
 
 
 def winnow_fp_set_df(
@@ -778,59 +758,42 @@ def _token_entropy_arrow_df(docs: DataFrame) -> DataFrame:
     test (test_minhash_char_entropy_arrow.py) pins kernel == JVM on
     adversarial near-tie inputs at every release of numpy this repo
     moves to."""
-    import pandas as pd
-
     from collections import Counter
 
-    from .dedup import normalized_text
+    def batch(pdf):
+        rows, n_tok, n_typ, hms, hs = [], [], [], [], []
+        for i, nt in enumerate(pdf["nt"]):
+            cnt = Counter(t for t in nt.split(" ") if t)
+            n = sum(cnt.values())
+            if n == 0:
+                continue
+            cs = np.fromiter(cnt.values(), dtype=np.int64, count=len(cnt))
+            p = cs / np.float64(n)
+            terms = (p * np.log(p)) * 1e6
+            rounded = _round_half_up_micro(terms)
+            at = np.abs(terms)
+            tie = np.abs((at % 1.0) - 0.5) < _ENTROPY_TIE_BAND
+            if tie.any():
+                for j in np.nonzero(tie)[0]:
+                    rounded[j] = _entropy_term_decimal(float(p[j]))
+            hm = -int(rounded.sum())
+            rows.append(i)
+            n_tok.append(n)
+            n_typ.append(len(cnt))
+            hms.append(hm)
+            hs.append(_round_half_up_r(hm / 1e6, 6))
+        return rows, {
+            "n_tokens": np.array(n_tok, dtype=np.int32),
+            "n_types": np.array(n_typ, dtype=np.int32),
+            "h_micro": np.array(hms, dtype=np.int64),
+            "h": np.array(hs, dtype=np.float64),
+        }
 
-    d = docs.filter(F.col("text").isNotNull()).select(
-        "doc_id", normalized_text().alias("nt")
+    return _doc_kernel(
+        docs,
+        [("n_tokens", "int"), ("n_types", "int"), ("h_micro", "long"), ("h", "double")],
+        lambda: batch,
     )
-    id_type = dict(d.dtypes)["doc_id"]
-    schema = (
-        f"doc_id {id_type}, n_tokens int, n_types int, h_micro long, h double"
-    )
-
-    def run(batches):
-        from ._mem import ensure_malloc_tuning
-
-        ensure_malloc_tuning()
-        for pdf in batches:
-            ids, n_tok, n_typ, hms, hs = [], [], [], [], []
-            for doc_id, nt in zip(pdf["doc_id"], pdf["nt"]):
-                cnt = Counter(t for t in nt.split(" ") if t)
-                n = sum(cnt.values())
-                if n == 0:
-                    continue
-                cs = np.fromiter(cnt.values(), dtype=np.int64, count=len(cnt))
-                p = cs / np.float64(n)
-                terms = (p * np.log(p)) * 1e6
-                rounded = _round_half_up_micro(terms)
-                at = np.abs(terms)
-                tie = np.abs((at % 1.0) - 0.5) < _ENTROPY_TIE_BAND
-                if tie.any():
-                    for j in np.nonzero(tie)[0]:
-                        rounded[j] = _entropy_term_decimal(float(p[j]))
-                hm = -int(rounded.sum())
-                ids.append(doc_id)
-                n_tok.append(n)
-                n_typ.append(len(cnt))
-                hms.append(hm)
-                hs.append(_round_half_up_r(hm / 1e6, 6))
-            if not ids:
-                continue  # empty Arrow batches type columns wrong — skip
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_tokens": pd.Series(n_tok, dtype="int32"),
-                    "n_types": pd.Series(n_typ, dtype="int32"),
-                    "h_micro": pd.Series(hms, dtype="int64"),
-                    "h": pd.Series(hs, dtype="float64"),
-                }
-            )
-
-    return d.mapInPandas(run, schema=schema)
 
 
 _BM25_PROP_PREFIX = "imops.bm25."
@@ -1474,10 +1437,7 @@ def _lm_score_arrow_df(docs: DataFrame, c2: DataFrame, a: float) -> DataFrame | 
     The removed work is the per-occurrence bigram explode, two model
     joins, and the corpus-wide doc aggregation.
     """
-    import pandas as pd
     from pyspark.sql.window import Window
-
-    from .dedup import _widen, normalized_text
 
     first = F.row_number().over(Window.partitionBy("cur").orderBy("prev")) == 1
     m = (
@@ -1502,21 +1462,13 @@ def _lm_score_arrow_df(docs: DataFrame, c2: DataFrame, a: float) -> DataFrame | 
     d1 = dict(zip(m["prev"].tolist(), m["lpm1"].tolist()))
     bc = docs.sparkSession.sparkContext.broadcast((d2, d1, int(m["lpm0"].iat[0])))
 
-    d = _widen(docs.filter(F.col("text").isNotNull())).select(
-        "doc_id", normalized_text().alias("nt")
-    )
-    id_type = dict(d.dtypes)["doc_id"]
-    schema = f"doc_id {id_type}, n_bigrams long, lp_micro_sum long"
-
-    def run(batches):
-        from ._mem import ensure_malloc_tuning
-
-        ensure_malloc_tuning()
+    def make():
         g2, g1, l0 = bc.value
         get2, get1 = g2.get, g1.get
-        for pdf in batches:
-            ids, ns, sums = [], [], []
-            for doc_id, nt in zip(pdf["doc_id"], pdf["nt"]):
+
+        def batch(pdf):
+            rows, ns, sums = [], [], []
+            for i, nt in enumerate(pdf["nt"]):
                 toks = [t for t in nt.split(" ") if t]
                 if not toks:
                     continue  # zero-token docs are not scored (agg parity)
@@ -1528,15 +1480,16 @@ def _lm_score_arrow_df(docs: DataFrame, c2: DataFrame, a: float) -> DataFrame | 
                         v2 = get1(prev, l0)
                     s += v2
                     prev = cur
-                ids.append(doc_id)
+                rows.append(i)
                 ns.append(len(toks))
                 sums.append(s)
-            if ids:
-                yield pd.DataFrame(
-                    {"doc_id": ids, "n_bigrams": ns, "lp_micro_sum": sums}
-                )
+            return rows, {"n_bigrams": ns, "lp_micro_sum": sums}
 
-    return d.mapInPandas(run, schema=schema)
+        return batch
+
+    return _doc_kernel(
+        _widen(docs), [("n_bigrams", "long"), ("lp_micro_sum", "long")], make
+    )
 
 
 def fingerprint_df(docs: DataFrame, prefix: int = 64) -> DataFrame:
@@ -1584,93 +1537,77 @@ def _repetition_arrow_df(
     stateless ``mapInPandas``; the gram rows never exist as exchange
     payload.
     """
-    import pandas as pd
+    from collections import Counter
 
     all_ns = sorted(set(top_ns) | set(dup_ns))
-    d = docs.filter(F.col("text").isNotNull()).select(
-        "doc_id", "text", normalized_text().alias("nt")
-    )
-    id_type = dict(d.dtypes)["doc_id"]
     top_cols = [f"top{n}gram_char_frac" for n in top_ns]
     dup_cols = [f"dup{n}gram_char_frac" for n in dup_ns]
-    schema = ", ".join(
-        [f"doc_id {id_type}", "n_chars long", "n_lines long",
-         "dup_line_frac double", "dup_line_char_frac double"]
-        + [f"{c} double" for c in top_cols + dup_cols]
-    )
+    fields = [
+        ("n_chars", "long"), ("n_lines", "long"),
+        ("dup_line_frac", "double"), ("dup_line_char_frac", "double"),
+    ] + [(c, "double") for c in top_cols + dup_cols]
 
-    def run(batches):
-        from collections import Counter
-
-        from ._mem import ensure_malloc_tuning
-
-        ensure_malloc_tuning()
-        for pdf in batches:
-            n_rows = len(pdf)
-            if n_rows == 0:
-                continue
-            ids = pdf["doc_id"].tolist()
-            n_chars = np.empty(n_rows, dtype=np.int64)
-            n_lines = np.empty(n_rows, dtype=np.int64)
-            # fraction numerators/denominators as exact integer doubles;
-            # one vectorized ROUND pass per output column at batch end
-            dl_num = np.empty(n_rows, dtype=np.float64)
-            dl_den = np.empty(n_rows, dtype=np.float64)
-            dc_num = np.empty(n_rows, dtype=np.float64)
-            dc_den = np.empty(n_rows, dtype=np.float64)
-            top_num = {n: np.zeros(n_rows, dtype=np.float64) for n in top_ns}
-            dup_num = {n: np.zeros(n_rows, dtype=np.float64) for n in dup_ns}
-            for i, (text, nt) in enumerate(zip(pdf["text"], pdf["nt"])):
-                toks = nt.split(" ")
-                nc = len(nt)
-                n_chars[i] = nc
-                ls = [x for x in (p.strip(" ") for p in text.split(line_sep)) if x]
-                nl = len(ls)
-                n_lines[i] = nl
-                dl_num[i] = nl - len(set(ls))
-                dl_den[i] = max(nl, 1)
-                tot = 0
-                dup = 0
-                for line, c in Counter(ls).items():
-                    ll = len(line)
-                    tot += c * ll
-                    dup += (c - 1) * ll
-                dc_num[i] = dup
-                dc_den[i] = max(tot, 1)
-                den = max(nc, 1)
-                for n in all_ns:
-                    if len(toks) - n < 0:
-                        continue
-                    grams = Counter(
-                        " ".join(toks[j : j + n])
-                        for j in range(len(toks) - n + 1)
+    def batch(pdf):
+        n_rows = len(pdf)
+        n_chars = np.empty(n_rows, dtype=np.int64)
+        n_lines = np.empty(n_rows, dtype=np.int64)
+        # fraction numerators/denominators as exact integer doubles;
+        # one vectorized ROUND pass per output column at batch end
+        dl_num = np.empty(n_rows, dtype=np.float64)
+        dl_den = np.empty(n_rows, dtype=np.float64)
+        dc_num = np.empty(n_rows, dtype=np.float64)
+        dc_den = np.empty(n_rows, dtype=np.float64)
+        top_num = {n: np.zeros(n_rows, dtype=np.float64) for n in top_ns}
+        dup_num = {n: np.zeros(n_rows, dtype=np.float64) for n in dup_ns}
+        for i, (text, nt) in enumerate(zip(pdf["text"], pdf["nt"])):
+            toks = nt.split(" ")
+            nc = len(nt)
+            n_chars[i] = nc
+            ls = [x for x in (p.strip(" ") for p in text.split(line_sep)) if x]
+            nl = len(ls)
+            n_lines[i] = nl
+            dl_num[i] = nl - len(set(ls))
+            dl_den[i] = max(nl, 1)
+            tot = 0
+            dup = 0
+            for line, c in Counter(ls).items():
+                ll = len(line)
+                tot += c * ll
+                dup += (c - 1) * ll
+            dc_num[i] = dup
+            dc_den[i] = max(tot, 1)
+            for n in all_ns:
+                if len(toks) - n < 0:
+                    continue
+                grams = Counter(
+                    " ".join(toks[j : j + n])
+                    for j in range(len(toks) - n + 1)
+                )
+                if n in top_num:
+                    c, gl = max(
+                        (c, len(g)) for g, c in grams.items()
                     )
-                    if n in top_num:
-                        c, gl = max(
-                            (c, len(g)) for g, c in grams.items()
-                        )
-                        top_num[n][i] = c * gl
-                    if n in dup_num:
-                        dup_num[n][i] = sum(
-                            (c - 1) * len(g) for g, c in grams.items() if c > 1
-                        )
-            den = np.maximum(n_chars, 1).astype(np.float64)
-            out = {
-                "doc_id": ids,
-                "n_chars": n_chars,
-                "n_lines": n_lines,
-                "dup_line_frac": _round_half_up_r_vec(dl_num / dl_den, round_to),
-                "dup_line_char_frac": _round_half_up_r_vec(
-                    dc_num / dc_den, round_to
-                ),
-            }
-            for n, col in zip(top_ns, top_cols):
-                out[col] = _round_half_up_r_vec(top_num[n] / den, round_to)
-            for n, col in zip(dup_ns, dup_cols):
-                out[col] = _round_half_up_r_vec(dup_num[n] / den, round_to)
-            yield pd.DataFrame(out)
+                    top_num[n][i] = c * gl
+                if n in dup_num:
+                    dup_num[n][i] = sum(
+                        (c - 1) * len(g) for g, c in grams.items() if c > 1
+                    )
+        den = np.maximum(n_chars, 1).astype(np.float64)
+        out = {
+            "n_chars": n_chars,
+            "n_lines": n_lines,
+            "dup_line_frac": _round_half_up_r_vec(dl_num / dl_den, round_to),
+            "dup_line_char_frac": _round_half_up_r_vec(
+                dc_num / dc_den, round_to
+            ),
+        }
+        for n, col in zip(top_ns, top_cols):
+            out[col] = _round_half_up_r_vec(top_num[n] / den, round_to)
+        for n, col in zip(dup_ns, dup_cols):
+            out[col] = _round_half_up_r_vec(dup_num[n] / den, round_to)
+        return slice(None), out
 
-    return d.mapInPandas(run, schema=schema)
+    return _doc_kernel(docs, fields, lambda: batch, ("text",))
 
 
 def repetition_df(
@@ -2306,8 +2243,6 @@ def hashed_embedding_df(docs: DataFrame, dim: int = 32) -> DataFrame:
     every bit's votes tie) is returned as zeros rather than NaN.
     ``dim <= 60`` (one md5 yields 60 usable bits).
     """
-    from .dedup import _widen, normalized_text
-
     d = int(dim)
     if not 1 <= d <= 60:
         raise ValueError(f"dim must be in 1..60, got {dim}")
@@ -2378,43 +2313,32 @@ def hashed_embedding_local_df(docs: DataFrame, dim: int = 32) -> DataFrame:
 def _hashed_embedding_arrow_df(docs: DataFrame, d: int) -> DataFrame:
     """The Arrow kernel behind ``hashed_embedding_local_df`` — see its
     docstring for the recipe and the bit-identity argument."""
-    import pandas as pd
-
-    from .dedup import normalized_text
-
-    base = docs.where(F.col("text").isNotNull()).select(
-        "doc_id", normalized_text().alias("nt")
-    )
-    id_type = dict(base.dtypes)["doc_id"]
-    schema = f"doc_id {id_type}, embedding array<double>"
-
-    def run(batches):
-        from ._mem import ensure_malloc_tuning
+    def make():
         from .md5v import md5_top60_cached
 
-        ensure_malloc_tuning()
         tok_hash = md5_top60_cached(b"0|")
-        for pdf in batches:
-            ids, docs_toks = [], []
-            for doc_id, nt in zip(pdf["doc_id"], pdf["nt"]):
+
+        def batch(pdf):
+            rows, docs_toks = [], []
+            for i, nt in enumerate(pdf["nt"]):
                 ts = [t for t in set(nt.split(" ")) if t]
                 if not ts:
                     continue
-                ids.append(doc_id)
+                rows.append(i)
                 docs_toks.append(ts)
-            if not ids:
-                continue  # empty Arrow batches type columns wrong — skip
+            if not rows:
+                return rows, {}
             n_toks = np.fromiter(
-                (len(t) for t in docs_toks), np.int64, count=len(ids)
+                (len(t) for t in docs_toks), np.int64, count=len(rows)
             )
             all_h = np.fromiter(
                 (tok_hash(t) for ts in docs_toks for t in ts),
                 dtype=np.int64,
                 count=int(n_toks.sum()),
             )
-            seg = np.zeros(len(ids), dtype=np.int64)
+            seg = np.zeros(len(rows), dtype=np.int64)
             np.cumsum(n_toks[:-1], out=seg[1:])
-            votes = np.empty((d, len(ids)), dtype=np.int64)
+            votes = np.empty((d, len(rows)), dtype=np.int64)
             for b in range(d):
                 votes[b] = (
                     2 * np.add.reduceat((all_h >> np.int64(b)) & 1, seg)
@@ -2426,7 +2350,8 @@ def _hashed_embedding_arrow_df(docs: DataFrame, d: int) -> DataFrame:
                 comps = votes.astype(np.float64) / nrm
             comps[:, sq == 0] = 0.0
             emb = _round_half_up_r_vec(np.ascontiguousarray(comps.T).reshape(-1), 6)
-            emb = emb.reshape(len(ids), d)
-            yield pd.DataFrame({"doc_id": ids, "embedding": list(emb)})
+            return rows, {"embedding": list(emb.reshape(len(rows), d))}
 
-    return base.mapInPandas(run, schema=schema)
+        return batch
+
+    return _doc_kernel(docs, [("embedding", "array<double>")], make)

@@ -7,6 +7,8 @@ The reference's ``imops/__init__.py`` export list is checked in below
 ``__version__`` (our package carries its own) and the private ``_zoom``.
 """
 
+import re
+
 REFERENCE_EXPORTS = (
     "Backend", "Cython", "Numba", "Scipy", "imops_backend", "set_backend",
     "crop_to_box", "crop_to_shape",
@@ -148,6 +150,37 @@ def test_classifier_trainer_has_one_pass():
     ).read_text()
     assert src.count("element_at(") == 0
     assert src.count("createDataFrame(") == 1
+
+
+def test_document_kernels_have_one_boundary():
+    """The nine row-local text kernels share one ``mapInPandas`` boundary,
+    ``dedup._doc_kernel``: across ``functions/{dedup,text,curate}.py`` the
+    allocator is tuned only there and in the cosine block-pair task, the
+    empty-batch rule is written once, and no kernel looks up the
+    ``doc_id`` type itself (the one lookup left is the BM25 index)."""
+    import pathlib
+
+    import imops_spark
+
+    root = pathlib.Path(imops_spark.__file__).parent / "functions"
+    src = "".join((root / f).read_text() for f in ("dedup.py", "text.py", "curate.py"))
+    assert src.count("ensure_malloc_tuning()") == 2
+    assert len(re.findall(r'dict\([\w.]+\.dtypes\)\["doc_id"\]', src)) <= 1
+    assert src.count("type columns wrong") == 1
+
+
+def test_tools_put_their_own_tree_on_sys_path():
+    """A script under ``tools/`` imports the package from the tree it sits
+    in, so a copy of the repository checks the copy."""
+    import pathlib
+
+    tools = pathlib.Path(__file__).resolve().parent.parent / "tools"
+    offenders = [
+        p.name
+        for p in sorted(tools.glob("*.py"))
+        if re.search(r"sys\.path\.\w+\([^)]*[\'\"]/", p.read_text())
+    ]
+    assert not offenders, offenders
 
 
 def test_wrappers_without_a_session_raise_runtime_error(monkeypatch):

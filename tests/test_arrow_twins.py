@@ -191,3 +191,108 @@ def test_winnow_md5_arrow_twin(spark):
         ._jdf.queryExecution().analyzed().toString()
     )
     assert "mapInPandas" in splan or "MapInPandas" in splan
+
+
+# NULL, empty, whitespace-only, leading-tab, multi-byte, multi-line and
+# over-one-chunk documents (the chunk is monkeypatched to 8 below)
+_EDGE_ROWS = [
+    (1, None),
+    (2, ""),
+    (3, "   \n\t  "),
+    (4, "\tleading tab doc with several words in it"),
+    (5, "héllo wörld 中文 测试 naïve café über-gruß 東京 résumé"),
+    (6, " ".join(f"tok{i % 37}" for i in range(200))),
+    (7, "the quick brown fox\njumps over\nthe quick brown fox"),
+    (8, "short"),
+]
+
+
+def _edge_pairs(name, docs):
+    """``(kernel rows, twin rows)`` for one of the nine document kernels;
+    the twin is the operator's JVM/agg strategy, Spark's own char-gram
+    expression, or the repetition metrics' Python re-derivation."""
+    from imops_spark.functions import curate, dedup, text
+    from tests.test_minhash_char_entropy_arrow import _spark_char_minhash
+    from tests.test_text_repetition_pii import _expected
+
+    if name == "minhash":
+        return [
+            dedup.minhash_signatures_df(docs, num_hashes=6, strategy=s)
+            for s in ("arrow", "jvm")
+        ]
+    if name == "minhash_char":
+        return [
+            dedup.minhash_signatures_char_df(docs, num_hashes=4, k=5),
+            _spark_char_minhash(docs, 4, 5),
+        ]
+    if name == "simhash":
+        return [dedup.simhash_df(docs, strategy=s) for s in ("arrow", "local")]
+    if name == "winnow":
+        return [
+            text.winnow_fingerprints_df(docs, k=4, window=3, strategy=s)
+            for s in ("arrow", "window")
+        ]
+    if name == "entropy":
+        return [text.token_entropy_local_df(docs), text.token_entropy_df(docs)]
+    if name == "lm":
+        return [text.ngram_lm_df(docs, strategy=s) for s in ("arrow", "agg")]
+    if name == "repetition":
+        want = [
+            {"doc_id": i, **_expected(t, (2, 3), (2,))}
+            for i, t in _EDGE_ROWS
+            if t is not None
+        ]
+        return [text.repetition_df(docs, top_ns=(2, 3), dup_ns=(2,)), want]
+    if name == "embedding":
+        return [
+            text.hashed_embedding_local_df(docs, dim=8),
+            text.hashed_embedding_df(docs, dim=8),
+        ]
+    assert name == "feature_sum"
+    target = docs.where("doc_id % 2 = 0")
+    return [
+        curate.dsir_logweights_df(docs, target, num_buckets=64, strategy=s)
+        for s in ("arrow", "agg")
+    ]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "minhash", "minhash_char", "simhash", "winnow", "entropy", "lm",
+        "repetition", "embedding", "feature_sum",
+    ],
+)
+def test_doc_kernels_match_twins_on_edge_rows(spark, monkeypatch, name):
+    """Every document kernel equals its twin on edge rows spread over more
+    partitions than rows, so most Python tasks see no rows at all and
+    documents dropped by the kernel leave batches with nothing to emit.
+    Spark sends an empty partition no batch at all, so the kernel's task
+    function is also fed an empty batch directly: it must emit nothing."""
+    import pandas as pd
+
+    from imops_spark import utils
+    from imops_spark.functions import md5v
+
+    monkeypatch.setattr(md5v, "_MINHASH_CHUNK_SHINGLES", 8)
+    tasks = []
+    real = utils.map_in_pandas_renamed
+
+    def spy(df, run, out_fields):
+        tasks.append((df.columns, run))
+        return real(df, run, out_fields)
+
+    monkeypatch.setattr(utils, "map_in_pandas_renamed", spy)
+    docs = spark.createDataFrame(_EDGE_ROWS, "doc_id long, text string").repartition(
+        3 * len(_EDGE_ROWS)
+    )
+    got, want = _edge_pairs(name, docs)
+
+    def rows(x):
+        x = x if isinstance(x, list) else [r.asDict() for r in x.collect()]
+        return sorted(tuple(sorted(r.items())) for r in x)
+
+    assert rows(got) == rows(want) and rows(got)
+    cols, run = tasks[0]
+    empty = pd.DataFrame({c: pd.Series([], dtype=object) for c in cols})
+    assert list(run(iter([empty]))) == []

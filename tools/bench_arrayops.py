@@ -15,12 +15,13 @@ Writes ARRAYOPS_BENCH.md.  Run: python tools/bench_arrayops.py [--quick]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 QUICK = "--quick" in sys.argv
 RUNS = 1

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import json
 import subprocess
+import os
 import sys
 import time
 
@@ -41,8 +42,8 @@ N_QUERIES = 50
 
 
 def probe_one_size(n: int) -> dict:
-    sys.path.insert(0, "/root/repo")
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from pyspark.sql import functions as F
 
     from imops_spark.functions.similarity import (
@@ -132,8 +133,6 @@ def main() -> None:
         if a.startswith("--one-size"):
             print(_MARKER + json.dumps(probe_one_size(int(a.split("=", 1)[1]))))
             return
-
-    import os
 
     load = os.getloadavg()[0]
     per_size = {}

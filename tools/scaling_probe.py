@@ -22,10 +22,11 @@ from __future__ import annotations
 import json
 import math
 import subprocess
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -438,8 +439,6 @@ def main() -> None:
     if one_size is not None:
         print(_MARKER + json.dumps(probe_one_size(one_size, only)), flush=True)
         return
-
-    import os
 
     # the load stamp must be taken BEFORE the first subprocess: during and
     # after the run the probe's own local[*] work dominates load_1m, so an
